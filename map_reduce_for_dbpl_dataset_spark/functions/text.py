@@ -31,9 +31,15 @@ def normalize_text(c: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
+def tokens_from_normalized(norm: Column) -> Column:
+    """Whitespace tokens of already-normalized text (array<string>) —
+    for callers that project ``normalize_text`` once and reuse it."""
+    return F.split(norm, " ")
+
+
 def tokens(c: Column) -> Column:
     """Whitespace tokens of the normalized text (array<string>)."""
-    return F.split(normalize_text(c), " ")
+    return tokens_from_normalized(normalize_text(c))
 
 
 def word_shingles(toks: Column, n: int = 3) -> Column:

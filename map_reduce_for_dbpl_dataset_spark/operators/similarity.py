@@ -59,18 +59,29 @@ def _narrow_q32(q: Column, n2: Column) -> Column:
     >= 2.7e8 at dim 64 — two orders of magnitude outside any unit-ish
     embedding at scale=1000, and within 2x of where the exact int64
     dot itself stops being guaranteed.
+    The guard presumes n2 itself is exact (the contract above): under
+    non-ANSI semantics an n2 that wrapped past 2^63 could pass the
+    bound with elements outside int32.
     dot_q/norm2_q widen elements back to long before multiplying, so
-    the arithmetic — and every oracle-checked result — is unchanged."""
-    return F.when(
-        n2 <= F.lit(_INT32_MAX * _INT32_MAX),  # (2^31-1)^2 as a long literal
-        F.transform(q, lambda x: x.cast("int")),
-    ).otherwise(
-        F.raise_error(
-            F.lit(
-                "quantized embedding element exceeds int32: the narrowed "
-                "pair-stage shuffle would wrap — widen scale bound"
-            )
-        ).cast("array<int>")
+    the arithmetic — and every oracle-checked result — is unchanged.
+
+    A null vector (or one with a null element, which nulls n2) passes
+    through as a null array<int>: a null comparison would otherwise
+    fall into the raise branch and fail the whole job."""
+    return (
+        F.when(n2.isNull(), F.lit(None).cast("array<int>"))
+        .when(
+            n2 <= F.lit(_INT32_MAX * _INT32_MAX),  # (2^31-1)^2 as a long literal
+            F.transform(q, lambda x: x.cast("int")),
+        )
+        .otherwise(
+            F.raise_error(
+                F.lit(
+                    "quantized embedding element exceeds int32: the narrowed "
+                    "pair-stage shuffle would wrap — widen scale bound"
+                )
+            ).cast("array<int>")
+        )
     )
 
 

@@ -32,6 +32,7 @@ from ..functions.text import (
     marker_hits,
     normalize_text,
     tokens,
+    tokens_from_normalized,
     word_shingles,
 )
 from ..operators.dedup import (
@@ -589,7 +590,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same-session A/B at sf1: 2.43 -> 2.36 s best-of-5)
     t = d.select("doc_id", normalize_text(F.col("text")).alias("_n")).select(
         "doc_id",
-        F.split(F.col("_n"), " ").alias("_t"),
+        tokens_from_normalized(F.col("_n")).alias("_t"),
         F.length("_n").alias("n_chars_norm"),
     )
     d = t.select(

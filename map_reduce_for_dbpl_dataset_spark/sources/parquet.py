@@ -100,12 +100,6 @@ def load_tables(
     return {name: load_table(spark, sf_dir, name) for name in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def publications(
     spark: SparkSession, path: str | None = None, sf_dir: str | None = None
 ) -> DataFrame:

@@ -1,10 +1,22 @@
-"""Third-batch curation operators: line-level boilerplate removal,
-stratified quality selection, incremental snapshot dedup."""
+"""Curation operators: line-level boilerplate removal, stratified
+quality selection, incremental snapshot dedup, semdedup and its
+int32-narrowed pair vectors."""
 
 from __future__ import annotations
 
 import re
 
+import pytest
+from pyspark.sql import functions as F
+
+from map_reduce_for_dbpl_dataset_spark.functions.vectors import (
+    dot_q,
+    norm2_q,
+)
+from map_reduce_for_dbpl_dataset_spark.operators.similarity import (
+    _narrow_q32,
+    _semdedup_corpus,
+)
 from map_reduce_for_dbpl_dataset_spark.queries.pipeline import (
     LINE_MIN_DF,
     LINE_TOKENS,
@@ -13,6 +25,7 @@ from map_reduce_for_dbpl_dataset_spark.queries.pipeline import (
     q_dedup_incremental,
     q_quality_select,
 )
+from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
 
 def _norm_tokens(text: str) -> list[str]:
@@ -442,3 +455,131 @@ def test_semdedup_matmul_assignment_matches_expression_argmax(spark, sf_dir):
     assert got == ref
     assert len(got) == e.count()
     assert len(set(got.values())) > 1  # non-degenerate codebook
+
+
+# --- int32-narrowed semdedup pair vectors, rolling fold, langid pick ---------
+# The salted pair stage ships quantized vectors as array<int> to halve
+# the replicated shuffle's row width.  These pin (a) the narrowing is
+# in the pair pipeline's schema, (b) dot_q/norm2_q stay exact over
+# int32 inputs (widen-before-multiply), and (c) the runtime guard
+# refuses a vector whose elements cannot narrow losslessly instead of
+# silently wrapping; plus the split forms of rolling_fingerprint and
+# langid_expr against their single-column forms.
+
+
+def test_semdedup_corpus_ships_int32_vectors(spark, sf_dir):
+    e = load_table(spark, sf_dir, "embeddings")
+    c = _semdedup_corpus(e, "vec_id", "embedding", 1000)
+    assert dict(c.dtypes)["_q"] == "array<int>"
+    # and the values equal the unnarrowed quantization exactly
+    from map_reduce_for_dbpl_dataset_spark.functions.vectors import quantize
+
+    wide = e.select(
+        F.col("vec_id").alias("_id"), quantize(F.col("embedding"), 1000).alias("_qw")
+    )
+    diff = (
+        c.join(wide, "_id")
+        .filter(F.col("_q").cast("array<bigint>") != F.col("_qw"))
+        .count()
+    )
+    assert diff == 0
+
+
+def test_dot_norm_exact_over_int32(spark):
+    # elements near the int32 edge: products up to ~4.6e18 must land
+    # exactly in the long accumulator (widen-before-multiply)
+    a = [2_000_000_000, -2_000_000_000, 1, 0]
+    b = [2_000_000_000, 1_999_999_999, -7, 5]
+    df = spark.createDataFrame(
+        [(a, b)], "a array<int>, b array<int>"
+    ).select(dot_q(F.col("a"), F.col("b")).alias("d"), norm2_q(F.col("a")).alias("n"))
+    row = df.collect()[0]
+    assert row["d"] == sum(x * y for x, y in zip(a, b))
+    assert row["n"] == sum(x * x for x in a)
+
+
+def test_narrow_guard_raises_on_oversized_element(spark):
+    big = 3_000_000_000  # exceeds int32; n2 = 9e18 < 2^63 stays exact
+    df = spark.createDataFrame([([big],)], "q array<long>").select(
+        _narrow_q32(F.col("q"), norm2_q(F.col("q"))).alias("q32")
+    )
+    with pytest.raises(Exception, match="int32"):
+        df.collect()
+
+
+def test_rolling_fold_equals_inline_fingerprint(spark):
+    # round 22 split rolling_fingerprint into a fold over a
+    # pre-projected hash array; both forms must agree value-level
+    from pyspark.sql import functions as F
+
+    from map_reduce_for_dbpl_dataset_spark.functions.text import (
+        ROLL_P,
+        hash60,
+        rolling_fingerprint,
+        rolling_fold,
+        tokens,
+    )
+
+    df = spark.createDataFrame(
+        [("a b c d",), ("single",), ("x y x y x",)], "t string"
+    )
+    t = df.select(tokens(F.col("t")).alias("_t"))
+    split_form = t.select(
+        F.transform(F.col("_t"), lambda tok: hash60(tok) % ROLL_P).alias("_hs")
+    ).select(rolling_fold(F.col("_hs")).alias("fp"))
+    inline_form = df.select(rolling_fingerprint(tokens(F.col("t"))).alias("fp"))
+    assert [r["fp"] for r in split_form.collect()] == [
+        r["fp"] for r in inline_form.collect()
+    ]
+
+
+def test_langid_pick_equals_langid_expr(spark):
+    # round 22 split the vote counting from the pick; the pre-projected
+    # form must agree with the single-column convenience form
+    from pyspark.sql import functions as F
+
+    from map_reduce_for_dbpl_dataset_spark.functions.text import (
+        LANG_MARKERS,
+        langid_expr,
+        langid_pick,
+        marker_hits,
+        tokens,
+    )
+
+    df = spark.createDataFrame(
+        [("the cat and the hat",), ("el perro y la casa",),
+         ("der hund und die katze ist",), ("le chien et la maison pour",),
+         ("zzz qqq",)],
+        "t string",
+    )
+    t = df.select(tokens(F.col("t")).alias("_t"))
+    votes = t.select(
+        *[marker_hits(F.col("_t"), m).alias(f"_h_{la}") for la, m in LANG_MARKERS.items()]
+    )
+    picked = votes.select(
+        langid_pick({la: F.col(f"_h_{la}") for la in LANG_MARKERS}).alias("l")
+    )
+    inline = df.select(langid_expr(tokens(F.col("t"))).alias("l"))
+    assert [r["l"] for r in picked.collect()] == [r["l"] for r in inline.collect()]
+
+
+def test_narrow_roundtrip_at_int32_edge(spark):
+    # the guard is n2-based and conservative: a SINGLE max-magnitude
+    # element sits exactly on the (2^31-1)^2 boundary and must pass
+    for vals in ([2_147_483_647], [-2_147_483_647], [0, 123, -456]):
+        df = spark.createDataFrame([(vals,)], "q array<long>").select(
+            _narrow_q32(F.col("q"), norm2_q(F.col("q"))).alias("q32")
+        )
+        assert df.collect()[0]["q32"] == vals
+
+
+def test_semdedup_corpus_passes_null_embedding_through(spark):
+    # a null vector nulls n2; the narrow must return a null array<int>,
+    # not fall into the guard's raise branch and fail the whole job
+    df = spark.createDataFrame(
+        [(0, [0.5, -0.25]), (1, None)], "vec_id long, embedding array<float>"
+    )
+    c = _semdedup_corpus(df, "vec_id", "embedding", 1000)
+    assert dict(c.dtypes)["_q"] == "array<int>"
+    got = {r["_id"]: r["_q"] for r in c.collect()}
+    assert got == {0: [500, -250], 1: None}

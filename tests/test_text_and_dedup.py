@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 from pyspark.sql import functions as F
 
 from map_reduce_for_dbpl_dataset_spark.functions.text import (
@@ -18,6 +21,9 @@ from map_reduce_for_dbpl_dataset_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_values,
 )
+from map_reduce_for_dbpl_dataset_spark.queries.llm import WINNOW_W, _winnow_fps
+from map_reduce_for_dbpl_dataset_spark.queries.pipeline import SPAN_K, _span_shingled
+from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
 
 def test_word_shingles_short_input_guard(spark):
@@ -139,3 +145,87 @@ def test_simhash_identical_equal_disjoint_differs(spark):
     sims = {r.doc_id: r.simhash for r in simhash_values(sh, "doc_id", "shingles").collect()}
     assert sims[1] == sims[2]
     assert sims[1] != sims[3]
+
+
+# --- winnowing sliding-min and positional-span shingling ---------------------
+# Both derivations are built from zip_with/least passes over offset
+# slices for speed; these pin the VALUES against independent
+# pure-Python implementations so any rewrite of the expressions keeps
+# the algorithm, not just the oracle hash.
+
+
+def _py_hash60(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _py_tokens(text: str) -> list[str]:
+    return re.sub(r"\s+", " ", text.lower()).strip().split(" ")
+
+
+def _py_shingles(toks: list[str], n: int) -> list[str]:
+    if len(toks) < n:
+        return []
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+def _py_winnow_fps(text: str, w: int) -> list[int]:
+    hs = [_py_hash60(s) for s in _py_shingles(_py_tokens(text), 3)]
+    if len(hs) < w:
+        return []
+    mins = [min(hs[i : i + w]) for i in range(len(hs) - w + 1)]
+    out: list[int] = []
+    for m in mins:  # array_distinct keeps first-occurrence order
+        if m not in out:
+            out.append(m)
+    return out
+
+
+def test_winnow_slide_min_matches_bruteforce(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(60)
+    rows = {r["doc_id"]: r["text"] for r in d.collect()}
+    got = {r["doc_id"]: r["fps"] for r in _winnow_fps(d).collect()}
+    assert set(got) == set(rows)
+    for doc_id, text in rows.items():
+        assert got[doc_id] == _py_winnow_fps(text, WINNOW_W), doc_id
+
+
+def test_winnow_slide_min_short_and_duplicate_edge_cases(spark):
+    # < W shingles (including empty text) must yield an EMPTY array —
+    # the old explicit size(h) >= W filter is subsumed by the slice
+    # clamp; duplicate-heavy text exercises array_distinct ordering.
+    texts = [
+        (0, ""),  # no tokens
+        (1, "one two"),  # no 3-shingles at all
+        (2, "a b c d e"),  # 3 shingles < W=4
+        (3, "a b c d e f"),  # exactly W shingles -> 1 window
+        (4, "x y " * 40),  # heavy duplication
+    ]
+    df = spark.createDataFrame(texts, "doc_id long, text string")
+    got = {r["doc_id"]: r["fps"] for r in _winnow_fps(df).collect()}
+    for doc_id, text in texts:
+        assert got[doc_id] == _py_winnow_fps(text, WINNOW_W), doc_id
+
+
+def test_span_shingled_matches_bruteforce(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(60)
+    rows = {r["doc_id"]: r["text"] for r in d.collect()}
+    got = {}
+    for r in _span_shingled(d).collect():
+        got.setdefault(r["doc_id"], []).append((r["p"], r["sk"]))
+    for doc_id, text in rows.items():
+        expect = [
+            (p, _py_hash60(s))
+            for p, s in enumerate(_py_shingles(_py_tokens(text), SPAN_K))
+        ]
+        assert sorted(got.get(doc_id, [])) == expect, doc_id
+
+
+def test_span_shingled_short_doc_yields_no_rows(spark):
+    df = spark.createDataFrame(
+        [(0, "just a few tokens"), (1, " ".join(f"t{i}" for i in range(SPAN_K)))],
+        "doc_id long, text string",
+    )
+    rows = _span_shingled(df).collect()
+    # doc 0 has < SPAN_K tokens -> nothing; doc 1 has exactly SPAN_K -> one
+    assert [(r["doc_id"], r["p"]) for r in rows] == [(1, 0)]
+    assert rows[0]["sk"] == _py_hash60(" ".join(f"t{i}" for i in range(SPAN_K)))

@@ -4,8 +4,8 @@ before/after evidence files the optimization rounds commit.
 
 Usage: python tools/dump_plans.py <outdir> <tag> <query> [<query> ...]
   e.g. python tools/dump_plans.py plans/r22 before llm_winnow_pairs
-Special names: jaccard_candjoin, semdedup_pairstage, winnow_exf,
-bpe_types_join (pre-checkpoint / sub-pipeline dumps).
+Special names: jaccard_full_plan, semdedup_pairstage (operator and
+sub-pipeline dumps).
 """
 
 from __future__ import annotations
@@ -16,27 +16,19 @@ import sys
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 
-def _jaccard_candjoin(spark, sf_dir):
-    """Candidate join sub-pipeline of ngram_jaccard_pairs_prefix (the
-    part ahead of tier-1/tier-2 verification)."""
-    from pyspark.sql import functions as F
-
+def _jaccard_full_plan(spark, sf_dir):
+    """The full ngram_jaccard_pairs_prefix operator plan; its candidate
+    join region is the part above the tier-1/tier-2 verification joins."""
     from map_reduce_for_dbpl_dataset_spark.operators import dedup as D
     from map_reduce_for_dbpl_dataset_spark.queries.llm import _docs_shingled
 
     sh = _docs_shingled(spark, sf_dir)
-    full = D.ngram_jaccard_pairs_prefix(sh, "doc_id", "shingles", threshold=0.8)
-    # rebuild just the candidate stage by re-running the operator body
-    # up to `cands` is invasive; instead dump the full operator plan —
-    # the candidate join region is the part above the tier-1 joins.
-    return full
+    return D.ngram_jaccard_pairs_prefix(sh, "doc_id", "shingles", threshold=0.8)
 
 
 def _semdedup_pairstage(spark, sf_dir):
     """The salted within-cluster pair join of semdedup (K=4 seeded
     demonstrator shape), ahead of the labeling join."""
-    from pyspark.sql import functions as F
-
     from map_reduce_for_dbpl_dataset_spark.operators.similarity import semdedup
     from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
@@ -45,7 +37,7 @@ def _semdedup_pairstage(spark, sf_dir):
 
 
 SPECIAL = {
-    "jaccard_candjoin": _jaccard_candjoin,
+    "jaccard_full_plan": _jaccard_full_plan,
     "semdedup_pairstage": _semdedup_pairstage,
 }
 

@@ -13,9 +13,11 @@ Usage: python tools/plan_audit.py [--sf DIR] [--write]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, REPO)
 
 # (query, [(property, substring-that-must-appear), ...])
 CHECKS: dict[str, list[tuple[str, str]]] = {
@@ -1223,8 +1225,10 @@ CUSTOM_CHECKS: dict = {
             # round-22: pair-stage vectors ship as array<int> (the
             # salted join replicates them PAIR_SALT+1x; the narrow +
             # its n2 guard live in _narrow_q32 with the exactness
-            # bound documented there)
-            ("pair vectors narrowed to int32", "as int)"),
+            # bound documented there).  The needle is the guarded
+            # CASE's array<int> tail bound to _q — sibling salt casts
+            # also render "as int)", so a bare cast would not do.
+            ("pair vectors narrowed to int32", "as array<int>) END AS _q#"),
         ],
     ),
 }
@@ -1441,7 +1445,7 @@ def audit(sf_dir: str, write: bool) -> int:
     spark.stop()
 
     if write:
-        with open("/root/repo/PLANS.md", "w") as f:
+        with open(os.path.join(REPO, "PLANS.md"), "w") as f:
             f.write(
                 "# PLANS — physical-plan audit\n\n"
                 "Generated by `python tools/plan_audit.py --write` at sf dir "
