@@ -3,7 +3,8 @@
 These are the two sub-operators the reference duplicates across its
 mappers (SURVEY.md §2.1 "shared sub-operators"), expressed once as
 Catalyst column expressions so they stay inside whole-stage codegen —
-no Python executes per row.
+no Python executes per row. Both read the publications table's own
+column names (sources/parquet.py).
 """
 
 from __future__ import annotations
@@ -20,14 +21,7 @@ def _nonempty(c: Column) -> Column:
     return F.nullif(F.coalesce(c, F.lit("")), F.lit(""))
 
 
-def venue_expr(
-    kind: Column | str = "kind",
-    journal: Column | str = "journal",
-    booktitle: Column | str = "booktitle",
-    publisher: Column | str = "publisher",
-    school: Column | str = "school",
-    key: Column | str = "key",
-) -> Column:
+def venue_expr() -> Column:
     """Venue derivation — the 6-arm dispatch duplicated in three mappers
     of the reference (Homework2.scala:42-51, :239-248, :296-305):
 
@@ -42,13 +36,8 @@ def venue_expr(
     Missing branches yield '' (the reference emits the empty string and
     filters it downstream, Homework2.scala:136).
     """
-    kind = F.col(kind) if isinstance(kind, str) else kind
-    journal = F.col(journal) if isinstance(journal, str) else journal
-    booktitle = F.col(booktitle) if isinstance(booktitle, str) else booktitle
-    publisher = F.col(publisher) if isinstance(publisher, str) else publisher
-    school = F.col(school) if isinstance(school, str) else school
-    key = F.col(key) if isinstance(key, str) else key
-
+    kind, journal, booktitle = F.col("kind"), F.col("journal"), F.col("booktitle")
+    publisher, school, key = F.col("publisher"), F.col("school"), F.col("key")
     www_venue = F.concat_ws("/", F.slice(F.split(key, "/"), 1, 3))
     return (
         F.when(kind == "article", F.coalesce(_nonempty(journal), _nonempty(booktitle)))
@@ -63,14 +52,10 @@ def venue_expr(
     )
 
 
-def authors_or_editors(
-    authors: Column | str = "authors", editors: Column | str = "editors"
-) -> Column:
+def authors_or_editors() -> Column:
     """Author/editor coalesce (Homework2.scala:53-57, repeated at six
     sites): the author list, falling back to editors when empty.
     Returns array<string>; empty array when both are absent."""
-    authors = F.col(authors) if isinstance(authors, str) else authors
-    editors = F.col(editors) if isinstance(editors, str) else editors
-    a = F.coalesce(authors, F.array().cast("array<string>"))
-    e = F.coalesce(editors, F.array().cast("array<string>"))
+    a = F.coalesce(F.col("authors"), F.array().cast("array<string>"))
+    e = F.coalesce(F.col("editors"), F.array().cast("array<string>"))
     return F.when(F.size(a) > 0, a).otherwise(e)

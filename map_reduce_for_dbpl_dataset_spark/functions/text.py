@@ -17,10 +17,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # 60-bit portable token hash: md5 hex prefix as an integer. Identical
-# in DuckDB: ('0x' || substr(md5(s), 1, 15))::BIGINT. Used instead of
-# xxhash64 (engine-specific) so minhash/simhash signatures are
-# bit-identical across engines; at production scale swap in
-# F.xxhash64 via the hash_fn parameter of the dedup operators.
+# in DuckDB: ('0x' || substr(md5(s), 1, 15))::BIGINT. It is the one
+# hash of every oracle-checked signature and sketch (minhash, simhash,
+# count-min, split buckets): xxhash64 is engine-specific, so DuckDB
+# could not replay a signature built from it.
 def hash60(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 

@@ -3,11 +3,12 @@
 Built-in higher-order functions (zip_with / aggregate / transform)
 keep the math JVM-side — no UDF, no Python round-trips.
 
-Determinism: embeddings are quantized to integers (floor(x * scale))
-before any similarity math, so dot products and squared norms are
-EXACT integers and the final cosine is one IEEE double expression —
-bit-identical across engines and partitionings. This mirrors the
-int8-quantization trick production ANN systems use; the scale path
+Determinism: embeddings are quantized to integers
+(floor(x * QUANT_SCALE)) before any similarity math, so dot products
+and squared norms are EXACT integers and the final cosine is one IEEE
+double expression — bit-identical across engines and partitionings.
+This mirrors the
+int8-quantization trick production ANN systems use; the Spark path
 and the oracle path compute the same thing.
 """
 
@@ -17,9 +18,14 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def quantize(vec: Column, scale: int = 1000) -> Column:
-    """array<float> -> array<long>, qi = floor(xi * scale)."""
-    return F.transform(vec, lambda x: F.floor(x.cast("double") * scale).cast("long"))
+# The one quantization scale: every vector operator and every DuckDB
+# oracle (queries/llm.py _QUANT) multiply by this before flooring.
+QUANT_SCALE = 1000
+
+
+def quantize(vec: Column) -> Column:
+    """array<float> -> array<long>, qi = floor(xi * QUANT_SCALE)."""
+    return F.transform(vec, lambda x: F.floor(x.cast("double") * QUANT_SCALE).cast("long"))
 
 
 def dot_q(a: Column, b: Column) -> Column:

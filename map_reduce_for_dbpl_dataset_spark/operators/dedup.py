@@ -16,16 +16,16 @@ Four escalating strategies over a (id, text) corpus:
 
 Scale design: everything is groupBy/join — no collect, no driver
 loops, no UDFs. Signatures are K aggregate columns computed in ONE
-hash aggregate (not K shuffles). Hashing is the portable md5-based
-hash60 by default so DuckDB oracles reproduce signatures bit-for-bit;
-pass hash_fn=F.xxhash64 for the cheaper production hash (Spark-only
-semantics, same plan shape).
+hash aggregate (not K shuffles). MinHash and SimHash hash shingles
+with the md5-based hash60 (functions/text.py) and nothing else: the
+DuckDB oracles recompute every signature from the same md5 prefix, and
+an engine-specific hash such as xxhash64 has no DuckDB twin, so its
+signatures could not be checked.
 """
 
 from __future__ import annotations
 
 import random
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -71,7 +71,6 @@ def minhash_signatures(
     shingled: DataFrame,
     id_col: str,
     shingle_col: str,
-    hash_fn: Callable[[Column], Column] = hash60,
 ) -> DataFrame:
     """(id, array<shingle>) -> (id, sig_0..sig_{K-1}).
 
@@ -79,7 +78,7 @@ def minhash_signatures(
     minima as separate aggregate columns — K never multiplies the
     shuffle.
     """
-    h = (hash_fn(F.col("shingle")) % MINHASH_P).alias("h")
+    h = (hash60(F.col("shingle")) % MINHASH_P).alias("h")
     exploded = shingled.select(
         F.col(id_col), F.explode_outer(F.array_distinct(F.col(shingle_col))).alias("shingle")
     ).select(id_col, h)
@@ -216,11 +215,10 @@ def minhash_lsh_pairs(
     id_col: str,
     shingle_col: str,
     threshold: float = 0.8,
-    hash_fn: Callable[[Column], Column] = hash60,
 ) -> DataFrame:
     """Full near-dup pipeline: signatures -> LSH candidates -> exact
     Jaccard >= threshold."""
-    sigs = minhash_signatures(shingled, id_col, shingle_col, hash_fn)
+    sigs = minhash_signatures(shingled, id_col, shingle_col)
     cands = lsh_candidate_pairs(sigs, id_col)
     return verify_jaccard(cands, shingled, id_col, shingle_col).filter(
         F.col("jaccard") >= threshold
@@ -231,12 +229,11 @@ def simhash_values(
     shingled: DataFrame,
     id_col: str,
     shingle_col: str,
-    hash_fn: Callable[[Column], Column] = hash60,
 ) -> DataFrame:
     """(id, array<shingle>) -> (id, simhash int32-in-long): per bit,
     sum +-1 over shingle hashes; bit set iff the sum is >= 0. One
     explode + one aggregate with 32 conditional-sum columns."""
-    h = hash_fn(F.col("shingle")).alias("h")
+    h = hash60(F.col("shingle")).alias("h")
     exploded = shingled.select(
         F.col(id_col), F.explode_outer(F.array_distinct(F.col(shingle_col))).alias("shingle")
     ).select(id_col, h)
@@ -260,12 +257,11 @@ def simhash_near_pairs(
     id_col: str,
     shingle_col: str,
     max_hamming: int = 3,
-    hash_fn: Callable[[Column], Column] = hash60,
 ) -> DataFrame:
     """Near-dup pairs by simhash: candidates share one of
     SIMHASH_CHUNKS 8-bit chunks (pigeonhole guarantees recall for
     hamming <= SIMHASH_CHUNKS - 1), verified with bit_count(xor)."""
-    sims = simhash_values(shingled, id_col, shingle_col, hash_fn)
+    sims = simhash_values(shingled, id_col, shingle_col)
     chunk_w = SIMHASH_BITS // SIMHASH_CHUNKS
     chunks = F.array(
         *[

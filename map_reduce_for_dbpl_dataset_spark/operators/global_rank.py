@@ -41,19 +41,17 @@ def global_row_number(
     df: DataFrame,
     order_by: Sequence[Column],
     out_col: str = "rn",
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Append a 1-based global row number under ``order_by`` (which
     must be a total order) without a single-partition window.
 
     Returns ``(df_with_rn, total_rows)`` — callers usually need ``n``
     for percent_rank/cume_dist/ntile anyway, and it falls out of the
-    offset pass for free.
+    offset pass for free. The range partitioning uses
+    ``spark.sql.shuffle.partitions`` ranges.
     """
     order_by = list(order_by)
-    parts = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
+    parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     # localCheckpoint pins ONE materialization of the range partitioning:
     # the counts action below and the caller's later window/join pass
     # would otherwise execute repartitionByRange twice, and the

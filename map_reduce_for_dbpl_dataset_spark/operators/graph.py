@@ -17,6 +17,8 @@ property-tested equal (tests/test_graph_star.py).
 
 Used by dblp_coauthor_components (co-author graph) and
 llm_dedup_clusters (near-duplicate transitive closure).
+
+Every operator reads edges as (src, dst) and vertices as (node).
 """
 
 from __future__ import annotations
@@ -24,31 +26,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Superstep caps. Label propagation needs diameter-many rounds and
+# stops early at its fixpoint; the star alternation needs O(log n)
+# rounds and raises if the cap is ever hit.
+CC_MAX_ITERS = 100
+CC_STAR_MAX_ITERS = 50
 
-def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    vertex: str = "node",
-    max_iters: int = 100,
-) -> DataFrame:
-    """(vertices[vertex], edges[src,dst]) -> (node, component) where
+
+def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
+    """(vertices[node], edges[src,dst]) -> (node, component) where
     component = min vertex label reachable in the undirected graph.
     Isolated vertices form singleton components."""
     bi = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .unionByName(edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d")))
+        edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
+        .unionByName(edges.select(F.col("dst").alias("_s"), F.col("src").alias("_d")))
         .distinct()
         .persist()
     )
     labels = (
-        vertices.select(F.col(vertex).alias("node"))
+        vertices.select("node")
         .distinct()
         .withColumn("component", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         neighbor_min = (
             bi.join(labels, bi["_s"] == labels["node"])
             .select(F.col("_d").alias("node"), "component")
@@ -109,14 +110,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    edges: DataFrame,
-    vertices: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    vertex: str = "node",
-    max_iters: int = 50,
-) -> DataFrame:
+def connected_components_star(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     """Large-star/small-star connected components — identical contract
     to ``connected_components`` but O(log n) rounds instead of graph
     diameter, so a 100 TB chain-shaped graph converges in ~dozens of
@@ -132,14 +126,14 @@ def connected_components_star(
     edges form stars rooted at each component's minimum label.
     """
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
     )
     prev = None
     converged = False
-    for _ in range(max_iters):
+    for _ in range(CC_STAR_MAX_ITERS):
         # lazy checkpoint: the checksum aggregate right below is the
         # materializing action, so each round runs ONE job (an eager
         # checkpoint would run its own job first, doubling the
@@ -160,24 +154,22 @@ def connected_components_star(
         # emit multiple (node, component) rows per node with no other
         # signal — fail loudly instead (the contract is a convergence
         # GUARANTEE: large/small-star fixpoints in O(log n) rounds, so
-        # hitting this means max_iters is set far too low)
+        # hitting this means CC_STAR_MAX_ITERS is set far too low)
         raise RuntimeError(
             f"connected_components_star did not reach the edge-set fixpoint "
-            f"within max_iters={max_iters}; raise max_iters (O(log n) rounds "
-            f"suffice — 50 covers any feasible graph)"
+            f"within CC_STAR_MAX_ITERS={CC_STAR_MAX_ITERS} rounds (O(log n) "
+            f"rounds suffice — 50 covers any feasible graph)"
         )
     roots = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     return (
-        vertices.select(F.col(vertex).alias("node"))
+        vertices.select("node")
         .distinct()
         .join(roots, "node", "left")
         .select("node", F.coalesce("component", F.col("node")).alias("component"))
     )
 
 
-def oriented_edges(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def oriented_edges(edges: DataFrame) -> DataFrame:
     """Degree-ordered orientation: re-point every undirected edge from
     its lower-(degree, id) endpoint to its higher one. The lexicographic
     tie-break on id makes the order total, so every triangle has exactly
@@ -187,7 +179,7 @@ def oriented_edges(
     Split out of ``triangles`` so tests can assert the bound on the
     exact production orientation (tests/test_scale_stress.py hub graph).
     Output columns: s, sd (source + its degree), t, td."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     bi = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = bi.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     ed = (
@@ -204,7 +196,7 @@ def oriented_edges(
     )
 
 
-def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangles(edges: DataFrame) -> DataFrame:
     """Exact triangle enumeration with DEGREE-ORDERED orientation
     (Cohen, "Graph Twiddling in a MapReduce World", CiSE'09; the
     standard MapReduce triangle recipe). Input: undirected edge set,
@@ -222,7 +214,7 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     join); the closing-edge probe joins on the wedge's two endpoints,
     an equi-join AQE can skew-split if residual hotness remains.
     """
-    oriented = oriented_edges(edges, src, dst)
+    oriented = oriented_edges(edges)
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     lex = (F.col("e1.td") < F.col("e2.td")) | (
         (F.col("e1.td") == F.col("e2.td")) & (F.col("e1.t") < F.col("e2.t"))

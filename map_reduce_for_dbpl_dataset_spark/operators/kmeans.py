@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import quantize
@@ -67,7 +67,6 @@ def kmeans_train(
     vec_col: str,
     init_ids: Sequence[int],
     iters: int = 2,
-    scale: int = 1000,
 ) -> DataFrame:
     """Run `iters` Lloyd iterations from centroids seeded at
     `init_ids`; returns the trained quantized centroid table
@@ -84,7 +83,7 @@ def kmeans_train(
     n_shuffle = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     q = (
         corpus.select(
-            F.col(id_col).alias("vid"), quantize(F.col(vec_col), scale).alias("q")
+            F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("q")
         )
         .repartition(n_shuffle)
         .persist()
@@ -130,7 +129,6 @@ def kmeans_assign(
     id_col: str,
     vec_col: str,
     centroids: DataFrame,
-    scale: int = 1000,
 ) -> DataFrame:
     """Assign every corpus row to its nearest centroid from a trained
     (cluster, c) table (kmeans_train output): broadcast K-row join,
@@ -138,7 +136,7 @@ def kmeans_assign(
     (id_col, cluster) — the consumer-facing assignment surface used
     by compositions like llm_cluster_top_terms."""
     q = corpus.select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col), scale).alias("q")
+        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("q")
     )
     return _assign(q, centroids).select(F.col("vid").alias(id_col), "cluster")
 
@@ -149,15 +147,14 @@ def kmeans_fixed(
     vec_col: str,
     init_ids: Sequence[int],
     iters: int = 2,
-    scale: int = 1000,
 ) -> DataFrame:
     """Run `iters` Lloyd iterations from centroids seeded at
     `init_ids`; returns the final per-cluster summary
     (cluster, n_members, sse, min_member) — all exact integers."""
     q = corpus.select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col), scale).alias("q")
+        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("q")
     )
-    cents = kmeans_train(corpus, id_col, vec_col, init_ids, iters, scale)
+    cents = kmeans_train(corpus, id_col, vec_col, init_ids, iters)
     final = _assign(q, cents)
     return final.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_members"),

@@ -86,13 +86,16 @@ def extract_features(payloads: DataFrame) -> DataFrame:
 RESIZE_SCHEMA = (
     "doc_id long, mime string, n_bytes long, resized_len int, resized_md5 string"
 )
+# Output bytes per resized payload (the llm_multimodal_resize oracle
+# replays the same 64).
+RESIZE_TARGET = 64
 
 
-def resize_media(payloads: DataFrame, target: int = 64) -> DataFrame:
+def resize_media(payloads: DataFrame) -> DataFrame:
     """Resize over binary payloads: each payload is decimated to at
-    most ``target`` bytes (every stride-th byte, stride = n div
-    target) and fingerprinted — the plumbing shape of image resize /
-    audio resample (payload in, smaller payload out, metadata
+    most RESIZE_TARGET bytes (every stride-th byte, stride = n div
+    RESIZE_TARGET) and fingerprinted — the plumbing shape of image
+    resize / audio resample (payload in, smaller payload out, metadata
     preserved) with the codec STUBBED as byte decimation (no
     PIL/librosa in this container; a real pipeline replaces the
     slice with Image.resize and keeps everything else). The Spark
@@ -110,8 +113,8 @@ def resize_media(payloads: DataFrame, target: int = 64) -> DataFrame:
             rows = {"doc_id": [], "mime": [], "n_bytes": [], "resized_len": [], "resized_md5": []}
             for doc_id, payload, mime in zip(pdf["doc_id"], pdf["payload"], mimes):
                 raw = bytes(decode_media(bytes(payload), mime))
-                stride = max(len(raw) // target, 1)
-                resized = raw[::stride][:target]
+                stride = max(len(raw) // RESIZE_TARGET, 1)
+                resized = raw[::stride][:RESIZE_TARGET]
                 rows["doc_id"].append(doc_id)
                 rows["mime"].append(mime)
                 rows["n_bytes"].append(len(raw))
@@ -131,13 +134,18 @@ def resize_media(payloads: DataFrame, target: int = 64) -> DataFrame:
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_md5 string, frame_len int"
+# Frames per payload and bytes per frame (the llm_multimodal_frames
+# oracle replays the same 4 x 16).
+FRAME_COUNT = 4
+FRAME_WIDTH = 16
 
 
-def sample_frames(payloads: DataFrame, k: int = 4, width: int = 16) -> DataFrame:
-    """Frame sampling over binary payloads: k evenly-strided windows
-    per payload, each fingerprinted — the plumbing shape of video
-    frame extraction (payload -> per-frame rows) with the codec
-    STUBBED as byte-window + md5 (deterministic, oracle-checkable).
+def sample_frames(payloads: DataFrame) -> DataFrame:
+    """Frame sampling over binary payloads: FRAME_COUNT evenly-strided
+    FRAME_WIDTH-byte windows per payload, each fingerprinted — the
+    plumbing shape of video frame extraction (payload -> per-frame
+    rows) with the codec STUBBED as byte-window + md5 (deterministic,
+    oracle-checkable).
     A real pipeline swaps the window slice for a decoder call; the
     Spark side (mapInPandas fan-out, one row per frame, partition
     preservation) is exactly what production would run."""
@@ -153,12 +161,12 @@ def sample_frames(payloads: DataFrame, k: int = 4, width: int = 16) -> DataFrame
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 raw = bytes(payload)
                 n = len(raw)
-                stride = max(n // k, 1)
-                for i in range(k):
+                stride = max(n // FRAME_COUNT, 1)
+                for i in range(FRAME_COUNT):
                     off = i * stride
                     if off >= n:
                         break
-                    frame = raw[off : off + width]
+                    frame = raw[off : off + FRAME_WIDTH]
                     ids.append(doc_id)
                     idxs.append(i)
                     hashes.append(hashlib.md5(frame).hexdigest())

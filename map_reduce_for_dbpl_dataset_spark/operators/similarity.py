@@ -1,29 +1,39 @@
 """Similarity search over embedding columns (LLM-pipeline extension).
 
-Two paths:
+Seven operators, all scoring on vectors quantized at QUANT_SCALE
+(functions/vectors.py) so every cosine and distance is exact and the
+DuckDB oracles replay them bit-for-bit:
 
 - brute_force_topk: exact quantized-cosine top-k. The query set is
   broadcast (it is small by construction); the corpus never shuffles
   — each partition scores its slice and WindowGroupLimit keeps k rows
   per query before the exchange. This is the correct baseline and the
   right plan up to ~10^7 corpus rows per executor-core batch.
-
+- hard_negative_topk: the same plan with a label-inequality join, for
+  contrastive training pairs.
 - lsh_ann_topk: random-hyperplane LSH. Plane coefficients are
   deterministic integers derived from an LCG (portable to the DuckDB
   oracle); bucket = sign-bit string of the plane dot products.
   Candidates = same bucket as the query (single-probe), ranked by
   exact quantized cosine. Sub-linear scan at the cost of recall —
-  the scale path for 100 TB corpora, where the bucket join replaces
-  the full scan with a shuffle on bucket ids.
+  the bucket join replaces the full scan with a shuffle on bucket ids.
+- embedding_near_pairs: the all-pairs form of the LSH bucket join.
+- semdedup: cluster, then drop within-cluster near-duplicates.
+- ivf_topk: inverted-file ANN over a quantized centroid codebook.
+- pq_adc_topk: product quantization with asymmetric distance lookup.
+
+Every per-query ranking is operators/topk.py top_k_per_group with a
+(score, id) tie-break.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_q, dot_q, norm2_q, quantize
 from .pairs import spread_for_pair_join
+from .topk import top_k_per_group
 
 # Deterministic hyperplane coefficients: c(j, i) from a 31-bit LCG,
 # shifted to be sign-balanced. Reproducible in SQL as
@@ -57,7 +67,7 @@ def _narrow_q32(q: Column, n2: Column) -> Column:
     exists): it can reject a vector whose norm exceeds the bound even
     though each element fits, but such a vector has rms element
     >= 2.7e8 at dim 64 — two orders of magnitude outside any unit-ish
-    embedding at scale=1000, and within 2x of where the exact int64
+    embedding at QUANT_SCALE=1000, and within 2x of where the exact int64
     dot itself stops being guaranteed.
     The guard presumes n2 itself is exact (the contract above): under
     non-ANSI semantics an n2 that wrapped past 2^63 could pass the
@@ -107,6 +117,13 @@ def _bucket_expr(qvec: Column, dim: int) -> Column:
     return out
 
 
+def _top_k_by_cos(scored: DataFrame, k: int) -> DataFrame:
+    """k nearest neighbors per query_id: cos desc, neighbor_id asc."""
+    return top_k_per_group(
+        scored, ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], k, rank_col="_rn"
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -114,27 +131,23 @@ def brute_force_topk(
     vec_col: str,
     query_id_col: str,
     k: int = 5,
-    scale: int = 1000,
 ) -> DataFrame:
     """Exact top-k neighbors (quantized cosine) of each query vector.
     Returns (query_id, neighbor_id, cos) with deterministic
     (cos desc, neighbor_id asc) ranking."""
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), quantize(F.col(vec_col), scale).alias("_cq")
+        F.col(id_col).alias("neighbor_id"), quantize(F.col(vec_col)).alias("_cq")
     ).withColumn("_cn2", norm2_q(F.col("_cq")))
     q = queries.select(
-        F.col(query_id_col).alias("query_id"), quantize(F.col(vec_col), scale).alias("_qq")
+        F.col(query_id_col).alias("query_id"), quantize(F.col(vec_col)).alias("_qq")
     ).withColumn("_qn2", norm2_q(F.col("_qq")))
     scored = (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .withColumn("_dot", dot_q(F.col("_qq"), F.col("_cq")))
         .withColumn("cos", cosine_q(F.col("_dot"), F.col("_qn2"), F.col("_cn2")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "neighbor_id", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro"))
+    return _top_k_by_cos(scored, k).select(
+        "query_id", "neighbor_id", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro")
     )
 
 
@@ -145,7 +158,6 @@ def hard_negative_topk(
     vec_col: str,
     label_col: str,
     k: int = 5,
-    scale: int = 1000,
 ) -> DataFrame:
     """Contrastive hard-negative mining: for each query vector, the k
     most cosine-similar corpus vectors whose LABEL DIFFERS from the
@@ -164,28 +176,23 @@ def hard_negative_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(label_col).alias("neighbor_label"),
-        quantize(F.col(vec_col), scale).alias("_cq"),
+        quantize(F.col(vec_col)).alias("_cq"),
     ).withColumn("_cn2", norm2_q(F.col("_cq")))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(label_col).alias("query_label"),
-        quantize(F.col(vec_col), scale).alias("_qq"),
+        quantize(F.col(vec_col)).alias("_qq"),
     ).withColumn("_qn2", norm2_q(F.col("_qq")))
     scored = (
         c.join(F.broadcast(q), F.col("neighbor_label") != F.col("query_label"))
         .withColumn("cos", cosine_q(dot_q(F.col("_qq"), F.col("_cq")), F.col("_qn2"), F.col("_cn2")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro"),
-        )
+    return _top_k_by_cos(scored, k).select(
+        "query_id",
+        "query_label",
+        "neighbor_id",
+        "neighbor_label",
+        F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro"),
     )
 
 
@@ -195,7 +202,6 @@ def embedding_near_pairs(
     vec_col: str,
     dim: int,
     threshold: float = 0.9,
-    scale: int = 1000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: bucket every vector by
     its hyperplane signature, self-join on bucket (id_a < id_b), keep
@@ -215,7 +221,7 @@ def embedding_near_pairs(
     # (measured 68 s -> ~8 s at the sf1 point; rationale in
     # operators/pairs.py)
     c = spread_for_pair_join(
-        corpus.select(F.col(id_col).alias("_id"), quantize(F.col(vec_col), scale).alias("_q"))
+        corpus.select(F.col(id_col).alias("_id"), quantize(F.col(vec_col)).alias("_q"))
         .withColumn("_n2", norm2_q(F.col("_q")))
         .withColumn("bucket", _bucket_expr(F.col("_q"), dim)),
         "bucket",
@@ -237,7 +243,6 @@ def semdedup(
     vec_col: str,
     centroid_ids: list[int] | None = None,
     threshold: float = 0.95,
-    scale: int = 1000,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Semantic deduplication (SemDeDup — Abbas, Tirumala, Simig,
@@ -268,7 +273,7 @@ def semdedup(
     Output: (id_col, cluster, kept)."""
     if (centroid_ids is None) == (centroids is None):
         raise ValueError("pass exactly one of centroid_ids / centroids")
-    c = _semdedup_corpus(corpus, id_col, vec_col, scale)
+    c = _semdedup_corpus(corpus, id_col, vec_col)
     if centroids is not None:
         cents = centroids.select(
             F.col("cluster").alias("_cell"),
@@ -276,9 +281,7 @@ def semdedup(
             norm2_q(F.col("c")).alias("_kn2"),
         )
     else:
-        cents = c.filter(F.col("_id").isin(list(centroid_ids))).select(
-            F.col("_id").alias("_cell"), F.col("_q").alias("_kq"), F.col("_n2").alias("_kn2")
-        )
+        cents = _semdedup_seeded_codebook(c, centroid_ids)
     # lineage cut (lazy, graph.py pattern): the assignment feeds
     # THREE consumers (both sides of the within-cluster pair join and
     # the final labeling join) — without it the broadcast centroid
@@ -332,9 +335,7 @@ def semdedup(
     )
 
 
-def _semdedup_corpus(
-    corpus: DataFrame, id_col: str, vec_col: str, scale: int
-) -> DataFrame:
+def _semdedup_corpus(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Quantize + exact-norm + int32-narrow the corpus for semdedup
     (shared with tools/plan_audit.py semdedup_assign[pre-checkpoint]
     so the audited subtree is the live construction). The narrow
@@ -343,10 +344,19 @@ def _semdedup_corpus(
     shuffle (guide §2.3; bound + guard at _narrow_q32)."""
     return (
         corpus.select(
-            F.col(id_col).alias("_id"), quantize(F.col(vec_col), scale).alias("_q")
+            F.col(id_col).alias("_id"), quantize(F.col(vec_col)).alias("_q")
         )
         .withColumn("_n2", norm2_q(F.col("_q")))
         .withColumn("_q", _narrow_q32(F.col("_q"), F.col("_n2")))
+    )
+
+
+def _semdedup_seeded_codebook(c: DataFrame, centroid_ids: list[int]) -> DataFrame:
+    """The (_cell, _kq, _kn2) codebook seeded by member id from the
+    prepared corpus ``c`` (_semdedup_corpus) — shared with
+    tools/plan_audit.py semdedup_assign[pre-checkpoint]."""
+    return c.filter(F.col("_id").isin(list(centroid_ids))).select(
+        F.col("_id").alias("_cell"), F.col("_q").alias("_kq"), F.col("_n2").alias("_kn2")
     )
 
 
@@ -415,17 +425,16 @@ def lsh_ann_topk(
     query_id_col: str,
     dim: int,
     k: int = 3,
-    scale: int = 1000,
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's hyperplane
     bucket; exact quantized cosine ranks within the bucket."""
     c = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), quantize(F.col(vec_col), scale).alias("_cq"))
+        corpus.select(F.col(id_col).alias("neighbor_id"), quantize(F.col(vec_col)).alias("_cq"))
         .withColumn("_cn2", norm2_q(F.col("_cq")))
         .withColumn("bucket", _bucket_expr(F.col("_cq"), dim))
     )
     q = (
-        queries.select(F.col(query_id_col).alias("query_id"), quantize(F.col(vec_col), scale).alias("_qq"))
+        queries.select(F.col(query_id_col).alias("query_id"), quantize(F.col(vec_col)).alias("_qq"))
         .withColumn("_qn2", norm2_q(F.col("_qq")))
         .withColumn("bucket", _bucket_expr(F.col("_qq"), dim))
     )
@@ -435,11 +444,8 @@ def lsh_ann_topk(
         .withColumn("_dot", dot_q(F.col("_qq"), F.col("_cq")))
         .withColumn("cos", cosine_q(F.col("_dot"), F.col("_qn2"), F.col("_cn2")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "neighbor_id", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro"))
+    return _top_k_by_cos(scored, k).select(
+        "query_id", "neighbor_id", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro")
     )
 
 
@@ -450,12 +456,8 @@ def ivf_topk(
     vec_col: str,
     query_id_col: str,
     centroids: DataFrame,
-    centroid_id_col: str,
     k: int = 3,
     n_probe: int = 2,
-    scale: int = 1000,
-    centroid_vec_col: str | None = None,
-    centroids_pre_quantized: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: partition the corpus into cells by
     nearest centroid, then search only the ``n_probe`` cells nearest
@@ -469,34 +471,29 @@ def ivf_topk(
     size is corpus/n_cells * n_probe per query. Hot cells (Zipfian
     data) are AQE skew-split; more centroids shrink cells.
 
-    The codebook is either raw vectors in ``vec_col`` (seeded member
-    rows) or, with ``centroid_vec_col``/``centroids_pre_quantized``,
-    an already-quantized trained table — e.g. operators/kmeans.py
-    kmeans_train (cluster, c) output, as llm_ann_ivf_trained
-    demonstrates.
+    ``centroids`` is a quantized (cluster, c) codebook: the
+    operators/kmeans.py kmeans_train output (llm_ann_ivf_trained) or
+    quantized member rows picked as seeds (llm_ann_ivf). Returns
+    (query_id, neighbor_id, cos_micro), k rows per query ranked
+    (cos desc, neighbor_id asc).
 
     Determinism: all scoring on quantized integer vectors (exact),
     ties broken by id — bit-identical to the DuckDB oracle.
     """
-    cvec = F.col(centroid_vec_col or vec_col)
-    kq = cvec if centroids_pre_quantized else quantize(cvec, scale)
     cents = centroids.select(
-        F.col(centroid_id_col).alias("_cell"), kq.alias("_kq")
+        F.col("cluster").alias("_cell"), F.col("c").alias("_kq")
     ).withColumn("_kn2", norm2_q(F.col("_kq")))
 
     def nearest_cells(df: DataFrame, idc: str, out_id: str, n: int) -> DataFrame:
         scored = (
-            df.select(F.col(idc).alias(out_id), quantize(F.col(vec_col), scale).alias("_q"))
+            df.select(F.col(idc).alias(out_id), quantize(F.col(vec_col)).alias("_q"))
             .withColumn("_n2", norm2_q(F.col("_q")))
             .join(F.broadcast(cents))
             .withColumn("_cos", cosine_q(dot_q(F.col("_q"), F.col("_kq")), F.col("_n2"), F.col("_kn2")))
         )
-        w = Window.partitionBy(out_id).orderBy(F.desc("_cos"), F.asc("_cell"))
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= n)
-            .select(out_id, "_cell", "_q", "_n2")
-        )
+        return top_k_per_group(
+            scored, [out_id], [F.desc("_cos"), F.asc("_cell")], n, rank_col="_rn"
+        ).select(out_id, "_cell", "_q", "_n2")
 
     cells = nearest_cells(corpus, id_col, "neighbor_id", 1)
     probes = nearest_cells(queries, query_id_col, "query_id", n_probe)
@@ -509,13 +506,8 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos", cosine_q(dot_q(F.col("_qq"), F.col("_cq")), F.col("_qn2"), F.col("_cn2")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            "query_id", "neighbor_id", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro")
-        )
+    return _top_k_by_cos(scored, k).select(
+        "query_id", "neighbor_id", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro")
     )
 
 
@@ -528,7 +520,6 @@ def pq_adc_topk(
     codeword_ids: list[int] | None = None,
     n_sub: int = 4,
     k: int = 3,
-    scale: int = 1000,
     codebook: DataFrame | None = None,
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
@@ -569,7 +560,7 @@ def pq_adc_topk(
         # subspace slice inside the explode's array constructor (the
         # round-21 Generate-planning finding, OPTIMIZATION_r21.md).
         qdf = df.select(
-            F.col(idc).alias(out), quantize(F.col(vec_col), scale).alias("_qv")
+            F.col(idc).alias(out), quantize(F.col(vec_col)).alias("_qv")
         )
         q = F.col("_qv")
         sd = (F.size(q) / n_sub).cast("int")
@@ -625,9 +616,6 @@ def pq_adc_topk(
         .groupBy("query_id", "nid")
         .agg(F.sum("d2").alias("adc_d2"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_d2"), F.asc("nid"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", F.col("nid").alias("neighbor_id"), "adc_d2")
-    )
+    return top_k_per_group(
+        scored, ["query_id"], [F.asc("adc_d2"), F.asc("nid")], k, rank_col="_rn"
+    ).select("query_id", F.col("nid").alias("neighbor_id"), "adc_d2")

@@ -17,14 +17,15 @@ heavy hitters over a key too high-cardinality to aggregate exactly,
 paying O(depth*width) memory for an overestimate bounded by
 eps*N = (e/width)*N with probability 1 - (1/e)^depth.
 
-Hashing is the portable md5-based hash60 (functions/text.py) so a SQL
-oracle reproduces the sketch bit-for-bit; at production scale pass
-hash_fn=F.xxhash64-based columns instead.
+The sketch shape is fixed at CMS_DEPTH x CMS_WIDTH for both build and
+estimate, so a sketch can never be probed with coordinates it was not
+built with. Hashing is fixed to the md5-based hash60
+(functions/text.py): the DuckDB oracle recomputes every bucket from
+the same md5 prefix, which an engine-specific hash such as xxhash64
+would not allow.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,58 +36,41 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-def _coords(
-    k: Column, depth: int, width: int, hash_fn: Callable[[Column], Column]
-) -> list[tuple[Column, Column]]:
-    # row i hashes "i:key" — independent-enough hash family, and the
-    # exact concat form the DuckDB oracle mirrors
-    return [
-        (
-            F.lit(i),
-            hash_fn(F.concat_ws(":", F.lit(str(i)), k)) % width,
-        )
-        for i in range(depth)
-    ]
-
-
-def cms_build(
-    df: DataFrame,
-    key: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    hash_fn: Callable[[Column], Column] = hash60,
-) -> DataFrame:
-    """Sketch table (d, bucket, c): c = number of input rows whose
-    key hashes to bucket under hash row d. At most depth*width rows."""
-    k = F.col(key).cast("string")
-    pairs = F.array(
-        *[F.struct(d.alias("d"), b.alias("bucket")) for d, b in _coords(k, depth, width, hash_fn)]
+def _coords(k: Column) -> Column:
+    """array<struct<d, bucket>>: row i hashes "i:key" — an
+    independent-enough hash family, and the exact concat form the
+    DuckDB oracle mirrors."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("d"),
+                (hash60(F.concat_ws(":", F.lit(str(i)), k)) % CMS_WIDTH).alias("bucket"),
+            )
+            for i in range(CMS_DEPTH)
+        ]
     )
+
+
+def cms_build(df: DataFrame, key: str) -> DataFrame:
+    """Sketch table (d, bucket, c): c = number of input rows whose
+    key hashes to bucket under hash row d. At most
+    CMS_DEPTH*CMS_WIDTH rows."""
     return (
-        df.select(F.explode(pairs).alias("p"))
+        df.select(F.explode(_coords(F.col(key).cast("string"))).alias("p"))
         .select("p.d", "p.bucket")
         .groupBy("d", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
 
 
-def cms_estimate(
-    sketch: DataFrame,
-    candidates: DataFrame,
-    key: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    hash_fn: Callable[[Column], Column] = hash60,
-) -> DataFrame:
-    """(key, est): est = min over depth rows of the probed bucket
-    counts — >= true frequency always, <= true + (e/width)*N w.h.p.
-    The sketch side is broadcast; candidates never shuffle."""
+def cms_estimate(sketch: DataFrame, candidates: DataFrame, key: str) -> DataFrame:
+    """(key, est): est = min over the CMS_DEPTH rows of the probed
+    bucket counts — >= true frequency always, <= true +
+    (e/CMS_WIDTH)*N w.h.p. The sketch side is broadcast; candidates
+    never shuffle."""
     k = F.col(key).cast("string")
-    pairs = F.array(
-        *[F.struct(d.alias("d"), b.alias("bucket")) for d, b in _coords(k, depth, width, hash_fn)]
-    )
     probes = candidates.select(
-        k.alias("_cms_k"), F.explode(pairs).alias("p")
+        k.alias("_cms_k"), F.explode(_coords(k)).alias("p")
     ).select("_cms_k", "p.d", "p.bucket")
     return (
         probes.join(F.broadcast(sketch), ["d", "bucket"])

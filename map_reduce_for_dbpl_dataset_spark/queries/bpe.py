@@ -169,6 +169,8 @@ def _bpe_rounds(
             .select("word", "cnt", "seq")
             .localCheckpoint(eager=False)
         )
+    if not bests:  # zero merge budget: no rules, unmerged words
+        return [], w
     # ONE action materializes every round's checkpoint (<= R probe
     # rows total — each best is limit(1)) and reveals the first empty
     # round, if any.

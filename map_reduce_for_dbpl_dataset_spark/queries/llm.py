@@ -49,6 +49,7 @@ from ..operators.dedup import (
     simhash_near_pairs,
 )
 from ..functions.text import ROLL_B, ROLL_P, rolling_fold
+from ..functions.vectors import QUANT_SCALE
 from ..operators.pairs import spread_for_pair_join
 from ..operators.similarity import (
     N_PLANES,
@@ -57,6 +58,7 @@ from ..operators.similarity import (
     lsh_ann_topk,
     plane_coef,
 )
+from ..operators.topk import top_k_per_group
 from ..sources.parquet import load_table
 
 EMB_DIM = 64
@@ -338,7 +340,8 @@ SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3 ORDER BY id_a, id_b
 
 
 # --- ANN over embeddings -----------------------------------------------------
-_QUANT = "[CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding]"
+# functions/vectors.py quantize, in DuckDB: the one oracle quantization.
+_QUANT = f"[CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) for x in embedding]"
 
 
 def q_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -513,7 +516,7 @@ corpus AS (
           for i in range(1, {EMB_DIM + 1})]
   FROM base WHERE vec_id < 10
 ),
-q0 AS (SELECT vec_id, [CAST(floor(x * 1000) AS BIGINT) for x in emb] AS q FROM corpus),
+q0 AS (SELECT vec_id, [CAST(floor(x * {QUANT_SCALE}) AS BIGINT) for x in emb] AS q FROM corpus),
 n AS (
   SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
 ),
@@ -912,8 +915,6 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one explode + two aggregates (df per term, tf per doc-term)
     + a broadcast of the term-df table; WindowGroupLimit bounds the
     per-doc rank."""
-    from pyspark.sql import Window
-
     d = load_table(spark, sf_dir, "documents")
     stop = F.array(*[F.lit(s) for s in STOPWORDS])
     terms = (
@@ -939,12 +940,15 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("doc_id") < 50)
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("tfidf_micro"), F.asc("term")
-    )
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
+        top_k_per_group(
+            scored,
+            ["doc_id"],
+            [F.desc("tfidf_micro"), F.asc("term")],
+            3,
+            rank_col="rn",
+            keep_rank=True,
+        )
         .select("doc_id", "term", "tf", "df", "tfidf_micro", "rn")
         .orderBy("doc_id", "rn")
     )

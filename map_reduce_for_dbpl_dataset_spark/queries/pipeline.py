@@ -21,11 +21,13 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import hash60, normalize_text, tokens, word_shingles
+from ..functions.text import hash60, tokens, word_shingles
+from ..functions.vectors import QUANT_SCALE, quantize
 from ..operators.pairs import spread_for_pair_join
 from ..operators.similarity import ivf_topk, pq_adc_topk
+from ..operators.topk import top_k_per_group
 from ..sources.parquet import load_table
-from .llm import _SH_CTE, EMB_DIM, N_QUERY_VECS, _docs_shingled
+from .llm import _QUANT, _SH_CTE, EMB_DIM, N_QUERY_VECS, _docs_shingled
 
 # --- decontamination ---------------------------------------------------------
 # Held-out "benchmark" split: every 20th doc. In production the test
@@ -319,8 +321,9 @@ FROM shm WHERE len(ss) > 0 ORDER BY doc_id
 
 # --- IVF ANN -----------------------------------------------------------------
 # Coarse "codebook": the vectors right after the query range act as
-# fixed centroids (a real pipeline trains k-means; the layout and
-# joins are identical).
+# fixed centroids, quantized into the (cluster, c) table ivf_topk takes
+# (llm_ann_ivf_trained trains it with k-means; the layout and joins are
+# identical).
 IVF_CENTROID_IDS = list(range(N_QUERY_VECS, N_QUERY_VECS + 8))
 IVF_N_PROBE = 2
 
@@ -336,14 +339,14 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="vec_id",
         vec_col="embedding",
         query_id_col="vec_id",
-        centroids=e.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)),
-        centroid_id_col="vec_id",
+        centroids=e.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)).select(
+            F.col("vec_id").alias("cluster"), quantize(F.col("embedding")).alias("c")
+        ),
         k=3,
         n_probe=IVF_N_PROBE,
     ).orderBy("query_id", "neighbor_id")
 
 
-_IVF_QUANT = "[CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding]"
 _IVF_DOT = f"CAST(list_sum([a.q[i] * c.kq[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)"
 
 
@@ -351,7 +354,7 @@ def _ivf_sql() -> str:
     ids = ", ".join(str(i) for i in IVF_CENTROID_IDS)
     return f"""
 WITH q0 AS (
-  SELECT vec_id, {_IVF_QUANT} AS q FROM embeddings
+  SELECT vec_id, {_QUANT} AS q FROM embeddings
 ),
 n AS (
   SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
@@ -422,7 +425,7 @@ def _pq_sql() -> str:
     d2 = f"list_sum([(s.sq[i] - b.bq[i]) * (s.sq[i] - b.bq[i]) for i in range(1, {sub_dim + 1})])"
     return f"""
 WITH q0 AS (
-  SELECT vec_id, {_IVF_QUANT} AS q FROM embeddings
+  SELECT vec_id, {_QUANT} AS q FROM embeddings
 ),
 ms AS (SELECT unnest([{", ".join(str(m) for m in range(PQ_N_SUB))}]) AS m),
 subs AS (
@@ -609,7 +612,7 @@ c{t} AS (SELECT cluster, list(s // n ORDER BY dim) AS c FROM pd{t} GROUP BY clus
     return f"""
 WITH q0 AS (
   SELECT vec_id AS vid,
-         [CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding] AS q
+         {_QUANT} AS q
   FROM embeddings
 ),
 c0 AS (SELECT vid AS cluster, q AS c FROM q0 WHERE vid IN ({ids})),{",".join(parts)},{final}
@@ -1192,7 +1195,7 @@ corpus AS (
           for i in range(1, {EMB_DIM + 1})]
   FROM base WHERE vec_id < 10
 ),
-q0 AS (SELECT vec_id, [CAST(floor(x * 1000) AS BIGINT) for x in emb] AS q FROM corpus),
+q0 AS (SELECT vec_id, [CAST(floor(x * {QUANT_SCALE}) AS BIGINT) for x in emb] AS q FROM corpus),
 n AS (SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0),
 cents AS (SELECT vec_id AS cell, q, n2 FROM n WHERE vec_id IN ({ids})),
 assigned AS (
@@ -1442,7 +1445,7 @@ def _kmeans_prelude(
     )
     return f"""{prefix}q AS (
   SELECT vec_id AS vid,
-         [CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in {vec}] AS q
+         [CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) for x in {vec}] AS q
   FROM embeddings{src_where}
 ),
 {prefix}c0 AS ({c0_body}),{",".join(parts)}"""
@@ -1483,7 +1486,7 @@ corpus AS (
           for i in range(1, {EMB_DIM + 1})]
   FROM base WHERE vec_id < 10
 ),
-qs AS (SELECT vec_id, [CAST(floor(x * 1000) AS BIGINT) for x in emb] AS q FROM corpus),
+qs AS (SELECT vec_id, [CAST(floor(x * {QUANT_SCALE}) AS BIGINT) for x in emb] AS q FROM corpus),
 n AS (SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM qs),
 assigned AS (
   SELECT vec_id, q, n2, cell AS cluster FROM (
@@ -1527,11 +1530,8 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         vec_col="embedding",
         query_id_col="vec_id",
         centroids=cents,
-        centroid_id_col="cluster",
         k=3,
         n_probe=IVF_N_PROBE,
-        centroid_vec_col="c",
-        centroids_pre_quantized=True,
     ).orderBy("query_id", "neighbor_id")
 
 
@@ -1539,7 +1539,7 @@ def _ivf_trained_sql() -> str:
     return f"""
 WITH {_kmeans_prelude()},
 q0 AS (
-  SELECT vec_id, {_IVF_QUANT} AS q FROM embeddings
+  SELECT vec_id, {_QUANT} AS q FROM embeddings
 ),
 n AS (
   SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
@@ -1670,7 +1670,7 @@ def _pq_trained_sql() -> str:
     return f"""
 WITH {preludes},
 q0 AS (
-  SELECT vec_id, {_IVF_QUANT} AS q FROM embeddings
+  SELECT vec_id, {_QUANT} AS q FROM embeddings
 ),
 ms AS (SELECT unnest([{", ".join(str(m) for m in range(PQ_N_SUB))}]) AS m),
 subs AS (
@@ -1746,10 +1746,14 @@ def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = tf.join(dfc, "tok").withColumn(
         "score_micro", F.expr(f"(tf * 1000000 * {k_lit}) div df_clusters")
     )
-    w = Window.partitionBy("cluster").orderBy(F.desc("score_micro"), F.asc("tok"))
     return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= CLUSTER_TOP_K)
+        top_k_per_group(
+            scored,
+            ["cluster"],
+            [F.desc("score_micro"), F.asc("tok")],
+            CLUSTER_TOP_K,
+            rank_col="_rn",
+        )
         .select("cluster", "tok", "tf", "df_clusters", "score_micro")
         .orderBy("cluster", F.desc("score_micro"), "tok")
     )
@@ -1843,7 +1847,7 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_DECONTAMINATE_SEMANTIC = f"""
 WITH q0 AS (
-  SELECT vec_id, {_IVF_QUANT} AS q FROM embeddings
+  SELECT vec_id, {_QUANT} AS q FROM embeddings
 ),
 n AS (
   SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
@@ -2360,8 +2364,6 @@ def q_embed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     form overflowed int64 beyond ~1e5 rows/class, contradicting the
     100 TB framing).  Ties break to the lower class id via the
     partial-aggregable min(struct) argmin."""
-    from ..functions.vectors import quantize
-
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select("vec_id", "label", quantize(F.col("embedding")).alias("q"))
     tr = q.filter(F.col("vec_id") % CLS_HOLDOUT_MOD != 0)
@@ -2409,7 +2411,7 @@ def q_embed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_EMBED_CLASSIFIER = f"""
 WITH q AS (
   SELECT vec_id, label,
-         [CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding] AS q
+         {_QUANT} AS q
   FROM embeddings
 ),
 tr AS (SELECT * FROM q WHERE vec_id % {CLS_HOLDOUT_MOD} != 0),

@@ -245,12 +245,12 @@ FROM r ORDER BY doc_id
 
 
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling: k strided byte-window 'frames' per payload,
-    fingerprinted — one row per frame via mapInPandas. ASCII fixture
+    """Frame sampling: FRAME_COUNT strided byte-window 'frames' per
+    payload, fingerprinted — one row per frame via mapInPandas. ASCII fixture
     text makes the byte-window md5 reproducible in SQL (substr)."""
     d = load_table(spark, sf_dir, "documents")
     payloads = attach_payload(d, "doc_id", "text")
-    return sample_frames(payloads, k=4, width=16).orderBy("doc_id", "frame_idx")
+    return sample_frames(payloads).orderBy("doc_id", "frame_idx")
 
 
 SQL_MULTIMODAL_FRAMES = """

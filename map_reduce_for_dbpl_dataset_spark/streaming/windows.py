@@ -75,9 +75,12 @@ def stream_events_duplicated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_events_phased_late(
-    spark: SparkSession, sf_dir: str, n_late: int = 50
-) -> DataFrame:
+# Late copies delivered in the final micro-batch of
+# stream_events_phased_late.
+N_LATE = 50
+
+
+def stream_events_phased_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table delivered in THREE ordered
     micro-batches so genuinely-late rows meet an advanced watermark:
 
@@ -91,7 +94,7 @@ def stream_events_phased_late(
                 would be filtered against the pre-advance watermark
                 and sail through, which is exactly what the first
                 two-file draft of this source measured);
-      batch 2 — ``n_late`` re-stamped copies of the first events
+      batch 2 — N_LATE re-stamped copies of the first events
                 (ts = corpus minimum, shifted ids): every one is now
                 late against W and must be DROPPED.
 
@@ -120,7 +123,7 @@ def stream_events_phased_late(
         .withColumn("event_id", F.col("event_id") + 20_000_000)
     )
     late = (
-        batch.filter(F.col("event_id") < n_late)
+        batch.filter(F.col("event_id") < N_LATE)
         .withColumn("ts", F.lit(min_ts).cast("timestamp_ntz"))
         .withColumn("event_id", F.col("event_id") + 10_000_000)
     )

@@ -267,3 +267,26 @@ def test_bpe_zero_learnable_pairs(spark, tmp_path):
         for r in q_bpe_encode(spark, sf).collect()
     }
     assert enc == {0: (3, 3, 3), 1: (3, 3, 3)}
+
+
+def test_bpe_zero_merge_budget(spark, sf_dir, monkeypatch):
+    """A symbol budget equal to the base alphabet leaves zero merge
+    rounds: train is the empty rule table and segment returns every
+    trained word type split into single characters."""
+    from map_reduce_for_dbpl_dataset_spark.queries import bpe
+
+    monkeypatch.setattr(bpe, "BPE_MERGES", 0)
+    assert q_bpe_train(spark, sf_dir).count() == 0
+
+    texts = [
+        r.text
+        for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("text")
+        .collect()
+    ]
+    top = sorted(_words(texts).items(), key=lambda kv: (-kv[1], kv[0]))[:BPE_TOP_WORDS]
+    got = {
+        r.word: (r.cnt, r.n_pieces, r.pieces)
+        for r in q_bpe_segment(spark, sf_dir).collect()
+    }
+    assert got == {w: (cnt, len(w), " ".join(w)) for w, cnt in top}

@@ -429,7 +429,7 @@ def test_semdedup_matmul_assignment_matches_expression_argmax(spark, sf_dir):
     )
     cents = kmeans_train(e, "vec_id", "embedding", [30, 31, 32, 33, 34], iters=2)
     c = e.select(
-        F.col("vec_id").alias("_id"), quantize(F.col("embedding"), 1000).alias("_q")
+        F.col("vec_id").alias("_id"), quantize(F.col("embedding")).alias("_q")
     ).withColumn("_n2", norm2_q(F.col("_q")))
     cc = cents.select(
         F.col("cluster").alias("_cell"),
@@ -469,13 +469,13 @@ def test_semdedup_matmul_assignment_matches_expression_argmax(spark, sf_dir):
 
 def test_semdedup_corpus_ships_int32_vectors(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
-    c = _semdedup_corpus(e, "vec_id", "embedding", 1000)
+    c = _semdedup_corpus(e, "vec_id", "embedding")
     assert dict(c.dtypes)["_q"] == "array<int>"
     # and the values equal the unnarrowed quantization exactly
     from map_reduce_for_dbpl_dataset_spark.functions.vectors import quantize
 
     wide = e.select(
-        F.col("vec_id").alias("_id"), quantize(F.col("embedding"), 1000).alias("_qw")
+        F.col("vec_id").alias("_id"), quantize(F.col("embedding")).alias("_qw")
     )
     diff = (
         c.join(wide, "_id")
@@ -579,7 +579,7 @@ def test_semdedup_corpus_passes_null_embedding_through(spark):
     df = spark.createDataFrame(
         [(0, [0.5, -0.25]), (1, None)], "vec_id long, embedding array<float>"
     )
-    c = _semdedup_corpus(df, "vec_id", "embedding", 1000)
+    c = _semdedup_corpus(df, "vec_id", "embedding")
     assert dict(c.dtypes)["_q"] == "array<int>"
     got = {r["_id"]: r["_q"] for r in c.collect()}
     assert got == {0: [500, -250], 1: None}

@@ -942,8 +942,8 @@ sample — one static string, hash-exact at sf0.01/sf0.1/sf1 (K = 22
     "llm_ann_ivf_trained": """\
 **Trained coarse quantizer** (sibling of llm_semdedup_trained): the
 IVF codebook comes from kmeans_train instead of seeded member rows.
-ivf_topk accepts the already-quantized (cluster, c) table via
-centroid_vec_col/centroids_pre_quantized; plan shape is the seeded
+ivf_topk takes the quantized (cluster, c) table in both cases; plan
+shape is the seeded
 variant's — codebook broadcasts for assignment and probing, the only
 shuffle is the cell-id candidate join. Oracle = kmeans prelude CTEs
 chained into the IVF SQL, hash-exact.""",
@@ -1006,7 +1006,7 @@ def _kmeans_iteration_plan(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
-        F.col("vec_id").alias("vid"), quantize(F.col("embedding"), 1000).alias("q")
+        F.col("vec_id").alias("vid"), quantize(F.col("embedding")).alias("q")
     )
     cents = q.filter(F.col("vid").isin([30, 31, 32, 33])).select(
         F.col("vid").alias("cluster"), F.col("q").alias("c")
@@ -1076,22 +1076,16 @@ def _cc_star_round_plan(spark, sf_dir):
 def _semdedup_assign_plan(spark, sf_dir):
     """Pre-checkpoint SemDeDup cell assignment: the subtree hidden
     behind semdedup's lazy lineage cut."""
-    from pyspark.sql import functions as F
-
     from map_reduce_for_dbpl_dataset_spark.operators.similarity import (
         _semdedup_assigned,
         _semdedup_corpus,
+        _semdedup_seeded_codebook,
     )
     from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
-    c = _semdedup_corpus(e, "vec_id", "embedding", 1000)
-    cents = c.filter(F.col("_id").isin([30, 31, 32, 33])).select(
-        F.col("_id").alias("_cell"),
-        F.col("_q").alias("_kq"),
-        F.col("_n2").alias("_kn2"),
-    )
-    return _semdedup_assigned(c, cents)
+    c = _semdedup_corpus(e, "vec_id", "embedding")
+    return _semdedup_assigned(c, _semdedup_seeded_codebook(c, [30, 31, 32, 33]))
 
 
 def _bpe_merge_round_plan(spark, sf_dir):
