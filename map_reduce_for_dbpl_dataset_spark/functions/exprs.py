@@ -2,9 +2,15 @@
 
 These are the two sub-operators the reference duplicates across its
 mappers (SURVEY.md §2.1 "shared sub-operators"), expressed once as
-Catalyst column expressions so they stay inside whole-stage codegen —
-no Python executes per row. Both read the publications table's own
-column names (sources/parquet.py).
+Catalyst expressions so they stay inside whole-stage codegen — no
+Python executes per row. Both read the publications table's own column
+names (sources/parquet.py).
+
+Each is written as Spark SQL text and parsed in one ``F.expr`` call.
+Composing the same CASE from Column objects costs a Py4J round trip
+per node, ~40 for the venue dispatch, paid every time a DBLP query is
+built; the parsed expression is the same Catalyst tree, so the plans
+do not change.
 """
 
 from __future__ import annotations
@@ -14,11 +20,28 @@ from pyspark.sql import functions as F
 
 NO_VENUE = "No venue available"
 
+# nullif(coalesce(x, ''), '') NULLs out empty strings so coalesce() can
+# fall through, mirroring the reference's `if (x.text == "") fallback`.
+_VENUE_SQL = f"""
+CASE
+  WHEN kind = 'article' THEN coalesce(
+    nullif(coalesce(journal, ''), ''), nullif(coalesce(booktitle, ''), ''))
+  WHEN kind IN ('inproceedings', 'incollection') THEN nullif(coalesce(booktitle, ''), '')
+  WHEN kind IN ('book', 'proceedings') THEN coalesce(
+    nullif(coalesce(publisher, ''), ''), nullif(coalesce(booktitle, ''), ''))
+  WHEN kind IN ('phdthesis', 'mastersthesis') THEN nullif(coalesce(school, ''), '')
+  WHEN kind = 'www' THEN concat_ws('/', slice(split(key, '/'), 1, 3))
+  ELSE '{NO_VENUE}'
+END
+"""
 
-def _nonempty(c: Column) -> Column:
-    """NULL-out empty strings so coalesce() can fall through, mirroring
-    the reference's `if (x.text == "") fallback` checks."""
-    return F.nullif(F.coalesce(c, F.lit("")), F.lit(""))
+_AUTHORS_OR_EDITORS_SQL = """
+CASE
+  WHEN size(coalesce(authors, CAST(array() AS ARRAY<STRING>))) > 0
+    THEN coalesce(authors, CAST(array() AS ARRAY<STRING>))
+  ELSE coalesce(editors, CAST(array() AS ARRAY<STRING>))
+END
+"""
 
 
 def venue_expr() -> Column:
@@ -33,29 +56,14 @@ def venue_expr() -> Column:
                                   (Homework2.scala:49)
       otherwise                -> "No venue available" (Homework2.scala:50)
 
-    Missing branches yield '' (the reference emits the empty string and
-    filters it downstream, Homework2.scala:136).
+    An empty or absent field yields NULL where the reference emits the
+    empty string; both are filtered downstream (Homework2.scala:136).
     """
-    kind, journal, booktitle = F.col("kind"), F.col("journal"), F.col("booktitle")
-    publisher, school, key = F.col("publisher"), F.col("school"), F.col("key")
-    www_venue = F.concat_ws("/", F.slice(F.split(key, "/"), 1, 3))
-    return (
-        F.when(kind == "article", F.coalesce(_nonempty(journal), _nonempty(booktitle)))
-        .when(kind.isin("inproceedings", "incollection"), _nonempty(booktitle))
-        .when(
-            kind.isin("book", "proceedings"),
-            F.coalesce(_nonempty(publisher), _nonempty(booktitle)),
-        )
-        .when(kind.isin("phdthesis", "mastersthesis"), _nonempty(school))
-        .when(kind == "www", www_venue)
-        .otherwise(F.lit(NO_VENUE))
-    )
+    return F.expr(_VENUE_SQL)
 
 
 def authors_or_editors() -> Column:
     """Author/editor coalesce (Homework2.scala:53-57, repeated at six
     sites): the author list, falling back to editors when empty.
     Returns array<string>; empty array when both are absent."""
-    a = F.coalesce(F.col("authors"), F.array().cast("array<string>"))
-    e = F.coalesce(F.col("editors"), F.array().cast("array<string>"))
-    return F.when(F.size(a) > 0, a).otherwise(e)
+    return F.expr(_AUTHORS_OR_EDITORS_SQL)

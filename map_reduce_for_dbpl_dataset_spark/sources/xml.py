@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .parquet import PUBLICATIONS_SCHEMA, ddl_columns
+
 # Content model per dblp.dtd:32-46: record kind = element name, fields
 # optional and repeatable; key/mdate are attributes. The FULL %field;
 # set (dblp.dtd:36, author..publnr) is carried: author/editor/ee/url/
@@ -50,45 +52,40 @@ PUBLICATIONS_XML_PATH = os.path.join(
 )
 
 
+# publications column -> from_xml field, where the names differ.
+_XML_FIELD = {"key": "_key", "authors": "author", "editors": "editor", "mdate": "_mdate"}
+
+
+def _publication_column(name: str, type_: str) -> str:
+    """SQL for one publications column over the parsed record ``r``:
+    absent repeated fields become empty arrays, mdate a DATE."""
+    if name == "kind":
+        return "kind"
+    field = f"r.{_XML_FIELD.get(name, name)}"
+    if type_ == "ARRAY<STRING>":
+        field = f"coalesce({field}, CAST(array() AS ARRAY<STRING>))"
+    elif type_ == "DATE":
+        field = f"to_date({field})"
+    return f"{field} AS `{name}`"
+
+
+_PUBLICATION_COLUMNS = [
+    _publication_column(name, type_) for name, type_ in ddl_columns(PUBLICATIONS_SCHEMA)
+]
+
+
 def publications_from_xml(
     spark: SparkSession, path: str | None = None
 ) -> DataFrame:
     """Parse DBLP line records into the publications schema.
 
-    Column-for-column the shape of ``sources.parquet.publications``:
-    absent XML fields surface as NULL (strings) / empty arrays.
+    Column-for-column the shape of ``sources.parquet.publications``
+    (``PUBLICATIONS_SCHEMA``): absent XML fields surface as NULL
+    (strings) / empty arrays. The projection is one ``selectExpr``.
     """
     lines = spark.read.text(path or PUBLICATIONS_XML_PATH)
     rec = lines.select(
         F.regexp_extract("value", r"^<([a-z]+)[ >]", 1).alias("kind"),
         F.from_xml("value", PUB_XML_SCHEMA).alias("r"),
     )
-    empty = F.array().cast("array<string>")
-    return rec.select(
-        F.col("r._key").alias("key"),
-        "kind",
-        F.col("r.title").alias("title"),
-        F.coalesce("r.author", empty).alias("authors"),
-        F.coalesce("r.editor", empty).alias("editors"),
-        F.col("r.year").alias("year"),
-        F.col("r.journal").alias("journal"),
-        F.col("r.booktitle").alias("booktitle"),
-        F.col("r.publisher").alias("publisher"),
-        F.col("r.school").alias("school"),
-        F.col("r.pages").alias("pages"),
-        F.coalesce("r.ee", empty).alias("ee"),
-        F.col("r.crossref").alias("crossref"),
-        F.to_date("r._mdate").alias("mdate"),
-        F.col("r.address").alias("address"),
-        F.col("r.volume").alias("volume"),
-        F.col("r.number").alias("number"),
-        F.col("r.month").alias("month"),
-        F.coalesce("r.url", empty).alias("url"),
-        F.col("r.cdrom").alias("cdrom"),
-        F.coalesce("r.cite", empty).alias("cite"),
-        F.col("r.note").alias("note"),
-        F.col("r.isbn").alias("isbn"),
-        F.col("r.series").alias("series"),
-        F.col("r.chapter").alias("chapter"),
-        F.col("r.publnr").alias("publnr"),
-    )
+    return rec.selectExpr(*_PUBLICATION_COLUMNS)

@@ -24,17 +24,18 @@ from __future__ import annotations
 import argparse
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# The checkout this script lives in, so a copy of the repo checks its
+# own engine.
+REPO = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, REPO)
 
-FIXTURE_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+from map_reduce_for_dbpl_dataset_spark.sources.parquet import FIXTURE_TABLES  # noqa: E402
 
 
 def _render(v) -> str:
