@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 # Superstep caps. Label propagation needs diameter-many rounds and
 # stops early at its fixpoint; the star alternation needs O(log n)
-# rounds and raises if the cap is ever hit.
+# rounds. Both raise if the cap is hit before the fixpoint.
 CC_MAX_ITERS = 100
 CC_STAR_MAX_ITERS = 50
 
@@ -36,7 +36,8 @@ CC_STAR_MAX_ITERS = 50
 def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     """(vertices[node], edges[src,dst]) -> (node, component) where
     component = min vertex label reachable in the undirected graph.
-    Isolated vertices form singleton components."""
+    Isolated vertices form singleton components. Raises RuntimeError
+    if labels still change after CC_MAX_ITERS rounds."""
     bi = (
         edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
         .unionByName(edges.select(F.col("dst").alias("_s"), F.col("src").alias("_d")))
@@ -72,6 +73,15 @@ def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
         labels = new_labels.drop("_chg")
         if changed == 0:
             break
+    else:
+        # labels still moved in the last round, so some component is
+        # wider than the cap allows: its labels are not the minimum yet
+        bi.unpersist()
+        raise RuntimeError(
+            f"connected_components did not reach the label fixpoint within "
+            f"CC_MAX_ITERS={CC_MAX_ITERS} rounds (label propagation needs "
+            f"one round per hop of the graph's diameter)"
+        )
     bi.unpersist()
     return labels
 

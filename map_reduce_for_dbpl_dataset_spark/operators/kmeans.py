@@ -32,6 +32,10 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import quantize
 
+# Lloyd iterations per training run, shared with the unrolled-CTE
+# oracles in queries/pipeline.py.
+KMEANS_ITERS = 2
+
 
 def dist2_q(a, b):
     """Exact integer squared L2 distance of two quantized vectors."""
@@ -39,6 +43,20 @@ def dist2_q(a, b):
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
+    )
+
+
+def _quantized(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vid, q): the corpus with each vector integer-quantized."""
+    return corpus.select(
+        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("q")
+    )
+
+
+def _seed_centroids(q: DataFrame, init_ids: Sequence[int]) -> DataFrame:
+    """(cluster, c): the initial centroids, one per seed vector id."""
+    return q.filter(F.col("vid").isin(list(init_ids))).select(
+        F.col("vid").alias("cluster"), F.col("q").alias("c")
     )
 
 
@@ -66,7 +84,7 @@ def kmeans_train(
     id_col: str,
     vec_col: str,
     init_ids: Sequence[int],
-    iters: int = 2,
+    iters: int = KMEANS_ITERS,
 ) -> DataFrame:
     """Run `iters` Lloyd iterations from centroids seeded at
     `init_ids`; returns the trained quantized centroid table
@@ -81,16 +99,8 @@ def kmeans_train(
     # One explicit shuffle to shuffle.partitions + a persist bounds
     # the rescans to one; unpersisted before returning.
     n_shuffle = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    q = (
-        corpus.select(
-            F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("q")
-        )
-        .repartition(n_shuffle)
-        .persist()
-    )
-    cents = q.filter(F.col("vid").isin(list(init_ids))).select(
-        F.col("vid").alias("cluster"), F.col("q").alias("c")
-    )
+    q = _quantized(corpus, id_col, vec_col).repartition(n_shuffle).persist()
+    cents = _seed_centroids(q, init_ids)
     for _ in range(iters):
         # materialize the K-row table per iteration: each Lloyd step
         # is a natural barrier, and without the cut every DOWNSTREAM
@@ -135,9 +145,7 @@ def kmeans_assign(
     exact integer distances, ties to the lower cluster id. Returns
     (id_col, cluster) — the consumer-facing assignment surface used
     by compositions like llm_cluster_top_terms."""
-    q = corpus.select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("q")
-    )
+    q = _quantized(corpus, id_col, vec_col)
     return _assign(q, centroids).select(F.col("vid").alias(id_col), "cluster")
 
 
@@ -146,16 +154,12 @@ def kmeans_fixed(
     id_col: str,
     vec_col: str,
     init_ids: Sequence[int],
-    iters: int = 2,
 ) -> DataFrame:
-    """Run `iters` Lloyd iterations from centroids seeded at
+    """Run KMEANS_ITERS Lloyd iterations from centroids seeded at
     `init_ids`; returns the final per-cluster summary
     (cluster, n_members, sse, min_member) — all exact integers."""
-    q = corpus.select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("q")
-    )
-    cents = kmeans_train(corpus, id_col, vec_col, init_ids, iters)
-    final = _assign(q, cents)
+    cents = kmeans_train(corpus, id_col, vec_col, init_ids)
+    final = _assign(_quantized(corpus, id_col, vec_col), cents)
     return final.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum("d2").alias("sse"),

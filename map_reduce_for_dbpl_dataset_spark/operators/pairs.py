@@ -16,11 +16,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# pair-stage partitions per core of the cluster's default parallelism
+PAIR_SPREAD_FACTOR = 4
 
-def spread_for_pair_join(df: DataFrame, *keys: str, factor: int = 4) -> DataFrame:
+
+def spread_for_pair_join(df: DataFrame, *keys: str) -> DataFrame:
     """Prepare ``df`` to be BOTH sides of a quadratic self-equi-join
     on ``keys``: pin it once, then spread it over
-    ``factor * defaultParallelism`` key-hashed partitions.
+    ``PAIR_SPREAD_FACTOR * defaultParallelism`` key-hashed partitions.
 
     Two load-bearing pieces:
 
@@ -38,9 +41,9 @@ def spread_for_pair_join(df: DataFrame, *keys: str, factor: int = 4) -> DataFram
       exchange; both join sides derive from this one exchange, so the
       join is co-partitioned and adds no further shuffle.
 
-    ``factor * defaultParallelism`` keeps per-task pair work bounded
-    while capping scheduler overhead; at cluster scale n grows with
-    the executor count, which is exactly the knob you want.
+    ``PAIR_SPREAD_FACTOR * defaultParallelism`` keeps per-task pair
+    work bounded while capping scheduler overhead; at cluster scale n
+    grows with the executor count, which is exactly the knob you want.
 
     Sibling disciplines — when this helper is the WRONG tool:
 
@@ -59,4 +62,6 @@ def spread_for_pair_join(df: DataFrame, *keys: str, factor: int = 4) -> DataFram
     (``REPARTITION_BY_NUM``) survives in every caller's plan.
     """
     n_parallel = df.sparkSession.sparkContext.defaultParallelism
-    return df.localCheckpoint(eager=False).repartition(factor * n_parallel, *keys)
+    return df.localCheckpoint(eager=False).repartition(
+        PAIR_SPREAD_FACTOR * n_parallel, *keys
+    )

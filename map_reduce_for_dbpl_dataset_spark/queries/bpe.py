@@ -115,6 +115,43 @@ def _adjacent_pairs(seq_col: str) -> F.Column:
     return F.when(n >= 2, pairs).otherwise(F.array().cast("array<string>"))
 
 
+def _word_seqs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The capped word-type table with each word spelled as its
+    '(s)(s)' symbol sequence: the input of the first merge round."""
+    return _word_types(spark, sf_dir).withColumn(
+        "seq", F.regexp_replace("word", "(.)", r"($1)")
+    )
+
+
+def _best_pair(w: DataFrame) -> DataFrame:
+    """One round's merge rule over the word table: adjacent pairs
+    weighted by word count, partial-agg sum, global top-1 (ties by
+    pair string ascending)."""
+    return (
+        w.select("cnt", F.explode(_adjacent_pairs("seq")).alias("pair"))
+        .groupBy("pair")
+        .agg(F.sum("cnt").alias("pair_count"))
+        .orderBy(F.desc("pair_count"), F.asc("pair"))
+        .limit(1)
+    )
+
+
+def _apply_merge(w: DataFrame, best: DataFrame) -> DataFrame:
+    """Apply the one-row rule ``best`` to every word: a broadcast
+    cross join, then one literal '(a)(b)' -> '(a~b)' replace."""
+    pat = F.concat(
+        F.lit("("), F.replace(F.col("pair"), F.lit(" "), F.lit(")(")), F.lit(")")
+    )
+    rep = F.concat(
+        F.lit("("), F.replace(F.col("pair"), F.lit(" "), F.lit("~")), F.lit(")")
+    )
+    return (
+        w.crossJoin(F.broadcast(best.select("pair")))
+        .withColumn("seq", F.replace(F.col("seq"), pat, rep))
+        .select("word", "cnt", "seq")
+    )
+
+
 def _bpe_rounds(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[DataFrame], DataFrame]:
@@ -122,11 +159,8 @@ def _bpe_rounds(
     word table).  Each round: pair explode + partial-agg sum + global
     top-1 over the K-row word table, then a broadcast one-row cross
     join applies the merge as a literal string rewrite."""
-    w = _word_types(spark, sf_dir).withColumn(
-        "seq", F.regexp_replace("word", "(.)", r"($1)")
-    )
     # pin the single corpus pass; every round re-reads this K-row table
-    w = w.localCheckpoint(eager=False)
+    w = _word_seqs(spark, sf_dir).localCheckpoint(eager=False)
     # Build ALL R rounds speculatively (lazy checkpoints cut each
     # round's plan, so the chain stays O(1) per round), then run the
     # early-stop emptiness check for every round in ONE driver action
@@ -146,29 +180,12 @@ def _bpe_rounds(
     ws: list[DataFrame] = [w]
     for r in range(1, BPE_MERGES + 1):
         best = (
-            ws[-1]
-            .select("cnt", F.explode(_adjacent_pairs("seq")).alias("pair"))
-            .groupBy("pair")
-            .agg(F.sum("cnt").alias("pair_count"))
-            .orderBy(F.desc("pair_count"), F.asc("pair"))
-            .limit(1)
+            _best_pair(ws[-1])
             .withColumn("round", F.lit(r))
             .localCheckpoint(eager=False)  # reused: output row + rewrite
         )
         bests.append(best)
-        pat = F.concat(
-            F.lit("("), F.replace(F.col("pair"), F.lit(" "), F.lit(")(")), F.lit(")")
-        )
-        rep = F.concat(
-            F.lit("("), F.replace(F.col("pair"), F.lit(" "), F.lit("~")), F.lit(")")
-        )
-        ws.append(
-            ws[-1]
-            .crossJoin(F.broadcast(best.select("pair")))
-            .withColumn("seq", F.replace(F.col("seq"), pat, rep))
-            .select("word", "cnt", "seq")
-            .localCheckpoint(eager=False)
-        )
+        ws.append(_apply_merge(ws[-1], best).localCheckpoint(eager=False))
     if not bests:  # zero merge budget: no rules, unmerged words
         return [], w
     # ONE action materializes every round's checkpoint (<= R probe

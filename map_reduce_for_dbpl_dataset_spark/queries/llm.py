@@ -236,7 +236,10 @@ def q_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filtered exact Jaccard join. The ORACLE IS THE SAME SQL
     as llm_ngram_jaccard: the prefix filter is an exact optimization,
     so hash-equality against the naive formulation proves the filter
-    loses no pairs."""
+    loses no pairs.  Candidate cost is the sum of squared prefix-bucket
+    sizes, so it grows super-linearly with the corpus: past a few
+    hundred thousand documents per snapshot the operating point is
+    llm_dedup_minhash_lsh, with this join kept for exact passes."""
     sh = _docs_shingled(spark, sf_dir)
     out = ngram_jaccard_pairs_prefix(sh, "doc_id", "shingles", threshold=0.8)
     return out.select(
@@ -1077,8 +1080,9 @@ def _winnow_fps(corpus: DataFrame) -> DataFrame:
     value-identical). Projecting `_t` then `_h` separately binds every
     reference to an attribute; CollapseProject keeps the projections
     apart because the aliases are non-cheap and referenced more than
-    once. Shared with tools/plan_audit.py winnow_fps[pre-checkpoint],
-    which audits this subtree ahead of the caller's lineage cut."""
+    once. tools/plan_audit.py winnow_fps[pre-checkpoint] audits this
+    subtree with _winnow_df_capped, ahead of the caller's lineage
+    cut."""
     W = WINNOW_W
     t = corpus.select("doc_id", tokens(F.col("text")).alias("_t"))
     hdf = t.select(
@@ -1090,6 +1094,19 @@ def _winnow_fps(corpus: DataFrame) -> DataFrame:
     for off in range(1, W):
         acc = F.zip_with(acc, F.slice(h, off + 1, m), lambda a, b: F.least(a, b))
     return hdf.select("doc_id", F.array_distinct(acc).alias("fps"))
+
+
+def _winnow_df_capped(fps: DataFrame) -> DataFrame:
+    """(doc_id, fp, _df): the exploded fingerprints, minus those shared
+    by more than WINNOW_MAX_DF documents.  Document frequency rides
+    the fp shuffle as a window count (no second aggregate subtree —
+    same move as lsh_sized_buckets)."""
+    from pyspark.sql import Window
+
+    ex = fps.select("doc_id", F.explode("fps").alias("fp"))
+    return ex.withColumn(
+        "_df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
+    ).filter(F.col("_df") <= WINNOW_MAX_DF)
 
 
 def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,11 +1159,6 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode of a 2.7 s derivation at sf1; pinned, the explode is
     # free (plans/r21/llm_winnow_pairs_{before,after}.txt).
     fps = _winnow_fps(corpus).localCheckpoint(eager=False)
-    ex = fps.select("doc_id", F.explode("fps").alias("fp"))
-    # document frequency rides the fp shuffle as a window count (no
-    # second aggregate subtree — same move as lsh_sized_buckets)
-    from pyspark.sql import Window
-
     # pin the fingerprint stream once (the O(len*W) sliding-min
     # transform plus the df window are the dominant cost — both
     # self-join sides would re-execute them), then spread the pair
@@ -1155,12 +1167,7 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # input size blind to the fan-out — measured 4 post-coalesce
     # tasks holding the stage ~8 min; 519 s -> 31 s with the spread
     # (rationale in operators/pairs.py)
-    exf = spread_for_pair_join(
-        ex.withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("fp")))
-        .filter(F.col("_df") <= WINNOW_MAX_DF)
-        .select("doc_id", "fp"),
-        "fp",
-    )
+    exf = spread_for_pair_join(_winnow_df_capped(fps).select("doc_id", "fp"), "fp")
     a, b = exf.alias("a"), exf.alias("b")
     return (
         a.join(

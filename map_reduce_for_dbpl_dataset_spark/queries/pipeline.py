@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import hash60, tokens, word_shingles
 from ..functions.vectors import QUANT_SCALE, quantize
+from ..operators.kmeans import KMEANS_ITERS
 from ..operators.pairs import spread_for_pair_join
 from ..operators.similarity import ivf_topk, pq_adc_topk
 from ..operators.topk import top_k_per_group
@@ -568,7 +569,6 @@ ORACLE_SQL = {
 
 # --- k-means (iterative, trains the IVF codebook) ----------------------------
 KMEANS_INIT_IDS = [30, 31, 32, 33]
-KMEANS_ITERS = 2
 
 
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,9 +579,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import kmeans_fixed
 
     e = load_table(spark, sf_dir, "embeddings")
-    return kmeans_fixed(
-        e, "vec_id", "embedding", KMEANS_INIT_IDS, iters=KMEANS_ITERS
-    ).orderBy("cluster")
+    return kmeans_fixed(e, "vec_id", "embedding", KMEANS_INIT_IDS).orderBy("cluster")
 
 
 def _kmeans_sql() -> str:
@@ -847,7 +845,10 @@ def q_quality_select_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOUNDS check (the tpch_approx_distinct pattern): each engine
     computes its own sketch threshold and verifies the selection it
     induces lands within the error band of its own exact selection —
-    only the deterministic verdict and exact counts are compared."""
+    only the deterministic verdict and exact counts are compared.  The
+    band is on rank (the threshold lies between the exact
+    QUALITY_PCT -/+ QUALITY_APPROX_BAND quantiles), not on the selected
+    count, which would jump by the mass of tied quality scores."""
     d = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     scored = d.select(
@@ -1055,7 +1056,7 @@ def _semdedup_trained(
     from ..operators.similarity import semdedup
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = kmeans_train(e, "vec_id", "embedding", init_ids, iters=KMEANS_ITERS)
+    cents = kmeans_train(e, "vec_id", "embedding", init_ids)
     corpus = _augmented_embeddings(e)
     return semdedup(
         corpus,
@@ -1162,7 +1163,7 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(k)
         .collect()
     ]
-    cents = kmeans_train(sample, "vec_id", "embedding", ids, iters=KMEANS_ITERS)
+    cents = kmeans_train(sample, "vec_id", "embedding", ids)
     corpus = _augmented_embeddings(e)
     return semdedup(
         corpus,
@@ -1522,7 +1523,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_topk
 
     e = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans_train(e, "vec_id", "embedding", KMEANS_INIT_IDS, iters=KMEANS_ITERS)
+    cents = kmeans_train(e, "vec_id", "embedding", KMEANS_INIT_IDS)
     return ivf_topk(
         corpus=e,
         queries=e.filter(F.col("vec_id") < N_QUERY_VECS),
@@ -1626,9 +1627,7 @@ def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         sub = e.select(
             "vec_id", F.slice("embedding", sub_dim * m + 1, sub_dim).alias("embedding")
         )
-        cents = kmeans_train(
-            sub, "vec_id", "embedding", PQ_CODEWORD_IDS, iters=KMEANS_ITERS
-        )
+        cents = kmeans_train(sub, "vec_id", "embedding", PQ_CODEWORD_IDS)
         books.append(
             cents.select(
                 F.lit(m).alias("m"), code_map.alias("code"), F.col("c").alias("bq")
@@ -1734,7 +1733,7 @@ def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import kmeans_assign, kmeans_train
 
     e = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans_train(e, "vec_id", "embedding", KMEANS_INIT_IDS, iters=KMEANS_ITERS)
+    cents = kmeans_train(e, "vec_id", "embedding", KMEANS_INIT_IDS)
     assigned = kmeans_assign(e, "vec_id", "embedding", cents)
     d = load_table(spark, sf_dir, "documents")
     docs = d.join(assigned, d["doc_id"] == assigned["vec_id"]).select(
@@ -2083,6 +2082,41 @@ GROUP BY doc_id ORDER BY doc_id
 
 
 # --- bigram-LM fluency score (CCNet-style quality signal) --------------------
+def _bigram_db(d: DataFrame) -> DataFrame:
+    """Per-doc bigram multiplicities (doc_id, h_bg, h_w1, t) keyed on
+    8-byte hashes: the single tokenize+explode+shuffle pass every part
+    of q_bigram_lm_score derives from."""
+    # Pin the bigram ARRAYS before the explode (the winnow move):
+    # Generate planning (InferFiltersFromGenerate + filter pushdown)
+    # otherwise copies the tokenize+shingle chain into an inferred
+    # size(...) > 0 filter, re-running the regex/split pass once more
+    # per document row.
+    # tokens projected separately: word_shingles references its
+    # argument several times; binding it to an attribute first keeps
+    # the tokenize chain at one evaluation per row (~15% off this
+    # derivation in the sf1 A/B)
+    bgs = (
+        d.select("doc_id", tokens(F.col("text")).alias("_t"))
+        .select("doc_id", word_shingles(F.col("_t"), 2).alias("bgs"))
+        .localCheckpoint(eager=False)
+    )
+    big = bgs.select("doc_id", F.explode("bgs").alias("bg")).select(
+        "doc_id",
+        F.xxhash64("bg").alias("h_bg"),
+        F.xxhash64(F.substring_index("bg", " ", 1)).alias("h_w1"),
+    )
+    # Collapse the exploded stream ONCE to per-doc bigram
+    # multiplicities; everything downstream derives from this single
+    # exchange (corpus counts = a second agg over it, join probe =
+    # the table itself), so Spark's ReusedExchange tokenizes and
+    # explodes the corpus exactly once — the naive join-back against
+    # the raw exploded stream re-ran the whole text pipeline for the
+    # probe side (measured ~2x the query at sf1).  h_bg determines
+    # h_w1 (same bigram -> same first word), so the extra group key
+    # changes no cardinality.
+    return big.groupBy("doc_id", "h_bg", "h_w1").agg(F.count(F.lit(1)).alias("t"))
+
+
 def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram language-model fluency score — the step past unigram
     token-rarity (llm_token_rarity) toward the CCNet/KenLM perplexity
@@ -2114,44 +2148,16 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4.1 s of 8.2 s), i.e. it is text-scan-bound, which is where a
     corpus scoring pass should be.  Docs with < 2 tokens have no
     bigrams and drop out (none in the fixtures). Hot bigrams are
-    ordinary join skew — AQE-splittable, no collect anywhere."""
-    d = load_table(spark, sf_dir, "documents")
-    # Pin the bigram ARRAYS before the explode (the winnow move):
-    # Generate planning (InferFiltersFromGenerate + filter pushdown)
-    # otherwise copies the tokenize+shingle chain into an inferred
-    # size(...) > 0 filter, re-running the regex/split pass once more
-    # per document row.
-    # tokens projected separately (round 22): word_shingles references
-    # its argument several times; binding it to an attribute first
-    # keeps the tokenize chain at one evaluation per row (~15% off
-    # this derivation in the sf1 A/B)
-    bgs = (
-        d.select("doc_id", tokens(F.col("text")).alias("_t"))
-        .select("doc_id", word_shingles(F.col("_t"), 2).alias("bgs"))
-        .localCheckpoint(eager=False)
-    )
-    big = bgs.select("doc_id", F.explode("bgs").alias("bg")).select(
-        "doc_id",
-        F.xxhash64("bg").alias("h_bg"),
-        F.xxhash64(F.substring_index("bg", " ", 1)).alias("h_w1"),
-    )
-    # Collapse the exploded stream ONCE to per-doc bigram
-    # multiplicities; everything downstream derives from this single
-    # exchange (corpus counts = a second agg over it, join probe =
-    # the table itself), so Spark's ReusedExchange tokenizes and
-    # explodes the corpus exactly once — the naive join-back against
-    # the raw exploded stream re-ran the whole text pipeline for the
-    # probe side (measured ~2x the query at sf1).  h_bg determines
-    # h_w1 (same bigram -> same first word), so the extra group key
-    # changes no cardinality.
-    db = (
-        big.groupBy("doc_id", "h_bg", "h_w1")
-        .agg(F.count(F.lit(1)).alias("t"))
-        # three consumers (join probe, corpus counts, prefix masses) —
-        # pin the one tokenize+explode+shuffle pass (graph.py lazy-
-        # checkpoint pattern; planner exchange reuse does not fire
-        # across these differently-keyed aggregation branches)
-        .localCheckpoint(eager=False)
+    ordinary join skew — AQE-splittable, no collect anywhere.  Hashed
+    keys are exact here only because every lookup joins the corpus back
+    to its own counts; a lookup into another corpus's table would need
+    the bigram string."""
+    # three consumers (join probe, corpus counts, prefix masses) —
+    # pin the one tokenize+explode+shuffle pass (graph.py lazy-
+    # checkpoint pattern; planner exchange reuse does not fire across
+    # these differently-keyed aggregation branches)
+    db = _bigram_db(load_table(spark, sf_dir, "documents")).localCheckpoint(
+        eager=False
     )
     bgc = db.groupBy("h_bg", "h_w1").agg(F.sum("t").alias("c_bg"))
     pfx = bgc.groupBy("h_w1").agg(F.sum("c_bg").alias("c_w1"))

@@ -20,6 +20,7 @@ from ..operators.multimodal import (
 )
 from ..sources.parquet import load_table
 from ..streaming.windows import (
+    await_drained,
     run_stream_to_table,
     stream_click_purchase_join,
     stream_dedup,
@@ -192,9 +193,7 @@ def q_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", out_dir + "_ckpt")
         .start()
     )
-    q.awaitTermination(120)
-    if q.isActive:
-        q.stop()
+    await_drained(q)
     landed = spark.read.parquet(out_dir)
     result = (
         landed.groupBy("event_type")

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.parquet import load_table
+from .windows import await_drained
 
 
 def _counting_query(spark: SparkSession, stage: str, schema) -> DataFrame:
@@ -42,9 +43,7 @@ def _run_to_completion(sdf: DataFrame, spark: SparkSession, ckpt: str) -> DataFr
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    if q.isActive:
-        q.stop()
+    await_drained(q)
     return spark.table(name)
 
 

@@ -31,6 +31,25 @@ from pyspark.sql import functions as F
 from ..sources.parquet import load_table
 
 D = "decimal(18,2)"
+# seconds an AvailableNow stream gets to drain its input
+STREAM_DRAIN_TIMEOUT_S = 120
+
+
+class StreamTimeoutError(RuntimeError):
+    """An AvailableNow stream had not drained its input in time."""
+
+
+def await_drained(q) -> None:
+    """Block until the AvailableNow streaming query ``q`` finishes.
+    A stream still running after STREAM_DRAIN_TIMEOUT_S is stopped and
+    raises StreamTimeoutError: its sink holds only part of the input,
+    so it must not be read as the answer."""
+    if not q.awaitTermination(STREAM_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise StreamTimeoutError(
+            f"streaming query did not drain its input within "
+            f"STREAM_DRAIN_TIMEOUT_S={STREAM_DRAIN_TIMEOUT_S} s; stopped it"
+        )
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -269,7 +288,5 @@ def run_stream_to_table(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    if q.isActive:
-        q.stop()
+    await_drained(q)
     return spark.table(name)

@@ -427,7 +427,7 @@ def test_semdedup_matmul_assignment_matches_expression_argmax(spark, sf_dir):
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    cents = kmeans_train(e, "vec_id", "embedding", [30, 31, 32, 33, 34], iters=2)
+    cents = kmeans_train(e, "vec_id", "embedding", [30, 31, 32, 33, 34])
     c = e.select(
         F.col("vec_id").alias("_id"), quantize(F.col("embedding")).alias("_q")
     ).withColumn("_n2", norm2_q(F.col("_q")))

@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
+from map_reduce_for_dbpl_dataset_spark.operators import graph
 from map_reduce_for_dbpl_dataset_spark.operators.graph import (
     connected_components,
     connected_components_star,
@@ -115,3 +118,15 @@ def test_triangles_match_bruteforce(spark):
         n_rows = triangles(edf).count()
         assert got == want, f"trial {trial}: triangle sets differ"
         assert n_rows == len(want), f"trial {trial}: duplicate triangle rows"
+
+
+def test_label_propagation_raises_when_cap_cuts_the_fixpoint(spark, monkeypatch):
+    """A 6-node chain needs 5 label-propagation rounds; capped at 2 the
+    labels are still moving, so the operator must raise rather than
+    return labels that are not yet component minima."""
+    monkeypatch.setattr(graph, "CC_MAX_ITERS", 2)
+    nodes = [f"n{i}" for i in range(6)]
+    edf = spark.createDataFrame(list(zip(nodes, nodes[1:])), "src string, dst string")
+    vdf = spark.createDataFrame([(n,) for n in nodes], "node string")
+    with pytest.raises(RuntimeError, match="CC_MAX_ITERS=2"):
+        connected_components(edf, vdf)

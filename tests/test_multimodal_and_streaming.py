@@ -9,6 +9,11 @@ from map_reduce_for_dbpl_dataset_spark.operators.multimodal import (
     decode_media,
     extract_features,
 )
+from map_reduce_for_dbpl_dataset_spark.streaming.windows import (
+    STREAM_DRAIN_TIMEOUT_S,
+    StreamTimeoutError,
+    await_drained,
+)
 
 
 def test_decode_media_stub_raises_for_non_text():
@@ -42,3 +47,32 @@ def test_stream_batch_parity_tumbling(spark, sf_dir):
         ).collect()
     }
     assert batch == stream
+
+
+class _FakeQuery:
+    """Stands in for a StreamingQuery: awaitTermination reports whether
+    the stream finished within the timeout."""
+
+    def __init__(self, finished: bool):
+        self.finished = finished
+        self.timeout = None
+        self.stopped = False
+
+    def awaitTermination(self, timeout):  # noqa: N802 - Spark's name
+        self.timeout = timeout
+        return self.finished
+
+    def stop(self):
+        self.stopped = True
+
+
+@pytest.mark.parametrize("finished", [True, False])
+def test_await_drained_raises_and_stops_only_on_timeout(finished):
+    q = _FakeQuery(finished)
+    if finished:
+        await_drained(q)
+    else:
+        with pytest.raises(StreamTimeoutError, match="STREAM_DRAIN_TIMEOUT_S"):
+            await_drained(q)
+    assert q.timeout == STREAM_DRAIN_TIMEOUT_S
+    assert q.stopped is not finished

@@ -24,14 +24,6 @@ def test_top_k_per_group_row_number(spark):
     assert rows == {("a", "x"), ("a", "y"), ("b", "p")}
 
 
-def test_top_k_per_group_rank_keeps_ties(spark):
-    df = spark.createDataFrame(
-        [("a", "x", 5), ("a", "y", 5), ("a", "z", 3)], "grp string, item string, cnt int"
-    )
-    out = top_k_per_group(df, ["grp"], [F.desc("cnt")], k=1, method="rank")
-    assert {r.item for r in out.collect()} == {"x", "y"}
-
-
 def test_top_k_global_is_take_ordered(spark):
     df = spark.range(1000).withColumn("v", F.col("id") % 17)
     out = top_k_global(df, [F.desc("v"), F.asc("id")], k=5)
@@ -219,15 +211,18 @@ def test_events_retention_rescan(spark, sf_dir):
 def test_spread_for_pair_join_plan_and_result(spark):
     """The pair-spread helper must (a) keep the rows identical, (b)
     emit an explicit keyed repartition that AQE cannot coalesce
-    (REPARTITION_BY_NUM over factor * defaultParallelism partitions),
-    and (c) cut lineage so both self-join sides read the pinned RDD
-    instead of re-deriving the input (Scan ExistingRDD)."""
-    from map_reduce_for_dbpl_dataset_spark.operators.pairs import spread_for_pair_join
+    (REPARTITION_BY_NUM over PAIR_SPREAD_FACTOR * defaultParallelism
+    partitions), and (c) cut lineage so both self-join sides read the
+    pinned RDD instead of re-deriving the input (Scan ExistingRDD)."""
+    from map_reduce_for_dbpl_dataset_spark.operators.pairs import (
+        PAIR_SPREAD_FACTOR,
+        spread_for_pair_join,
+    )
 
     df = spark.createDataFrame(
         [(i, i % 7) for i in range(100)], "id bigint, key int"
     )
-    spread = spread_for_pair_join(df, "key", factor=2)
+    spread = spread_for_pair_join(df, "key")
     assert sorted((r.id, r.key) for r in spread.collect()) == [
         (i, i % 7) for i in range(100)
     ]
@@ -236,7 +231,7 @@ def test_spread_for_pair_join_plan_and_result(spark):
     )
     assert "REPARTITION_BY_NUM" in plan
     assert "Scan ExistingRDD" in plan
-    n = 2 * spark.sparkContext.defaultParallelism
+    n = PAIR_SPREAD_FACTOR * spark.sparkContext.defaultParallelism
     # one regex binds the key and the partition count in a single match
     # (round-8 ADVICE: two independent substring checks could pass with
     # the wrong repartition width)

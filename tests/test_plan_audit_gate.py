@@ -91,8 +91,9 @@ def test_plan_audit_exits_green_and_report_is_current(request):
     tail = (proc.stdout[-4000:] or "") + (proc.stderr[-2000:] or "")
     assert proc.returncode == 0, f"plan audit red at head:\n{tail}"
 
-    # The committed report must list exactly the property rows the
-    # fresh run produced (all ✅, same queries, same properties) — a
+    # The committed report must list exactly the rows the fresh run
+    # produced: the property rows (all ✅, same queries, same
+    # properties) and one plan-fingerprint row per rendered plan — a
     # check edit or plan change without `--write` fails here.
     fresh_rows = [ln for ln in proc.stdout.splitlines() if ln.startswith("| `")]
     committed_rows = [
@@ -100,9 +101,50 @@ def test_plan_audit_exits_green_and_report_is_current(request):
         for ln in (REPO / "PLANS.md").read_text().splitlines()
         if ln.startswith("| `")
     ]
-    assert fresh_rows, "audit printed no property rows — output format drifted"
+    assert fresh_rows, "audit printed no rows — output format drifted"
     assert fresh_rows == committed_rows, (
         "PLANS.md is stale: regenerate with `python tools/plan_audit.py --write`"
     )
     if cache is not None:
         cache.set(cache_key, digest)
+
+
+_PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (4)
++- HashAggregate (3)
+   +- Exchange (2)
+      +- Scan parquet  (1)
+
+
+(1) Scan parquet
+Output [1]: [doc_id#{eid}L]
+Location: InMemoryFileIndex [file:{path}]
+
+(2) Exchange
+Input [1]: [doc_id#{eid}L]
+Arguments: hashpartitioning(doc_id#{eid}L, {parts}), ENSURE_REQUIREMENTS, [plan_id={run}]
+
+(3) HashAggregate
+Input [1]: [doc_id#{eid}L]
+Keys [1]: [doc_id#{eid}L]
+"""
+
+
+def test_fingerprint_ignores_arguments_and_tracks_nodes():
+    """The PLANS.md fingerprint hashes the node tree only: a plan that
+    differs in its Arguments (expression ids, partition count, a temp
+    path, a run UUID) keeps its fingerprint; a changed node moves it."""
+    sys.path.insert(0, str(REPO / "tools"))
+    from plan_audit import fingerprint
+
+    a = _PLAN.format(eid=17, parts=32, path="/data/docs.parquet", run=1)
+    b = _PLAN.format(
+        eid=9041,
+        parts=4,
+        path="/tmp/mrdbpl_stream_123/docs.parquet",
+        run="0b8e6c52-3f0e-4a56-9d2e-6d1f0c1a2b3c",
+    )
+    assert a != b
+    assert fingerprint(a) == fingerprint(b)
+    assert len(fingerprint(a)) == 12
+    assert fingerprint(a.replace("HashAggregate (3)", "SortAggregate (3)")) != fingerprint(a)

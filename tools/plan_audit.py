@@ -1,18 +1,24 @@
 """Physical-plan audit: assert the scale-critical plan properties.
 
-For each audited query, render the formatted physical plan and check
-the properties that decide 100 TB behavior — filters reaching the
-scan, small sides broadcast, per-group top-k limited before exchange,
-global top-k as TakeOrderedAndProject, partial aggregation present,
-no cartesian products. Writes PLANS.md with a summary table and the
-full plans, and exits non-zero if any required property is missing.
+For every batch registry query and every CUSTOM_CHECKS subtree (plans
+the registry hides behind a checkpoint, built by the same engine
+functions the queries call), render the formatted physical plan and
+check the properties that decide 100 TB behavior — filters reaching
+the scan, small sides broadcast, per-group top-k limited before
+exchange, global top-k as TakeOrderedAndProject, partial aggregation
+present, no cartesian products.  Prints one row per property plus one
+fingerprint row per plan, exits non-zero if any required property is
+missing, and with --write stores the rows in PLANS.md.  Given plan
+names, prints those formatted plans instead of auditing.
 
 Usage: python tools/plan_audit.py [--sf DIR] [--write]
+       python tools/plan_audit.py [--sf DIR] NAME [NAME ...]
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import os
 import sys
 
@@ -821,163 +827,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     ],
 }
 
-# Hand-written analysis that survives regeneration: emitted verbatim
-# under the matching query's section in PLANS.md.
-NOTES: dict[str, str] = {
-    "llm_bpe_encode": """\
-**Round-5 tokenizer family** (queries/bpe.py). Training never
-iterates over the corpus: the word-frequency formulation means ONE
-corpus pass (word-type counts + global top-K heap), after which all
-8 merge rounds run on the K-row vocab table. Encode's measured
-profile: the all-words replace-chain form cost 24.4 s on the 10x
-fixtures (5.3x for 10x data); the broadcast vocab fast path (K-row
-segmentation map served by a hash join, replace chain only for OOV
-words behind a when() branch) cut it to 5.1 s — 2.0x for 10x data.
-At 100 TB the vocab map covers the Zipf head of corpus tokens, so
-per-row work is one broadcast-hash probe for the common case; the
-OOV tail pays R literal replaces, still narrow JVM expressions.""",
-    "llm_leakage_free_split": """\
-**Round-5**: split assignment is cluster-level (every transitive
-near-dup component hashes to one 80/10/10 bucket), so no near-dup
-pair can straddle the train/eval boundary (asserted for every
-Jaccard >= 0.8 pair in tests). Edges come from the prefix-filtered
-PPJoin plan — pair-identical to the naive exact join but with the
-filter funnel: swapping it in cut the 10x-fixture time from ~3 min
-to 32 s. At 100 TB the edge set comes from minhash_lsh_pairs
-instead (same downstream components + hash assignment).""",
-    "llm_ngram_jaccard_prefix": """\
-**Round-5 PPJoin+ pass** (round-4 verdict #2 — the one super-linear
-headline scaler, 12.72 s at sf1). Measured candidate funnel at sf1
-(50 k docs, ~57 shingles/doc, t=0.8): 7.0 M probe-prefix join rows
--> 1.0 M after the pair-dependent prefix filter (alpha-derived
-prefixes, ~3x cut before the pair groupBy) -> 0.92 M candidates after
-the tight positional filter -> 2,560 true pairs (exact, oracle- and
-property-proven). The positional bound is structurally weak at this
-size/threshold (any pair sharing one alpha-prefix token passes:
-1 + (57-7) >= alpha ~ 51), so the remaining cost was verification of
-~0.92 M candidates against STRING shingle sets. Round 5 switched
-verification to two tiers — sorted 8-byte hash arrays first (3x less
-shuffle, long comparator; provably lossless via the intra-doc
-collision guard, see operators/dedup.py docstring), exact string sets
-for the tiny survivor set — and fused the df-count into a window
-(one fewer exchange of the 2.9 M-row exploded table). sf1 wall time
-12.72 s -> ~5.8-6.6 s (same 2,560 pairs); candidate:pair ratio 360:1.
-
-**Operating point / crossover**: candidate cost is sum of squared
-prefix-bucket sizes — super-linear by nature (measured 4.5x at 10x
-corpus before this pass). This query is the EXACT-mode fallback;
-above a few hundred thousand documents per corpus snapshot the
-recommended operating point is `llm_dedup_minhash_lsh` (1.7x at 10x,
-recall >= 0.9 at J >= 0.8 proven in tests/test_scale_stress.py),
-with PPJoin reserved for the within-bucket exact pass or
-compliance-grade exact joins.""",
-    "llm_quality_select_approx": """\
-**The 100 TB swap** named by llm_quality_select's docstring, now a
-registered query (round-4 verdict #6): per-source thresholds come
-from approx_percentile (Greenwald-Khanna sketch, accuracy 100 ->
-rank error <= n/100) instead of the exact interpolated percentile,
-so the threshold aggregate carries fixed-size mergeable state per
-source instead of buffering every value. The oracle is a bounds
-check in the tpch_approx_distinct style: each engine verifies its
-OWN sketch threshold lands between that source's exact (pct-0.1)
-and (pct+0.1) quantiles — a rank-band verdict robust to tied
-quality scores (a selected-count band would jump by the tie mass) —
-and only the deterministic verdict plus the exact-threshold counts
-are hash-compared.""",
-    "llm_semdedup_trained": """\
-**Train-then-assign composition** (round-4 verdict #3): kmeans_train
-(operators/kmeans.py — the same 2 exact-integer Lloyd iterations
-llm_kmeans certifies) produces the coarse codebook, and its
-(cluster, c) output replaces llm_semdedup's seeded-by-id centroid
-rows. Plan shape is unchanged — the K-row codebook broadcasts for
-both the training assignments and the final cell assignment; the
-corpus never shuffles to assign — and the oracle unrolls the
-training iterations as CTEs feeding the semdedup SQL, so the
-composition is hash-exact end to end. This closes the 'production
-trains them' caveat on the seeded SemDeDup/IVF codebooks with a
-live demonstration.
-
-**SemDeDup scaling law, measured at the sf1 scale point** (round-5
-bench investigation): within-cluster pair work is sum-cluster^2, so
-the centroid count must scale with the corpus (the SemDeDup paper
-trains ~110k centroids for LAION). Freezing K=4 while the corpus
-10xed cost ~100x pair work — 154 s at sf1 vs 6.9 s at sf0.1. Three
-fixes, all semantics-preserving (oracles still hash-exact): (1)
-per-iteration centroid checkpoints + a pinned training corpus (the
-trained-centroid DAG was re-executed by each of the three downstream
-consumers); (2) the Lloyd argmin as a partial-aggregable min(struct)
-instead of a corpus*K row_number window; (3) SALTED pair enumeration
-— a bare cluster-key join has only K shuffle keys and AQE coalesces
-that exchange by its tiny INPUT size, blind to the quadratic
-fan-out, so 13M cosine evaluations landed on 3 tasks; salting
-spreads each cluster's pairs over (cluster, salt) keys. With K=32
-(llm_semdedup_trained_k32, the corpus-scaled operating point the
-bench times) sf1 lands at ~9 s; the K=4 oracle demonstrator drops
-154 s -> ~31 s from the same fixes.
-
-**Round-6 follow-ups, measured at sf1**: (4) cell assignment became
-ONE Arrow-batched numpy matmul per batch (mapInPandas, codebook in
-the task closure) — the JVM higher-order-function dot products are
-interpreted per element and cost ~160 us per scored row, linear in
-K (14 s for K=141); the matmul form is 0.6 s, bit-identical
-(int64 dots exact, float64 cosine uses the same IEEE ops). (5) the
-pair join is PINNED to shuffle_hash: once the assignment became a
-narrow map stage its size estimate fell under the broadcast
-threshold and the planner broadcast the salted side, collapsing the
-pair fan-out onto the probe side's few input partitions (measured
-9 s -> 37 s before the hint). Net: k32 sf1 ~6.7 s, and the
-computed-K llm_semdedup_scaled (K=141, sampled training) ~4.9 s —
-the scaling rule now BEATS the hand-picked point, as it should.""",
-    "llm_semdedup_scaled": """\
-**The scaling law as code** (round-5 verdict #4): K =
-clamp(isqrt(N), 8, 256) computed from the corpus count, codebook
-TRAINED on a bounded deterministic sample (~20 rows per centroid,
-vec_id % m == 0 with m = N div (20K)) so the training pass is
-corpus-size-independent, then the standard full-corpus broadcast
-assignment + salted pair stage. The oracle computes the same K and
-m in SQL from count(*) and seeds from the same ORDER BY vid LIMIT k
-sample — one static string, hash-exact at sf0.01/sf0.1/sf1 (K = 22
-/ 44 / 141). sf1 lands ~4.9 s vs the hand-picked k32 slot's
-~6.7 s.""",
-    "llm_ann_ivf_trained": """\
-**Trained coarse quantizer** (sibling of llm_semdedup_trained): the
-IVF codebook comes from kmeans_train instead of seeded member rows.
-ivf_topk takes the quantized (cluster, c) table in both cases; plan
-shape is the seeded
-variant's — codebook broadcasts for assignment and probing, the only
-shuffle is the cell-id candidate join. Oracle = kmeans prelude CTEs
-chained into the IVF SQL, hash-exact.""",
-    "llm_bigram_lm_score": """\
-**8-byte shuffle keys + one corpus pass** (round-6, was the round-5
-weak-watch item): the explode output collapses immediately to h_bg =
-xxhash64(bigram) / h_w1 = xxhash64(first word) and then ONCE to the
-per-doc multiplicity table db (lazily checkpointed) — corpus counts,
-prefix masses, and the scoring join-back all derive from that single
-tokenize+explode+shuffle pass, and every exchange keys fixed-width
-longs, never the Zipf-skewed bigram strings (asserted: no
-hashpartitioning on bg/w1; pre-checkpoint subtree audited
-separately). Hashing is CONSISTENT — counts are grouped under the
-same hash the probes use, so a 64-bit collision would merge two
-bigrams' counts identically on both sides of every join (no
-dropped/duplicated rows); at ~2^-65 per pair this is unreachable
-even for a 10^9-bigram vocabulary, which is why the earlier
-exactness objection to hashed keys does not apply to this
-self-join-back shape (it would to a cross-corpus lookup). sf1 lands
-at 8.2 s, within ~2x of the bare tokenize+explode floor (4.1 s) —
-the pass is text-scan-bound, the right regime for corpus scoring.""",
-    "llm_ann_pq_trained": """\
-**Per-subspace trained PQ codebook** (completes the train-then-assign
-set): kmeans_train runs once per subspace over raw subvector slices
-(slicing commutes with elementwise quantization, so the trained
-sub-centroids live in the encoder's distance space), and the union of
-the four (m, code, bq) tables replaces the seeded codeword rows in
-pq_adc_topk. The oracle chains four s{m}-prefixed kmeans preludes
-into the PQ SQL — hash-exact. With this, none of the
-SemDeDup/IVF/PQ codebooks is seeded-only anymore; every 'production
-trains them' docstring has a live trained twin.""",
-}
-
-
 def _lsh_sized_buckets_plan(spark, sf_dir):
     """Pre-checkpoint LSH bucket table: the subtree hidden behind
     lsh_candidate_pairs' lazy localCheckpoint in the registry query."""
@@ -992,69 +841,44 @@ def _lsh_sized_buckets_plan(spark, sf_dir):
 
 
 def _kmeans_iteration_plan(spark, sf_dir):
-    """Pre-checkpoint Lloyd iteration (assignment + centroid update):
-    the subtree hidden behind kmeans_train's per-iteration eager
-    checkpoint."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_for_dbpl_dataset_spark.functions.vectors import quantize
+    """Pre-checkpoint Lloyd iteration (assignment + centroid update)
+    from llm_kmeans' seeds: the subtree hidden behind kmeans_train's
+    per-iteration eager checkpoint."""
     from map_reduce_for_dbpl_dataset_spark.operators.kmeans import (
         _assign,
+        _quantized,
+        _seed_centroids,
         _update_centroids,
     )
+    from map_reduce_for_dbpl_dataset_spark.queries.pipeline import KMEANS_INIT_IDS
     from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.select(
-        F.col("vec_id").alias("vid"), quantize(F.col("embedding")).alias("q")
-    )
-    cents = q.filter(F.col("vid").isin([30, 31, 32, 33])).select(
-        F.col("vid").alias("cluster"), F.col("q").alias("c")
-    )
-    return _update_centroids(_assign(q, cents))
+    q = _quantized(load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding")
+    return _update_centroids(_assign(q, _seed_centroids(q, KMEANS_INIT_IDS)))
 
 
 def _bigram_db_plan(spark, sf_dir):
     """Pre-checkpoint per-doc bigram multiplicity table
     (queries/pipeline.py q_bigram_lm_score): the single
     tokenize+explode+shuffle pass all three consumers derive from."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_for_dbpl_dataset_spark.functions.text import (
-        tokens,
-        word_shingles,
-    )
+    from map_reduce_for_dbpl_dataset_spark.queries.pipeline import _bigram_db
     from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
-    d = load_table(spark, sf_dir, "documents")
-    big = d.select(
-        "doc_id", F.explode(word_shingles(tokens(F.col("text")), 2)).alias("bg")
-    ).select(
-        "doc_id",
-        F.xxhash64("bg").alias("h_bg"),
-        F.xxhash64(F.substring_index("bg", " ", 1)).alias("h_w1"),
-    )
-    return big.groupBy("doc_id", "h_bg", "h_w1").agg(F.count(F.lit(1)).alias("t"))
+    return _bigram_db(load_table(spark, sf_dir, "documents"))
 
 
 def _winnow_fps_plan(spark, sf_dir):
     """Pre-checkpoint winnowing fingerprint stream (queries/llm.py
     q_winnow_pairs): shingle-hash + sliding-min + df-cap window, the
     subtree the registry query pins behind its lineage cuts."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from map_reduce_for_dbpl_dataset_spark.queries.llm import (
-        WINNOW_MAX_DF,
+        _winnow_df_capped,
         _winnow_fps,
     )
     from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    ex = _winnow_fps(d).select("doc_id", F.explode("fps").alias("fp"))
-    return ex.withColumn(
-        "_df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
-    ).filter(F.col("_df") <= WINNOW_MAX_DF)
+    return _winnow_df_capped(_winnow_fps(d))
 
 
 def _cc_star_round_plan(spark, sf_dir):
@@ -1081,11 +905,16 @@ def _semdedup_assign_plan(spark, sf_dir):
         _semdedup_corpus,
         _semdedup_seeded_codebook,
     )
+    from map_reduce_for_dbpl_dataset_spark.queries.pipeline import (
+        SEMDEDUP_CENTROID_IDS,
+    )
     from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
     c = _semdedup_corpus(e, "vec_id", "embedding")
-    return _semdedup_assigned(c, _semdedup_seeded_codebook(c, [30, 31, 32, 33]))
+    return _semdedup_assigned(
+        c, _semdedup_seeded_codebook(c, SEMDEDUP_CENTROID_IDS)
+    )
 
 
 def _bpe_merge_round_plan(spark, sf_dir):
@@ -1093,34 +922,14 @@ def _bpe_merge_round_plan(spark, sf_dir):
     corpus-scale stage (word-type counts + top-K cap) feeding a full
     pair-count/top-1/rewrite round — the subtree the registry query
     hides behind its per-round lazy localCheckpoints."""
-    from pyspark.sql import functions as F
-
     from map_reduce_for_dbpl_dataset_spark.queries.bpe import (
-        _adjacent_pairs,
-        _word_types,
+        _apply_merge,
+        _best_pair,
+        _word_seqs,
     )
 
-    w = _word_types(spark, sf_dir).withColumn(
-        "seq", F.regexp_replace("word", "(.)", r"($1)")
-    )
-    best = (
-        w.select("cnt", F.explode(_adjacent_pairs("seq")).alias("pair"))
-        .groupBy("pair")
-        .agg(F.sum("cnt").alias("pair_count"))
-        .orderBy(F.desc("pair_count"), F.asc("pair"))
-        .limit(1)
-    )
-    pat = F.concat(
-        F.lit("("), F.replace(F.col("pair"), F.lit(" "), F.lit(")(")), F.lit(")")
-    )
-    rep = F.concat(
-        F.lit("("), F.replace(F.col("pair"), F.lit(" "), F.lit("~")), F.lit(")")
-    )
-    return (
-        w.crossJoin(F.broadcast(best.select("pair")))
-        .withColumn("seq", F.replace(F.col("seq"), pat, rep))
-        .select("word", "cnt", "seq")
-    )
+    w = _word_seqs(spark, sf_dir)
+    return _apply_merge(w, _best_pair(w))
 
 
 def _span_positions_plan(spark, sf_dir):
@@ -1378,41 +1187,66 @@ def _sweep_violations(plan: str) -> list[str]:
     return out
 
 
+def explain(df) -> str:
+    """The formatted physical plan of ``df``, as ``df.explain("formatted")``
+    prints it."""
+    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def fingerprint(plan: str) -> str:
+    """First 12 hex digits of the sha256 of a formatted plan's node
+    tree: the lines after ``== Physical Plan ==`` up to the first blank
+    line.  The tree holds node names, codegen markers and operator
+    numbers only; expression ids, paths, run UUIDs and partition counts
+    live in the per-node details below it, so the fingerprint is the
+    same on every host and run, while any change to the tree (a node
+    added, removed, renamed or moved) changes it."""
+    lines = plan.split("\n")
+    start = lines.index("== Physical Plan ==") + 1
+    end = next((i for i in range(start, len(lines)) if not lines[i].strip()), len(lines))
+    return hashlib.sha256("\n".join(lines[start:end]).encode()).hexdigest()[:12]
+
+
+def _plan_makers(qs: dict) -> dict:
+    """Every plan the audit renders, by name: the batch registry
+    queries (the sweep's scope) and the CUSTOM_CHECKS subtrees."""
+    out = {
+        name: fn
+        for name, fn in qs.items()
+        if not name.startswith(SWEEP_EXCLUDED_PREFIXES)
+    }
+    out.update({name: make for name, (make, _) in CUSTOM_CHECKS.items()})
+    return out
+
+
 def audit(sf_dir: str, write: bool) -> int:
     import __spark_entry__ as entrymod
     from map_reduce_for_dbpl_dataset_spark.session import get_spark
 
     spark = get_spark("plan-audit")
-    qs = entrymod.queries()
-
-    def explain(df) -> str:
-        return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"
-        )
-
-    failures: list[str] = []
-    sections: list[str] = []
-    rows: list[str] = []
-    # one plan render per registry query in the sweep; per-query CHECKS
-    # reuse the rendered text
-    plans: dict[str, str] = {}
-    for name, fn in qs.items():
-        if name.startswith(SWEEP_EXCLUDED_PREFIXES):
-            continue
-        plans[name] = explain(fn(spark, sf_dir))
+    plans = {
+        name: explain(build(spark, sf_dir))
+        for name, build in _plan_makers(entrymod.queries()).items()
+    }
+    spark.stop()
+    batch = [name for name in plans if name not in CUSTOM_CHECKS]
     # Every CHECKS key must correspond to a planned query: a key that is
     # sweep-excluded or misspelled would otherwise be silently dropped
-    # and its audit skipped with no failure (round-8 ADVICE).
-    orphans = set(CHECKS) - set(plans)
+    # and its audit skipped with no failure.
+    orphans = set(CHECKS) - set(batch)
     if orphans:
         raise SystemExit(
             f"plan_audit: CHECKS entries with no planned query: {sorted(orphans)} "
             "(sweep-excluded prefix or typo — fix or remove the entry)"
         )
-    all_checks: dict = {name: (None, checks) for name, checks in CHECKS.items()}
-    all_checks.update(CUSTOM_CHECKS)
-    for name, (builder, checks) in all_checks.items():
-        plan = plans[name] if builder is None else explain(builder(spark, sf_dir))
+    failures: list[str] = []
+    rows: list[str] = []
+    all_checks = dict(CHECKS)
+    all_checks.update({name: checks for name, (_, checks) in CUSTOM_CHECKS.items()})
+    for name, checks in all_checks.items():
+        plan = plans[name]
         for prop, needle in checks:
             if needle.startswith("!"):
                 ok = needle[1:] not in plan
@@ -1421,10 +1255,8 @@ def audit(sf_dir: str, write: bool) -> int:
             rows.append(f"| `{name}` | {prop} | {'✅' if ok else '❌'} |")
             if not ok:
                 failures.append(f"{name}: {prop} (expected {needle!r})")
-        note = f"{NOTES[name]}\n\n" if name in NOTES else ""
-        sections.append(f"## {name}\n\n{note}```\n{plan.strip()}\n```\n")
     sweep_clean = 0
-    for name in sorted(plans):
+    for name in sorted(batch):
         bad = _sweep_violations(plans[name])
         if bad:
             rows.append(f"| `{name}` | global scale-killer sweep | ❌ |")
@@ -1433,10 +1265,13 @@ def audit(sf_dir: str, write: bool) -> int:
             sweep_clean += 1
     rows.append(
         f"| _global sweep_ | no cartesian / single-partition exchange / "
-        f"row-Python in any of {len(plans)} batch queries "
-        f"({sweep_clean} clean) | {'✅' if sweep_clean == len(plans) else '❌'} |"
+        f"row-Python in any of {len(batch)} batch queries "
+        f"({sweep_clean} clean) | {'✅' if sweep_clean == len(batch) else '❌'} |"
     )
-    spark.stop()
+    rows += [
+        f"| `{name}` | plan fingerprint | `{fingerprint(plans[name])}` |"
+        for name in sorted(plans)
+    ]
 
     if write:
         with open(os.path.join(REPO, "PLANS.md"), "w") as f:
@@ -1447,8 +1282,9 @@ def audit(sf_dir: str, write: bool) -> int:
                 "100 TB; the audit fails CI-style if a property regresses.\n\n"
                 "| query | property | ok |\n|---|---|---|\n"
                 + "\n".join(rows)
-                + "\n\n"
-                + "\n".join(sections)
+                + "\n\nA plan fingerprint is the first 12 hex digits of the "
+                "sha256 of the plan's node tree\n(`tools/plan_audit.py:fingerprint`). "
+                "Print a plan with `python tools/plan_audit.py NAME...`.\n"
             )
     print("\n".join(rows))
     if failures:
@@ -1460,9 +1296,31 @@ def audit(sf_dir: str, write: bool) -> int:
     return 0
 
 
+def show(sf_dir: str, names: list[str]) -> int:
+    """Print the formatted plan of each named audited plan."""
+    import __spark_entry__ as entrymod
+    from map_reduce_for_dbpl_dataset_spark.session import get_spark
+
+    makers = _plan_makers(entrymod.queries())
+    unknown = [name for name in names if name not in makers]
+    if unknown:
+        print(
+            f"plan_audit: unknown plan name(s) {unknown}; valid names:\n  "
+            + "\n  ".join(sorted(makers)),
+            file=sys.stderr,
+        )
+        return 2
+    spark = get_spark("plan-audit")
+    for name in names:
+        print(f"## {name}\n\n{explain(makers[name](spark, sf_dir)).strip()}\n")
+    spark.stop()
+    return 0
+
+
 if __name__ == "__main__":
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--write", action="store_true")
+    ap.add_argument("names", nargs="*", help="print these plans instead of auditing")
     args = ap.parse_args()
-    sys.exit(audit(args.sf, args.write))
+    sys.exit(show(args.sf, args.names) if args.names else audit(args.sf, args.write))
