@@ -2,9 +2,10 @@
 
 The iterative-ML member of the engine's algorithm family (next to
 connected components and PageRank in operators/graph.py /
-queries/dblp.py) — and the trainer for the IVF coarse codebook
-(operators/similarity.py ivf_topk consumes exactly this kind of
-centroid table). No reference counterpart (the reference's closest
+queries/dblp.py) — and the one codebook construction of the vector
+operators (operators/similarity.py semdedup, ivf_topk and
+pq_adc_topk consume exactly this kind of centroid table, seeded with
+zero Lloyd rounds or trained with KMEANS_ITERS). No reference counterpart (the reference's closest
 ancestry is its iterative-MapReduce job chain, SURVEY.md §3).
 
 Determinism contract: vectors are integer-quantized, distances are
@@ -87,10 +88,13 @@ def kmeans_train(
     iters: int = KMEANS_ITERS,
 ) -> DataFrame:
     """Run `iters` Lloyd iterations from centroids seeded at
-    `init_ids`; returns the trained quantized centroid table
-    (cluster, c) — the coarse codebook consumed by
-    similarity.semdedup / similarity.ivf_topk in place of their
-    seeded-by-id centroid rows."""
+    `init_ids`; returns the quantized centroid table (cluster, c) —
+    the one codebook construction behind similarity.semdedup,
+    ivf_topk and pq_adc_topk.  A seeded codebook is this with
+    ``iters=0``: the seed rows themselves, built lazily."""
+    q = _quantized(corpus, id_col, vec_col)
+    if iters == 0:
+        return _seed_centroids(q, init_ids)
     # Spread + pin the quantized corpus for the duration of training:
     # every Lloyd iteration re-reads it (assignment + update), the
     # per-iteration centroid checkpoint makes each iteration an
@@ -99,7 +103,7 @@ def kmeans_train(
     # One explicit shuffle to shuffle.partitions + a persist bounds
     # the rescans to one; unpersisted before returning.
     n_shuffle = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    q = _quantized(corpus, id_col, vec_col).repartition(n_shuffle).persist()
+    q = q.repartition(n_shuffle).persist()
     cents = _seed_centroids(q, init_ids)
     for _ in range(iters):
         # materialize the K-row table per iteration: each Lloyd step

@@ -15,9 +15,14 @@ Measured at the 10x (sf1) scale point when this bit: winnowing
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 # pair-stage partitions per core of the cluster's default parallelism
 PAIR_SPREAD_FACTOR = 4
+
+# Salt fan-out of _salted_pair_join: each join key's pairs shuffle on
+# (key, salt) over this many salts instead of on the key alone.
+PAIR_SALT = 32
 
 
 def spread_for_pair_join(df: DataFrame, *keys: str) -> DataFrame:
@@ -51,8 +56,9 @@ def spread_for_pair_join(df: DataFrame, *keys: str) -> DataFrame:
       clusters, K << cores): hashing by key cannot spread K keys over
       more than K tasks — salt the hi side and replicate the lo side,
       then pin the join with ``hint("shuffle_hash")`` so planner size
-      estimates cannot flip it to broadcast (operators/similarity.py
-      ``semdedup``).
+      estimates cannot flip it to broadcast (``_salted_pair_join``
+      below; operators/similarity.py ``semdedup``, queries/pipeline.py
+      ``q_dedup_levenshtein``).
     - a multi-consumer subtree that does NOT feed a pair join needs
       only the bare lazy checkpoint — no keyed spread (exchange reuse
       does not fire across differently-keyed aggregation branches;
@@ -65,3 +71,30 @@ def spread_for_pair_join(df: DataFrame, *keys: str) -> DataFrame:
     return df.localCheckpoint(eager=False).repartition(
         PAIR_SPREAD_FACTOR * n_parallel, *keys
     )
+
+
+def _salted_pair_join(lo: DataFrame, hi: DataFrame, key: str, hi_id: str) -> DataFrame:
+    """Equi-join the lo and hi sides of a within-key pair enumeration
+    on ``(key, _salt)``: every lo row is replicated over the
+    ``PAIR_SALT`` salts, every hi row takes the one salt
+    ``pmod(xxhash64(hi_id), PAIR_SALT)``, so each lo/hi pair meets
+    exactly once and a key's quadratic fan-out spreads over
+    ``PAIR_SALT`` shuffle keys (lo-side duplication bounded at
+    ``PAIR_SALT`` x its rows).
+
+    For pair fan-out concentrated on FEW keys: a bare key join has as
+    many shuffle keys as distinct keys, and AQE coalesces that
+    exchange by its (tiny) INPUT size, blind to the fan-out, so the
+    pair work lands on a handful of tasks (measured: 13M SemDeDup
+    pairs in 3 tasks at the sf1 scale point).  The salt only spreads
+    the work if the join SHUFFLES on (key, salt): planner size
+    estimates can fall under the broadcast threshold (a checkpointed
+    or mapInPandas input), and a broadcast join would evaluate every
+    pair on the probe side's few input partitions with the salt
+    ignored (measured 4x on the K=32 sf1 SemDeDup point), so
+    ``hint("shuffle_hash")`` on the hi side pins the distribution."""
+    lo = lo.withColumn("_salt", F.explode(F.array(*[F.lit(s) for s in range(PAIR_SALT)])))
+    hi = hi.withColumn(
+        "_salt", F.pmod(F.xxhash64(F.col(hi_id)), F.lit(PAIR_SALT)).cast("int")
+    )
+    return lo.join(hi.hint("shuffle_hash"), [key, "_salt"])

@@ -22,6 +22,13 @@ DuckDB oracles replay them bit-for-bit:
 - ivf_topk: inverted-file ANN over a quantized centroid codebook.
 - pq_adc_topk: product quantization with asymmetric distance lookup.
 
+Codebook contract: the three codebook operators (semdedup, ivf_topk,
+pq_adc_topk) take one quantized codebook form, built by one
+construction — operators/kmeans.py kmeans_train: the seed rows picked
+by id, then 0 (seeded) or KMEANS_ITERS (trained) Lloyd rounds.
+semdedup's ``centroid_ids`` is that construction with zero rounds;
+PQ's per-subspace books come from _pq_codebook over the same trainer.
+
 Every per-query ranking is operators/topk.py top_k_per_group with a
 (score, id) tie-break.
 """
@@ -32,18 +39,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_q, dot_q, norm2_q, quantize
-from .pairs import spread_for_pair_join
+from .kmeans import dist2_q, kmeans_train
+from .pairs import _salted_pair_join, spread_for_pair_join
 from .topk import top_k_per_group
 
 # Deterministic hyperplane coefficients: c(j, i) from a 31-bit LCG,
 # shifted to be sign-balanced. Reproducible in SQL as
 # ((1103515245 * (j*dim + i) + 12345) % 2147483648) % 1001 - 500.
 N_PLANES = 8
-
-# Spread factor for quadratic within-cluster pair enumeration (see
-# semdedup): pairs shuffle on (cluster, salt) instead of cluster
-# alone, so the fan-out parallelizes past the cluster count.
-PAIR_SALT = 32
 _LCG_A, _LCG_C, _LCG_M = 1103515245, 12345, 2_147_483_648
 
 _INT32_MAX = 2_147_483_647
@@ -253,12 +256,13 @@ def semdedup(
     (pairwise cosine >= threshold).
 
     Plan shape at 100 TB — the reason SemDeDup clusters at all:
-    - assignment is a BROADCAST join against the K-row centroid table,
+    - assignment scores the corpus against the K-row centroid table,
       argmax cosine with ties to the lower cell. The corpus never
-      shuffles for this. The codebook is either seeded by member id
-      (``centroid_ids``) or a trained quantized (cluster, c) table
-      (``centroids`` — e.g. operators/kmeans.py kmeans_train output,
-      the composition llm_semdedup_trained demonstrates).
+      shuffles for this. The codebook is a quantized (cluster, c)
+      table from operators/kmeans.py kmeans_train: pass it trained as
+      ``centroids`` (the composition llm_semdedup_trained
+      demonstrates), or pass ``centroid_ids`` for the same
+      construction with zero Lloyd rounds (the seed rows themselves).
     - the near-dup search shuffles once on cluster id, and the
       pairwise work is sum over clusters of |cluster|^2 — the whole
       point vs the corpus^2 all-pairs scan. Hot clusters are ordinary
@@ -273,52 +277,27 @@ def semdedup(
     Output: (id_col, cluster, kept)."""
     if (centroid_ids is None) == (centroids is None):
         raise ValueError("pass exactly one of centroid_ids / centroids")
+    if centroids is None:
+        centroids = kmeans_train(corpus, id_col, vec_col, centroid_ids, iters=0)
     c = _semdedup_corpus(corpus, id_col, vec_col)
-    if centroids is not None:
-        cents = centroids.select(
-            F.col("cluster").alias("_cell"),
-            F.col("c").alias("_kq"),
-            norm2_q(F.col("c")).alias("_kn2"),
-        )
-    else:
-        cents = _semdedup_seeded_codebook(c, centroid_ids)
     # lineage cut (lazy, graph.py pattern): the assignment feeds
     # THREE consumers (both sides of the within-cluster pair join and
     # the final labeling join) — without it the broadcast centroid
     # scoring re-executes per consumer. The pre-checkpoint plan is
     # audited via _semdedup_assigned (tools/plan_audit.py
     # semdedup_assign[pre-checkpoint]).
-    assigned = _semdedup_assigned(c, cents).localCheckpoint(eager=False)
-    # Within-cluster pair enumeration, SALTED: a bare join on cluster
-    # id has as many shuffle keys as clusters, and AQE coalesces that
-    # exchange by its (tiny) INPUT size — blind to the quadratic
-    # fan-out — so the sum-cluster^2 cosine work lands on a handful
-    # of tasks (measured: 13M pairs in 3 tasks at the sf1 scale
-    # point). Salting the hi side and replicating the lo side spreads
-    # each cluster's pairs over PAIR_SALT keys: identical pair set,
-    # PAIR_SALT x the parallelism, lo-side duplication bounded at
-    # PAIR_SALT x corpus rows.
-    lo = (
-        assigned.select(
-            "cluster", F.col("_id").alias("_lo"), F.col("_q").alias("_ql"), F.col("_n2").alias("_nl")
-        )
-        .withColumn(
-            "_salt", F.explode(F.array(*[F.lit(s) for s in range(PAIR_SALT)]))
-        )
+    assigned = _semdedup_assigned(c, centroids).localCheckpoint(eager=False)
+    # Within-cluster pair enumeration, SALTED over (cluster, salt)
+    # shuffle keys (operators/pairs.py _salted_pair_join): K clusters
+    # alone would leave the sum-cluster^2 cosine work on K tasks.
+    lo = assigned.select(
+        "cluster", F.col("_id").alias("_lo"), F.col("_q").alias("_ql"), F.col("_n2").alias("_nl")
     )
     hi = assigned.select(
         "cluster", F.col("_id").alias("_hi"), F.col("_q").alias("_qh"), F.col("_n2").alias("_nh")
-    ).withColumn("_salt", F.pmod(F.xxhash64(F.col("_hi")), F.lit(PAIR_SALT)).cast("int"))
-    # The salt only distributes the quadratic pair fan-out if the join
-    # actually SHUFFLES on (cluster, salt) — planner stats for the
-    # checkpointed assignment can fall under the broadcast threshold,
-    # and a broadcast join would evaluate every pair on the probe
-    # side's (few) input partitions with the salt ignored (measured
-    # 4x on the K=32 sf1 point when the assignment became a narrow
-    # mapInPandas and its size estimate shrank). The hint pins the
-    # design: distribute pairs by key, never by input partitioning.
+    )
     dominated = (
-        lo.join(hi.hint("shuffle_hash"), ["cluster", "_salt"])
+        _salted_pair_join(lo, hi, "cluster", "_hi")
         .filter(F.col("_lo") < F.col("_hi"))
         .withColumn(
             "_pcos", cosine_q(dot_q(F.col("_ql"), F.col("_qh")), F.col("_nl"), F.col("_nh"))
@@ -351,17 +330,9 @@ def _semdedup_corpus(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _semdedup_seeded_codebook(c: DataFrame, centroid_ids: list[int]) -> DataFrame:
-    """The (_cell, _kq, _kn2) codebook seeded by member id from the
-    prepared corpus ``c`` (_semdedup_corpus) — shared with
-    tools/plan_audit.py semdedup_assign[pre-checkpoint]."""
-    return c.filter(F.col("_id").isin(list(centroid_ids))).select(
-        F.col("_id").alias("_cell"), F.col("_q").alias("_kq"), F.col("_n2").alias("_kn2")
-    )
-
-
-def _semdedup_assigned(c: DataFrame, cents: DataFrame) -> DataFrame:
-    """SemDeDup cell assignment: argmax cosine against the K-row
+def _semdedup_assigned(c: DataFrame, centroids: DataFrame) -> DataFrame:
+    """SemDeDup cell assignment of the prepared corpus ``c``
+    (_semdedup_corpus): argmax cosine against the K-row (cluster, c)
     codebook, ties to the lower cell — as ONE Arrow-batched numpy
     matmul per input batch (mapInPandas), not a per-row JVM
     expression over an N*K joined table.
@@ -391,7 +362,9 @@ def _semdedup_assigned(c: DataFrame, cents: DataFrame) -> DataFrame:
     class; K is bounded (codebook), never corpus-scale."""
     import numpy as np
 
-    crows = sorted((r["_cell"], r["_kq"], r["_kn2"]) for r in cents.collect())
+    crows = sorted(
+        centroids.select("cluster", "c", norm2_q(F.col("c"))).collect()
+    )
     cells = np.array([r[0] for r in crows], dtype=np.int64)
     ck_t = np.array([r[1] for r in crows], dtype=np.int64).T  # dim x K
     kn2 = np.array([r[2] for r in crows], dtype=np.float64)
@@ -517,10 +490,9 @@ def pq_adc_topk(
     id_col: str,
     vec_col: str,
     query_id_col: str,
-    codeword_ids: list[int] | None = None,
+    codebook: DataFrame,
     n_sub: int = 4,
     k: int = 3,
-    codebook: DataFrame | None = None,
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
     (Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor
@@ -528,10 +500,10 @@ def pq_adc_topk(
 
     The vector space is split into ``n_sub`` subspaces; each corpus
     subvector is ENCODED as the id of its nearest per-subspace
-    codeword. The codebook rows are either the subvectors of the
-    ``codeword_ids`` vectors (seeded) or a TRAINED quantized
-    (m, code, bq) table via ``codebook`` — per-subspace
-    operators/kmeans.py output, as llm_ann_pq_trained demonstrates.
+    codeword. ``codebook`` is the quantized (m, code, bq) table that
+    _pq_codebook builds with operators/kmeans.py kmeans_train per
+    subspace: seeded (zero Lloyd rounds, llm_ann_pq) or trained
+    (llm_ann_pq_trained) — one construction, one input form.
     A query never touches corpus vectors: it precomputes a
     (subspace, code) -> partial-d2 lookup table and scores every
     corpus row as the SUM of n_sub table lookups.
@@ -549,7 +521,6 @@ def pq_adc_topk(
     Determinism: quantized integer subvector distances, argmin ties
     to the lower code, ADC ties to the lower neighbor id —
     bit-identical to the DuckDB oracle."""
-    from .kmeans import dist2_q
 
     def _subs(df: DataFrame, idc: str, out: str) -> DataFrame:
         # sub_dim comes from the vector column itself (size/n_sub), so
@@ -577,24 +548,7 @@ def pq_adc_topk(
             out, "p.m", "p.sq"
         )
 
-    if (codeword_ids is None) == (codebook is None):
-        raise ValueError("pass exactly one of codeword_ids / codebook")
-    if codebook is not None:
-        book = codebook.select("m", "code", "bq")
-    else:
-        # codebook: (m, code, bq); code = position in codeword_ids
-        code_expr = F.col("_cwid")
-        mapping = F.lit(None).cast("int")
-        for idx, cid in enumerate(codeword_ids):
-            mapping = F.when(code_expr == cid, idx).otherwise(mapping)
-        book = (
-            _subs(
-                corpus.filter(F.col(id_col).isin(list(codeword_ids))), id_col, "_cwid"
-            )
-            .withColumn("code", mapping)
-            .select("m", "code", F.col("sq").alias("bq"))
-        )
-
+    book = codebook.select("m", "code", "bq")
     codes = (
         _subs(corpus, id_col, "nid")
         .join(F.broadcast(book), "m")
@@ -619,3 +573,38 @@ def pq_adc_topk(
     return top_k_per_group(
         scored, ["query_id"], [F.asc("adc_d2"), F.asc("nid")], k, rank_col="_rn"
     ).select("query_id", F.col("nid").alias("neighbor_id"), "adc_d2")
+
+
+def _pq_codebook(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    codeword_ids: list[int],
+    dim: int,
+    n_sub: int,
+    iters: int,
+) -> DataFrame:
+    """The (m, code, bq) codebook pq_adc_topk takes: for each of the
+    ``n_sub`` subspaces, operators/kmeans.py kmeans_train over the
+    raw ``dim // n_sub``-element subvector slices, seeded at
+    ``codeword_ids`` and run for ``iters`` Lloyd rounds (0: the seed
+    subvectors themselves).  Code = the seed's position in
+    ``codeword_ids``.  Slicing commutes with elementwise quantization,
+    so the sub-centroids live in exactly the space the encoder
+    measures distances in."""
+    from functools import reduce
+
+    sub_dim = dim // n_sub
+    code = F.lit(None).cast("int")
+    for idx, cid in enumerate(codeword_ids):
+        code = F.when(F.col("cluster") == cid, idx).otherwise(code)
+    books = []
+    for m in range(n_sub):
+        sub = corpus.select(
+            id_col, F.slice(vec_col, sub_dim * m + 1, sub_dim).alias(vec_col)
+        )
+        cents = kmeans_train(sub, id_col, vec_col, codeword_ids, iters=iters)
+        books.append(
+            cents.select(F.lit(m).alias("m"), code.alias("code"), F.col("c").alias("bq"))
+        )
+    return reduce(lambda a, b: a.unionAll(b), books)

@@ -57,7 +57,18 @@ _GREEN_FLAGS = ("rows_match", "schema_match", "hash_match")
 # Queries whose implementations materially changed since their last
 # green driver row; empty unless a certified query's implementation or
 # oracle is edited.
-_CHANGED: list[str] = []
+_CHANGED: list[str] = [
+    "llm_ann_ivf",
+    "llm_ann_ivf_trained",
+    "llm_ann_pq",
+    "llm_ann_pq_trained",
+    "llm_cluster_top_terms",
+    "llm_kmeans",
+    "llm_semdedup",
+    "llm_semdedup_scaled",
+    "llm_semdedup_trained",
+    "llm_semdedup_trained_k32",
+]
 
 
 def last_green_rounds(records_dir: Path) -> dict[str, int]:

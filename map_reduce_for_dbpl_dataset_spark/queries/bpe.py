@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..sources.parquet import load_table
+from .llm import _TOKENS_SQL
 
 # Vocabulary cap for training (global top-K word types by count).  K
 # here is fixture-sized; at production scale K is the tokenizer's
@@ -389,7 +390,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_WORDS = f"""
 ex AS (
-  SELECT unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS word
+  SELECT unnest({_TOKENS_SQL}) AS word
   FROM documents
 ),
 words AS (
@@ -471,11 +472,11 @@ def _sql_nested_apply() -> str:
 
 SQL_BPE_ENCODE = (
     _SQL_BPE_CTE
-    + """,
+    + f""",
 dw AS (
   SELECT doc_id, word, regexp_replace(word, '(.)', '(\\1)', 'g') AS seq FROM (
     SELECT doc_id,
-           unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS word
+           unnest({_TOKENS_SQL}) AS word
     FROM documents
   ) WHERE regexp_matches(word, '^[a-z0-9]+$')
 ),
@@ -499,7 +500,7 @@ SQL_INVERTED_INDEX = f"""
 WITH td AS (
   SELECT DISTINCT doc_id, tok AS term FROM (
     SELECT doc_id,
-           unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS tok
+           unnest({_TOKENS_SQL}) AS tok
     FROM documents
   )
   WHERE regexp_matches(tok, '^[a-z0-9]+$')

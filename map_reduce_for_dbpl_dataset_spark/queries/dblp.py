@@ -33,7 +33,12 @@ from ..functions.exprs import authors_or_editors, venue_expr
 from ..operators.argmax import argmax_per_group
 from ..operators.runs import longest_consecutive_run
 from ..operators.topk import top_k_global, top_k_per_group
-from ..sources.parquet import PUBLICATIONS_PATH, publications
+from ..sources.parquet import (
+    PUBLICATIONS_PATH,
+    PUBLICATIONS_SCHEMA,
+    ddl_columns,
+    publications,
+)
 
 
 def _pubs_with_venue(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
@@ -47,6 +52,16 @@ def _pubs_with_venue(spark: SparkSession, sf_dir: str | None = None) -> DataFram
     """
     return publications(spark, sf_dir=sf_dir).withColumns(
         {"venue": venue_expr(), "aus": authors_or_editors()}
+    )
+
+
+def _pub_authors(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
+    """(pub, a): one row per distinct non-empty author of each
+    publication — the vertex/edge source of the co-author graph."""
+    return (
+        _pubs_with_venue(spark, sf_dir)
+        .select(F.col("key").alias("pub"), F.explode(F.array_distinct("aus")).alias("a"))
+        .filter(F.col("a") != "")
     )
 
 
@@ -416,36 +431,15 @@ def xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Spark concat_ws renders an empty array as '' while DuckDB
     # array_to_string renders it NULL — nullif on both sides unifies.
-    def ser(c: str) -> F.Column:
-        return F.nullif(F.concat_ws("\x1f", c), F.lit("")).alias(c)
+    def out(name: str, type_: str) -> F.Column | str:
+        if type_ == "ARRAY<STRING>":
+            return F.nullif(F.concat_ws("\x1f", name), F.lit("")).alias(name)
+        if type_ == "DATE":
+            return F.col(name).cast("string").alias(name)
+        return name
 
     return publications_from_xml(spark).select(
-        "key",
-        "kind",
-        "title",
-        ser("authors"),
-        ser("editors"),
-        "year",
-        "journal",
-        "booktitle",
-        "publisher",
-        "school",
-        "pages",
-        ser("ee"),
-        "crossref",
-        F.col("mdate").cast("string").alias("mdate"),
-        "address",
-        "volume",
-        "number",
-        "month",
-        ser("url"),
-        "cdrom",
-        ser("cite"),
-        "note",
-        "isbn",
-        "series",
-        "chapter",
-        "publnr",
+        *[out(name, type_) for name, type_ in ddl_columns(PUBLICATIONS_SCHEMA)]
     )
 
 
@@ -484,11 +478,7 @@ def coauthor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     author universe. Zipfian prolific authors skew the final groupBy,
     split by AQE.
     """
-    ex = (
-        _pubs_with_venue(spark, sf_dir)
-        .select(F.col("key").alias("pub"), F.explode(F.array_distinct("aus")).alias("a"))
-        .filter(F.col("a") != "")
-    )
+    ex = _pub_authors(spark, sf_dir)
     pairs = (
         ex.select(F.col("pub"), F.col("a").alias("author_a"))
         .join(ex.select(F.col("pub"), F.col("a").alias("author_b")), "pub")
@@ -536,11 +526,7 @@ def coauthor_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _coauthor_graph(
     spark: SparkSession, sf_dir: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    ex = (
-        _pubs_with_venue(spark, sf_dir)
-        .select(F.col("key").alias("pub"), F.explode(F.array_distinct("aus")).alias("a"))
-        .filter(F.col("a") != "")
-    )
+    ex = _pub_authors(spark, sf_dir)
     edges = (
         ex.select("pub", F.col("a").alias("src"))
         .join(ex.select("pub", F.col("a").alias("dst")), "pub")
@@ -660,11 +646,7 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pregel superstep costs. Lineage stays 3 plans deep (no checkpoint
     needed at fixed small iteration counts; coauthor_components shows
     the localCheckpoint pattern for unbounded fixpoints)."""
-    ex = (
-        _pubs_with_venue(spark, sf_dir)
-        .select(F.col("key").alias("pub"), F.explode(F.array_distinct("aus")).alias("a"))
-        .filter(F.col("a") != "")
-    )
+    ex = _pub_authors(spark, sf_dir)
     bi = (
         ex.select("pub", F.col("a").alias("src"))
         .join(ex.select("pub", F.col("a").alias("dst")), "pub")

@@ -110,12 +110,22 @@ def _docs_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sh
 
 
+def _norm_sql(col: str) -> str:
+    """functions/text.py normalize_text in DuckDB: lower, collapse
+    whitespace runs to one space, trim."""
+    return f"trim(regexp_replace(lower({col}), '\\s+', ' ', 'g'))"
+
+
+# normalize_text / tokens (tokens_from_normalized) of the text column.
+_NORM_SQL = _norm_sql("text")
+_TOKENS_SQL = f"string_split({_NORM_SQL}, ' ')"
+
 # SQL prelude mirroring tokens()/word_shingles(): normalize, split,
 # 3-word shingles (DuckDB list slicing is 1-based inclusive).
-_SH_CTE = """
+_SH_CTE = f"""
 toks AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM documents
 ),
 sh AS (
@@ -138,9 +148,9 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DEDUP_EXACT = """
+SQL_DEDUP_EXACT = f"""
 WITH f AS (
-  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+  SELECT doc_id, md5({_NORM_SQL}) AS fp
   FROM documents
 )
 SELECT doc_id, fp,
@@ -473,16 +483,14 @@ FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id
 """
 
 
-def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs over an augmented corpus.
-
-    The fixture embeddings have no natural near-dups (max pairwise
-    cosine ~0.51), so the corpus is augmented deterministically: exact
-    copies (ids +100000) and copies with every 4th element halved
-    (ids +200000, cosine ~0.97) of the first 10 vectors — halving is
-    exact in binary floats, so both engines quantize identically.
-    """
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+def _augmented_embeddings(e: DataFrame) -> DataFrame:
+    """Deterministic near-dup planting (llm_dedup_embedding and the
+    llm_semdedup family): the fixture embeddings have no natural
+    near-dups (max pairwise cosine ~0.51), so exact copies of the
+    first 10 vectors are added at ids +100000 and copies with every
+    4th element halved (cosine ~0.97) at +200000 — halving is exact
+    in binary floats, so both engines quantize identically.  The
+    DuckDB twin is _AUGMENTED_CTE."""
     seeds = e.filter(F.col("vec_id") < 10)
     exact = seeds.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
     half4 = F.transform(
@@ -492,21 +500,11 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     near = seeds.select((F.col("vec_id") + 200000).alias("vec_id"), half4.alias("embedding"))
-    corpus = e.unionAll(exact).unionAll(near)
-    return embedding_near_pairs(
-        corpus, "vec_id", "embedding", dim=EMB_DIM, threshold=0.9
-    ).orderBy("id_a", "id_b")
+    return e.unionAll(exact).unionAll(near)
 
 
-def _dedup_embedding_sql() -> str:
-    plane_rows = ",\n    ".join(
-        "({j}, [{coefs}])".format(
-            j=j, coefs=", ".join(str(plane_coef(j, i, EMB_DIM)) for i in range(EMB_DIM))
-        )
-        for j in range(N_PLANES)
-    )
-    return f"""
-WITH base AS (
+# _augmented_embeddings in DuckDB: the `corpus` CTE (after its `base`).
+_AUGMENTED_CTE = f"""base AS (
   SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings
 ),
 corpus AS (
@@ -518,7 +516,27 @@ corpus AS (
          [CASE WHEN (i - 1) % 4 = 0 THEN emb[i] * 0.5 ELSE emb[i] END
           for i in range(1, {EMB_DIM + 1})]
   FROM base WHERE vec_id < 10
-),
+)"""
+
+
+def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-dup pairs over the augmented corpus
+    (_augmented_embeddings)."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return embedding_near_pairs(
+        _augmented_embeddings(e), "vec_id", "embedding", dim=EMB_DIM, threshold=0.9
+    ).orderBy("id_a", "id_b")
+
+
+def _dedup_embedding_sql() -> str:
+    plane_rows = ",\n    ".join(
+        "({j}, [{coefs}])".format(
+            j=j, coefs=", ".join(str(plane_coef(j, i, EMB_DIM)) for i in range(EMB_DIM))
+        )
+        for j in range(N_PLANES)
+    )
+    return f"""
+WITH {_AUGMENTED_CTE},
 q0 AS (SELECT vec_id, [CAST(floor(x * {QUANT_SCALE}) AS BIGINT) for x in emb] AS q FROM corpus),
 n AS (
   SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
@@ -571,7 +589,7 @@ def q_fingerprint_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_FINGERPRINT_ROLLING = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM documents
 ),
 fp AS (
@@ -629,8 +647,8 @@ _STOP_LIST = ", ".join(f"'{s}'" for s in STOPWORDS)
 SQL_TEXT_STATS = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t,
-         length(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS n_chars_norm
+         {_TOKENS_SQL} AS t,
+         length({_NORM_SQL}) AS n_chars_norm
   FROM documents
 ),
 base AS (
@@ -693,7 +711,7 @@ def q_quality_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_QUALITY_PANDAS_UDF = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM documents
 ),
 base AS (
@@ -748,7 +766,7 @@ def _langid_sql() -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id, lang,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM documents
 ),
 scored AS (
@@ -781,11 +799,11 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TOKEN_COUNT = """
+SQL_TOKEN_COUNT = f"""
 SELECT doc_id,
-       len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS n_ws_tokens,
+       len({_TOKENS_SQL}) AS n_ws_tokens,
        len(regexp_extract_all(lower(text), '[a-z]+')) AS n_alpha_runs,
-       len(regexp_extract_all(lower(text), '[a-z]{4,}')) AS n_long_runs
+       len(regexp_extract_all(lower(text), '[a-z]{{4,}}')) AS n_long_runs
 FROM documents
 """
 
@@ -875,13 +893,13 @@ def q_zscore_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_ZSCORE_GROUPED_MAP = """
+SQL_ZSCORE_GROUPED_MAP = f"""
 WITH base AS (
   SELECT doc_id, lang,
          CAST(floor((len(list_distinct(t))::DOUBLE / len(t)::DOUBLE) * 1000000.0) AS BIGINT) AS q_micro
   FROM (
     SELECT doc_id, lang,
-           string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+           {_TOKENS_SQL} AS t
     FROM documents
   )
 ),
@@ -961,7 +979,7 @@ def _tfidf_sql() -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM documents
 ),
 terms AS (
@@ -1190,7 +1208,7 @@ WITH corpus AS (
 ),
 wtoks AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM corpus
 ),
 wsh AS (

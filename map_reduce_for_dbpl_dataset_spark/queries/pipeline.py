@@ -23,12 +23,23 @@ from pyspark.sql import functions as F
 
 from ..functions.text import hash60, tokens, word_shingles
 from ..functions.vectors import QUANT_SCALE, quantize
-from ..operators.kmeans import KMEANS_ITERS
-from ..operators.pairs import spread_for_pair_join
-from ..operators.similarity import ivf_topk, pq_adc_topk
+from ..operators.kmeans import KMEANS_ITERS, kmeans_train
+from ..operators.pairs import _salted_pair_join, spread_for_pair_join
+from ..operators.similarity import _pq_codebook, ivf_topk, pq_adc_topk
 from ..operators.topk import top_k_per_group
 from ..sources.parquet import load_table
-from .llm import _QUANT, _SH_CTE, EMB_DIM, N_QUERY_VECS, _docs_shingled
+from .llm import (
+    _AUGMENTED_CTE,
+    _NORM_SQL,
+    _QUANT,
+    _SH_CTE,
+    _TOKENS_SQL,
+    EMB_DIM,
+    N_QUERY_VECS,
+    _augmented_embeddings,
+    _docs_shingled,
+    _norm_sql,
+)
 
 # --- decontamination ---------------------------------------------------------
 # Held-out "benchmark" split: every 20th doc. In production the test
@@ -186,13 +197,13 @@ def q_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DOMAIN_MIXTURE = """
+SQL_DOMAIN_MIXTURE = f"""
 WITH w AS (
   SELECT doc_id, source,
          100000 + ('0x' || substr(md5(source), 1, 15))::BIGINT % 900000 AS weight_micro,
          ('0x' || substr(md5(source || ':' || doc_id::VARCHAR), 1, 15))::BIGINT % 1000000
            AS gate,
-         len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS ntok
+         len({_TOKENS_SQL}) AS ntok
   FROM documents
 ),
 g AS (
@@ -260,7 +271,7 @@ def q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_SEQUENCE_PACK = f"""
 WITH base AS (
   SELECT doc_id, lang, CAST(doc_id % {PACK_SHARDS} AS INT) AS shard,
-         len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS n_tok
+         len({_TOKENS_SQL}) AS n_tok
   FROM documents
 ),
 p AS (
@@ -300,10 +311,10 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_REPETITION = """
+SQL_REPETITION = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM documents
 ),
 shm AS (
@@ -320,19 +331,98 @@ FROM shm WHERE len(ss) > 0 ORDER BY doc_id
 """
 
 
+# --- k-means codebooks (oracle side) ----------------------------------------
+# Every vector codebook — SemDeDup cells, IVF coarse cells, PQ
+# per-subspace codewords, llm_kmeans itself — is the k-means seed table
+# followed by 0 (seeded) or KMEANS_ITERS (trained) Lloyd rounds, on
+# both engines (operators/kmeans.py kmeans_train).
+KMEANS_INIT_IDS = [30, 31, 32, 33]
+
+# one Lloyd assignment {P}a{t} against the centroid table {P}c{p}
+_KM_ASSIGN = """
+{P}a{t} AS (
+  SELECT vid, q, cluster, d2 FROM (
+    SELECT *, row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, cluster ASC) AS rn
+    FROM (SELECT a.vid, a.q, c.cluster, {d2} AS d2 FROM {P}q a CROSS JOIN {P}c{p} c))
+  WHERE rn = 1
+)"""
+# one Lloyd centroid update {P}c{t} from the assignment {P}a{t}
+_KM_UPDATE = """
+{P}pd{t} AS (
+  SELECT cluster, u.i AS dim, sum(q[u.i]) AS s, count(*) AS n
+  FROM {P}a{t} CROSS JOIN LATERAL (SELECT unnest(range(1, {dplus})) AS i) u
+  GROUP BY cluster, u.i
+),
+{P}c{t} AS (SELECT cluster, list(s // n ORDER BY dim) AS c FROM {P}pd{t} GROUP BY cluster)"""
+
+
+def _km_d2(dim: int) -> str:
+    return (
+        f"CAST(list_sum([(a.q[i]-c.c[i])*(a.q[i]-c.c[i]) "
+        f"for i in range(1, {dim + 1})]) AS BIGINT)"
+    )
+
+
+def _kmeans_prelude(
+    prefix: str = "k",
+    ids: list[int] | None = None,
+    dim: int | None = None,
+    vec_expr: str | None = None,
+    src_pred: str | None = None,
+    c0_sql: str | None = None,
+    rounds: int = KMEANS_ITERS,
+) -> str:
+    """operators/kmeans.py kmeans_train as CTEs ({prefix}-named to
+    avoid name capture): the quantized training corpus {prefix}q, the
+    seed table {prefix}c0 (rows ``ids``, default KMEANS_INIT_IDS), then
+    ``rounds`` unrolled Lloyd rounds ending with the centroid table
+    {prefix}c{rounds} — so a seeded codebook is ``rounds=0``.
+    ``vec_expr`` replaces the embedding (a list slice per PQ subspace,
+    with ``dim`` its length); ``src_pred`` restricts the TRAINING
+    corpus (a WHERE over the raw embeddings scan — llm_semdedup_scaled's
+    bounded sample); ``c0_sql`` replaces the whole seed-select body
+    (its data-dependent ORDER BY vid LIMIT k seeding)."""
+    ids_s = ", ".join(str(i) for i in (KMEANS_INIT_IDS if ids is None else ids))
+    src_where = f"\n  WHERE {src_pred}" if src_pred else ""
+    dim = EMB_DIM if dim is None else dim
+    vec = vec_expr or "embedding"
+    lloyd = "".join(
+        f",{_KM_ASSIGN.format(t=t, p=t - 1, d2=_km_d2(dim), P=prefix)}"
+        f",{_KM_UPDATE.format(t=t, dplus=dim + 1, P=prefix)}"
+        for t in range(1, rounds + 1)
+    )
+    c0_body = (
+        c0_sql
+        if c0_sql is not None
+        else f"SELECT vid AS cluster, q AS c FROM {prefix}q WHERE vid IN ({ids_s})"
+    )
+    return f"""{prefix}q AS (
+  SELECT vec_id AS vid,
+         [CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) for x in {vec}] AS q
+  FROM embeddings{src_where}
+),
+{prefix}c0 AS ({c0_body}){lloyd}"""
+
+
+def _kmeans_final() -> str:
+    """The final assignment ka{KMEANS_ITERS+1}: every embedding's
+    nearest centroid of _kmeans_prelude's trained kc{KMEANS_ITERS}
+    (operators/kmeans.py kmeans_assign), with its d2."""
+    return _KM_ASSIGN.format(
+        t=KMEANS_ITERS + 1, p=KMEANS_ITERS, d2=_km_d2(EMB_DIM), P="k"
+    )
+
+
 # --- IVF ANN -----------------------------------------------------------------
-# Coarse "codebook": the vectors right after the query range act as
-# fixed centroids, quantized into the (cluster, c) table ivf_topk takes
-# (llm_ann_ivf_trained trains it with k-means; the layout and joins are
-# identical).
+# Coarse codebook: the vectors right after the query range seed it;
+# llm_ann_ivf uses the seeds themselves (zero Lloyd rounds),
+# llm_ann_ivf_trained trains from KMEANS_INIT_IDS — same layout and
+# joins.
 IVF_CENTROID_IDS = list(range(N_QUERY_VECS, N_QUERY_VECS + 8))
 IVF_N_PROBE = 2
 
 
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-partitioned ANN (see operators/similarity.py ivf_topk):
-    assign every vector to its nearest centroid cell, probe the 2
-    nearest cells per query, exact-rank within the probed cells."""
+def _ann_ivf(spark: SparkSession, sf_dir: str, centroid_ids: list[int], iters: int) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return ivf_topk(
         corpus=e,
@@ -340,28 +430,37 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="vec_id",
         vec_col="embedding",
         query_id_col="vec_id",
-        centroids=e.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)).select(
-            F.col("vec_id").alias("cluster"), quantize(F.col("embedding")).alias("c")
-        ),
+        centroids=kmeans_train(e, "vec_id", "embedding", centroid_ids, iters=iters),
         k=3,
         n_probe=IVF_N_PROBE,
     ).orderBy("query_id", "neighbor_id")
 
 
+def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-partitioned ANN (see operators/similarity.py ivf_topk):
+    assign every vector to its nearest centroid cell, probe the 2
+    nearest cells per query, exact-rank within the probed cells."""
+    return _ann_ivf(spark, sf_dir, IVF_CENTROID_IDS, 0)
+
+
 _IVF_DOT = f"CAST(list_sum([a.q[i] * c.kq[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)"
 
 
-def _ivf_sql() -> str:
-    ids = ", ".join(str(i) for i in IVF_CENTROID_IDS)
+def _ivf_sql(ids: list[int], rounds: int) -> str:
+    """llm_ann_ivf[_trained] oracle: the k-means prelude's centroid
+    table after ``rounds`` Lloyd rounds is the IVF codebook."""
     return f"""
-WITH q0 AS (
+WITH {_kmeans_prelude(ids=ids, rounds=rounds)},
+q0 AS (
   SELECT vec_id, {_QUANT} AS q FROM embeddings
 ),
 n AS (
   SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
 ),
 cents AS (
-  SELECT vec_id AS cell, q AS kq, n2 AS kn2 FROM n WHERE vec_id IN ({ids})
+  SELECT cluster AS cell, c AS kq,
+         CAST(list_sum([x * x for x in c]) AS BIGINT) AS kn2
+  FROM kc{rounds}
 ),
 assign0 AS (
   SELECT a.vec_id, a.q, a.n2, c.cell,
@@ -392,11 +491,28 @@ FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id
 
 
 # --- PQ / ADC ANN ------------------------------------------------------------
-# Per-subspace codebook rows: the 4 vectors after the IVF centroids
-# act as fixed codewords (a production pipeline trains them per
-# subspace with operators/kmeans.py; encode/search joins identical).
+# Per-subspace codebooks seeded at the 4 vectors after the IVF
+# centroids: llm_ann_pq uses the seed subvectors themselves (zero
+# Lloyd rounds), llm_ann_pq_trained trains each subspace.
 PQ_CODEWORD_IDS = list(range(N_QUERY_VECS + 8, N_QUERY_VECS + 12))
 PQ_N_SUB = 4
+
+
+def _ann_pq(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
+    e = load_table(spark, sf_dir, "embeddings")
+    book = _pq_codebook(
+        e, "vec_id", "embedding", PQ_CODEWORD_IDS, EMB_DIM, PQ_N_SUB, iters=iters
+    )
+    return pq_adc_topk(
+        corpus=e,
+        queries=e.filter(F.col("vec_id") < N_QUERY_VECS),
+        id_col="vec_id",
+        vec_col="embedding",
+        query_id_col="vec_id",
+        codebook=book,
+        n_sub=PQ_N_SUB,
+        k=3,
+    ).orderBy("query_id", "neighbor_id")
 
 
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -404,28 +520,36 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.py pq_adc_topk): corpus rows collapse to
     4 two-bit codes; queries precompute a (subspace, code) lookup
     table and rank the whole corpus by 4 table lookups per row."""
-    e = load_table(spark, sf_dir, "embeddings")
-    return pq_adc_topk(
-        corpus=e,
-        queries=e.filter(F.col("vec_id") < N_QUERY_VECS),
-        id_col="vec_id",
-        vec_col="embedding",
-        query_id_col="vec_id",
-        codeword_ids=PQ_CODEWORD_IDS,
-        n_sub=PQ_N_SUB,
-        k=3,
-    ).orderBy("query_id", "neighbor_id")
+    return _ann_pq(spark, sf_dir, 0)
 
 
-def _pq_sql() -> str:
+def _pq_sql(rounds: int) -> str:
+    """llm_ann_pq[_trained] oracle: one k-means prelude per subspace
+    (``rounds`` Lloyd rounds over the subvector slices) unioned into
+    the (m, code, bq) book."""
     sub_dim = EMB_DIM // PQ_N_SUB
     case = " ".join(
         f"WHEN {cid} THEN {idx}" for idx, cid in enumerate(PQ_CODEWORD_IDS)
     )
-    ids = ", ".join(str(i) for i in PQ_CODEWORD_IDS)
     d2 = f"list_sum([(s.sq[i] - b.bq[i]) * (s.sq[i] - b.bq[i]) for i in range(1, {sub_dim + 1})])"
+    preludes = ",\n".join(
+        _kmeans_prelude(
+            prefix=f"s{m}",
+            ids=list(PQ_CODEWORD_IDS),
+            dim=sub_dim,
+            vec_expr=f"embedding[{m * sub_dim + 1}:{(m + 1) * sub_dim}]",
+            rounds=rounds,
+        )
+        for m in range(PQ_N_SUB)
+    )
+    book_union = "\n  UNION ALL\n".join(
+        f"  SELECT {m} AS m, CASE cluster {case} END AS code, c AS bq "
+        f"FROM s{m}c{rounds}"
+        for m in range(PQ_N_SUB)
+    )
     return f"""
-WITH q0 AS (
+WITH {preludes},
+q0 AS (
   SELECT vec_id, {_QUANT} AS q FROM embeddings
 ),
 ms AS (SELECT unnest([{", ".join(str(m) for m in range(PQ_N_SUB))}]) AS m),
@@ -434,8 +558,7 @@ subs AS (
   FROM q0 CROSS JOIN ms
 ),
 book AS (
-  SELECT m, CASE vec_id {case} END AS code, sq AS bq
-  FROM subs WHERE vec_id IN ({ids})
+{book_union}
 ),
 enc AS (
   SELECT s.vec_id AS nid, s.m, b.code, {d2} AS d2
@@ -494,28 +617,22 @@ def q_dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
       levenshtein and the hash gate is unchanged.
 
     The pair enumeration is SALTED over (blk, salt) keys with a
-    pinned shuffle_hash join — the operators/similarity.py semdedup
-    pattern: a bare prefix-key join has as many shuffle keys as
+    pinned shuffle_hash join (operators/pairs.py _salted_pair_join,
+    shared with operators/similarity.py semdedup): a bare prefix-key join has as many shuffle keys as
     distinct prefixes, AQE coalesces that exchange by its tiny INPUT
     size (blind to the quadratic fan-out), and hot prefixes leave
     the DP work on a handful of straggler tasks (measured: 4
     post-coalesce partitions with one straggler at the sf1 point)."""
-    from ..operators.similarity import PAIR_SALT
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     mut = d.filter(F.col("doc_id") < LEV_SEEDS).select(
         (F.col("doc_id") + 300000).alias("doc_id"),
         F.concat("text", F.lit(" qz")).alias("text"),
     )
     blk = d.unionAll(mut).withColumn("blk", F.substring("text", 1, LEV_BLOCK_LEN))
-    lo = blk.select(
-        F.col("doc_id").alias("id_a"), F.col("text").alias("_ta"), "blk"
-    ).withColumn("_salt", F.explode(F.array(*[F.lit(s) for s in range(PAIR_SALT)])))
-    hi = blk.select(
-        F.col("doc_id").alias("id_b"), F.col("text").alias("_tb"), "blk"
-    ).withColumn("_salt", F.pmod(F.xxhash64(F.col("id_b")), F.lit(PAIR_SALT)).cast("int"))
+    lo = blk.select(F.col("doc_id").alias("id_a"), F.col("text").alias("_ta"), "blk")
+    hi = blk.select(F.col("doc_id").alias("id_b"), F.col("text").alias("_tb"), "blk")
     return (
-        lo.join(hi.hint("shuffle_hash"), ["blk", "_salt"])
+        _salted_pair_join(lo, hi, "blk", "id_b")
         .filter(
             (F.col("id_a") < F.col("id_b"))
             & (F.abs(F.length("_ta") - F.length("_tb")) <= LEV_MAX_DIST)
@@ -562,15 +679,12 @@ ORACLE_SQL = {
     "llm_domain_mixture": SQL_DOMAIN_MIXTURE,
     "llm_sequence_pack": SQL_SEQUENCE_PACK,
     "llm_repetition": SQL_REPETITION,
-    "llm_ann_ivf": _ivf_sql(),
-    "llm_ann_pq": _pq_sql(),
+    "llm_ann_ivf": _ivf_sql(IVF_CENTROID_IDS, 0),
+    "llm_ann_pq": _pq_sql(0),
 }
 
 
 # --- k-means (iterative, trains the IVF codebook) ----------------------------
-KMEANS_INIT_IDS = [30, 31, 32, 33]
-
-
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration Lloyd's k-means over the embeddings
     (operators/kmeans.py): 2 exact integer iterations from fixed
@@ -583,39 +697,10 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_sql() -> str:
-    ids = ", ".join(str(i) for i in KMEANS_INIT_IDS)
-    d2 = (
-        f"CAST(list_sum([(a.q[i]-c.c[i])*(a.q[i]-c.c[i]) "
-        f"for i in range(1, {EMB_DIM + 1})]) AS BIGINT)"
-    )
-    assign = """
-a{t} AS (
-  SELECT vid, q, cluster, d2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, cluster ASC) AS rn
-    FROM (SELECT a.vid, a.q, c.cluster, {d2} AS d2 FROM q0 a CROSS JOIN c{p} c))
-  WHERE rn = 1
-)"""
-    update = """
-pd{t} AS (
-  SELECT cluster, u.i AS dim, sum(q[u.i]) AS s, count(*) AS n
-  FROM a{t} CROSS JOIN LATERAL (SELECT unnest(range(1, {dplus})) AS i) u
-  GROUP BY cluster, u.i
-),
-c{t} AS (SELECT cluster, list(s // n ORDER BY dim) AS c FROM pd{t} GROUP BY cluster)"""
-    parts = []
-    for t in range(1, KMEANS_ITERS + 1):
-        parts.append(assign.format(t=t, p=t - 1, d2=d2))
-        parts.append(update.format(t=t, dplus=EMB_DIM + 1))
-    final = assign.format(t=KMEANS_ITERS + 1, p=KMEANS_ITERS, d2=d2)
     return f"""
-WITH q0 AS (
-  SELECT vec_id AS vid,
-         {_QUANT} AS q
-  FROM embeddings
-),
-c0 AS (SELECT vid AS cluster, q AS c FROM q0 WHERE vid IN ({ids})),{",".join(parts)},{final}
+WITH {_kmeans_prelude()},{_kmeans_final()}
 SELECT cluster, count(*) AS n_members, sum(d2)::BIGINT AS sse, min(vid) AS min_member
-FROM a{KMEANS_ITERS + 1} GROUP BY cluster ORDER BY cluster
+FROM ka{KMEANS_ITERS + 1} GROUP BY cluster ORDER BY cluster
 """
 
 
@@ -703,7 +788,7 @@ def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_BOILERPLATE_LINES = f"""
 WITH toks AS (
   SELECT doc_id, source,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM documents
 ),
 chunked AS (
@@ -806,9 +891,9 @@ def q_quality_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_QUALITY_SELECT = f"""
 WITH scored AS (
   SELECT doc_id, source,
-         len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS n_tokens,
-         floor(len(list_distinct(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')))::DOUBLE
-               / len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))::DOUBLE
+         len({_TOKENS_SQL}) AS n_tokens,
+         floor(len(list_distinct({_TOKENS_SQL}))::DOUBLE
+               / len({_TOKENS_SQL})::DOUBLE
                * 1000000.0) / 1000000.0 AS quality
   FROM documents
 ),
@@ -905,8 +990,8 @@ def q_quality_select_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_QUALITY_SELECT_APPROX = f"""
 WITH scored AS (
   SELECT doc_id, source,
-         floor(len(list_distinct(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')))::DOUBLE
-               / len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))::DOUBLE
+         floor(len(list_distinct({_TOKENS_SQL}))::DOUBLE
+               / len({_TOKENS_SQL})::DOUBLE
                * 1000000.0) / 1000000.0 AS quality
   FROM documents
 ),
@@ -965,9 +1050,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DEDUP_INCREMENTAL = """
+SQL_DEDUP_INCREMENTAL = f"""
 WITH f AS (
-  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+  SELECT doc_id, md5({_NORM_SQL}) AS fp
   FROM documents
 ),
 snap AS (SELECT DISTINCT fp FROM f WHERE doc_id % 2 = 0),
@@ -998,23 +1083,6 @@ ORACLE_SQL["llm_dedup_incremental"] = SQL_DEDUP_INCREMENTAL
 # vectors top out ~0.51 — a wide deterministic margin on both sides.
 SEMDEDUP_THRESHOLD = 0.9
 SEMDEDUP_CENTROID_IDS = [30, 31, 32, 33]
-
-
-def _augmented_embeddings(e: DataFrame) -> DataFrame:
-    """Deterministic near-dup planting (shared by llm_dedup_embedding /
-    llm_semdedup / llm_semdedup_trained): exact copies at +100000 and
-    every-4th-element-halved copies at +200000 — the raw fixture has
-    no natural near-identical vectors."""
-    seeds = e.filter(F.col("vec_id") < 10)
-    exact = seeds.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-    half4 = F.transform(
-        "embedding",
-        lambda x, i: F.when(i % 4 == 0, x.cast("double") * F.lit(0.5)).otherwise(
-            x.cast("double")
-        ),
-    )
-    near = seeds.select((F.col("vec_id") + 200000).alias("vec_id"), half4.alias("embedding"))
-    return e.unionAll(exact).unionAll(near)
 
 
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1052,7 +1120,6 @@ SEMDEDUP_K32_IDS = list(range(30, 62))
 def _semdedup_trained(
     spark: SparkSession, sf_dir: str, init_ids: list[int]
 ) -> DataFrame:
-    from ..operators.kmeans import kmeans_train
     from ..operators.similarity import semdedup
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1071,14 +1138,12 @@ def q_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-then-assign composition (round-4 verdict #3): the SemDeDup
     coarse codebook is TRAINED — operators/kmeans.py kmeans_train runs
     the same 2 exact-integer Lloyd iterations as llm_kmeans over the
-    raw embeddings — and the trained (cluster, c) table replaces the
-    seeded-by-id centroid rows in operators/similarity.py semdedup.
-    Same broadcast-assignment plan shape (the K-row codebook broadcasts
-    whether seeded or trained); the oracle unrolls the training
-    iterations as CTEs (the llm_kmeans pattern) and feeds the final
-    centroid CTE into the semdedup SQL — exact hash equality end to
-    end, closing the 'production trains them' caveat with a live
-    demonstration."""
+    raw embeddings — where llm_semdedup stops at the seeds (zero Lloyd
+    rounds). Same assignment plan shape (the K-row codebook is the
+    same (cluster, c) table, seeded or trained); both oracles come from
+    _semdedup_sql, whose kmeans prelude unrolls the rounds as CTEs —
+    exact hash equality end to end, closing the 'production trains
+    them' caveat with a live demonstration."""
     return _semdedup_trained(spark, sf_dir, KMEANS_INIT_IDS)
 
 
@@ -1143,7 +1208,6 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed list is an ORDER BY vid LIMIT k over the sample in both
     engines), so one static string stays hash-exact at every scale
     factor."""
-    from ..operators.kmeans import kmeans_train
     from ..operators.similarity import semdedup
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1172,52 +1236,6 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=SEMDEDUP_THRESHOLD,
         centroids=cents,
     ).orderBy("vec_id")
-
-
-def _semdedup_sql() -> str:
-    ids = ", ".join(str(i) for i in SEMDEDUP_CENTROID_IDS)
-    dot = "CAST(list_sum([{a}.q[i] * {b}.q[i] for i in range(1, %d)]) AS DOUBLE)" % (
-        EMB_DIM + 1
-    )
-    cos = (
-        dot + " / sqrt(CAST({a}.n2 AS DOUBLE) * CAST({b}.n2 AS DOUBLE))"
-    )
-    return f"""
-WITH base AS (
-  SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings
-),
-corpus AS (
-  SELECT vec_id, emb FROM base
-  UNION ALL
-  SELECT vec_id + 100000, emb FROM base WHERE vec_id < 10
-  UNION ALL
-  SELECT vec_id + 200000,
-         [CASE WHEN (i - 1) % 4 = 0 THEN emb[i] * 0.5 ELSE emb[i] END
-          for i in range(1, {EMB_DIM + 1})]
-  FROM base WHERE vec_id < 10
-),
-q0 AS (SELECT vec_id, [CAST(floor(x * {QUANT_SCALE}) AS BIGINT) for x in emb] AS q FROM corpus),
-n AS (SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0),
-cents AS (SELECT vec_id AS cell, q, n2 FROM n WHERE vec_id IN ({ids})),
-assigned AS (
-  SELECT vec_id, q, n2, cell AS cluster FROM (
-    SELECT a.vec_id, a.q, a.n2, c.cell,
-           row_number() OVER (
-             PARTITION BY a.vec_id
-             ORDER BY {cos.format(a='a', b='c')} DESC, c.cell ASC) AS rn
-    FROM n a CROSS JOIN (SELECT cell, q, n2 FROM cents) c)
-  WHERE rn = 1
-),
-dominated AS (
-  SELECT DISTINCT hi.vec_id
-  FROM assigned lo JOIN assigned hi
-    ON lo.cluster = hi.cluster AND lo.vec_id < hi.vec_id
-  WHERE {cos.format(a='lo', b='hi')} >= {SEMDEDUP_THRESHOLD}
-)
-SELECT a.vec_id, a.cluster, d.vec_id IS NULL AS kept
-FROM assigned a LEFT JOIN dominated d ON a.vec_id = d.vec_id
-ORDER BY a.vec_id
-"""
 
 
 # --- overlapping chunking (RAG / context-window prep) -------------------------
@@ -1269,7 +1287,7 @@ def q_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_CHUNK_OVERLAP = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM documents
 ),
 nc AS (
@@ -1393,100 +1411,30 @@ ORDER BY r.source, r.sample_rk
 """
 
 
-def _kmeans_prelude(
-    prefix: str = "k",
+def _semdedup_sql(
     ids: list[int] | None = None,
-    dim: int | None = None,
-    vec_expr: str | None = None,
-    ids_pred: str | None = None,
-    src_pred: str | None = None,
-    c0_sql: str | None = None,
-) -> str:
-    """The llm_kmeans unrolled-iteration CTE chain ({prefix}-named to
-    avoid name capture), ending with the trained centroid table
-    {prefix}c{KMEANS_ITERS} — shared by the train-then-assign oracles
-    (llm_semdedup_trained, llm_ann_ivf_trained, and per-subspace with
-    ``vec_expr`` a list slice, llm_ann_pq_trained).  ``ids_pred``
-    replaces the static id list with a SQL predicate over ``vid``;
-    ``src_pred`` restricts the TRAINING corpus (a WHERE over the raw
-    embeddings scan — llm_semdedup_scaled's bounded sample);
-    ``c0_sql`` replaces the whole seed-select body (its data-
-    dependent ORDER BY vid LIMIT k seeding)."""
-    ids_s = ", ".join(str(i) for i in (KMEANS_INIT_IDS if ids is None else ids))
-    c0_where = ids_pred if ids_pred is not None else f"vid IN ({ids_s})"
-    src_where = f"\n  WHERE {src_pred}" if src_pred else ""
-    dim = EMB_DIM if dim is None else dim
-    vec = vec_expr or "embedding"
-    d2 = (
-        f"CAST(list_sum([(a.q[i]-c.c[i])*(a.q[i]-c.c[i]) "
-        f"for i in range(1, {dim + 1})]) AS BIGINT)"
-    )
-    assign = """
-{P}a{t} AS (
-  SELECT vid, q, cluster, d2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, cluster ASC) AS rn
-    FROM (SELECT a.vid, a.q, c.cluster, {d2} AS d2 FROM {P}q a CROSS JOIN {P}c{p} c))
-  WHERE rn = 1
-)"""
-    update = """
-{P}pd{t} AS (
-  SELECT cluster, u.i AS dim, sum(q[u.i]) AS s, count(*) AS n
-  FROM {P}a{t} CROSS JOIN LATERAL (SELECT unnest(range(1, {dplus})) AS i) u
-  GROUP BY cluster, u.i
-),
-{P}c{t} AS (SELECT cluster, list(s // n ORDER BY dim) AS c FROM {P}pd{t} GROUP BY cluster)"""
-    parts = []
-    for t in range(1, KMEANS_ITERS + 1):
-        parts.append(assign.format(t=t, p=t - 1, d2=d2, P=prefix))
-        parts.append(update.format(t=t, dplus=dim + 1, P=prefix))
-    c0_body = (
-        c0_sql
-        if c0_sql is not None
-        else f"SELECT vid AS cluster, q AS c FROM {prefix}q WHERE {c0_where}"
-    )
-    return f"""{prefix}q AS (
-  SELECT vec_id AS vid,
-         [CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) for x in {vec}] AS q
-  FROM embeddings{src_where}
-),
-{prefix}c0 AS ({c0_body}),{",".join(parts)}"""
-
-
-def _semdedup_trained_sql(
-    ids: list[int] | None = None,
+    rounds: int = KMEANS_ITERS,
     extra_cte: str = "",
     **prelude_kwargs,
 ) -> str:
-    """llm_semdedup_trained[_k32|_scaled] oracle: the kmeans prelude
-    feeding its final centroid table into the llm_semdedup SQL in
-    place of the seeded centroid rows.  ``extra_cte`` prepends
-    data-dependent scalar CTEs (the _scaled variant's K/m) that the
-    ``prelude_kwargs`` overrides (src_pred / c0_sql / ids_pred) may
+    """llm_semdedup (seeded: ``rounds=0``) and llm_semdedup_trained
+    [_k32|_scaled] oracle: the kmeans prelude's centroid table after
+    ``rounds`` Lloyd rounds is the SemDeDup codebook.  ``extra_cte``
+    prepends data-dependent scalar CTEs (the _scaled variant's K/m)
+    that the ``prelude_kwargs`` overrides (src_pred / c0_sql) may
     reference."""
     dot = "CAST(list_sum([{a}.q[i] * {b}.q[i] for i in range(1, %d)]) AS DOUBLE)" % (
         EMB_DIM + 1
     )
     cos = dot + " / sqrt(CAST({a}.n2 AS DOUBLE) * CAST({b}.n2 AS DOUBLE))"
     return f"""
-WITH {extra_cte}{_kmeans_prelude(ids=ids, **prelude_kwargs)},
+WITH {extra_cte}{_kmeans_prelude(ids=ids, rounds=rounds, **prelude_kwargs)},
 cents AS (
   SELECT cluster AS cell, c AS q,
          CAST(list_sum([x * x for x in c]) AS BIGINT) AS n2
-  FROM kc{KMEANS_ITERS}
+  FROM kc{rounds}
 ),
-base AS (
-  SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings
-),
-corpus AS (
-  SELECT vec_id, emb FROM base
-  UNION ALL
-  SELECT vec_id + 100000, emb FROM base WHERE vec_id < 10
-  UNION ALL
-  SELECT vec_id + 200000,
-         [CASE WHEN (i - 1) % 4 = 0 THEN emb[i] * 0.5 ELSE emb[i] END
-          for i in range(1, {EMB_DIM + 1})]
-  FROM base WHERE vec_id < 10
-),
+{_AUGMENTED_CTE},
 qs AS (SELECT vec_id, [CAST(floor(x * {QUANT_SCALE}) AS BIGINT) for x in emb] AS q FROM corpus),
 n AS (SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM qs),
 assigned AS (
@@ -1514,78 +1462,22 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-codebook IVF ANN (round-4 verdict #3, sibling of
     llm_semdedup_trained): the coarse quantizer is kmeans_train's
     (cluster, c) output — the same 2 exact-integer Lloyd iterations
-    llm_kmeans certifies — instead of llm_ann_ivf's seeded member
-    rows. Identical plan shape: the K-row codebook broadcasts for
+    llm_kmeans certifies — instead of llm_ann_ivf's seeds with zero
+    rounds. Identical plan shape: the K-row codebook broadcasts for
     assignment and probing; the only shuffle stays the cell-id
-    candidate join. The oracle chains the kmeans prelude CTEs into
-    the IVF SQL — hash-exact end to end."""
-    from ..operators.kmeans import kmeans_train
-    from ..operators.similarity import ivf_topk
-
-    e = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans_train(e, "vec_id", "embedding", KMEANS_INIT_IDS)
-    return ivf_topk(
-        corpus=e,
-        queries=e.filter(F.col("vec_id") < N_QUERY_VECS),
-        id_col="vec_id",
-        vec_col="embedding",
-        query_id_col="vec_id",
-        centroids=cents,
-        k=3,
-        n_probe=IVF_N_PROBE,
-    ).orderBy("query_id", "neighbor_id")
-
-
-def _ivf_trained_sql() -> str:
-    return f"""
-WITH {_kmeans_prelude()},
-q0 AS (
-  SELECT vec_id, {_QUANT} AS q FROM embeddings
-),
-n AS (
-  SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
-),
-cents AS (
-  SELECT cluster AS cell, c AS kq,
-         CAST(list_sum([x * x for x in c]) AS BIGINT) AS kn2
-  FROM kc{KMEANS_ITERS}
-),
-assign0 AS (
-  SELECT a.vec_id, a.q, a.n2, c.cell,
-         {_IVF_DOT} / sqrt(CAST(a.n2 AS DOUBLE) * CAST(c.kn2 AS DOUBLE)) AS cos,
-         row_number() OVER (PARTITION BY a.vec_id
-                            ORDER BY {_IVF_DOT} / sqrt(CAST(a.n2 AS DOUBLE) * CAST(c.kn2 AS DOUBLE)) DESC,
-                                     c.cell ASC) AS rn
-  FROM n a CROSS JOIN cents c
-),
-cells AS (SELECT vec_id AS neighbor_id, q, n2, cell FROM assign0 WHERE rn = 1),
-probes AS (
-  SELECT vec_id AS query_id, q, n2, cell FROM assign0
-  WHERE rn <= {IVF_N_PROBE} AND vec_id < {N_QUERY_VECS}
-),
-scored AS (
-  SELECT p.query_id, c.neighbor_id,
-         CAST(list_sum([p.q[i] * c.q[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)
-           / sqrt(CAST(p.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
-  FROM probes p JOIN cells c ON c.cell = p.cell AND c.neighbor_id != p.query_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro
-FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id
-"""
+    candidate join. Both oracles come from _ivf_sql — hash-exact end
+    to end."""
+    return _ann_ivf(spark, sf_dir, KMEANS_INIT_IDS, KMEANS_ITERS)
 
 
 QUERIES["llm_semdedup"] = q_semdedup
-ORACLE_SQL["llm_semdedup"] = _semdedup_sql()
+ORACLE_SQL["llm_semdedup"] = _semdedup_sql(SEMDEDUP_CENTROID_IDS, rounds=0)
 QUERIES["llm_semdedup_trained"] = q_semdedup_trained
-ORACLE_SQL["llm_semdedup_trained"] = _semdedup_trained_sql()
+ORACLE_SQL["llm_semdedup_trained"] = _semdedup_sql()
 QUERIES["llm_semdedup_trained_k32"] = q_semdedup_trained_k32
-ORACLE_SQL["llm_semdedup_trained_k32"] = _semdedup_trained_sql(SEMDEDUP_K32_IDS)
+ORACLE_SQL["llm_semdedup_trained_k32"] = _semdedup_sql(SEMDEDUP_K32_IDS)
 QUERIES["llm_semdedup_scaled"] = q_semdedup_scaled
-ORACLE_SQL["llm_semdedup_scaled"] = _semdedup_trained_sql(
+ORACLE_SQL["llm_semdedup_scaled"] = _semdedup_sql(
     extra_cte=(
         # k = clamp(isqrt(N), floor, cap); m = train-sample stride
         f"kdef AS (SELECT k, greatest(1, n // ({SEMDEDUP_TRAIN_PER_CENTROID} * k)) AS m "
@@ -1605,110 +1497,16 @@ def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition, completing the set with llm_semdedup_trained and
     llm_ann_ivf_trained): for each of the PQ_N_SUB subspaces,
     kmeans_train runs the llm_kmeans Lloyd iterations over that
-    subspace's raw subvector slices seeded at PQ_CODEWORD_IDS, and
-    the union of the four trained (m, code, bq) tables replaces
-    llm_ann_pq's seeded codeword rows in pq_adc_topk. Slicing
-    commutes with elementwise quantization, so the trained
-    sub-centroids live in exactly the space the encoder measures
-    distances in. Same plan shape: the K*n_sub-row codebook
-    broadcasts for encode and LUT build; the corpus never shuffles
-    until the final per-query top-k."""
-    from functools import reduce
-
-    from ..operators.kmeans import kmeans_train
-
-    e = load_table(spark, sf_dir, "embeddings")
-    sub_dim = EMB_DIM // PQ_N_SUB
-    code_map = F.lit(None).cast("int")
-    for idx, cid in enumerate(PQ_CODEWORD_IDS):
-        code_map = F.when(F.col("cluster") == cid, idx).otherwise(code_map)
-    books = []
-    for m in range(PQ_N_SUB):
-        sub = e.select(
-            "vec_id", F.slice("embedding", sub_dim * m + 1, sub_dim).alias("embedding")
-        )
-        cents = kmeans_train(sub, "vec_id", "embedding", PQ_CODEWORD_IDS)
-        books.append(
-            cents.select(
-                F.lit(m).alias("m"), code_map.alias("code"), F.col("c").alias("bq")
-            )
-        )
-    book = reduce(lambda a, b: a.unionAll(b), books)
-    return pq_adc_topk(
-        corpus=e,
-        queries=e.filter(F.col("vec_id") < N_QUERY_VECS),
-        id_col="vec_id",
-        vec_col="embedding",
-        query_id_col="vec_id",
-        n_sub=PQ_N_SUB,
-        k=3,
-        codebook=book,
-    ).orderBy("query_id", "neighbor_id")
-
-
-def _pq_trained_sql() -> str:
-    sub_dim = EMB_DIM // PQ_N_SUB
-    case = " ".join(
-        f"WHEN {cid} THEN {idx}" for idx, cid in enumerate(PQ_CODEWORD_IDS)
-    )
-    d2 = f"list_sum([(s.sq[i] - b.bq[i]) * (s.sq[i] - b.bq[i]) for i in range(1, {sub_dim + 1})])"
-    preludes = ",\n".join(
-        _kmeans_prelude(
-            prefix=f"s{m}",
-            ids=list(PQ_CODEWORD_IDS),
-            dim=sub_dim,
-            vec_expr=f"embedding[{m * sub_dim + 1}:{(m + 1) * sub_dim}]",
-        )
-        for m in range(PQ_N_SUB)
-    )
-    book_union = "\n  UNION ALL\n".join(
-        f"  SELECT {m} AS m, CASE cluster {case} END AS code, c AS bq "
-        f"FROM s{m}c{KMEANS_ITERS}"
-        for m in range(PQ_N_SUB)
-    )
-    return f"""
-WITH {preludes},
-q0 AS (
-  SELECT vec_id, {_QUANT} AS q FROM embeddings
-),
-ms AS (SELECT unnest([{", ".join(str(m) for m in range(PQ_N_SUB))}]) AS m),
-subs AS (
-  SELECT vec_id, m, q[m * {sub_dim} + 1 : m * {sub_dim} + {sub_dim}] AS sq
-  FROM q0 CROSS JOIN ms
-),
-book AS (
-{book_union}
-),
-enc AS (
-  SELECT s.vec_id AS nid, s.m, b.code, {d2} AS d2
-  FROM subs s JOIN book b USING (m)
-),
-codes AS (
-  SELECT nid, m, code FROM (
-    SELECT *, row_number() OVER (PARTITION BY nid, m ORDER BY d2, code) AS rn FROM enc
-  ) WHERE rn = 1
-),
-lut AS (
-  SELECT s.vec_id AS query_id, s.m, b.code, {d2} AS d2
-  FROM subs s JOIN book b USING (m)
-  WHERE s.vec_id < {N_QUERY_VECS}
-),
-scored AS (
-  SELECT l.query_id, c.nid, CAST(sum(l.d2) AS BIGINT) AS adc_d2
-  FROM codes c JOIN lut l ON l.m = c.m AND l.code = c.code AND c.nid != l.query_id
-  GROUP BY 1, 2
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc_d2, nid) AS rn
-  FROM scored
-)
-SELECT query_id, nid AS neighbor_id, adc_d2
-FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id
-"""
+    subspace's raw subvector slices seeded at PQ_CODEWORD_IDS
+    (operators/similarity.py _pq_codebook), where llm_ann_pq stops at
+    the seeds. Same plan shape: the K*n_sub-row codebook broadcasts
+    for encode and LUT build; the corpus never shuffles until the
+    final per-query top-k."""
+    return _ann_pq(spark, sf_dir, KMEANS_ITERS)
 
 
 QUERIES["llm_ann_ivf_trained"] = q_ann_ivf_trained
-ORACLE_SQL["llm_ann_ivf_trained"] = _ivf_trained_sql()
+ORACLE_SQL["llm_ann_ivf_trained"] = _ivf_sql(KMEANS_INIT_IDS, KMEANS_ITERS)
 CLUSTER_TOP_K = 3
 
 
@@ -1730,7 +1528,7 @@ def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf is one partial-agg groupBy; cluster-df derives FROM the tf
     table (vocabulary-sized, not corpus-sized); per-cluster top-k is
     a WindowGroupLimit over K partitions."""
-    from ..operators.kmeans import kmeans_assign, kmeans_train
+    from ..operators.kmeans import kmeans_assign
 
     e = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_train(e, "vec_id", "embedding", KMEANS_INIT_IDS)
@@ -1759,23 +1557,13 @@ def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_top_terms_sql() -> str:
-    d2 = (
-        f"CAST(list_sum([(a.q[i]-c.c[i])*(a.q[i]-c.c[i]) "
-        f"for i in range(1, {EMB_DIM + 1})]) AS BIGINT)"
-    )
     k_lit = len(KMEANS_INIT_IDS)
     return f"""
-WITH {_kmeans_prelude()},
-fa AS (
-  SELECT vid, cluster FROM (
-    SELECT *, row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, cluster ASC) AS rn
-    FROM (SELECT a.vid, c.cluster, {d2} AS d2 FROM kq a CROSS JOIN kc{KMEANS_ITERS} c))
-  WHERE rn = 1
-),
+WITH {_kmeans_prelude()},{_kmeans_final()},
 docs AS (
   SELECT f.cluster,
-         unnest(string_split(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g')), ' ')) AS tok
-  FROM documents d JOIN fa f ON f.vid = d.doc_id
+         unnest(string_split({_norm_sql('d.text')}, ' ')) AS tok
+  FROM documents d JOIN ka{KMEANS_ITERS + 1} f ON f.vid = d.doc_id
 ),
 tf AS (SELECT cluster, tok, count(*) AS tf FROM docs GROUP BY 1, 2),
 dfc AS (SELECT tok, count(*) AS df_clusters FROM tf GROUP BY tok),
@@ -1795,7 +1583,7 @@ ORDER BY cluster, score_micro DESC, tok
 
 
 QUERIES["llm_ann_pq_trained"] = q_ann_pq_trained
-ORACLE_SQL["llm_ann_pq_trained"] = _pq_trained_sql()
+ORACLE_SQL["llm_ann_pq_trained"] = _pq_sql(KMEANS_ITERS)
 # --- semantic train/eval decontamination -------------------------------------
 # llm_decontaminate catches VERBATIM leakage (13-gram membership);
 # this catches paraphrase-level leakage: an eval item whose embedding
@@ -1995,7 +1783,7 @@ def q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_SUBSTRING_SPANS = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM documents
 ),
 shingled AS (
@@ -2064,10 +1852,10 @@ def q_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_TOKEN_RARITY = """
+SQL_TOKEN_RARITY = f"""
 WITH ex AS (
   SELECT doc_id,
-         unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS tok
+         unnest({_TOKENS_SQL}) AS tok
   FROM documents
 ),
 vocab AS (SELECT tok, count(*) AS cnt FROM ex GROUP BY tok),
@@ -2176,10 +1964,10 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_BIGRAM_LM_SCORE = """
+SQL_BIGRAM_LM_SCORE = f"""
 WITH toks AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {_TOKENS_SQL} AS t
   FROM documents
 ),
 big AS (

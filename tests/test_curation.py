@@ -438,7 +438,7 @@ def test_semdedup_matmul_assignment_matches_expression_argmax(spark, sf_dir):
     )
 
     got = {
-        r["_id"]: r["cluster"] for r in _semdedup_assigned(c, cc).collect()
+        r["_id"]: r["cluster"] for r in _semdedup_assigned(c, cents).collect()
     }
 
     scored = c.join(F.broadcast(cc)).withColumn(

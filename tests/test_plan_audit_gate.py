@@ -148,3 +148,91 @@ def test_fingerprint_ignores_arguments_and_tracks_nodes():
     assert fingerprint(a) == fingerprint(b)
     assert len(fingerprint(a)) == 12
     assert fingerprint(a.replace("HashAggregate (3)", "SortAggregate (3)")) != fingerprint(a)
+
+
+_SINGLE_PARTITION_PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (6)
++- Window (5)
+   +- Sort (4)
+      +- Exchange (3)
+         +- Project (2)
+            +- Scan parquet  (1)
+
+
+(1) Scan parquet
+Output [2]: [source#1, fw#2L]
+
+(2) Project
+Output [2]: [source#1, fw#2L]
+
+(3) Exchange
+Input [2]: [source#1, fw#2L]
+Arguments: SinglePartition, ENSURE_REQUIREMENTS, [plan_id=7]
+
+(4) Sort
+Input [2]: [source#1, fw#2L]
+Arguments: [source#1 ASC NULLS FIRST], false, 0
+
+(5) Window
+Input [2]: [source#1, fw#2L]
+Arguments: [sum(fw#2L) windowspecdefinition(...) AS total#3L]
+
+(6) AdaptiveSparkPlan
+Output [3]: [source#1, fw#2L, total#3L]
+Arguments: isFinalPlan=false
+"""
+
+_KEYLESS_AGG_PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (5)
++- ObjectHashAggregate (4)
+   +- Exchange (3)
+      +- ObjectHashAggregate (2)
+         +- Scan parquet  (1)
+
+
+(1) Scan parquet
+Output [1]: [o_orderkey#1L]
+
+(2) ObjectHashAggregate
+Input [1]: [o_orderkey#1L]
+Keys: []
+Functions [1]: [partial_bloom_filter_agg(xxhash64(o_orderkey#1L, 42), 1000000, 8388608, 0, 0)]
+
+(3) Exchange
+Input [1]: [buf#2]
+Arguments: SinglePartition, ENSURE_REQUIREMENTS, [plan_id=9]
+
+(4) ObjectHashAggregate
+Input [1]: [buf#2]
+Keys: []
+Functions [1]: [bloom_filter_agg(xxhash64(o_orderkey#1L, 42), 1000000, 8388608, 0, 0)]
+
+(5) AdaptiveSparkPlan
+Output [1]: [bloomFilter#3]
+Arguments: isFinalPlan=false
+"""
+
+
+def test_single_partition_rule_reads_exchange_arguments():
+    """A formatted plan prints ``Exchange (n)`` in its tree and
+    ``Arguments: SinglePartition, ...`` in the node's details, never
+    the two together: the rule reads the details.  A SinglePartition
+    exchange under a Window (via its Sort) is a collapsed stage and is
+    flagged by both the property rows and the sweep; one feeding a
+    keyless aggregate's final merge is clean, as are hash-partitioned
+    exchanges."""
+    sys.path.insert(0, str(REPO / "tools"))
+    from plan_audit import _sweep_violations
+
+    assert _sweep_violations(_SINGLE_PARTITION_PLAN) == ["single-partition exchange"]
+    assert _sweep_violations(_KEYLESS_AGG_PLAN) == []
+
+    from plan_audit import no_single_partition, single_partition_exchanges
+
+    assert single_partition_exchanges(_SINGLE_PARTITION_PLAN) == ["Exchange (3) -> Sort (4)"]
+    assert not no_single_partition(_SINGLE_PARTITION_PLAN)
+    assert single_partition_exchanges(_KEYLESS_AGG_PLAN) == []
+    assert no_single_partition(_KEYLESS_AGG_PLAN)
+
+    hashed = _PLAN.format(eid=1, parts=8, path="/data/docs.parquet", run=1)
+    assert no_single_partition(hashed) and _sweep_violations(hashed) == []

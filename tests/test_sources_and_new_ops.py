@@ -321,13 +321,18 @@ def test_pq_adc_structure_and_recall(spark):
     the same cells, which is PQ's resolution limit by design)."""
     import random as _r
 
-    from map_reduce_for_dbpl_dataset_spark.operators.similarity import pq_adc_topk
+    from map_reduce_for_dbpl_dataset_spark.operators.similarity import (
+        _pq_codebook,
+        pq_adc_topk,
+    )
 
     rng = _r.Random(11)
     dim, n = 16, 60
     rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(n)]
     rows.append((100, list(rows[0][1])))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # seeded book: the codeword vectors' subvectors (zero Lloyd rounds)
+    book = _pq_codebook(df, "vec_id", "embedding", [10, 11, 12, 13], dim, 4, iters=0)
 
     def run(k):
         return pq_adc_topk(
@@ -336,7 +341,7 @@ def test_pq_adc_structure_and_recall(spark):
             id_col="vec_id",
             vec_col="embedding",
             query_id_col="vec_id",
-            codeword_ids=[10, 11, 12, 13],
+            codebook=book,
             n_sub=4,
             k=k,
         ).collect()
