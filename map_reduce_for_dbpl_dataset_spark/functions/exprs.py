@@ -1,16 +1,17 @@
-"""Shared scalar expressions for the DBLP query family.
+"""Shared scalar expressions written as Spark SQL text.
 
-These are the two sub-operators the reference duplicates across its
-mappers (SURVEY.md §2.1 "shared sub-operators"), expressed once as
-Catalyst expressions so they stay inside whole-stage codegen — no
-Python executes per row. Both read the publications table's own column
-names (sources/parquet.py).
+The DBLP query family's two sub-operators are the ones the reference
+duplicates across its mappers (SURVEY.md §2.1 "shared sub-operators"),
+expressed once as Catalyst expressions so they stay inside whole-stage
+codegen — no Python executes per row. Both read the publications
+table's own column names (sources/parquet.py).
 
 Each is written as Spark SQL text and parsed in one ``F.expr`` call.
 Composing the same CASE from Column objects costs a Py4J round trip
 per node, ~40 for the venue dispatch, paid every time a DBLP query is
 built; the parsed expression is the same Catalyst tree, so the plans
-do not change.
+do not change.  ``sql_hof`` applies the same rule to the higher-order
+Column helpers of functions/text.py and functions/vectors.py.
 """
 
 from __future__ import annotations
@@ -67,3 +68,16 @@ def authors_or_editors() -> Column:
     sites): the author list, falling back to editors when empty.
     Returns array<string>; empty array when both are absent."""
     return F.expr(_AUTHORS_OR_EDITORS_SQL)
+
+
+def sql_hof(name: str, *args: Column | str) -> Column:
+    """The SQL function ``name`` over ``args``, where a str argument is
+    SQL text — a lambda such as ``"x -> x + 1"`` or a literal — and a
+    Column argument is passed as is.
+
+    The same Catalyst tree as F.transform/F.aggregate/... with a Python
+    lambda, which builds its lambda from Column objects: ~50 Py4J round
+    trips for a one-line body, against one ``F.expr`` parse here."""
+    return F.call_function(
+        name, *[F.expr(a) if isinstance(a, str) else a for a in args]
+    )

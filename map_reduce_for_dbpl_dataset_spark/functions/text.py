@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .exprs import sql_hof
+
 # 60-bit portable token hash: md5 hex prefix as an integer. Identical
 # in DuckDB: ('0x' || substr(md5(s), 1, 15))::BIGINT. It is the one
 # hash of every oracle-checked signature and sketch (minhash, simhash,
@@ -116,8 +118,8 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 def marker_hits(toks: Column, markers: tuple[str, ...]) -> Column:
     """Non-distinct count of tokens appearing in the marker list."""
-    lit_arr = F.array(*[F.lit(m) for m in markers])
-    return F.size(F.filter(toks, lambda t: F.array_contains(lit_arr, t)))
+    words = ", ".join(f"'{m}'" for m in markers)  # plain lowercase words
+    return F.size(sql_hof("filter", toks, f"x -> array_contains(array({words}), x)"))
 
 
 def langid_pick(h: dict[str, Column]) -> Column:

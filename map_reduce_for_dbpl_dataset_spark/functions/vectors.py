@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .exprs import sql_hof
+
 
 # The one quantization scale: every vector operator and every DuckDB
 # oracle (queries/llm.py _QUANT) multiply by this before flooring.
@@ -25,7 +27,9 @@ QUANT_SCALE = 1000
 
 def quantize(vec: Column) -> Column:
     """array<float> -> array<long>, qi = floor(xi * QUANT_SCALE)."""
-    return F.transform(vec, lambda x: F.floor(x.cast("double") * QUANT_SCALE).cast("long"))
+    return sql_hof(
+        "transform", vec, f"x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT)"
+    )
 
 
 def dot_q(a: Column, b: Column) -> Column:
@@ -36,19 +40,21 @@ def dot_q(a: Column, b: Column) -> Column:
     semdedup pair stage ships int32 vectors to halve shuffle bytes —
     operators/similarity.py); for long inputs Catalyst's SimplifyCasts
     removes the no-op cast, so the historical plans are unchanged."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    return sql_hof(
+        "aggregate",
+        sql_hof("zip_with", a, b, "(x, y) -> CAST(x AS BIGINT) * CAST(y AS BIGINT)"),
+        "CAST(0 AS BIGINT)",
+        "(x, y) -> x + y",
     )
 
 
 def norm2_q(a: Column) -> Column:
     """Exact integer squared norm (same widening rule as dot_q)."""
-    return F.aggregate(
-        F.transform(a, lambda x: x.cast("long") * x.cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    return sql_hof(
+        "aggregate",
+        sql_hof("transform", a, "x -> CAST(x AS BIGINT) * CAST(x AS BIGINT)"),
+        "CAST(0 AS BIGINT)",
+        "(x, y) -> x + y",
     )
 
 

@@ -194,20 +194,23 @@ def verify_jaccard(
     banding is loose enough that candidates rival the corpus size."""
     if broadcast_pairs:
         pairs = F.broadcast(pairs)
-    sets_df = shingled.select(
-        F.col(id_col).alias("_sid"), F.array_distinct(F.col(shingle_col)).alias("_sset")
-    )
-    out = (
-        pairs.join(sets_df.withColumnRenamed("_sid", "id_a").withColumnRenamed("_sset", "set_a"), "id_a")
-        .join(sets_df.withColumnRenamed("_sid", "id_b").withColumnRenamed("_sset", "set_b"), "id_b")
-        .withColumn("n_common", F.size(F.array_intersect("set_a", "set_b")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.size("set_a") + F.size("set_b") - F.col("n_common")).cast("double"),
+
+    def sets(side: str) -> DataFrame:
+        return shingled.selectExpr(
+            f"{id_col} AS id_{side}", f"array_distinct({shingle_col}) AS set_{side}"
+        )
+
+    return (
+        pairs.join(sets("a"), "id_a")
+        .join(sets("b"), "id_b")
+        .selectExpr("*", "size(array_intersect(set_a, set_b)) AS n_common")
+        .selectExpr(
+            "id_a",
+            "id_b",
+            "CAST(n_common AS DOUBLE)"
+            " / CAST(size(set_a) + size(set_b) - n_common AS DOUBLE) AS jaccard",
         )
     )
-    return out.select("id_a", "id_b", "jaccard")
 
 
 def minhash_lsh_pairs(
@@ -288,6 +291,61 @@ def simhash_near_pairs(
     )
 
 
+# SQL text of the epsilon every fractional PPJoin bound subtracts
+# before ceil() (ngram_jaccard_pairs_prefix: FP rounding may only
+# loosen a prune).
+_EPS = "1e-9D"
+
+
+def _sql_double(x: float) -> str:
+    """A Python float as an exact Spark SQL double literal (a bare
+    ``0.8`` in SQL text is a DECIMAL)."""
+    return f"{x!r}D"
+
+
+def _ceil_sql(x: str) -> str:
+    """ceil of the SQL expression ``x``, eps-loosened."""
+    return f"ceil({x} - {_EPS})"
+
+
+def _prefix_table(
+    shingled: DataFrame, id_col: str, shingle_col: str, threshold: float
+) -> DataFrame:
+    """PPJoin prefix rows (_id, _sz, _rk, _sh) of ngram_jaccard_pairs_prefix:
+    each document's distinct shingles hashed to _sh, ranked by ascending
+    global document frequency (ties by hash), cut to the probe prefix
+    |X| - ceil(t*|X|) + 1.
+
+    Split out so the plan is auditable pre-checkpoint
+    (tools/plan_audit.py jaccard_prefix[pre-checkpoint]; the caller's
+    spread_for_pair_join hides it behind a Scan ExistingRDD)."""
+    t = _sql_double(threshold)
+    return (
+        # the set and its size, once per document, below the explode
+        shingled.selectExpr(
+            f"{id_col} AS _id",
+            f"array_distinct({shingle_col}) AS _set",
+            "size(_set) AS _sz",
+        )
+        .selectExpr("_id", "_sz", "explode(_set) AS shingle")
+        .selectExpr("_id", "_sz", "xxhash64(shingle) AS _sh")
+        # df as a window count (no orderBy -> no sort): one exchange on
+        # _sh instead of the groupBy+rejoin's two
+        .selectExpr("*", "count(1) OVER (PARTITION BY _sh) AS _df")
+        # _df is dropped with the rank: the spread pins + replicates
+        # whatever it carries into BOTH sides of the quadratic prefix
+        # fan-out, and _df is dead once the rank has used it (guide
+        # §2.3 "project before the exchange")
+        .selectExpr(
+            "_id",
+            "_sz",
+            "row_number() OVER (PARTITION BY _id ORDER BY _df ASC, _sh ASC) AS _rk",
+            "_sh",
+        )
+        .filter(f"_rk <= _sz - {_ceil_sql(f'{t} * _sz')} + 1")
+    )
+
+
 def ngram_jaccard_pairs_prefix(
     shingled: DataFrame, id_col: str, shingle_col: str, threshold: float = 0.8
 ) -> DataFrame:
@@ -341,8 +399,13 @@ def ngram_jaccard_pairs_prefix(
     to the same key, so no candidate is lost; a hash collision can
     only merge two df counts / admit a spurious candidate, and every
     candidate is exact-verified over the string shingle sets
-    afterwards). Set sizes ride the explode as a narrow per-row
-    expression instead of a second corpus-wide window.
+    afterwards). Set sizes need no second corpus-wide window: each
+    document's distinct set is projected ONCE and sized beside it,
+    below the explode, so the size is computed once per document and
+    carried onto its exploded rows.  (Sized above the explode, the
+    projection would re-run array_distinct over the whole shingle array
+    for every exploded row — quadratic in the document length; the
+    plan audit's jaccard_prefix[pre-checkpoint] row guards this.)
 
     All fractional bounds subtract 1e-9 before ceil(): the true
     bounds are mathematical reals, and a double product that rounds
@@ -365,27 +428,20 @@ def ngram_jaccard_pairs_prefix(
     |Ah n Bh| >= |A n B| and hashed Jaccard >= string Jaccard —
     tier 1 at threshold t can only ADMIT spurious pairs (killed by
     tier 2), never drop a true one.
+
+    Degenerate inputs match the exact join (tests/test_curation_inputs.py):
+    an empty table gives no pairs, and a document whose shingle array
+    is empty (a NULL or sub-3-word text shingles to ``[]``) explodes to
+    no rows, so it joins no pair.
+
+    Bounds, filters, aggregates and windows are SQL text: one parse per
+    expression, where composing them from Column operators costs Py4J
+    round trips per node on every build (tests/test_build_budget.py).
     """
-    from pyspark.sql import Window
+    from .pairs import spread_for_pair_join
 
-    t = threshold
-    eps = 1e-9
-
-    def _ceil(x: Column) -> Column:
-        return F.ceil(x - F.lit(eps))
-
-    ex = shingled.select(
-        F.col(id_col).alias("_id"),
-        F.size(F.array_distinct(F.col(shingle_col))).alias("_sz"),
-        F.explode(F.array_distinct(F.col(shingle_col))).alias("shingle"),
-    ).select("_id", "_sz", F.xxhash64("shingle").alias("_sh"))
-    # df as a window count (no orderBy -> no sort): one exchange on
-    # _sh instead of the groupBy+rejoin's two
-    rank_w = Window.partitionBy("_id").orderBy(F.asc("_df"), F.asc("_sh"))
-    ranked = ex.withColumn(
-        "_df", F.count(F.lit(1)).over(Window.partitionBy("_sh"))
-    ).withColumn("_rk", F.row_number().over(rank_w))
-    # probe prefix length = sz - ceil(t*sz) + 1 (worst-case partner).
+    t = _sql_double(threshold)
+    alpha = _ceil_sql(f"{_sql_double(threshold / (1 + threshold))} * (_sza + _szb)")
     # The prefix table feeds BOTH sides of the candidate self-join;
     # the sides differ in projection aliases, so exchange reuse does
     # not fire and the whole df/rank window pipeline would execute
@@ -393,57 +449,36 @@ def ngram_jaccard_pairs_prefix(
     # sf1 point).  spread_for_pair_join pins it once and spreads the
     # quadratic prefix-bucket fan-out over AQE-exempt key-hashed
     # partitions (operators/pairs.py rationale).
-    from .pairs import spread_for_pair_join
-
     prefix = spread_for_pair_join(
-        ranked.filter(
-            F.col("_rk") <= F.col("_sz") - _ceil(F.lit(t) * F.col("_sz")) + 1
-        )
-        # strip _df before the spread: the spread pins + replicates
-        # whatever it carries into BOTH sides of the quadratic prefix
-        # fan-out, and _df is dead once the prefix filter has used it
-        # (guide §2.3 "project before the exchange")
-        .select("_id", "_sz", "_rk", "_sh"),
-        "_sh",
+        _prefix_table(shingled, id_col, shingle_col, threshold), "_sh"
     )
-    a = prefix.select(
-        F.col("_id").alias("id_a"), F.col("_sz").alias("_sza"), F.col("_rk").alias("_rka"), "_sh"
-    )
-    b = prefix.select(
-        F.col("_id").alias("id_b"), F.col("_sz").alias("_szb"), F.col("_rk").alias("_rkb"), "_sh"
-    )
-    # required overlap for this size pair
-    alpha = _ceil(F.lit(t / (1 + t)) * (F.col("_sza") + F.col("_szb")))
+    a = prefix.selectExpr("_id AS id_a", "_sz AS _sza", "_rk AS _rka", "_sh")
+    b = prefix.selectExpr("_id AS id_b", "_sz AS _szb", "_rk AS _rkb", "_sh")
     cands = (
         a.join(b, "_sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # length filter (symmetric size band)
+        # length filter (symmetric size band), then the pair-prefix
+        # filter: the shared token must sit within BOTH docs'
+        # alpha-derived prefixes (alpha = required overlap for this
+        # size pair)
         .filter(
-            (F.col("_szb") >= _ceil(F.lit(t) * F.col("_sza")))
-            & (F.col("_sza") >= _ceil(F.lit(t) * F.col("_szb")))
-        )
-        # pair-prefix filter: the shared token must sit within BOTH
-        # docs' alpha-derived prefixes
-        .filter(
-            (F.col("_rka") <= F.col("_sza") - alpha + 1)
-            & (F.col("_rkb") <= F.col("_szb") - alpha + 1)
+            f"_szb >= {_ceil_sql(f'{t} * _sza')}"
+            f" AND _sza >= {_ceil_sql(f'{t} * _szb')}"
+            f" AND _rka <= _sza - {alpha} + 1"
+            f" AND _rkb <= _szb - {alpha} + 1"
+            " AND id_a < id_b"
         )
         .groupBy("id_a", "id_b")
         .agg(
-            F.max("_sza").alias("_sza"),
-            F.max("_szb").alias("_szb"),
-            F.count(F.lit(1)).alias("_npfx"),
-            F.max("_rka").alias("_xrka"),
-            F.max("_rkb").alias("_xrkb"),
+            F.expr("max(_sza) AS _sza"),
+            F.expr("max(_szb) AS _szb"),
+            F.expr("count(1) AS _npfx"),
+            F.expr("max(_rka) AS _xrka"),
+            F.expr("max(_rkb) AS _xrkb"),
         )
         # tight positional filter (monotone interleaving, see above):
         # matched-prefix count + tokens reachable past the LAST match
-        .filter(
-            F.col("_npfx")
-            + F.least(F.col("_sza") - F.col("_xrka"), F.col("_szb") - F.col("_xrkb"))
-            >= _ceil(F.lit(t / (1 + t)) * (F.col("_sza") + F.col("_szb")))
-        )
-        .select("id_a", "id_b")
+        .filter(f"_npfx + least(_sza - _xrka, _szb - _xrkb) >= {alpha}")
+        .selectExpr("id_a", "id_b")
     )
     # tier 1: intersect sorted 8-byte hash arrays (collision-guarded;
     # J_hash >= J_string, so >= t here loses nothing). Built as a
@@ -454,55 +489,36 @@ def ngram_jaccard_pairs_prefix(
     # the injectivity the tier-1 bound needs, so it raises (a
     # 2^-64-scale event; the exactness contract requires failing
     # loudly over silently degrading).
-    # harr projected separately (round 22): the collision guard
+    # _harr bound to an attribute in its own projection: the guard
     # references it three times (two sizes + the pass-through), and
     # expression trees have no sharing — inlined, the sort+hash
-    # construction ran 3x per row; bound to an attribute it runs once.
-    harr = F.array_sort(
-        F.transform(F.array_distinct(F.col(shingle_col)), lambda s: F.xxhash64(s))
-    )
-    hsets = shingled.select(
-        F.col(id_col).alias("_id"), harr.alias("_harr")
-    ).select(
+    # construction would run 3x per row.
+    hsets = shingled.selectExpr(
+        f"{id_col} AS _id",
+        f"array_sort(transform(array_distinct({shingle_col}), x -> xxhash64(x))) AS _harr",
+    ).selectExpr(
         "_id",
-        F.when(
-            F.size(F.array_distinct(F.col("_harr"))) == F.size(F.col("_harr")),
-            F.col("_harr"),
-        )
-        .otherwise(
-            F.raise_error(
-                F.lit(
-                    "xxhash64 collision between two shingles of one "
-                    "document: hashed Jaccard bound invalid"
-                )
-            ).cast("array<bigint>")
-        )
-        .alias("_hset"),
+        "CASE WHEN size(array_distinct(_harr)) = size(_harr) THEN _harr"
+        " ELSE CAST(raise_error('xxhash64 collision between two shingles of one"
+        " document: hashed Jaccard bound invalid') AS ARRAY<BIGINT>) END AS _hset",
     )
     tier1 = (
-        cands.join(
-            hsets.select(F.col("_id").alias("id_a"), F.col("_hset").alias("_ha")),
-            "id_a",
-        )
-        .join(
-            hsets.select(F.col("_id").alias("id_b"), F.col("_hset").alias("_hb")),
-            "id_b",
-        )
-        .withColumn("_ih", F.size(F.array_intersect("_ha", "_hb")))
+        cands.join(hsets.selectExpr("_id AS id_a", "_hset AS _ha"), "id_a")
+        .join(hsets.selectExpr("_id AS id_b", "_hset AS _hb"), "id_b")
         # I_h*(1+t) >= t*(|A|+|B|)  <=>  J_hash >= t (integer-safe,
         # eps-loosened)
         .filter(
-            F.col("_ih") * F.lit(1 + t)
-            >= F.lit(t) * (F.size("_ha") + F.size("_hb")) - F.lit(eps)
+            f"size(array_intersect(_ha, _hb)) * {_sql_double(1 + threshold)}"
+            f" >= {t} * (size(_ha) + size(_hb)) - {_EPS}"
         )
-        .select("id_a", "id_b")
+        .selectExpr("id_a", "id_b")
     )
     # tier 2: exact string-set verification of the tiny survivor set
     # (shuffled, not broadcast: survivors track the true pair count,
     # which scales with the corpus)
     return verify_jaccard(
         tier1, shingled, id_col, shingle_col, broadcast_pairs=False
-    ).filter(F.col("jaccard") >= threshold)
+    ).filter(f"jaccard >= {t}")
 
 
 def ngram_jaccard_pairs(

@@ -39,7 +39,11 @@ def spread_for_pair_join(df: DataFrame, *keys: str) -> DataFrame:
       projections back below an upstream round-robin repartition,
       which would collapse the derivation into the few-split scan
       stage (the round-6 straggler: 2 tasks holding a stage ~8 min at
-      sf1 while later stages ran 32-wide).
+      sf1 while later stages ran 32-wide).  "Lazy" covers only the
+      final checkpoint job: under AQE the call itself plans the input
+      adaptively, which runs every upstream shuffle stage (map stages
+      and their exchanges) right away, so a caller pays them when it
+      BUILDS the query, not when it executes it.
     - a user-specified ``repartition(n, *keys)`` is EXEMPT from AQE
       partition coalescing, so the pair fan-out is distributed over n
       tasks by key hash no matter how few input bytes feed the

@@ -29,8 +29,8 @@ by id, then 0 (seeded) or KMEANS_ITERS (trained) Lloyd rounds.
 semdedup's ``centroid_ids`` is that construction with zero rounds;
 PQ's per-subspace books come from _pq_codebook over the same trainer.
 
-Every per-query ranking is operators/topk.py top_k_per_group with a
-(score, id) tie-break.
+Every per-query ranking is _top_k_by_cos: top_k_per_group's
+row_number plan (operators/topk.py) with a (score, id) tie-break.
 """
 
 from __future__ import annotations
@@ -121,9 +121,16 @@ def _bucket_expr(qvec: Column, dim: int) -> Column:
 
 
 def _top_k_by_cos(scored: DataFrame, k: int) -> DataFrame:
-    """k nearest neighbors per query_id: cos desc, neighbor_id asc."""
-    return top_k_per_group(
-        scored, ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], k, rank_col="_rn"
+    """k nearest neighbors per query_id: cos desc, neighbor_id asc —
+    top_k_per_group's row_number plan (WindowGroupLimit below the
+    exchange), with the window written as SQL text."""
+    return (
+        scored.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS _rn",
+        )
+        .filter(f"_rn <= {k}")
+        .drop("_rn")
     )
 
 
@@ -136,21 +143,30 @@ def brute_force_topk(
     k: int = 5,
 ) -> DataFrame:
     """Exact top-k neighbors (quantized cosine) of each query vector.
-    Returns (query_id, neighbor_id, cos) with deterministic
-    (cos desc, neighbor_id asc) ranking."""
+    Returns (query_id, neighbor_id, cos_micro) with deterministic
+    (cos desc, neighbor_id asc) ranking.
+
+    Degenerate inputs match the oracle (tests/test_curation_inputs.py):
+    an empty corpus or query set gives no rows; a NULL vector scores a
+    NULL cosine, which ranks after every real neighbour (DESC puts
+    NULLs last), so a NULL query keeps its k lowest neighbour ids with
+    a NULL cos_micro.
+
+    Column references are F.expr(name): F.col captures its Python call
+    site with Py4J round trips on every call, a parse does not."""
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), quantize(F.col(vec_col)).alias("_cq")
-    ).withColumn("_cn2", norm2_q(F.col("_cq")))
+        F.expr(f"{id_col} AS neighbor_id"), quantize(F.expr(vec_col)).alias("_cq")
+    ).withColumn("_cn2", norm2_q(F.expr("_cq")))
     q = queries.select(
-        F.col(query_id_col).alias("query_id"), quantize(F.col(vec_col)).alias("_qq")
-    ).withColumn("_qn2", norm2_q(F.col("_qq")))
+        F.expr(f"{query_id_col} AS query_id"), quantize(F.expr(vec_col)).alias("_qq")
+    ).withColumn("_qn2", norm2_q(F.expr("_qq")))
     scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("_dot", dot_q(F.col("_qq"), F.col("_cq")))
-        .withColumn("cos", cosine_q(F.col("_dot"), F.col("_qn2"), F.col("_cn2")))
+        c.join(F.broadcast(q), F.expr("neighbor_id != query_id"))
+        .withColumn("_dot", dot_q(F.expr("_qq"), F.expr("_cq")))
+        .withColumn("cos", cosine_q(F.expr("_dot"), F.expr("_qn2"), F.expr("_cn2")))
     )
-    return _top_k_by_cos(scored, k).select(
-        "query_id", "neighbor_id", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro")
+    return _top_k_by_cos(scored, k).selectExpr(
+        "query_id", "neighbor_id", "CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro"
     )
 
 

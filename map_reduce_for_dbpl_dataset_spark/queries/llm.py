@@ -16,6 +16,8 @@ Python constants (PERMS, plane coefficients) the Spark operators use.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 
@@ -59,28 +61,40 @@ from ..operators.similarity import (
     plane_coef,
 )
 from ..operators.topk import top_k_per_group
-from ..sources.parquet import load_table
+from ..sources.parquet import data_file_stamps, load_table
 
 EMB_DIM = 64
 N_QUERY_VECS = 10
 
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _docs_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The shingle pipeline (normalize-regex + split + slice-concat) is
     # the dominant scan cost and every dedup strategy reuses the result
     # 2-3x (signatures + verification self-joins), so persist it once
-    # per (session, sf_dir). At 100 TB the same move is writing the
-    # shingle table to parquet once and feeding all dedup passes from it.
+    # per (session, documents table). At 100 TB the same move is
+    # writing the shingle table to parquet once and feeding all dedup
+    # passes from it.
     #
-    # LRU-of-one lifecycle per session: caching a new sf_dir (or being
+    # The key names the table's data files with their mtime and size,
+    # so a documents.parquet rewritten in place during a session is
+    # shingled afresh instead of served from the old table.
+    #
+    # LRU-of-one lifecycle per session: caching a new table (or being
     # called from a new session) unpersists every other entry, so a
     # long-lived session sweeping many sf dirs pins at most ONE shingle
     # table in executor memory (round-2 verdict: the old unbounded dict
     # accumulated pinned RDDs forever).
-    key = (spark.sparkContext.applicationId, sf_dir)
+    #
+    # Callers read the persisted frame through the DataFrame API only:
+    # spark.sql("... {sh}", sh=sh) registers it as a temporary view and
+    # drops that view afterwards, which uncaches the persisted table
+    # (getPersistentRDDs() goes to 0 and every later consumer re-derives
+    # the shingles from text).
+    path = os.path.join(sf_dir, "documents.parquet")
+    key = (spark.sparkContext.applicationId, sf_dir, data_file_stamps(path))
     cached = _SHINGLE_CACHE.get(key)
     if cached is not None:
         return cached
@@ -252,8 +266,8 @@ def q_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_dedup_minhash_lsh, with this join kept for exact passes."""
     sh = _docs_shingled(spark, sf_dir)
     out = ngram_jaccard_pairs_prefix(sh, "doc_id", "shingles", threshold=0.8)
-    return out.select(
-        "id_a", "id_b", F.floor(F.col("jaccard") * 1e6).cast("long").alias("jaccard_micro")
+    return out.selectExpr(
+        "id_a", "id_b", "CAST(floor(jaccard * 1e6) AS BIGINT) AS jaccard_micro"
     ).orderBy("id_a", "id_b")
 
 
@@ -359,7 +373,7 @@ _QUANT = f"[CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) for x in em
 
 def q_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < N_QUERY_VECS)
+    queries = e.filter(f"vec_id < {N_QUERY_VECS}")
     return brute_force_topk(e, queries, "vec_id", "embedding", "vec_id", k=5).orderBy(
         "query_id", "neighbor_id"
     )
@@ -606,39 +620,41 @@ SELECT doc_id, fp, count(*) OVER (PARTITION BY fp) AS n_same_fp FROM fp
 
 # --- text analysis -----------------------------------------------------------
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document token statistics and a heuristic quality score.
+    A NULL text gets NULL statistics, as in the oracle (under ANSI the
+    size of a NULL array is NULL); an empty table gives no rows
+    (tests/test_curation_inputs.py)."""
     d = load_table(spark, sf_dir, "documents")
     # normalize + tokenize projected separately so each runs ONCE per
     # row: marker_hits is a higher-order function (CodegenFallback, no
     # codegen CSE), so an inlined `toks` re-ran the regex/split chain
     # for it on top of the codegen-shared copy (r21 spans pattern;
-    # same-session A/B at sf1: 2.43 -> 2.36 s best-of-5)
-    t = d.select("doc_id", normalize_text(F.col("text")).alias("_n")).select(
-        "doc_id",
-        tokens_from_normalized(F.col("_n")).alias("_t"),
-        F.length("_n").alias("n_chars_norm"),
+    # same-session A/B at sf1: 2.43 -> 2.36 s best-of-5).  Everything
+    # but the functions/text.py helpers is SQL text: one parse per
+    # expression, where Column operators cost Py4J round trips each.
+    t = d.select(F.expr("doc_id"), normalize_text(F.expr("text")).alias("_n")).select(
+        F.expr("doc_id"),
+        tokens_from_normalized(F.expr("_n")).alias("_t"),
+        F.expr("length(_n) AS n_chars_norm"),
     )
-    d = t.select(
-        "doc_id",
-        F.size("_t").alias("n_tokens"),
-        F.size(F.array_distinct("_t")).alias("n_distinct"),
-        marker_hits(F.col("_t"), STOPWORDS).alias("n_stop"),
-        "n_chars_norm",
+    counts = t.select(
+        F.expr("doc_id"),
+        F.expr("size(_t) AS n_tokens"),
+        F.expr("size(array_distinct(_t)) AS n_distinct"),
+        marker_hits(F.expr("_t"), STOPWORDS).alias("n_stop"),
+        F.expr("n_chars_norm"),
     )
-    distinct_ratio = F.col("n_distinct").cast("double") / F.col("n_tokens").cast("double")
-    stop_ratio = F.col("n_stop").cast("double") / F.col("n_tokens").cast("double")
+    distinct_ratio = "CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE)"
+    stop_ratio = "CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE)"
     quality = (
-        F.lit(0.5) * distinct_ratio
-        + F.lit(0.3) * (F.lit(1.0) - F.abs(stop_ratio - F.lit(0.4)))
-        + F.lit(0.2) * F.least(F.col("n_tokens").cast("double") / F.lit(100.0), F.lit(1.0))
+        f"0.5D * ({distinct_ratio})"
+        f" + 0.3D * (1.0D - abs({stop_ratio} - 0.4D))"
+        " + 0.2D * least(CAST(n_tokens AS DOUBLE) / 100.0D, 1.0D)"
     )
-    return d.select(
-        "doc_id",
-        "n_tokens",
-        "n_distinct",
-        "n_stop",
-        "n_chars_norm",
-        floor6(distinct_ratio).alias("distinct_ratio"),
-        floor6(quality).alias("quality"),
+    return counts.select(
+        *map(F.expr, ["doc_id", "n_tokens", "n_distinct", "n_stop", "n_chars_norm"]),
+        floor6(F.expr(distinct_ratio)).alias("distinct_ratio"),
+        floor6(F.expr(quality)).alias("quality"),
     )
 
 

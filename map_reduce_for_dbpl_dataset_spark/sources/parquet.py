@@ -89,18 +89,39 @@ def ddl_columns(ddl: str) -> list[tuple[str, str]]:
     return [tuple(field.split(" ", 1)) for field in ddl.split(", ")]
 
 
+def _is_data_file(name: str) -> bool:
+    """Files whose name starts with ``_`` or ``.`` (_SUCCESS, .crc) are
+    not data."""
+    return not name.startswith(("_", "."))
+
+
 def _footer_schema(path: str):
     """The arrow schema of one data file of a parquet file or directory,
-    read from its footer with pyarrow (no Spark job). Files whose name
-    starts with ``_`` or ``.`` (_SUCCESS, .crc) are not data."""
+    read from its footer with pyarrow (no Spark job)."""
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
-        data = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+        data = sorted(f for f in os.listdir(path) if _is_data_file(f))
         if not data:
             raise FileNotFoundError(f"{path}: no parquet data file")
         path = os.path.join(path, data[0])
     return pq.read_schema(path)
+
+
+def data_file_stamps(path: str) -> tuple[tuple[str, int, int], ...]:
+    """(name, mtime_ns, size) of every data file of a parquet file or
+    directory, from one listing: a rewrite of the table changes it."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_mtime_ns, st.st_size),)
+    with os.scandir(path) as entries:
+        return tuple(
+            sorted(
+                (e.name, e.stat().st_mtime_ns, e.stat().st_size)
+                for e in entries
+                if _is_data_file(e.name)
+            )
+        )
 
 
 def _read_declared(spark: SparkSession, path: str, ddl: str, footer) -> DataFrame:

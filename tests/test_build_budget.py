@@ -1,0 +1,71 @@
+"""Build budget of the llm_curation operators.
+
+Building a query costs Py4J round trips between Python and the JVM:
+every Column operator and every ``F.col`` is one or more calls, where
+a SQL-text expression is parsed in one.  The three operators the llm_curation
+benchmark times are built mostly from SQL text; the counts below pin
+that, with ~25% headroom.  Only the building thread's calls count:
+job-progress traffic from other threads varies run to run.
+
+The prefix-filtered Jaccard join also reads the session's persisted
+shingle table (queries/llm.py ``_docs_shingled``); a build that went
+through ``spark.sql`` with the frame as a keyword argument would drop
+the table from the cache and re-derive shingles from text.
+"""
+
+from __future__ import annotations
+
+import gc
+import threading
+
+import py4j.clientserver
+import pytest
+from pyspark import StorageLevel
+
+from map_reduce_for_dbpl_dataset_spark import queries as registry
+from map_reduce_for_dbpl_dataset_spark.queries.llm import _docs_shingled
+
+# Py4J round trips of one warm build at the suite's sf dir (measured
+# 256, 263 and 315), plus ~25%.
+ROUND_TRIP_BUDGET = {
+    "llm_text_stats": 320,
+    "llm_ngram_jaccard_prefix": 330,
+    "llm_ann_brute_topk": 395,
+}
+
+
+def _round_trips(build) -> int:
+    conn = py4j.clientserver.ClientServerConnection
+    send = conn.send_command
+    me = threading.get_ident()
+    calls = 0
+
+    def counting(self, command):
+        nonlocal calls
+        if threading.get_ident() == me:
+            calls += 1
+        return send(self, command)
+
+    gc.collect()
+    conn.send_command = counting
+    try:
+        build()
+    finally:
+        conn.send_command = send
+    return calls
+
+
+@pytest.mark.parametrize("name", sorted(ROUND_TRIP_BUDGET))
+def test_build_round_trips_within_budget(spark, sf_dir, name):
+    build = registry.all_queries()[name]
+    build(spark, sf_dir)  # warm: the persisted shingle table exists
+    calls = _round_trips(lambda: build(spark, sf_dir))
+    assert calls <= ROUND_TRIP_BUDGET[name], calls
+
+
+def test_prefix_join_keeps_the_shingle_table_cached(spark, sf_dir):
+    df = registry.all_queries()["llm_ngram_jaccard_prefix"](spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    assert "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    assert _docs_shingled(spark, sf_dir).storageLevel != StorageLevel.NONE
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() > 0

@@ -236,3 +236,89 @@ def test_single_partition_rule_reads_exchange_arguments():
 
     hashed = _PLAN.format(eid=1, parts=8, path="/data/docs.parquet", run=1)
     assert no_single_partition(hashed) and _sweep_violations(hashed) == []
+
+
+_SIZED_ABOVE_GENERATE_PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (5)
++- Exchange (4)
+   +- Project (3)
+      +- Generate (2)
+         +- InMemoryTableScan (1)
+
+
+(1) InMemoryTableScan
+Output [2]: [doc_id#0L, shingles#7]
+
+(2) Generate
+Input [2]: [doc_id#0L, shingles#7]
+Arguments: explode(array_distinct(shingles#7)), [doc_id#0L, shingles#7], false, [shingle#25]
+
+(3) Project
+Output [3]: [doc_id#0L AS _id#22L, size(array_distinct(shingles#7), false) AS _sz#23, xxhash64(shingle#25, 42) AS _sh#26L]
+Input [3]: [doc_id#0L, shingles#7, shingle#25]
+
+(4) Exchange
+Input [3]: [_id#22L, _sz#23, _sh#26L]
+Arguments: hashpartitioning(_sh#26L, 8), ENSURE_REQUIREMENTS, [plan_id=44]
+
+(5) AdaptiveSparkPlan
+Output [3]: [_id#22L, _sz#23, _sh#26L]
+Arguments: isFinalPlan=false
+"""
+
+_SIZED_BELOW_GENERATE_PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (7)
++- Exchange (6)
+   +- Project (5)
+      +- Generate (4)
+         +- Project (3)
+            +- Project (2)
+               +- InMemoryTableScan (1)
+
+
+(1) InMemoryTableScan
+Output [2]: [doc_id#0L, shingles#7]
+
+(2) Project
+Output [2]: [doc_id#0L AS _id#22L, array_distinct(shingles#7) AS _set#23]
+Input [2]: [doc_id#0L, shingles#7]
+
+(3) Project
+Output [3]: [_id#22L, _set#23, size(_set#23, false) AS _sz#24]
+Input [2]: [_id#22L, _set#23]
+
+(4) Generate
+Input [3]: [_id#22L, _set#23, _sz#24]
+Arguments: explode(_set#23), [_id#22L, _sz#24], false, [shingle#26]
+
+(5) Project
+Output [3]: [_id#22L, _sz#24, xxhash64(shingle#26, 42) AS _sh#27L]
+Input [3]: [_id#22L, _sz#24, shingle#26]
+
+(6) Exchange
+Input [3]: [_id#22L, _sz#24, _sh#27L]
+Arguments: hashpartitioning(_sh#27L, 8), ENSURE_REQUIREMENTS, [plan_id=52]
+
+(7) AdaptiveSparkPlan
+Output [3]: [_id#22L, _sz#24, _sh#27L]
+Arguments: isFinalPlan=false
+"""
+
+
+def test_generate_rule_flags_array_functions_above_the_explode():
+    """A Project directly above a Generate that applies an array
+    function to the generator's source array re-runs it once per
+    generated row; the rule reads the Generate's ``Arguments:`` for the
+    source attribute and the Project's ``Output`` for calls over it.
+    Projecting the set and its size below the Generate is clean, and
+    so is a Project above it that reads only the generated element."""
+    sys.path.insert(0, str(REPO / "tools"))
+    from plan_audit import array_fns_above_generate, set_size_below_generate
+
+    assert array_fns_above_generate(_SIZED_ABOVE_GENERATE_PLAN) == [
+        "Project (3): size(...)",
+        "Project (3): array_distinct(...)",
+    ]
+    assert not set_size_below_generate(_SIZED_ABOVE_GENERATE_PLAN)
+    assert array_fns_above_generate(_SIZED_BELOW_GENERATE_PLAN) == []
+    assert set_size_below_generate(_SIZED_BELOW_GENERATE_PLAN)

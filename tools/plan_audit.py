@@ -98,6 +98,48 @@ def no_single_partition(plan: str) -> bool:
     return not single_partition_exchanges(plan)
 
 
+def _call_args(text: str, start: int) -> str:
+    """The argument text of the call whose '(' is at ``text[start]``."""
+    depth = 0
+    for i in range(start, len(text)):
+        depth += {"(": 1, ")": -1}.get(text[i], 0)
+        if depth == 0:
+            return text[start + 1 : i]
+    return text[start + 1 :]
+
+
+def array_fns_above_generate(plan: str) -> list[str]:
+    """Function calls over a generator's source array in the Project
+    directly above its ``Generate``, as ``Project (m): fn(...)``.
+
+    A Generate keeps its child's columns on every row it emits, so an
+    array function evaluated in the Project above it (``size``,
+    ``array_distinct``, ...) runs once per generated element over the
+    whole array — quadratic in the array length — where projecting it
+    below the Generate runs it once per input row."""
+    nodes = plan_nodes(plan)
+    out = []
+    for _, node in sorted(nodes.items()):
+        args = next((d for d in node["details"] if d.startswith("Arguments: ")), "")
+        call = re.match(r"Arguments: \w+\(", args)
+        parent = nodes.get(node["parent"], {})
+        if node.get("name") != "Generate" or not call or parent.get("name") != "Project":
+            continue
+        sources = set(re.findall(r"\w+#\d+", _call_args(args, call.end() - 1)))
+        output = next((d for d in parent["details"] if d.startswith("Output ")), "")
+        for m in re.finditer(r"(\w+)\(", output):
+            if sources & set(re.findall(r"\w+#\d+", _call_args(output, m.end() - 1))):
+                out.append(f"Project ({node['parent']}): {m.group(1)}(...)")
+    return out
+
+
+def set_size_below_generate(plan: str) -> bool:
+    """Property predicate: no Project above a Generate re-evaluates an
+    array function over the generator's source array
+    (array_fns_above_generate is empty)."""
+    return not array_fns_above_generate(plan)
+
+
 # (query, [(property, needle), ...]): a needle is a substring that must
 # appear, '!' + a substring that must not, or a predicate over the plan.
 CHECKS: dict[str, list[tuple[str, object]]] = {
@@ -1020,6 +1062,17 @@ def _span_positions_plan(spark, sf_dir):
     return _span_positions(_span_shingled(d))
 
 
+def _jaccard_prefix_plan(spark, sf_dir):
+    """Pre-checkpoint PPJoin prefix table (operators/dedup.py
+    _prefix_table): the explode + df/rank windows that
+    llm_ngram_jaccard_prefix hides behind spread_for_pair_join's
+    checkpoint."""
+    from map_reduce_for_dbpl_dataset_spark.operators.dedup import _prefix_table
+    from map_reduce_for_dbpl_dataset_spark.queries.llm import _docs_shingled
+
+    return _prefix_table(_docs_shingled(spark, sf_dir), "doc_id", "shingles", 0.8)
+
+
 # custom entries: (plan builder, checks) — for plans not reachable as a
 # whole registry query (e.g. subtrees behind a checkpoint boundary)
 CUSTOM_CHECKS: dict = {
@@ -1032,6 +1085,14 @@ CUSTOM_CHECKS: dict = {
             ("df cap via two-phase distinct count", "partial_count(distinct"),
             ("no cartesian", "!CartesianProduct"),
             ("no nested-loop join", "!BroadcastNestedLoopJoin"),
+        ],
+    ),
+    "jaccard_prefix[pre-checkpoint]": (
+        _jaccard_prefix_plan,
+        [
+            # one distinct set and one size per document, projected
+            # below the explode — never re-derived per exploded row
+            ("set size evaluated below the Generate", set_size_below_generate),
         ],
     ),
     "lsh_sized_buckets[pre-checkpoint]": (
