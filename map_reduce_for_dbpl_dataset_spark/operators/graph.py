@@ -1,22 +1,20 @@
-"""Iterative graph operators (DataFrame-native).
+"""Graph operators (DataFrame-native): connected components and
+triangle enumeration.
 
-connected_components: min-label propagation to fixpoint. Each
-superstep is one join + one min-aggregate; lineage is cut with
-localCheckpoint so the logical plan stays O(1) across iterations, and
-convergence is detected by counting changed labels (an action per
-superstep — unavoidable for any fixpoint loop). Supersteps are
-bounded by graph DIAMETER — fine for the short co-author chains in
-fixtures, slow on 100 TB path-shaped graphs.
+connected_components_star is the engine's one connected-components
+operator: the large-star/small-star alternation (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14). Each round
+is two (join + min-aggregate) passes over the edge set, and the
+fixpoint takes O(log n) rounds whatever the graph's diameter, so a
+chain-shaped graph converges in dozens of rounds, not millions.
+Lineage is cut with localCheckpoint each round, so the plan stays O(1)
+in rounds. It raises RuntimeError if the edge set has not reached its
+fixpoint after CC_STAR_MAX_ITERS rounds.
 
-connected_components_star: the large-star/small-star alternation
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14) — same join+min-aggregate per round but O(log n) rounds
-regardless of diameter; this is the 100 TB variant. Both operators
-share the (node, component = min reachable label) contract and are
-property-tested equal (tests/test_graph_star.py).
-
-Used by dblp_coauthor_components (co-author graph) and
-llm_dedup_clusters (near-duplicate transitive closure).
+Used by dblp_coauthor_components(_star) (co-author graph),
+llm_dedup_clusters (near-duplicate transitive closure) and
+llm_leakage_free_split (cluster-level split assignment). Property
+tests compare it with a Python union-find (tests/test_graph_star.py).
 
 Every operator reads edges as (src, dst) and vertices as (node).
 """
@@ -26,64 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Superstep caps. Label propagation needs diameter-many rounds and
-# stops early at its fixpoint; the star alternation needs O(log n)
-# rounds. Both raise if the cap is hit before the fixpoint.
-CC_MAX_ITERS = 100
+# Round cap of the star alternation: it needs O(log n) rounds, plus one
+# to confirm the fixpoint.
 CC_STAR_MAX_ITERS = 50
-
-
-def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
-    """(vertices[node], edges[src,dst]) -> (node, component) where
-    component = min vertex label reachable in the undirected graph.
-    Isolated vertices form singleton components. Raises RuntimeError
-    if labels still change after CC_MAX_ITERS rounds."""
-    bi = (
-        edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
-        .unionByName(edges.select(F.col("dst").alias("_s"), F.col("src").alias("_d")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        vertices.select("node")
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(CC_MAX_ITERS):
-        neighbor_min = (
-            bi.join(labels, bi["_s"] == labels["node"])
-            .select(F.col("_d").alias("node"), "component")
-            .groupBy("node")
-            .agg(F.min("component").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nmin", F.col("component"))
-                ).alias("component"),
-                (F.coalesce("nmin", F.col("component")) < F.col("component")).alias(
-                    "_chg"
-                ),
-            )
-        ).localCheckpoint(eager=False)  # the count below materializes it
-        changed = new_labels.filter(F.col("_chg")).count()
-        labels = new_labels.drop("_chg")
-        if changed == 0:
-            break
-    else:
-        # labels still moved in the last round, so some component is
-        # wider than the cap allows: its labels are not the minimum yet
-        bi.unpersist()
-        raise RuntimeError(
-            f"connected_components did not reach the label fixpoint within "
-            f"CC_MAX_ITERS={CC_MAX_ITERS} rounds (label propagation needs "
-            f"one round per hop of the graph's diameter)"
-        )
-    bi.unpersist()
-    return labels
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -121,19 +64,23 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 def connected_components_star(edges: DataFrame, vertices: DataFrame) -> DataFrame:
-    """Large-star/small-star connected components — identical contract
-    to ``connected_components`` but O(log n) rounds instead of graph
-    diameter, so a 100 TB chain-shaped graph converges in ~dozens of
-    supersteps, not millions.
+    """(vertices[node], edges[src,dst]) -> (node, component): one row
+    per distinct vertex, where component is the minimum label reachable
+    from node in the undirected graph over the vertices and the edge
+    endpoints. So an edge endpoint that is not a vertex still connects
+    and labels its neighbours: edges (b,0x),(0x,c) with vertices {b,c}
+    give b->0x and c->0x, and 0x gets no row. Further edge cases:
+    - an edge with a NULL endpoint, or a self-loop, is ignored;
+    - a NULL vertex gives one (NULL, NULL) row;
+    - an isolated vertex labels itself; no vertices give no rows.
 
-    Each round is two (join + min-aggregate) passes over the edge set;
-    lineage is cut per round with localCheckpoint. Convergence =
-    (count, sum of xxhash64(u,v)) checksum of the canonical edge set
-    unchanged — one tiny aggregate per round instead of a set-diff
-    shuffle; hash collisions masking a real change would need two
-    64-bit sums to collide simultaneously, which we accept
-    deterministically (same data → same verdict). At fixpoint the
-    edges form stars rooted at each component's minimum label.
+    Convergence = (count, sum of xxhash64(u,v)) checksum of the
+    canonical edge set unchanged — one tiny aggregate per round instead
+    of a set-diff shuffle; hash collisions masking a real change would
+    need two 64-bit sums to collide simultaneously, which we accept
+    deterministically (same data → same verdict). At the fixpoint the
+    edges form stars rooted at each component's minimum label, and one
+    vertex ⋈ roots join labels the vertices.
     """
     e = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
@@ -168,7 +115,7 @@ def connected_components_star(edges: DataFrame, vertices: DataFrame) -> DataFram
         raise RuntimeError(
             f"connected_components_star did not reach the edge-set fixpoint "
             f"within CC_STAR_MAX_ITERS={CC_STAR_MAX_ITERS} rounds (O(log n) "
-            f"rounds suffice — 50 covers any feasible graph)"
+            f"rounds suffice)"
         )
     roots = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     return (

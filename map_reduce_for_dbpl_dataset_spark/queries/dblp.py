@@ -502,27 +502,6 @@ GROUP BY 1, 2
 
 
 # --- connected components over the co-author graph (iterative) ---------------
-def coauthor_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components of the co-author graph by iterative
-    min-label propagation — the engine's iterative-algorithm surface
-    (no reference counterpart; the closest ancestry is PageRank-style
-    MapReduce chains). Each iteration is one join + one min-aggregate;
-    lineage is cut with localCheckpoint so the plan doesn't grow with
-    the iteration count; convergence is detected by counting label
-    changes (an action per iteration, as any fixpoint loop needs).
-
-    The oracle computes the same components with a DuckDB recursive
-    CTE (transitive closure + min reachable label) — exact agreement,
-    not rows-only. The loop itself lives in operators/graph.py
-    (connected_components), shared with llm_dedup_clusters.
-    """
-    from ..operators.graph import connected_components
-
-    edges, vertices = _coauthor_graph(spark, sf_dir)
-    labels = connected_components(edges, vertices)
-    return labels.select(F.col("node").alias("author"), "component")
-
-
 def _coauthor_graph(
     spark: SparkSession, sf_dir: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
@@ -539,14 +518,19 @@ def _coauthor_graph(
 
 
 def coauthor_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via large-star/small-star alternation
-    (operators/graph.py connected_components_star) — the 100 TB
-    variant of dblp_coauthor_components: O(log n) supersteps instead
-    of graph diameter. Shares the min-label variant's recursive-CTE
-    oracle, so the driver hash-checks that both algorithms produce the
-    identical (author, component) labeling; a hypothesis property test
-    (tests/test_graph_star.py) additionally proves equality on random
-    graphs."""
+    """Connected components of the co-author graph: (author, component
+    = min author name reachable through co-authorship) — the engine's
+    iterative-algorithm surface (no reference counterpart; the closest
+    ancestry is PageRank-style MapReduce chains). The fixpoint is
+    operators/graph.py connected_components_star: large-star/small-star
+    rounds, O(log n) of them whatever the graph's diameter, each round
+    one checksum action; edges and vertices both come from the
+    publications' author lists, so every edge endpoint is a vertex.
+
+    Registered as dblp_coauthor_components and
+    dblp_coauthor_components_star. The oracle computes the same
+    components with a DuckDB recursive CTE (transitive closure + min
+    reachable label) — exact agreement, not rows-only."""
     from ..operators.graph import connected_components_star
 
     edges, vertices = _coauthor_graph(spark, sf_dir)
@@ -631,7 +615,7 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration PageRank over the symmetric co-author graph —
     the canonical iterative-MapReduce chain (the reference's Hadoop
     lineage: rank mass flows along edges each superstep; SURVEY.md §4
-    names this the PageRank-style ancestry of coauthor_components).
+    names this the PageRank-style ancestry of the coauthor components).
 
     All arithmetic is scaled-integer (`div`, not `/`) so the result
     is exactly order-independent and bit-identical to the oracle:
@@ -644,7 +628,7 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     each of the 3 iterations is one shuffle-join on src plus one
     partial-aggregated groupBy on dst — the same two exchanges a
     Pregel superstep costs. Lineage stays 3 plans deep (no checkpoint
-    needed at fixed small iteration counts; coauthor_components shows
+    needed at fixed small iteration counts; coauthor_components_star shows
     the localCheckpoint pattern for unbounded fixpoints)."""
     ex = _pub_authors(spark, sf_dir)
     bi = (
@@ -702,7 +686,7 @@ QUERIES = {
     "dblp_xml_ingest": xml_ingest,
     "dblp_pagerank": pagerank,
     "dblp_coauthor_pairs": coauthor_pairs,
-    "dblp_coauthor_components": coauthor_components,
+    "dblp_coauthor_components": coauthor_components_star,
     "dblp_coauthor_components_star": coauthor_components_star,
     "dblp_coauthor_triangles": coauthor_triangles,
     "dblp_q1_top_authors_per_venue": q1_top_authors_per_venue,

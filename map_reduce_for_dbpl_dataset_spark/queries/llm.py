@@ -275,19 +275,21 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fuzzy-dedup endgame: near-dup PAIRS (exact n-gram Jaccard
     >= 0.8) are only edges — deduplication needs transitive CLUSTERS
     (a~b, b~c => {a,b,c} even if a!~c) and a canonical survivor per
-    cluster. Components come from operators/graph.py label
-    propagation; canonical = min doc_id. The oracle rebuilds the same
-    clusters with a recursive CTE over identically-computed pairs.
+    cluster. Components come from operators/graph.py
+    connected_components_star (large-star/small-star, O(log n)
+    rounds); both edge endpoints are doc_ids of the same shingle table
+    as the vertices. Canonical = min doc_id. The oracle rebuilds the
+    same clusters with a recursive CTE over identically-computed pairs.
     Keep-set = rows with is_canonical — what a 100 TB pipeline would
     write out."""
-    from ..operators.graph import connected_components
+    from ..operators.graph import connected_components_star
 
     sh = _docs_shingled(spark, sf_dir)
     edges = ngram_jaccard_pairs(sh, "doc_id", "shingles", threshold=0.8).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     vertices = sh.select(F.col("doc_id").alias("node"))
-    labels = connected_components(edges, vertices)
+    labels = connected_components_star(edges, vertices)
     return labels.select(
         F.col("node").alias("doc_id"),
         F.col("component").alias("cluster_id"),
@@ -1190,8 +1192,8 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (inlined, interpreted — higher-order lambdas are exempt from
     # codegen subexpression elimination) hash chain re-evaluates the
     # md5 pipeline once per window position: measured 27 s for the
-    # explode of a 2.7 s derivation at sf1; pinned, the explode is
-    # free (plans/r21/llm_winnow_pairs_{before,after}.txt).
+    # explode of a 2.7 s derivation at sf1; pinned, the Generate reads
+    # the checkpointed arrays and the explode is free.
     fps = _winnow_fps(corpus).localCheckpoint(eager=False)
     # pin the fingerprint stream once (the O(len*W) sliding-min
     # transform plus the df window are the dominant cost — both

@@ -1700,7 +1700,7 @@ def _span_shingled(d: DataFrame) -> DataFrame:
     regex/split chain once per token position, and Generate planning
     (InferFiltersFromGenerate) copied the same monster into an
     inferred filter — measured 2.3x on the full query at the sf1
-    point (plans/r21/llm_substring_spans_{before,after}.txt)."""
+    point."""
     t = d.select("doc_id", tokens(F.col("text")).alias("_t"))
     return t.select(
         "doc_id",
@@ -2063,21 +2063,22 @@ def q_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from minhash_lsh_pairs instead — same downstream plan) are hashed
     by their canonical id into 100 buckets, 80/10/10.  Assignment is
     a narrow hash expression on the component label — no extra
-    shuffle beyond the O(log n) component rounds, and deterministic
+    shuffle beyond the O(log n) large-star/small-star component rounds
+    (operators/graph.py connected_components_star), and deterministic
     across reruns/engines (md5-based hash60, no rand()).  Edges come
     from the prefix-filtered PPJoin plan — pair-identical to the
     naive exact join (tests/test_properties.py) but with the filter
     funnel that survives the scale point (~3 min -> seconds on the
     10x fixtures)."""
     from ..operators.dedup import ngram_jaccard_pairs_prefix
-    from ..operators.graph import connected_components
+    from ..operators.graph import connected_components_star
     from .llm import _docs_shingled
 
     sh = _docs_shingled(spark, sf_dir)
     edges = ngram_jaccard_pairs_prefix(
         sh, "doc_id", "shingles", threshold=0.8
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = connected_components(
+    labels = connected_components_star(
         edges, sh.select(F.col("doc_id").alias("node"))
     ).select(F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
     bucket = F.pmod(

@@ -80,13 +80,12 @@ def get_spark(
         # build partition OOMs a task that SMJ would have spilled;
         # acceptable here because the estimates at play are plain
         # parquet scans.  Plan-verified effect of the flip:
-        # dblp_coauthor_components_star's labeling join plans
-        # ShuffledHashJoin (tools/plan_audit.py).  tpch_revenue_by_
-        # nation's lineitem ⋈ orders still plans SortMergeJoin at the
-        # bench SFs (plans/r22/tpch_revenue_by_nation_*_c32_before.txt
-        # — the muchSmaller guard fails there), so no SHJ speedup is
-        # claimed for it.  Bucketed joins unaffected (still SMJ over
-        # bucketed scans, no exchange).
+        # the connected-components labeling join plans ShuffledHashJoin
+        # (plan audit row "final labeling join is an equi join").
+        # tpch_revenue_by_nation's lineitem ⋈ orders still plans
+        # SortMergeJoin at the bench SFs (the muchSmaller guard fails
+        # there), so no SHJ speedup is claimed for it.  Bucketed joins
+        # unaffected (still SMJ over bucketed scans, no exchange).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")

@@ -1,4 +1,5 @@
-"""Build budget of the llm_curation operators.
+"""Build budget of the llm_curation operators and of the
+connected-components queries.
 
 Building a query costs Py4J round trips between Python and the JVM:
 every Column operator and every ``F.col`` is one or more calls, where
@@ -11,6 +12,12 @@ The prefix-filtered Jaccard join also reads the session's persisted
 shingle table (queries/llm.py ``_docs_shingled``); a build that went
 through ``spark.sql`` with the frame as a keyword argument would drop
 the table from the cache and re-derive shingles from text.
+
+The connected-components queries launch Spark jobs while they are
+built: each large-star/small-star round runs one checksum action
+(operators/graph.py connected_components_star), and the inputs of the
+rounds run theirs.  Job counts are deterministic for fixed data, so
+the counts below are the measured values, not budgets with headroom.
 """
 
 from __future__ import annotations
@@ -31,6 +38,15 @@ ROUND_TRIP_BUDGET = {
     "llm_text_stats": 320,
     "llm_ngram_jaccard_prefix": 330,
     "llm_ann_brute_topk": 395,
+}
+
+# Spark jobs of one warm build at the suite's sf dir (the same at
+# local[2] and local[4]).
+BUILD_JOBS = {
+    "dblp_coauthor_components": 48,
+    "dblp_coauthor_components_star": 48,
+    "llm_dedup_clusters": 25,
+    "llm_leakage_free_split": 28,
 }
 
 
@@ -61,6 +77,20 @@ def test_build_round_trips_within_budget(spark, sf_dir, name):
     build(spark, sf_dir)  # warm: the persisted shingle table exists
     calls = _round_trips(lambda: build(spark, sf_dir))
     assert calls <= ROUND_TRIP_BUDGET[name], calls
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_JOBS))
+def test_build_jobs_pinned(spark, sf_dir, name):
+    build = registry.all_queries()[name]
+    build(spark, sf_dir)  # warm: the persisted shingle table exists
+    sc = spark.sparkContext
+    group = f"build-jobs-{name}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        build(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == BUILD_JOBS[name]
 
 
 def test_prefix_join_keeps_the_shingle_table_cached(spark, sf_dir):

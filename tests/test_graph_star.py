@@ -1,8 +1,8 @@
 """Property tests: large-star/small-star connected components agree
-with the min-label-propagation variant AND with an independent Python
-union-find, across adversarial graph shapes (chains are the min-label
-worst case — supersteps = diameter; star convergence must not depend
-on it)."""
+with an independent Python union-find over the vertices and the edge
+endpoints, across adversarial graph shapes (chains are the worst case
+for diameter-bounded propagation; star convergence must not depend on
+it) and the operator's defined edge cases."""
 
 from __future__ import annotations
 
@@ -11,14 +11,16 @@ import random
 import pytest
 
 from map_reduce_for_dbpl_dataset_spark.operators import graph
-from map_reduce_for_dbpl_dataset_spark.operators.graph import (
-    connected_components,
-    connected_components_star,
-)
+from map_reduce_for_dbpl_dataset_spark.operators.graph import connected_components_star
 
 
 def _union_find(nodes: list[str], edges: list[tuple[str, str]]) -> dict[str, str]:
+    """Component label (min member) of each of ``nodes``; the graph's
+    nodes are ``nodes`` plus every edge endpoint."""
     parent = {n: n for n in nodes}
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
 
     def find(x: str) -> str:
         while parent[x] != x:
@@ -34,21 +36,19 @@ def _union_find(nodes: list[str], edges: list[tuple[str, str]]) -> dict[str, str
     return {n: find(n) for n in nodes}
 
 
-def _run_both(spark, nodes, edges):
+def _components(spark, nodes, edges):
     edf = spark.createDataFrame(edges or [("_x", "_x")], "src string, dst string")
     if not edges:
         edf = edf.filter("src != src")  # empty frame, keeps schema
     vdf = spark.createDataFrame([(n,) for n in nodes], "node string")
-    ml = {r.node: r.component for r in connected_components(edf, vdf).collect()}
-    st = {r.node: r.component for r in connected_components_star(edf, vdf).collect()}
-    return ml, st
+    rows = connected_components_star(edf, vdf).collect()
+    got = {r.node: r.component for r in rows}
+    assert len(got) == len(rows), "a vertex has more than one row"
+    return got
 
 
 def _check(spark, nodes, edges):
-    want = _union_find(nodes, edges)
-    ml, st = _run_both(spark, nodes, edges)
-    assert ml == want, "min-label disagrees with union-find"
-    assert st == want, "large/small-star disagrees with union-find"
+    assert _components(spark, nodes, edges) == _union_find(nodes, edges)
 
 
 def test_chain_star_two_cliques_isolated(spark):
@@ -78,10 +78,28 @@ def test_random_graphs_match_union_find(spark):
 
 
 def test_empty_graph_all_singletons(spark):
+    _check(spark, ["a", "b", "c"], [])
+
+
+def test_endpoint_outside_the_vertex_set_connects_and_labels(spark):
+    """0x is no vertex, yet it joins b and c and is their minimum."""
+    edges = [("b", "0x"), ("0x", "c")]
+    want = {"b": "0x", "c": "0x"}
+    assert _union_find(["b", "c"], edges) == want
+    assert _components(spark, ["b", "c"], edges) == want
+
+
+def test_edge_with_a_null_endpoint_is_ignored(spark):
     nodes = ["a", "b", "c"]
-    want = {n: n for n in nodes}
-    ml, st = _run_both(spark, nodes, [])
-    assert ml == want and st == want
+    edges = [("b", "c"), ("a", None), (None, "b")]
+    want = _union_find(nodes, [e for e in edges if None not in e])
+    assert want == {"a": "a", "b": "b", "c": "b"}
+    assert _components(spark, nodes, edges) == want
+
+
+def test_null_vertex_and_empty_vertex_set(spark):
+    _check(spark, ["a", "b", None], [("a", "b")])  # gives a (NULL, NULL) row
+    _check(spark, [], [("a", "b")])  # gives no rows
 
 
 def test_triangles_match_bruteforce(spark):
@@ -120,13 +138,14 @@ def test_triangles_match_bruteforce(spark):
         assert n_rows == len(want), f"trial {trial}: duplicate triangle rows"
 
 
-def test_label_propagation_raises_when_cap_cuts_the_fixpoint(spark, monkeypatch):
-    """A 6-node chain needs 5 label-propagation rounds; capped at 2 the
-    labels are still moving, so the operator must raise rather than
-    return labels that are not yet component minima."""
-    monkeypatch.setattr(graph, "CC_MAX_ITERS", 2)
-    nodes = [f"n{i}" for i in range(6)]
+def test_star_raises_when_cap_cuts_the_fixpoint(spark, monkeypatch):
+    """A 32-node chain needs more than 2 star rounds (plus the round
+    that confirms the fixpoint); capped at 2 the edge set is still
+    moving, so the operator must raise rather than label vertices from
+    an edge set that is not yet a forest of stars."""
+    monkeypatch.setattr(graph, "CC_STAR_MAX_ITERS", 2)
+    nodes = [f"n{i:02d}" for i in range(32)]
     edf = spark.createDataFrame(list(zip(nodes, nodes[1:])), "src string, dst string")
     vdf = spark.createDataFrame([(n,) for n in nodes], "node string")
-    with pytest.raises(RuntimeError, match="CC_MAX_ITERS=2"):
-        connected_components(edf, vdf)
+    with pytest.raises(RuntimeError, match="CC_STAR_MAX_ITERS=2"):
+        connected_components_star(edf, vdf)

@@ -458,7 +458,8 @@ def test_dedup_clusters_match_union_find_at_scale(request):
     built on (ngram_jaccard_pairs — separately proven by the PPJoin
     lossless property tests and the sf0.01 driver oracle), run a
     textbook union-find over it, and require the distributed
-    label-propagation partition to match EXACTLY — same clusters, same
+    large-star/small-star partition (operators/graph.py
+    connected_components_star) to match EXACTLY — same clusters, same
     min-id canonical labels, every doc labeled once.  The CC operator
     itself is additionally hash-proven at sf1 via
     dblp_coauthor_components_star in the net above."""

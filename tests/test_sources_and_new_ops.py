@@ -97,7 +97,7 @@ def test_coauthor_components_small_graph(spark):
     from map_reduce_for_dbpl_dataset_spark.queries import dblp as dblp_mod
     import pyspark.sql.functions as F
 
-    # run the same label-propagation loop on a hand-built edge set by
+    # run the co-author components query on a hand-built edge set by
     # monkeypatching the pub source: pubs {p1: a,b}, {p2: b,c}, {p3: d,e},
     # {p4: f} -> components {a,b,c}->a, {d,e}->d, {f}->f
     rows = [
@@ -114,7 +114,7 @@ def test_coauthor_components_small_graph(spark):
     try:
         out = {
             r["author"]: r["component"]
-            for r in dblp_mod.coauthor_components(spark, "").collect()
+            for r in dblp_mod.coauthor_components_star(spark, "").collect()
         }
     finally:
         dblp_mod._pubs_with_venue = orig

@@ -140,6 +140,17 @@ def set_size_below_generate(plan: str) -> bool:
     return not array_fns_above_generate(plan)
 
 
+# The plan shape of every connected-components query
+# (operators/graph.py connected_components_star): shuffled-hash since
+# the session prefers SHJ when its size guard holds (session.py); the
+# audited property is that the final vertex ⋈ roots labeling join is a
+# hash/merge EQUI join, never a cartesian, over the checkpointed star
+# edge set.
+_STAR_LABELING_ROWS = [
+    ("final labeling join is an equi join", "ShuffledHashJoin"),
+    ("star rounds feed from checkpoints", "Scan ExistingRDD"),
+]
+
 # (query, [(property, needle), ...]): a needle is a substring that must
 # appear, '!' + a substring that must not, or a predicate over the plan.
 CHECKS: dict[str, list[tuple[str, object]]] = {
@@ -491,19 +502,13 @@ CHECKS: dict[str, list[tuple[str, object]]] = {
     ],
     "llm_dedup_clusters": [
         ("fixpoint result pinned (checkpointed labels)", "Scan ExistingRDD"),
-        ("post-fixpoint assembly is narrow (no re-keying exchange)", "!Exchange"),
+        *_STAR_LABELING_ROWS,
     ],
     "dblp_coauthor_components": [
         ("fixpoint result pinned (checkpointed labels)", "Scan ExistingRDD"),
-        ("post-fixpoint assembly is narrow (no re-keying exchange)", "!Exchange"),
+        *_STAR_LABELING_ROWS,
     ],
-    "dblp_coauthor_components_star": [
-        # shuffled-hash since the session prefers SHJ when its size
-        # guard holds (session.py); the audited property is that the
-        # labeling join is a hash/merge EQUI join, never a cartesian
-        ("final labeling join is an equi join", "ShuffledHashJoin"),
-        ("star rounds feed from checkpoints", "Scan ExistingRDD"),
-    ],
+    "dblp_coauthor_components_star": _STAR_LABELING_ROWS,
     "llm_ann_ivf": [
         ("centroid assignment broadcast", "BroadcastHashJoin"),
         ("no cartesian", "!CartesianProduct"),
@@ -756,6 +761,7 @@ CHECKS: dict[str, list[tuple[str, object]]] = {
         # component label — nothing beyond the components fixpoint
         # may shuffle or cartesian
         ("no cartesian", "!CartesianProduct"),
+        *_STAR_LABELING_ROWS,
     ],
     "llm_bpe_encode": [
         # tokenizer apply: the trained vocab's segmentations come back
