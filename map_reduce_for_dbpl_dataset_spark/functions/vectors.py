@@ -21,7 +21,7 @@ from .exprs import sql_hof
 
 
 # The one quantization scale: every vector operator and every DuckDB
-# oracle (queries/llm.py _QUANT) multiply by this before flooring.
+# oracle (queries/llm.py _quant) multiply by this before flooring.
 QUANT_SCALE = 1000
 
 

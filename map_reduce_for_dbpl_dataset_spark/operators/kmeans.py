@@ -20,8 +20,9 @@ Scale: per iteration —
 - update: posexplode to (cluster, dim, val) then ONE partial-agg
   groupBy over K*dim cells and a K-row rebuild. The classic
   MapReduce k-means, K*dim tiny vs corpus.
-Fixed small iteration counts keep lineage shallow (no checkpoint);
-unbounded fixpoints use the localCheckpoint pattern in graph.py.
+Each iteration ends in an eager localCheckpoint of the K-row
+centroid table, so the lineage stays one iteration deep and the
+trained codebook's consumers never re-run training.
 """
 
 from __future__ import annotations

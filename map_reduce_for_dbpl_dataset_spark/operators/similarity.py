@@ -29,8 +29,14 @@ by id, then 0 (seeded) or KMEANS_ITERS (trained) Lloyd rounds.
 semdedup's ``centroid_ids`` is that construction with zero rounds;
 PQ's per-subspace books come from _pq_codebook over the same trainer.
 
-Every per-query ranking is _top_k_by_cos: top_k_per_group's
-row_number plan (operators/topk.py) with a (score, id) tie-break.
+One scorer: every vector is prepared by _prepared (quantize, exact
+squared norm), and the per-query operators — brute_force_topk,
+hard_negative_topk, lsh_ann_topk and ivf_topk's final ranking — score
+through _cos_top_k: a broadcast join of the query set on the caller's
+condition, cosine_q, the k best per query (top_k_per_group's
+row_number plan, operators/topk.py, with a (cos, neighbor_id)
+tie-break) and cos_micro.  queries/llm.py holds the same pieces in
+DuckDB SQL.
 """
 
 from __future__ import annotations
@@ -120,17 +126,56 @@ def _bucket_expr(qvec: Column, dim: int) -> Column:
     return out
 
 
-def _top_k_by_cos(scored: DataFrame, k: int) -> DataFrame:
-    """k nearest neighbors per query_id: cos desc, neighbor_id asc —
-    top_k_per_group's row_number plan (WindowGroupLimit below the
-    exchange), with the window written as SQL text."""
+_COS_MICRO = "CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro"
+
+
+def _prepared(df: DataFrame, vec_col: str, *cols: str) -> DataFrame:
+    """``cols`` (SQL expressions: the id, then any carried columns),
+    ``_q`` — ``vec_col`` quantized at QUANT_SCALE — and ``_n2``, its
+    exact squared norm: the one preparation every quantized-cosine
+    operator scores from.
+
+    Column references are F.expr(name): F.col captures its Python call
+    site with Py4J round trips on every call, a parse does not."""
+    return df.select(*map(F.expr, cols), quantize(F.expr(vec_col)).alias("_q")).withColumn(
+        "_n2", norm2_q(F.expr("_q"))
+    )
+
+
+def _cos_top_k(
+    corpus: DataFrame,
+    queries: DataFrame,
+    on: str,
+    k: int,
+    out: tuple[str, ...] = ("query_id", "neighbor_id"),
+) -> DataFrame:
+    """The one quantized-cosine scorer: ``corpus`` (neighbor_id, _q,
+    _n2, ...) joins the BROADCAST ``queries`` (query_id, _q, _n2, ...),
+    both from _prepared, on the SQL condition ``on``, in which ``c.``
+    and ``q.`` qualify a corpus and a query column; each pair scores
+    cosine_q, the k best per query_id (cos desc, neighbor_id asc) are
+    kept, and the result is ``out`` plus cos_micro.  The ranking is
+    top_k_per_group's row_number plan (operators/topk.py), with the
+    window written as SQL text: the corpus never shuffles before the
+    per-query WindowGroupLimit.  A condition with an equality between
+    the sides plans a broadcast hash join, any other a broadcast
+    nested-loop join.
+
+    Degenerate inputs match the oracle (tests/test_curation_inputs.py):
+    an empty corpus or query set gives no rows; a NULL vector scores a
+    NULL cosine, which ranks after every real neighbour (DESC puts
+    NULLs last), so a NULL query keeps its k lowest neighbour ids with
+    a NULL cos_micro."""
+    scored = corpus.alias("c").join(F.broadcast(queries.alias("q")), F.expr(on)).withColumn(
+        "cos", cosine_q(dot_q(F.expr("q._q"), F.expr("c._q")), F.expr("q._n2"), F.expr("c._n2"))
+    )
     return (
         scored.selectExpr(
             "*",
             "row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS _rn",
         )
         .filter(f"_rn <= {k}")
-        .drop("_rn")
+        .selectExpr(*out, _COS_MICRO)
     )
 
 
@@ -144,29 +189,12 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k neighbors (quantized cosine) of each query vector.
     Returns (query_id, neighbor_id, cos_micro) with deterministic
-    (cos desc, neighbor_id asc) ranking.
-
-    Degenerate inputs match the oracle (tests/test_curation_inputs.py):
-    an empty corpus or query set gives no rows; a NULL vector scores a
-    NULL cosine, which ranks after every real neighbour (DESC puts
-    NULLs last), so a NULL query keeps its k lowest neighbour ids with
-    a NULL cos_micro.
-
-    Column references are F.expr(name): F.col captures its Python call
-    site with Py4J round trips on every call, a parse does not."""
-    c = corpus.select(
-        F.expr(f"{id_col} AS neighbor_id"), quantize(F.expr(vec_col)).alias("_cq")
-    ).withColumn("_cn2", norm2_q(F.expr("_cq")))
-    q = queries.select(
-        F.expr(f"{query_id_col} AS query_id"), quantize(F.expr(vec_col)).alias("_qq")
-    ).withColumn("_qn2", norm2_q(F.expr("_qq")))
-    scored = (
-        c.join(F.broadcast(q), F.expr("neighbor_id != query_id"))
-        .withColumn("_dot", dot_q(F.expr("_qq"), F.expr("_cq")))
-        .withColumn("cos", cosine_q(F.expr("_dot"), F.expr("_qn2"), F.expr("_cn2")))
-    )
-    return _top_k_by_cos(scored, k).selectExpr(
-        "query_id", "neighbor_id", "CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro"
+    (cos desc, neighbor_id asc) ranking (_cos_top_k)."""
+    return _cos_top_k(
+        _prepared(corpus, vec_col, f"{id_col} AS neighbor_id"),
+        _prepared(queries, vec_col, f"{query_id_col} AS query_id"),
+        "neighbor_id != query_id",
+        k,
     )
 
 
@@ -192,26 +220,12 @@ def hard_negative_topk(
     the exchange.  Returns (query_id, query_label, neighbor_id,
     neighbor_label, cos_micro) with deterministic (cos desc,
     neighbor_id asc) ranking."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        quantize(F.col(vec_col)).alias("_cq"),
-    ).withColumn("_cn2", norm2_q(F.col("_cq")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        quantize(F.col(vec_col)).alias("_qq"),
-    ).withColumn("_qn2", norm2_q(F.col("_qq")))
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_label") != F.col("query_label"))
-        .withColumn("cos", cosine_q(dot_q(F.col("_qq"), F.col("_cq")), F.col("_qn2"), F.col("_cn2")))
-    )
-    return _top_k_by_cos(scored, k).select(
-        "query_id",
-        "query_label",
-        "neighbor_id",
-        "neighbor_label",
-        F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro"),
+    return _cos_top_k(
+        _prepared(corpus, vec_col, f"{id_col} AS neighbor_id", f"{label_col} AS neighbor_label"),
+        _prepared(queries, vec_col, f"{id_col} AS query_id", f"{label_col} AS query_label"),
+        "neighbor_label != query_label",
+        k,
+        ("query_id", "query_label", "neighbor_id", "neighbor_label"),
     )
 
 
@@ -240,9 +254,9 @@ def embedding_near_pairs(
     # (measured 68 s -> ~8 s at the sf1 point; rationale in
     # operators/pairs.py)
     c = spread_for_pair_join(
-        corpus.select(F.col(id_col).alias("_id"), quantize(F.col(vec_col)).alias("_q"))
-        .withColumn("_n2", norm2_q(F.col("_q")))
-        .withColumn("bucket", _bucket_expr(F.col("_q"), dim)),
+        _prepared(corpus, vec_col, f"{id_col} AS _id").withColumn(
+            "bucket", _bucket_expr(F.expr("_q"), dim)
+        ),
         "bucket",
     )
     a = c.select(F.col("_id").alias("id_a"), F.col("_q").alias("_qa"), F.col("_n2").alias("_na"), "bucket")
@@ -252,7 +266,7 @@ def embedding_near_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("cos", cosine_q(dot_q(F.col("_qa"), F.col("_qb")), F.col("_na"), F.col("_nb")))
         .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro"))
+        .selectExpr("id_a", "id_b", _COS_MICRO)
     )
 
 
@@ -337,12 +351,8 @@ def _semdedup_corpus(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     happens BEFORE the assignment/pair pipeline: the pair stage
     replicates these vectors PAIR_SALT+1 ways through its salted
     shuffle (guide §2.3; bound + guard at _narrow_q32)."""
-    return (
-        corpus.select(
-            F.col(id_col).alias("_id"), quantize(F.col(vec_col)).alias("_q")
-        )
-        .withColumn("_n2", norm2_q(F.col("_q")))
-        .withColumn("_q", _narrow_q32(F.col("_q"), F.col("_n2")))
+    return _prepared(corpus, vec_col, f"{id_col} AS _id").withColumn(
+        "_q", _narrow_q32(F.col("_q"), F.col("_n2"))
     )
 
 
@@ -417,24 +427,15 @@ def lsh_ann_topk(
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's hyperplane
     bucket; exact quantized cosine ranks within the bucket."""
-    c = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), quantize(F.col(vec_col)).alias("_cq"))
-        .withColumn("_cn2", norm2_q(F.col("_cq")))
-        .withColumn("bucket", _bucket_expr(F.col("_cq"), dim))
-    )
-    q = (
-        queries.select(F.col(query_id_col).alias("query_id"), quantize(F.col(vec_col)).alias("_qq"))
-        .withColumn("_qn2", norm2_q(F.col("_qq")))
-        .withColumn("bucket", _bucket_expr(F.col("_qq"), dim))
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("_dot", dot_q(F.col("_qq"), F.col("_cq")))
-        .withColumn("cos", cosine_q(F.col("_dot"), F.col("_qn2"), F.col("_cn2")))
-    )
-    return _top_k_by_cos(scored, k).select(
-        "query_id", "neighbor_id", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro")
+    return _cos_top_k(
+        _prepared(corpus, vec_col, f"{id_col} AS neighbor_id").withColumn(
+            "bucket", _bucket_expr(F.expr("_q"), dim)
+        ),
+        _prepared(queries, vec_col, f"{query_id_col} AS query_id").withColumn(
+            "bucket", _bucket_expr(F.expr("_q"), dim)
+        ),
+        "c.bucket = q.bucket AND neighbor_id != query_id",
+        k,
     )
 
 
@@ -475,8 +476,7 @@ def ivf_topk(
 
     def nearest_cells(df: DataFrame, idc: str, out_id: str, n: int) -> DataFrame:
         scored = (
-            df.select(F.col(idc).alias(out_id), quantize(F.col(vec_col)).alias("_q"))
-            .withColumn("_n2", norm2_q(F.col("_q")))
+            _prepared(df, vec_col, f"{idc} AS {out_id}")
             .join(F.broadcast(cents))
             .withColumn("_cos", cosine_q(dot_q(F.col("_q"), F.col("_kq")), F.col("_n2"), F.col("_kn2")))
         )
@@ -484,19 +484,11 @@ def ivf_topk(
             scored, [out_id], [F.desc("_cos"), F.asc("_cell")], n, rank_col="_rn"
         ).select(out_id, "_cell", "_q", "_n2")
 
-    cells = nearest_cells(corpus, id_col, "neighbor_id", 1)
-    probes = nearest_cells(queries, query_id_col, "query_id", n_probe)
-    scored = (
-        cells.withColumnRenamed("_q", "_cq").withColumnRenamed("_n2", "_cn2")
-        .join(
-            F.broadcast(probes.withColumnRenamed("_q", "_qq").withColumnRenamed("_n2", "_qn2")),
-            "_cell",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", cosine_q(dot_q(F.col("_qq"), F.col("_cq")), F.col("_qn2"), F.col("_cn2")))
-    )
-    return _top_k_by_cos(scored, k).select(
-        "query_id", "neighbor_id", F.floor(F.col("cos") * 1e6).cast("long").alias("cos_micro")
+    return _cos_top_k(
+        nearest_cells(corpus, id_col, "neighbor_id", 1),
+        nearest_cells(queries, query_id_col, "query_id", n_probe),
+        "c._cell = q._cell AND neighbor_id != query_id",
+        k,
     )
 
 

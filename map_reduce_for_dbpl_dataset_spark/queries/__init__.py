@@ -59,12 +59,17 @@ _GREEN_FLAGS = ("rows_match", "schema_match", "hash_match")
 # oracle is edited.
 _CHANGED: list[str] = [
     "dblp_coauthor_components",
+    "llm_ann_brute_topk",
     "llm_ann_ivf",
     "llm_ann_ivf_trained",
+    "llm_ann_lsh_topk",
     "llm_ann_pq",
     "llm_ann_pq_trained",
     "llm_cluster_top_terms",
+    "llm_decontaminate_semantic",
     "llm_dedup_clusters",
+    "llm_dedup_embedding",
+    "llm_hard_negatives",
     "llm_kmeans",
     "llm_leakage_free_split",
     "llm_semdedup",

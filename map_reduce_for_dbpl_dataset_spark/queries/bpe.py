@@ -37,15 +37,15 @@ alphabet, binary collation in both engines).
 
 Degenerate corpora (vocabulary exhausts all merges before round R,
 i.e. no adjacent pair remains anywhere): the trainer STOPS the round
-loop on the first empty best-pair table (one 1-row driver check per
-round over the K-row table — the operators/graph.py fixpoint
-pattern), so downstream cross joins only ever see non-empty rule
-rows and the corpus encode degrades to fewer rules instead of
-silently emptying (round-5 verdict #5 / ADVICE).  The unrolled-CTE
-oracle keeps the fixed-R shape — on any corpus where merges don't
-exhaust (all fixtures; any corpus with a two-symbol word surviving
-R-1 merges) the two are identical, and the early-stop path is
-covered by a dedicated degenerate-corpus test instead of the oracle.
+loop on the first empty best-pair table (every round is built
+lazily, then ONE driver action over the <= R best-pair rows finds the
+first empty round — _bpe_rounds), so downstream cross joins only
+ever see non-empty rule rows and the corpus encode degrades to fewer
+rules instead of silently emptying (round-5 verdict #5 / ADVICE).
+The unrolled-CTE oracle keeps the fixed-R shape — on any corpus where
+merges don't exhaust (all fixtures; any corpus with a two-symbol word
+surviving R-1 merges) the two are identical, and the early-stop path
+is covered by a dedicated degenerate-corpus test instead of the oracle.
 R itself is sized from a vocabulary budget (BPE_VOCAB_BUDGET below):
 the trainer's knob is "how many symbols may the tokenizer have",
 merges are the derived remainder after the base alphabet.

@@ -369,8 +369,73 @@ SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3 ORDER BY id_a, id_b
 
 
 # --- ANN over embeddings -----------------------------------------------------
-# functions/vectors.py quantize, in DuckDB: the one oracle quantization.
-_QUANT = f"[CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) for x in embedding]"
+# operators/similarity.py's quantized-cosine scorer in DuckDB: one
+# quantization, one squared norm, one prepared-rows CTE, one cosine, one
+# ranked top-k tail and one hyperplane-bucket CTE serve every vector oracle.
+
+
+def _quant(vec: str = "embedding") -> str:
+    """functions/vectors.py quantize of the list ``vec``: the one oracle
+    quantization."""
+    return f"[CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) for x in {vec}]"
+
+
+def _n2(vec: str) -> str:
+    """functions/vectors.py norm2_q of the quantized list ``vec``."""
+    return f"CAST(list_sum([x * x for x in {vec}]) AS BIGINT)"
+
+
+def _prepared_cte(src: str = "embeddings", vec: str = "embedding", carry: str = "") -> str:
+    """operators/similarity.py _prepared: CTE ``n`` holds (vec_id,
+    ``carry`` columns, q, n2) for every row of ``src``."""
+    return f"""q0 AS (SELECT vec_id{carry}, {_quant(vec)} AS q FROM {src}),
+n AS (SELECT *, {_n2("q")} AS n2 FROM q0)"""
+
+
+def _cos(a: str, b: str) -> str:
+    """functions/vectors.py cosine_q of the rows ``a`` and ``b`` (each
+    with q and n2)."""
+    return (
+        f"CAST(list_sum([{a}.q[i] * {b}.q[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)"
+        f" / sqrt(CAST({a}.n2 AS DOUBLE) * CAST({b}.n2 AS DOUBLE))"
+    )
+
+
+def _top_k_tail(k: int, cols: str = "query_id, neighbor_id") -> str:
+    """operators/similarity.py _cos_top_k's ranking over the CTE
+    ``scored`` (query_id, neighbor_id, cos, ...): ``cols`` plus
+    cos_micro of the k best rows per query."""
+    return f"""ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
+  FROM scored
+)
+SELECT {cols}, CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro
+FROM ranked WHERE rn <= {k} ORDER BY query_id, neighbor_id"""
+
+
+_PLANE_ROWS = ",\n    ".join(
+    "({j}, [{coefs}])".format(
+        j=j, coefs=", ".join(str(plane_coef(j, i, EMB_DIM)) for i in range(EMB_DIM))
+    )
+    for j in range(N_PLANES)
+)
+# operators/similarity.py _bucket_expr over the CTE ``n``: ``nb`` is n
+# plus each row's hyperplane bucket.
+_BUCKETS_CTE = f"""planes(j, coefs) AS (
+  SELECT * FROM (VALUES
+    {_PLANE_ROWS}
+  ) AS p(j, coefs)
+),
+dots AS (
+  SELECT n.vec_id, p.j,
+         CAST(list_sum([n.q[i] * p.coefs[i] for i in range(1, {EMB_DIM + 1})]) AS BIGINT) AS d
+  FROM n CROSS JOIN planes p
+),
+buckets AS (
+  SELECT vec_id, sum(CASE WHEN d >= 0 THEN 1 << j ELSE 0 END) AS bucket
+  FROM dots GROUP BY vec_id
+),
+nb AS (SELECT n.*, b.bucket FROM n JOIN buckets b USING (vec_id))"""
 
 
 def q_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,25 +447,13 @@ def q_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_ANN_BRUTE_TOPK = f"""
-WITH q0 AS (SELECT vec_id, {_QUANT} AS q FROM embeddings),
-n AS (
-  SELECT vec_id, q,
-         CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2
-  FROM q0
-),
+WITH {_prepared_cte()},
 scored AS (
-  SELECT qs.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(list_sum([qs.q[i] * c.q[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)
-           / sqrt(CAST(qs.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
+  SELECT qs.vec_id AS query_id, c.vec_id AS neighbor_id, {_cos("qs", "c")} AS cos
   FROM n qs JOIN n c ON c.vec_id != qs.vec_id
   WHERE qs.vec_id < {N_QUERY_VECS}
 ),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro
-FROM ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id
+{_top_k_tail(5)}
 """
 
 
@@ -424,27 +477,14 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_HARD_NEGATIVES = f"""
-WITH q0 AS (SELECT vec_id, label, {_QUANT} AS q FROM embeddings),
-n AS (
-  SELECT vec_id, label, q,
-         CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2
-  FROM q0
-),
+WITH {_prepared_cte(carry=", label")},
 scored AS (
   SELECT qs.vec_id AS query_id, qs.label AS query_label,
-         c.vec_id AS neighbor_id, c.label AS neighbor_label,
-         CAST(list_sum([qs.q[i] * c.q[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)
-           / sqrt(CAST(qs.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
+         c.vec_id AS neighbor_id, c.label AS neighbor_label, {_cos("qs", "c")} AS cos
   FROM n qs JOIN n c ON c.label != qs.label
   WHERE qs.vec_id < {N_QUERY_VECS}
 ),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-  FROM scored
-)
-SELECT query_id, query_label, neighbor_id, neighbor_label,
-       CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro
-FROM ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id
+{_top_k_tail(5, "query_id, query_label, neighbor_id, neighbor_label")}
 """
 
 
@@ -456,46 +496,15 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "neighbor_id")
 
 
-def _ann_lsh_sql() -> str:
-    plane_rows = ",\n    ".join(
-        "({j}, [{coefs}])".format(
-            j=j, coefs=", ".join(str(plane_coef(j, i, EMB_DIM)) for i in range(EMB_DIM))
-        )
-        for j in range(N_PLANES)
-    )
-    return f"""
-WITH q0 AS (SELECT vec_id, {_QUANT} AS q FROM embeddings),
-n AS (
-  SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
-),
-planes(j, coefs) AS (
-  SELECT * FROM (VALUES
-    {plane_rows}
-  ) AS p(j, coefs)
-),
-dots AS (
-  SELECT n.vec_id, p.j,
-         CAST(list_sum([n.q[i] * p.coefs[i] for i in range(1, {EMB_DIM + 1})]) AS BIGINT) AS d
-  FROM n CROSS JOIN planes p
-),
-buckets AS (
-  SELECT vec_id, sum(CASE WHEN d >= 0 THEN 1 << j ELSE 0 END) AS bucket
-  FROM dots GROUP BY vec_id
-),
-nb AS (SELECT n.*, b.bucket FROM n JOIN buckets b USING (vec_id)),
+SQL_ANN_LSH_TOPK = f"""
+WITH {_prepared_cte()},
+{_BUCKETS_CTE},
 scored AS (
-  SELECT qs.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(list_sum([qs.q[i] * c.q[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)
-           / sqrt(CAST(qs.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
+  SELECT qs.vec_id AS query_id, c.vec_id AS neighbor_id, {_cos("qs", "c")} AS cos
   FROM nb qs JOIN nb c ON c.bucket = qs.bucket AND c.vec_id != qs.vec_id
   WHERE qs.vec_id < {N_QUERY_VECS}
 ),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro
-FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id
+{_top_k_tail(3)}
 """
 
 
@@ -544,38 +553,12 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-def _dedup_embedding_sql() -> str:
-    plane_rows = ",\n    ".join(
-        "({j}, [{coefs}])".format(
-            j=j, coefs=", ".join(str(plane_coef(j, i, EMB_DIM)) for i in range(EMB_DIM))
-        )
-        for j in range(N_PLANES)
-    )
-    return f"""
+SQL_DEDUP_EMBEDDING = f"""
 WITH {_AUGMENTED_CTE},
-q0 AS (SELECT vec_id, [CAST(floor(x * {QUANT_SCALE}) AS BIGINT) for x in emb] AS q FROM corpus),
-n AS (
-  SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
-),
-planes(j, coefs) AS (
-  SELECT * FROM (VALUES
-    {plane_rows}
-  ) AS p(j, coefs)
-),
-dots AS (
-  SELECT n.vec_id, p.j,
-         CAST(list_sum([n.q[i] * p.coefs[i] for i in range(1, {EMB_DIM + 1})]) AS BIGINT) AS d
-  FROM n CROSS JOIN planes p
-),
-buckets AS (
-  SELECT vec_id, sum(CASE WHEN d >= 0 THEN 1 << j ELSE 0 END) AS bucket
-  FROM dots GROUP BY vec_id
-),
-nb AS (SELECT n.*, b.bucket FROM n JOIN buckets b USING (vec_id)),
+{_prepared_cte("corpus", "emb")},
+{_BUCKETS_CTE},
 pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         CAST(list_sum([a.q[i] * b.q[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)
-           / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) AS cos
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cos("a", "b")} AS cos
   FROM nb a JOIN nb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 )
 SELECT id_a, id_b, CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro
@@ -853,8 +836,8 @@ ORACLE_SQL = {
     "llm_dedup_simhash": _simhash_sql(),
     "llm_ann_brute_topk": SQL_ANN_BRUTE_TOPK,
     "llm_hard_negatives": SQL_HARD_NEGATIVES,
-    "llm_ann_lsh_topk": _ann_lsh_sql(),
-    "llm_dedup_embedding": _dedup_embedding_sql(),
+    "llm_ann_lsh_topk": SQL_ANN_LSH_TOPK,
+    "llm_dedup_embedding": SQL_DEDUP_EMBEDDING,
     "llm_fingerprint_rolling": SQL_FINGERPRINT_ROLLING,
     "llm_text_stats": SQL_TEXT_STATS,
     "llm_quality_pandas_udf": SQL_QUALITY_PANDAS_UDF,

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import hash60, tokens, word_shingles
-from ..functions.vectors import QUANT_SCALE, quantize
+from ..functions.vectors import quantize
 from ..operators.kmeans import KMEANS_ITERS, kmeans_train
 from ..operators.pairs import _salted_pair_join, spread_for_pair_join
 from ..operators.similarity import _pq_codebook, ivf_topk, pq_adc_topk
@@ -31,14 +31,18 @@ from ..sources.parquet import load_table
 from .llm import (
     _AUGMENTED_CTE,
     _NORM_SQL,
-    _QUANT,
     _SH_CTE,
     _TOKENS_SQL,
     EMB_DIM,
     N_QUERY_VECS,
     _augmented_embeddings,
+    _cos,
     _docs_shingled,
+    _n2,
     _norm_sql,
+    _prepared_cte,
+    _quant,
+    _top_k_tail,
 )
 
 # --- decontamination ---------------------------------------------------------
@@ -398,7 +402,7 @@ def _kmeans_prelude(
     )
     return f"""{prefix}q AS (
   SELECT vec_id AS vid,
-         [CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) for x in {vec}] AS q
+         {_quant(vec)} AS q
   FROM embeddings{src_where}
 ),
 {prefix}c0 AS ({c0_body}){lloyd}"""
@@ -443,7 +447,17 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_ivf(spark, sf_dir, IVF_CENTROID_IDS, 0)
 
 
-_IVF_DOT = f"CAST(list_sum([a.q[i] * c.kq[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)"
+def _cell_rank_cte(rounds: int) -> str:
+    """Every row of the CTE ``n`` against the k-means prelude's codebook
+    kc{rounds}: ``cell_rank`` holds (vec_id, q, n2, cell, rn), rn
+    ranking the cells by cosine desc, lower cell first — ivf_topk's
+    nearest_cells and semdedup's assignment (operators/similarity.py)."""
+    return f"""cents AS (SELECT cluster AS cell, c AS q, {_n2("c")} AS n2 FROM kc{rounds}),
+cell_rank AS (
+  SELECT a.vec_id, a.q, a.n2, c.cell,
+         row_number() OVER (PARTITION BY a.vec_id ORDER BY {_cos("a", "c")} DESC, c.cell ASC) AS rn
+  FROM n a CROSS JOIN cents c
+)"""
 
 
 def _ivf_sql(ids: list[int], rounds: int) -> str:
@@ -451,42 +465,18 @@ def _ivf_sql(ids: list[int], rounds: int) -> str:
     table after ``rounds`` Lloyd rounds is the IVF codebook."""
     return f"""
 WITH {_kmeans_prelude(ids=ids, rounds=rounds)},
-q0 AS (
-  SELECT vec_id, {_QUANT} AS q FROM embeddings
-),
-n AS (
-  SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
-),
-cents AS (
-  SELECT cluster AS cell, c AS kq,
-         CAST(list_sum([x * x for x in c]) AS BIGINT) AS kn2
-  FROM kc{rounds}
-),
-assign0 AS (
-  SELECT a.vec_id, a.q, a.n2, c.cell,
-         {_IVF_DOT} / sqrt(CAST(a.n2 AS DOUBLE) * CAST(c.kn2 AS DOUBLE)) AS cos,
-         row_number() OVER (PARTITION BY a.vec_id
-                            ORDER BY {_IVF_DOT} / sqrt(CAST(a.n2 AS DOUBLE) * CAST(c.kn2 AS DOUBLE)) DESC,
-                                     c.cell ASC) AS rn
-  FROM n a CROSS JOIN cents c
-),
-cells AS (SELECT vec_id AS neighbor_id, q, n2, cell FROM assign0 WHERE rn = 1),
+{_prepared_cte()},
+{_cell_rank_cte(rounds)},
+cells AS (SELECT vec_id AS neighbor_id, q, n2, cell FROM cell_rank WHERE rn = 1),
 probes AS (
-  SELECT vec_id AS query_id, q, n2, cell FROM assign0
+  SELECT vec_id AS query_id, q, n2, cell FROM cell_rank
   WHERE rn <= {IVF_N_PROBE} AND vec_id < {N_QUERY_VECS}
 ),
 scored AS (
-  SELECT p.query_id, c.neighbor_id,
-         CAST(list_sum([p.q[i] * c.q[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)
-           / sqrt(CAST(p.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
+  SELECT p.query_id, c.neighbor_id, {_cos("p", "c")} AS cos
   FROM probes p JOIN cells c ON c.cell = p.cell AND c.neighbor_id != p.query_id
 ),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro
-FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id
+{_top_k_tail(3)}
 """
 
 
@@ -550,7 +540,7 @@ def _pq_sql(rounds: int) -> str:
     return f"""
 WITH {preludes},
 q0 AS (
-  SELECT vec_id, {_QUANT} AS q FROM embeddings
+  SELECT vec_id, {_quant()} AS q FROM embeddings
 ),
 ms AS (SELECT unnest([{", ".join(str(m) for m in range(PQ_N_SUB))}]) AS m),
 subs AS (
@@ -1423,34 +1413,17 @@ def _semdedup_sql(
     prepends data-dependent scalar CTEs (the _scaled variant's K/m)
     that the ``prelude_kwargs`` overrides (src_pred / c0_sql) may
     reference."""
-    dot = "CAST(list_sum([{a}.q[i] * {b}.q[i] for i in range(1, %d)]) AS DOUBLE)" % (
-        EMB_DIM + 1
-    )
-    cos = dot + " / sqrt(CAST({a}.n2 AS DOUBLE) * CAST({b}.n2 AS DOUBLE))"
     return f"""
 WITH {extra_cte}{_kmeans_prelude(ids=ids, rounds=rounds, **prelude_kwargs)},
-cents AS (
-  SELECT cluster AS cell, c AS q,
-         CAST(list_sum([x * x for x in c]) AS BIGINT) AS n2
-  FROM kc{rounds}
-),
 {_AUGMENTED_CTE},
-qs AS (SELECT vec_id, [CAST(floor(x * {QUANT_SCALE}) AS BIGINT) for x in emb] AS q FROM corpus),
-n AS (SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM qs),
-assigned AS (
-  SELECT vec_id, q, n2, cell AS cluster FROM (
-    SELECT a.vec_id, a.q, a.n2, c.cell,
-           row_number() OVER (
-             PARTITION BY a.vec_id
-             ORDER BY {cos.format(a='a', b='c')} DESC, c.cell ASC) AS rn
-    FROM n a CROSS JOIN (SELECT cell, q, n2 FROM cents) c)
-  WHERE rn = 1
-),
+{_prepared_cte("corpus", "emb")},
+{_cell_rank_cte(rounds)},
+assigned AS (SELECT vec_id, q, n2, cell AS cluster FROM cell_rank WHERE rn = 1),
 dominated AS (
   SELECT DISTINCT hi.vec_id
   FROM assigned lo JOIN assigned hi
     ON lo.cluster = hi.cluster AND lo.vec_id < hi.vec_id
-  WHERE {cos.format(a='lo', b='hi')} >= {SEMDEDUP_THRESHOLD}
+  WHERE {_cos("lo", "hi")} >= {SEMDEDUP_THRESHOLD}
 )
 SELECT a.vec_id, a.cluster, d.vec_id IS NULL AS kept
 FROM assigned a LEFT JOIN dominated d ON a.vec_id = d.vec_id
@@ -1633,12 +1606,7 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DECONTAMINATE_SEMANTIC = f"""
-WITH q0 AS (
-  SELECT vec_id, {_QUANT} AS q FROM embeddings
-),
-n AS (
-  SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
-),
+WITH {_prepared_cte()},
 evalv AS (SELECT * FROM n WHERE vec_id < {N_QUERY_VECS}),
 train AS (
   SELECT * FROM n WHERE vec_id >= {N_QUERY_VECS}
@@ -1646,9 +1614,7 @@ train AS (
   SELECT vec_id + 400000, q, n2 FROM n WHERE vec_id < {DECON_SEM_PLANTS}
 ),
 scored AS (
-  SELECT e.vec_id, t.vec_id AS nid,
-         CAST(list_sum([e.q[i] * t.q[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)
-           / sqrt(CAST(e.n2 AS DOUBLE) * CAST(t.n2 AS DOUBLE)) AS cos
+  SELECT e.vec_id, t.vec_id AS nid, {_cos("e", "t")} AS cos
   FROM evalv e CROSS JOIN train t
 ),
 ranked AS (
@@ -2206,7 +2172,7 @@ def q_embed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_EMBED_CLASSIFIER = f"""
 WITH q AS (
   SELECT vec_id, label,
-         {_QUANT} AS q
+         {_quant()} AS q
   FROM embeddings
 ),
 tr AS (SELECT * FROM q WHERE vec_id % {CLS_HOLDOUT_MOD} != 0),

@@ -54,13 +54,20 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(app_id)
 
 
+def default_cpus() -> int:
+    """Local cores of a session built without ``cpus``:
+    ``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run
+    on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "mrdbpl-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     return (

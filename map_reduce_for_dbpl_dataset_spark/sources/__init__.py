@@ -1,3 +1,3 @@
-from .parquet import FIXTURE_TABLES, load_table, load_tables, publications
+from .parquet import FIXTURE_TABLES, load_table, publications
 
-__all__ = ["FIXTURE_TABLES", "load_table", "load_tables", "publications"]
+__all__ = ["FIXTURE_TABLES", "load_table", "publications"]

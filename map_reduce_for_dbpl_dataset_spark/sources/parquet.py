@@ -185,12 +185,6 @@ def _nanos_normalized(path: str, schema) -> str:
     return cache
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = FIXTURE_TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def publications(
     spark: SparkSession, path: str | None = None, sf_dir: str | None = None
 ) -> DataFrame:

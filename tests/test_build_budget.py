@@ -1,11 +1,12 @@
-"""Build budget of the llm_curation operators and of the
-connected-components queries.
+"""Build budget of the llm_curation and nearest-neighbour operators
+and of the connected-components queries.
 
 Building a query costs Py4J round trips between Python and the JVM:
 every Column operator and every ``F.col`` is one or more calls, where
 a SQL-text expression is parsed in one.  The three operators the llm_curation
 benchmark times are built mostly from SQL text; the counts below pin
-that, with ~25% headroom.  Only the building thread's calls count:
+that, and the build cost of the other nearest-neighbour operators,
+with ~25% headroom.  Only the building thread's calls count:
 job-progress traffic from other threads varies run to run.
 
 The prefix-filtered Jaccard join also reads the session's persisted
@@ -32,12 +33,18 @@ from pyspark import StorageLevel
 from map_reduce_for_dbpl_dataset_spark import queries as registry
 from map_reduce_for_dbpl_dataset_spark.queries.llm import _docs_shingled
 
-# Py4J round trips of one warm build at the suite's sf dir (measured
-# 256, 263 and 315), plus ~25%.
+# Py4J round trips of one warm build at the suite's sf dir, plus ~25%:
+# measured 256, 263 and 313 for the three llm_curation operators; 347,
+# 6579 and 1087 for the other callers of the quantized-cosine scorer
+# (operators/similarity.py _cos_top_k) — LSH builds its hyperplane
+# buckets from 8 x 64 Column literals per side (_bucket_expr).
 ROUND_TRIP_BUDGET = {
     "llm_text_stats": 320,
     "llm_ngram_jaccard_prefix": 330,
     "llm_ann_brute_topk": 395,
+    "llm_hard_negatives": 435,
+    "llm_ann_lsh_topk": 8225,
+    "llm_ann_ivf": 1360,
 }
 
 # Spark jobs of one warm build at the suite's sf dir (the same at

@@ -1,7 +1,10 @@
-"""The llm_curation operators on inputs the fixtures never produce.
+"""The llm_curation operators and the nearest-neighbour operators on
+inputs the fixtures never produce.
 
-``llm_text_stats``, ``llm_ngram_jaccard_prefix`` and
-``llm_ann_brute_topk`` run against their DuckDB oracles on
+``llm_text_stats``, ``llm_ngram_jaccard_prefix`` and every caller of
+operators/similarity.py's one quantized-cosine scorer
+(``llm_ann_brute_topk``, ``llm_hard_negatives``, ``llm_ann_lsh_topk``,
+``llm_ann_ivf``) run against their DuckDB oracles on
 - an empty ``documents``/``embeddings`` pair;
 - the suite's tables plus one row whose ``text`` and ``embedding`` are
   NULL;
@@ -27,7 +30,14 @@ from map_reduce_for_dbpl_dataset_spark import queries as reg
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 from check import canon_pandas, digest_pandas  # noqa: E402
 
-OPS = ("llm_text_stats", "llm_ngram_jaccard_prefix", "llm_ann_brute_topk")
+OPS = (
+    "llm_text_stats",
+    "llm_ngram_jaccard_prefix",
+    "llm_ann_brute_topk",
+    "llm_hard_negatives",
+    "llm_ann_lsh_topk",
+    "llm_ann_ivf",
+)
 TABLES = ("documents", "embeddings")
 
 

@@ -15,12 +15,13 @@ catch, so the audit's exit code is asserted here, CI-style.
 from __future__ import annotations
 
 import hashlib
-import os
 import subprocess
 import sys
 from pathlib import Path
 
 import pyspark
+
+from map_reduce_for_dbpl_dataset_spark.session import default_cpus
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -29,9 +30,10 @@ def _audit_source_digest() -> str:
     """Digest of every input that can change the audit's outcome: the
     whole query/operator package, the auditor itself, the entry module,
     the committed report, AND the plan-shaping environment — the
-    installed pyspark version and ``SPARK_GRAFT_CPUS`` (which sets the
-    session's shuffle-partition count, so hashpartitioning nodes in the
-    plan text carry it).  Round-9 ADVICE: without the environment
+    installed pyspark version and the session's core count
+    (session.default_cpus: ``SPARK_GRAFT_CPUS``, else the host's usable
+    CPUs), which sets the shuffle-partition count, so hashpartitioning
+    nodes in the plan text carry it.  Round-9 ADVICE: without the environment
     inputs, a cached green from one environment silently skipped the
     gate in another where a fresh run would fail.  (The planned-against
     sf0.01 testdata is immutable, so it is not part of the key.)"""
@@ -40,7 +42,7 @@ def _audit_source_digest() -> str:
     # combinations cannot concatenate to the same byte stream (e.g.
     # version "4.1.2" + cpus "32" vs "4.1.23" + "2" — round-10 ADVICE).
     h.update(pyspark.__version__.encode() + b"\0")
-    h.update(os.environ.get("SPARK_GRAFT_CPUS", "32").encode() + b"\0")
+    h.update(str(default_cpus()).encode() + b"\0")
     paths = sorted(
         [
             *(REPO / "map_reduce_for_dbpl_dataset_spark").rglob("*.py"),
