@@ -5,8 +5,11 @@ connected components and PageRank in operators/graph.py /
 queries/dblp.py) — and the one codebook construction of the vector
 operators (operators/similarity.py semdedup, ivf_topk and
 pq_adc_topk consume exactly this kind of centroid table, seeded with
-zero Lloyd rounds or trained with KMEANS_ITERS). No reference counterpart (the reference's closest
-ancestry is its iterative-MapReduce job chain, SURVEY.md §3).
+zero Lloyd rounds or trained with KMEANS_ITERS; PQ encoding and
+llm_embed_classifier's class means and prediction are this module's
+_assign and _update_centroids). No reference counterpart (the
+reference's closest ancestry is its iterative-MapReduce job chain,
+SURVEY.md §3).
 
 Determinism contract: vectors are integer-quantized, distances are
 exact integer squared-L2, centroid updates are integer truncated
@@ -16,13 +19,21 @@ bit-identical to the unrolled-CTE oracle regardless of partitioning.
 
 Scale: per iteration —
 - assignment: broadcast join of the K-row centroid table against the
-  corpus (narrow, no corpus shuffle), argmin via min_by;
+  corpus (narrow, no corpus shuffle), argmin via min(struct);
 - update: posexplode to (cluster, dim, val) then ONE partial-agg
   groupBy over K*dim cells and a K-row rebuild. The classic
   MapReduce k-means, K*dim tiny vs corpus.
 Each iteration ends in an eager localCheckpoint of the K-row
 centroid table, so the lineage stays one iteration deep and the
 trained codebook's consumers never re-run training.
+
+Partition key: with the optional ``key`` column every step trains
+one independent codebook per key value in the same pass (PQ's
+subspaces), and the assignment becomes a broadcast equi-join on it.
+
+NULL vectors: a NULL vector is assigned the lowest cluster (its
+distances are all NULL, which both engines order last) and adds
+nothing to a centroid (the oracle's count(q), not count(*)).
 """
 
 from __future__ import annotations
@@ -48,36 +59,39 @@ def dist2_q(a, b):
     )
 
 
-def _quantized(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(vid, q): the corpus with each vector integer-quantized."""
-    return corpus.select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("q")
-    )
+def _quantized(corpus: DataFrame, id_col: str, vec_col: str, key: str | None = None) -> DataFrame:
+    """(vid, q[, key]): the corpus with each vector integer-quantized."""
+    keys = [key] if key else []
+    return corpus.select(F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("q"), *keys)
 
 
-def _seed_centroids(q: DataFrame, init_ids: Sequence[int]) -> DataFrame:
-    """(cluster, c): the initial centroids, one per seed vector id."""
+def _seed_centroids(q: DataFrame, init_ids: Sequence[int], key: str | None = None) -> DataFrame:
+    """([key, ]cluster, c): one initial centroid per seed id (and key)."""
+    keys = [key] if key else []
     return q.filter(F.col("vid").isin(list(init_ids))).select(
-        F.col("vid").alias("cluster"), F.col("q").alias("c")
+        *keys, F.col("vid").alias("cluster"), F.col("q").alias("c")
     )
 
 
-def _assign(q: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest centroid per vector (exact integer distance, ties to
-    the lower cluster id). The argmin is a PARTIAL-AGGREGABLE
-    min(struct(d2, cluster)) — lexicographic struct ordering gives
-    exactly (d2 asc, cluster asc) — rather than a row_number window:
-    the K-fanned scored table combines map-side instead of sorting
-    corpus*K rows per vid partition. q is functionally dependent on
-    vid, so any_value is deterministic."""
-    scored = q.join(F.broadcast(cents)).withColumn("d2", dist2_q(F.col("q"), F.col("c")))
+def _assign(q: DataFrame, cents: DataFrame, key: str | None = None) -> DataFrame:
+    """Nearest centroid per vector (and key value) — exact integer
+    distance, ties to the lower cluster id.  The argmin is a
+    PARTIAL-AGGREGABLE min(struct(d2, cluster)) — lexicographic struct
+    ordering gives exactly (d2 asc, cluster asc) — rather than a
+    row_number window: the K-fanned scored table combines map-side
+    instead of sorting corpus*K rows per vid partition.  Every other
+    column of ``q`` is functionally dependent on (vid, key) and rides
+    through any_value."""
+    keys = [key] if key else []
+    carried = [c for c in q.columns if c not in ("vid", *keys)]
+    scored = q.join(F.broadcast(cents), key).withColumn("d2", dist2_q(F.col("q"), F.col("c")))
     return (
-        scored.groupBy("vid")
+        scored.groupBy("vid", *keys)
         .agg(
             F.min(F.struct("d2", "cluster")).alias("_b"),
-            F.any_value("q").alias("q"),
+            *[F.any_value(c).alias(c) for c in carried],
         )
-        .select("vid", "q", F.col("_b.cluster").alias("cluster"), F.col("_b.d2").alias("d2"))
+        .select("vid", *keys, *carried, F.col("_b.cluster").alias("cluster"), F.col("_b.d2").alias("d2"))
     )
 
 
@@ -87,15 +101,16 @@ def kmeans_train(
     vec_col: str,
     init_ids: Sequence[int],
     iters: int = KMEANS_ITERS,
+    key: str | None = None,
 ) -> DataFrame:
     """Run `iters` Lloyd iterations from centroids seeded at
-    `init_ids`; returns the quantized centroid table (cluster, c) —
-    the one codebook construction behind similarity.semdedup,
+    `init_ids`; returns the quantized centroid table ([key, ]cluster,
+    c) — the one codebook construction behind similarity.semdedup,
     ivf_topk and pq_adc_topk.  A seeded codebook is this with
     ``iters=0``: the seed rows themselves, built lazily."""
-    q = _quantized(corpus, id_col, vec_col)
+    q = _quantized(corpus, id_col, vec_col, key)
     if iters == 0:
-        return _seed_centroids(q, init_ids)
+        return _seed_centroids(q, init_ids, key)
     # Spread + pin the quantized corpus for the duration of training:
     # every Lloyd iteration re-reads it (assignment + update), the
     # per-iteration centroid checkpoint makes each iteration an
@@ -105,7 +120,7 @@ def kmeans_train(
     # the rescans to one; unpersisted before returning.
     n_shuffle = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     q = q.repartition(n_shuffle).persist()
-    cents = _seed_centroids(q, init_ids)
+    cents = _seed_centroids(q, init_ids, key)
     for _ in range(iters):
         # materialize the K-row table per iteration: each Lloyd step
         # is a natural barrier, and without the cut every DOWNSTREAM
@@ -115,21 +130,22 @@ def kmeans_train(
         # so the checkpoint is free. The pre-checkpoint plan is
         # audited via _update_centroids (tools/plan_audit.py
         # kmeans_iteration[pre-checkpoint]).
-        cents = _update_centroids(_assign(q, cents)).localCheckpoint(eager=True)
+        cents = _update_centroids(_assign(q, cents, key), key).localCheckpoint(eager=True)
     q.unpersist()
     return cents
 
 
-def _update_centroids(assigned: DataFrame) -> DataFrame:
-    """One Lloyd centroid update: posexplode to (cluster, dim, val),
-    ONE partial-agg groupBy over K*dim cells, K-row rebuild."""
-    ex = assigned.select("cluster", F.posexplode("q").alias("dim", "val"))
-    per_dim = ex.groupBy("cluster", "dim").agg(
+def _update_centroids(assigned: DataFrame, key: str | None = None) -> DataFrame:
+    """One Lloyd centroid update: posexplode to ([key, ]cluster, dim,
+    val), ONE partial-agg groupBy over K*dim cells, K-row rebuild."""
+    keys = [key] if key else []
+    ex = assigned.select(*keys, "cluster", F.posexplode("q").alias("dim", "val"))
+    per_dim = ex.groupBy(*keys, "cluster", "dim").agg(
         F.sum("val").alias("s"), F.count(F.lit(1)).alias("n")
     )
     return (
         per_dim.withColumn("cv", F.expr("s div n"))
-        .groupBy("cluster")
+        .groupBy(*keys, "cluster")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "cv"))),

@@ -27,7 +27,9 @@ pq_adc_topk) take one quantized codebook form, built by one
 construction — operators/kmeans.py kmeans_train: the seed rows picked
 by id, then 0 (seeded) or KMEANS_ITERS (trained) Lloyd rounds.
 semdedup's ``centroid_ids`` is that construction with zero rounds;
-PQ's per-subspace books come from _pq_codebook over the same trainer.
+PQ's per-subspace books are the same trainer keyed on the subspace
+index (_pq_codebook: one Lloyd pass trains every subspace), and PQ
+encodes the corpus with k-means' own argmin (kmeans.py _assign).
 
 One scorer: every vector is prepared by _prepared (quantize, exact
 squared norm), and the per-query operators — brute_force_topk,
@@ -45,7 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_q, dot_q, norm2_q, quantize
-from .kmeans import dist2_q, kmeans_train
+from .kmeans import _assign, _quantized, dist2_q, kmeans_train
 from .pairs import _salted_pair_join, spread_for_pair_join
 from .topk import top_k_per_group
 
@@ -108,22 +110,20 @@ def plane_coef(j: int, i: int, dim: int) -> int:
     return ((_LCG_A * (j * dim + i) + _LCG_C) % _LCG_M) % 1001 - 500
 
 
-def _bucket_expr(qvec: Column, dim: int) -> Column:
+def _bucket_expr(qvec: str, dim: int) -> Column:
     """Sign-bit bucket id from N_PLANES hyperplane dot products over
-    the quantized vector — pure codegen arithmetic, no UDF."""
+    the quantized vector column ``qvec`` — pure codegen arithmetic, no
+    UDF, written as one SQL-text expression (one parse, where Column
+    literals cost a Py4J round trip per coefficient)."""
     bits = []
     for j in range(N_PLANES):
-        coefs = F.array(*[F.lit(plane_coef(j, i, dim)) for i in range(dim)])
-        dot = F.aggregate(
-            F.zip_with(qvec, coefs, lambda x, c: x * c),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+        coefs = ", ".join(str(plane_coef(j, i, dim)) for i in range(dim))
+        dot = (
+            f"aggregate(zip_with({qvec}, array({coefs}), (x, c) -> x * c), "
+            "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
         )
-        bits.append(F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+        bits.append(f"CASE WHEN {dot} >= 0 THEN {1 << j} ELSE 0 END")
+    return F.expr(" + ".join(bits))
 
 
 _COS_MICRO = "CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro"
@@ -255,7 +255,7 @@ def embedding_near_pairs(
     # operators/pairs.py)
     c = spread_for_pair_join(
         _prepared(corpus, vec_col, f"{id_col} AS _id").withColumn(
-            "bucket", _bucket_expr(F.expr("_q"), dim)
+            "bucket", _bucket_expr("_q", dim)
         ),
         "bucket",
     )
@@ -382,7 +382,9 @@ def _semdedup_assigned(c: DataFrame, centroids: DataFrame) -> DataFrame:
     IEEE division/sqrt are correctly rounded everywhere).  Cells are
     sorted ascending so numpy's first-max argmax IS the lower-cell
     tie-break; an exact cosine tie between distinct cells requires
-    equal doubles, which both engines then break the same way.
+    equal doubles, which both engines then break the same way.  A NULL
+    vector (NULL ``_n2``) scores a NULL cosine against every cell, which
+    the oracle ranks last, so every cell ties and it takes the lowest.
 
     The K-row collect is a driver scalar of the graph-fixpoint
     class; K is bounded (codebook), never corpus-scale."""
@@ -399,11 +401,14 @@ def _semdedup_assigned(c: DataFrame, centroids: DataFrame) -> DataFrame:
         import pandas as pd
 
         for pdf in batches:
-            q = np.stack(pdf["_q"].to_numpy()).astype(np.int64)  # B x dim
-            dots = q @ ck_t  # B x K, int64 exact
-            n2 = pdf["_n2"].to_numpy().astype(np.float64)
-            cos = dots.astype(np.float64) / np.sqrt(n2[:, None] * kn2[None, :])
-            best = np.argmax(cos, axis=1)  # first max == lowest cell
+            real = pdf["_n2"].notna().to_numpy()
+            best = np.zeros(len(pdf), dtype=np.int64)  # NULL vector: lowest cell
+            if real.any():
+                q = np.stack(pdf["_q"].to_numpy()[real]).astype(np.int64)  # B x dim
+                dots = q @ ck_t  # B x K, int64 exact
+                n2 = pdf["_n2"].to_numpy()[real].astype(np.float64)
+                cos = dots.astype(np.float64) / np.sqrt(n2[:, None] * kn2[None, :])
+                best[real] = np.argmax(cos, axis=1)  # first max == lowest cell
             yield pd.DataFrame(
                 {
                     "_id": pdf["_id"],
@@ -429,10 +434,10 @@ def lsh_ann_topk(
     bucket; exact quantized cosine ranks within the bucket."""
     return _cos_top_k(
         _prepared(corpus, vec_col, f"{id_col} AS neighbor_id").withColumn(
-            "bucket", _bucket_expr(F.expr("_q"), dim)
+            "bucket", _bucket_expr("_q", dim)
         ),
         _prepared(queries, vec_col, f"{query_id_col} AS query_id").withColumn(
-            "bucket", _bucket_expr(F.expr("_q"), dim)
+            "bucket", _bucket_expr("_q", dim)
         ),
         "c.bucket = q.bucket AND neighbor_id != query_id",
         k,
@@ -508,11 +513,12 @@ def pq_adc_topk(
 
     The vector space is split into ``n_sub`` subspaces; each corpus
     subvector is ENCODED as the id of its nearest per-subspace
-    codeword. ``codebook`` is the quantized (m, code, bq) table that
-    _pq_codebook builds with operators/kmeans.py kmeans_train per
-    subspace: seeded (zero Lloyd rounds, llm_ann_pq) or trained
-    (llm_ann_pq_trained) — one construction, one input form.
-    A query never touches corpus vectors: it precomputes a
+    codeword. ``codebook`` is the quantized (m, cluster, c) table
+    _pq_codebook builds: operators/kmeans.py kmeans_train keyed on the
+    subspace index m, seeded (zero Lloyd rounds, llm_ann_pq) or
+    trained (llm_ann_pq_trained) — one construction, one input form.
+    The encoder is k-means' own assignment (kmeans.py _assign, keyed
+    on m).  A query never touches corpus vectors: it precomputes a
     (subspace, code) -> partial-d2 lookup table and scores every
     corpus row as the SUM of n_sub table lookups.
 
@@ -530,48 +536,22 @@ def pq_adc_topk(
     to the lower code, ADC ties to the lower neighbor id —
     bit-identical to the DuckDB oracle."""
 
-    def _subs(df: DataFrame, idc: str, out: str) -> DataFrame:
-        # sub_dim comes from the vector column itself (size/n_sub), so
-        # the operator is dim-agnostic without a driver-side action.
-        # Quantize in a SEPARATE projection (referenced n_sub + 1
-        # times, so CollapseProject keeps it one per-row evaluation):
-        # inlined, the quantize transform would re-run once per
-        # subspace slice inside the explode's array constructor (the
-        # round-21 Generate-planning finding, OPTIMIZATION_r21.md).
-        qdf = df.select(
-            F.col(idc).alias(out), quantize(F.col(vec_col)).alias("_qv")
-        )
-        q = F.col("_qv")
-        sd = (F.size(q) / n_sub).cast("int")
-        parts = F.array(
-            *[
-                F.struct(
-                    F.lit(m).alias("m"),
-                    F.slice(q, sd * m + 1, sd).alias("sq"),
-                )
-                for m in range(n_sub)
-            ]
-        )
-        return qdf.select(out, F.explode(parts).alias("p")).select(
-            out, "p.m", "p.sq"
-        )
+    def subvectors(df: DataFrame, idc: str) -> DataFrame:
+        return _quantized(_pq_slices(df, idc, vec_col, n_sub), idc, "_sv", "m")
 
-    book = codebook.select("m", "code", "bq")
-    codes = (
-        _subs(corpus, id_col, "nid")
-        .join(F.broadcast(book), "m")
-        .withColumn("d2", dist2_q(F.col("sq"), F.col("bq")))
-        .groupBy("nid", "m")
-        .agg(F.min(F.struct("d2", "code")).alias("mn"))
-        .select("nid", "m", F.col("mn.code").alias("code"))
+    codes = _assign(subvectors(corpus, id_col), codebook, "m").select(
+        F.col("vid").alias("nid"), "m", F.col("cluster").alias("code")
     )
-
     lut = (
-        _subs(queries, query_id_col, "query_id")
-        .join(F.broadcast(book), "m")
-        .select("query_id", "m", "code", dist2_q(F.col("sq"), F.col("bq")).alias("d2"))
+        subvectors(queries, query_id_col)
+        .join(F.broadcast(codebook), "m")
+        .select(
+            F.col("vid").alias("query_id"),
+            "m",
+            F.col("cluster").alias("code"),
+            dist2_q(F.col("q"), F.col("c")).alias("d2"),
+        )
     )
-
     scored = (
         codes.join(F.broadcast(lut), ["m", "code"])
         .filter(F.col("nid") != F.col("query_id"))
@@ -583,36 +563,27 @@ def pq_adc_topk(
     ).select("query_id", F.col("nid").alias("neighbor_id"), "adc_d2")
 
 
-def _pq_codebook(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    codeword_ids: list[int],
-    dim: int,
-    n_sub: int,
-    iters: int,
-) -> DataFrame:
-    """The (m, code, bq) codebook pq_adc_topk takes: for each of the
-    ``n_sub`` subspaces, operators/kmeans.py kmeans_train over the
-    raw ``dim // n_sub``-element subvector slices, seeded at
-    ``codeword_ids`` and run for ``iters`` Lloyd rounds (0: the seed
-    subvectors themselves).  Code = the seed's position in
-    ``codeword_ids``.  Slicing commutes with elementwise quantization,
-    so the sub-centroids live in exactly the space the encoder
-    measures distances in."""
-    from functools import reduce
+def _pq_slices(df: DataFrame, id_col: str, vec_col: str, n_sub: int) -> DataFrame:
+    """(id_col, m, _sv): one row per vector and subspace m, ``_sv`` the
+    raw m-th of ``n_sub`` equal slices of ``vec_col``, sized from the
+    vector itself.  Slicing commutes with elementwise quantization, so
+    the codebook and the encoder measure in the same space."""
+    sd = f"CAST(size({vec_col}) / {n_sub} AS INT)"
+    parts = ", ".join(
+        f"named_struct('m', {m}, '_sv', slice({vec_col}, {sd} * {m} + 1, {sd}))"
+        for m in range(n_sub)
+    )
+    return df.selectExpr(id_col, f"inline(array({parts}))")
 
-    sub_dim = dim // n_sub
-    code = F.lit(None).cast("int")
-    for idx, cid in enumerate(codeword_ids):
-        code = F.when(F.col("cluster") == cid, idx).otherwise(code)
-    books = []
-    for m in range(n_sub):
-        sub = corpus.select(
-            id_col, F.slice(vec_col, sub_dim * m + 1, sub_dim).alias(vec_col)
-        )
-        cents = kmeans_train(sub, id_col, vec_col, codeword_ids, iters=iters)
-        books.append(
-            cents.select(F.lit(m).alias("m"), code.alias("code"), F.col("c").alias("bq"))
-        )
-    return reduce(lambda a, b: a.unionAll(b), books)
+
+def _pq_codebook(
+    corpus: DataFrame, id_col: str, vec_col: str, codeword_ids: list[int], n_sub: int, iters: int
+) -> DataFrame:
+    """The (m, cluster, c) codebook pq_adc_topk takes: operators/
+    kmeans.py kmeans_train over the subvector slices keyed on the
+    subspace m, so one Lloyd pass trains every subspace's book, seeded
+    at ``codeword_ids`` and run for ``iters`` rounds (0: the seed
+    subvectors themselves).  A code is its seed's vector id."""
+    return kmeans_train(
+        _pq_slices(corpus, id_col, vec_col, n_sub), id_col, "_sv", codeword_ids, iters, "m"
+    )

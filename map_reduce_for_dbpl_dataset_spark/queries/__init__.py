@@ -69,6 +69,7 @@ _CHANGED: list[str] = [
     "llm_decontaminate_semantic",
     "llm_dedup_clusters",
     "llm_dedup_embedding",
+    "llm_embed_classifier",
     "llm_hard_negatives",
     "llm_kmeans",
     "llm_leakage_free_split",

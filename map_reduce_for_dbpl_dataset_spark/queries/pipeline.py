@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import hash60, tokens, word_shingles
 from ..functions.vectors import quantize
-from ..operators.kmeans import KMEANS_ITERS, kmeans_train
+from ..operators.kmeans import KMEANS_ITERS, _assign, _update_centroids, kmeans_train
 from ..operators.pairs import _salted_pair_join, spread_for_pair_join
 from ..operators.similarity import _pq_codebook, ivf_topk, pq_adc_topk
 from ..operators.topk import top_k_per_group
@@ -350,10 +350,11 @@ _KM_ASSIGN = """
     FROM (SELECT a.vid, a.q, c.cluster, {d2} AS d2 FROM {P}q a CROSS JOIN {P}c{p} c))
   WHERE rn = 1
 )"""
-# one Lloyd centroid update {P}c{t} from the assignment {P}a{t}
+# one Lloyd centroid update {P}c{t} from the assignment {P}a{t}; a
+# NULL vector adds to no count (count(q)), as in operators/kmeans.py
 _KM_UPDATE = """
 {P}pd{t} AS (
-  SELECT cluster, u.i AS dim, sum(q[u.i]) AS s, count(*) AS n
+  SELECT cluster, u.i AS dim, sum(q[u.i]) AS s, count(q) AS n
   FROM {P}a{t} CROSS JOIN LATERAL (SELECT unnest(range(1, {dplus})) AS i) u
   GROUP BY cluster, u.i
 ),
@@ -483,16 +484,16 @@ scored AS (
 # --- PQ / ADC ANN ------------------------------------------------------------
 # Per-subspace codebooks seeded at the 4 vectors after the IVF
 # centroids: llm_ann_pq uses the seed subvectors themselves (zero
-# Lloyd rounds), llm_ann_pq_trained trains each subspace.
+# Lloyd rounds), llm_ann_pq_trained trains every subspace in one keyed
+# pass.  The oracle trains one prelude per subspace and codes by seed
+# position; the seeds ascend, so Spark's seed-id codes rank the same.
 PQ_CODEWORD_IDS = list(range(N_QUERY_VECS + 8, N_QUERY_VECS + 12))
 PQ_N_SUB = 4
 
 
 def _ann_pq(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    book = _pq_codebook(
-        e, "vec_id", "embedding", PQ_CODEWORD_IDS, EMB_DIM, PQ_N_SUB, iters=iters
-    )
+    book = _pq_codebook(e, "vec_id", "embedding", PQ_CODEWORD_IDS, PQ_N_SUB, iters)
     return pq_adc_topk(
         corpus=e,
         queries=e.filter(F.col("vec_id") < N_QUERY_VECS),
@@ -1468,9 +1469,9 @@ ORACLE_SQL["llm_semdedup_scaled"] = _semdedup_sql(
 def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained per-subspace PQ codebook (the third train-then-assign
     composition, completing the set with llm_semdedup_trained and
-    llm_ann_ivf_trained): for each of the PQ_N_SUB subspaces,
-    kmeans_train runs the llm_kmeans Lloyd iterations over that
-    subspace's raw subvector slices seeded at PQ_CODEWORD_IDS
+    llm_ann_ivf_trained): kmeans_train runs the llm_kmeans Lloyd
+    iterations over the raw subvector slices, keyed on the subspace so
+    one pass trains all PQ_N_SUB books, seeded at PQ_CODEWORD_IDS
     (operators/similarity.py _pq_codebook), where llm_ann_pq stops at
     the seeds. Same plan shape: the K*n_sub-row codebook broadcasts
     for encode and LUT build; the corpus never shuffles until the
@@ -2116,54 +2117,30 @@ CLS_HOLDOUT_MOD = 5  # vec_id % 5 == 0 is held out of training
 def q_embed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train on 80% of labeled vectors, score ALL vectors against the
     10 class prototypes.  The prototype is the INTEGER-DIVIDED class
-    mean mu_k = s_k div n_k (elementwise, the operators/kmeans.py
-    centroid convention — Spark `div` ≡ DuckDB `//`, both truncate
-    toward zero), and a document scores as argmin_k |x - mu_k|^2 —
-    exact BIGINT arithmetic with a CORPUS-INDEPENDENT magnitude
-    bound: |f| <= dim * (2*q_max)^2 ~ 2.6e8 regardless of rows per
-    class (round-5 ADVICE: the previous n_k^2-scaled cross-multiplied
-    form overflowed int64 beyond ~1e5 rows/class, contradicting the
-    100 TB framing).  Ties break to the lower class id via the
-    partial-aggregable min(struct) argmin."""
+    mean mu_k = s_k div n_k (elementwise), and a document scores as
+    argmin_k |x - mu_k|^2 — one k-means centroid update with the label
+    as the cluster, then one k-means assignment (operators/kmeans.py
+    _update_centroids and _assign): exact BIGINT arithmetic with a
+    CORPUS-INDEPENDENT magnitude bound, |f| <= dim * (2*q_max)^2 ~
+    2.6e8 regardless of rows per class, and ties to the lower class id
+    via the partial-aggregable min(struct) argmin.  A NULL label is no
+    class; a NULL vector adds to no class mean and predicts the lowest
+    class."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.select("vec_id", "label", quantize(F.col("embedding")).alias("q"))
-    tr = q.filter(F.col("vec_id") % CLS_HOLDOUT_MOD != 0)
-    counts = tr.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
-    sums = (
-        tr.select("label", F.posexplode("q").alias("dim", "val"))
-        .groupBy("label", "dim")
-        .agg(F.sum("val").alias("s"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "s"))),
-                lambda st: st.s,
-            ).alias("s")
+    q = e.select(F.col("vec_id").alias("vid"), "label", quantize(F.col("embedding")).alias("q"))
+    model = _update_centroids(
+        q.filter(f"vid % {CLS_HOLDOUT_MOD} != 0 AND label IS NOT NULL").selectExpr(
+            "label AS cluster", "q"
         )
-    )
-    model = counts.join(sums, "label").select(
-        F.col("label").alias("k"),
-        F.expr("transform(s, si -> si div n)").alias("mu"),
-    )
-    f = F.aggregate(
-        F.zip_with(F.col("q"), F.col("mu"), lambda x, m: (x - m) * (x - m)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
     )
     return (
-        q.join(F.broadcast(model))
-        .withColumn("f", f)
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.struct("f", "k")).alias("_b"),
-            F.any_value("label").alias("label"),
-        )
-        .select(
-            "vec_id",
+        _assign(q, model)
+        .selectExpr(
+            "vid AS vec_id",
             "label",
-            F.col("_b.k").alias("pred"),
-            (F.col("_b.k") == F.col("label")).alias("correct"),
-            (F.col("vec_id") % CLS_HOLDOUT_MOD == 0).alias("holdout"),
+            "cluster AS pred",
+            "cluster = label AS correct",
+            f"vid % {CLS_HOLDOUT_MOD} = 0 AS holdout",
         )
         .orderBy("vec_id")
     )
@@ -2183,7 +2160,7 @@ cell AS (
 sv AS (SELECT label AS k, list(s ORDER BY i) AS s FROM cell GROUP BY label),
 model AS (
   SELECT c.k, [sv.s[i] // c.n for i in range(1, {EMB_DIM} + 1)] AS mu
-  FROM (SELECT label AS k, count(*) AS n FROM tr GROUP BY label) c
+  FROM (SELECT label AS k, count(q) AS n FROM tr GROUP BY label) c
   JOIN sv ON c.k = sv.k
 ),
 scored AS (

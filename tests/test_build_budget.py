@@ -1,5 +1,5 @@
 """Build budget of the llm_curation and nearest-neighbour operators
-and of the connected-components queries.
+and of the iterative queries.
 
 Building a query costs Py4J round trips between Python and the JVM:
 every Column operator and every ``F.col`` is one or more calls, where
@@ -17,8 +17,12 @@ the table from the cache and re-derive shingles from text.
 The connected-components queries launch Spark jobs while they are
 built: each large-star/small-star round runs one checksum action
 (operators/graph.py connected_components_star), and the inputs of the
-rounds run theirs.  Job counts are deterministic for fixed data, so
-the counts below are the measured values, not budgets with headroom.
+rounds run theirs.  k-means training (operators/kmeans.py
+kmeans_train) checkpoints its centroid table once per Lloyd
+iteration; product quantization trains all of its subspaces in those
+same iterations, so ``llm_ann_pq_trained`` costs what ``llm_kmeans``
+does.  Job counts are deterministic for fixed data, so the counts
+below are the measured values, not budgets with headroom.
 """
 
 from __future__ import annotations
@@ -35,15 +39,14 @@ from map_reduce_for_dbpl_dataset_spark.queries.llm import _docs_shingled
 
 # Py4J round trips of one warm build at the suite's sf dir, plus ~25%:
 # measured 256, 263 and 313 for the three llm_curation operators; 347,
-# 6579 and 1087 for the other callers of the quantized-cosine scorer
-# (operators/similarity.py _cos_top_k) — LSH builds its hyperplane
-# buckets from 8 x 64 Column literals per side (_bucket_expr).
+# 339 and 1087 for the other callers of the quantized-cosine scorer
+# (operators/similarity.py _cos_top_k).
 ROUND_TRIP_BUDGET = {
     "llm_text_stats": 320,
     "llm_ngram_jaccard_prefix": 330,
     "llm_ann_brute_topk": 395,
     "llm_hard_negatives": 435,
-    "llm_ann_lsh_topk": 8225,
+    "llm_ann_lsh_topk": 425,
     "llm_ann_ivf": 1360,
 }
 
@@ -52,7 +55,9 @@ ROUND_TRIP_BUDGET = {
 BUILD_JOBS = {
     "dblp_coauthor_components": 48,
     "dblp_coauthor_components_star": 48,
+    "llm_ann_pq_trained": 13,
     "llm_dedup_clusters": 25,
+    "llm_kmeans": 13,
     "llm_leakage_free_split": 28,
 }
 

@@ -1,10 +1,13 @@
 """The llm_curation operators and the nearest-neighbour operators on
 inputs the fixtures never produce.
 
-``llm_text_stats``, ``llm_ngram_jaccard_prefix`` and every caller of
+``llm_text_stats``, ``llm_ngram_jaccard_prefix``, every caller of
 operators/similarity.py's one quantized-cosine scorer
 (``llm_ann_brute_topk``, ``llm_hard_negatives``, ``llm_ann_lsh_topk``,
-``llm_ann_ivf``) run against their DuckDB oracles on
+``llm_ann_ivf``) and the users of operators/kmeans.py's assignment and
+centroid update (``llm_kmeans``, ``llm_ann_pq_trained``,
+``llm_embed_classifier``, ``llm_semdedup``) run against their DuckDB
+oracles on
 - an empty ``documents``/``embeddings`` pair;
 - the suite's tables plus one row whose ``text`` and ``embedding`` are
   NULL;
@@ -37,6 +40,10 @@ OPS = (
     "llm_hard_negatives",
     "llm_ann_lsh_topk",
     "llm_ann_ivf",
+    "llm_kmeans",
+    "llm_ann_pq_trained",
+    "llm_embed_classifier",
+    "llm_semdedup",
 )
 TABLES = ("documents", "embeddings")
 
@@ -76,7 +83,8 @@ def test_null_text_and_embedding_row_matches_oracle(spark, sf_dir, tmp_path, nam
     statistics; a NULL embedding scores a NULL cosine, which ranks
     after every real neighbour.  The NULL vector's id is below
     N_QUERY_VECS, so it is also a query: its neighbours all score NULL
-    and rank by id."""
+    and rank by id.  k-means assigns a NULL vector the lowest cluster
+    and adds it to no centroid."""
     tables = _suite_tables(sf_dir)
     docs, emb = tables["documents"], tables["embeddings"]
     null_doc = {c: [None] for c in docs.column_names}

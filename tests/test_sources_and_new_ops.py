@@ -332,7 +332,7 @@ def test_pq_adc_structure_and_recall(spark):
     rows.append((100, list(rows[0][1])))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     # seeded book: the codeword vectors' subvectors (zero Lloyd rounds)
-    book = _pq_codebook(df, "vec_id", "embedding", [10, 11, 12, 13], dim, 4, iters=0)
+    book = _pq_codebook(df, "vec_id", "embedding", [10, 11, 12, 13], 4, iters=0)
 
     def run(k):
         return pq_adc_topk(

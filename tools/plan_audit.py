@@ -717,8 +717,10 @@ CHECKS: dict[str, list[tuple[str, object]]] = {
         ("no cartesian", "!CartesianProduct"),
     ],
     "llm_ann_pq_trained": [
-        # per-subspace trained PQ codebook, seeded variant's plan
-        # shape: codebook/LUT broadcast, encode argmin partial-agg
+        # per-subspace PQ codebook trained in one Lloyd pass keyed on
+        # the subspace (behind its per-iteration checkpoint), seeded
+        # variant's plan shape: codebook/LUT broadcast, encode argmin
+        # (k-means' keyed _assign) partial-agg
         ("codebook/LUT broadcast", "BroadcastExchange"),
         ("no cartesian", "!CartesianProduct"),
         ("encode argmin partial-aggregated", "partial_min"),
