@@ -386,10 +386,8 @@ HEADLINE = [
     "tpch_asof_latest_order",
     "tpch_events_session",
     "llm_dedup_minhash_lsh",
-    # prefix-filtered PPJoin plan — the one you'd run at 100 TB; the
-    # intentionally-quadratic exact twin (llm_ngram_jaccard) stays
-    # registered as its oracle proof but no longer holds the headline
-    # timing slot (round-3 verdict #3)
+    # prefix-filtered PPJoin plan — the registry's one exact Jaccard
+    # join (llm_ngram_jaccard is the same query under its older name)
     "llm_ngram_jaccard_prefix",
     "llm_ann_brute_topk",
     "llm_text_stats",

@@ -25,8 +25,9 @@ from .exprs import sql_hof
 QUANT_SCALE = 1000
 
 
-def quantize(vec: Column) -> Column:
-    """array<float> -> array<long>, qi = floor(xi * QUANT_SCALE)."""
+def quantize(vec: Column | str) -> Column:
+    """array<float> -> array<long>, qi = floor(xi * QUANT_SCALE) (a str
+    is SQL text, as in sql_hof)."""
     return sql_hof(
         "transform", vec, f"x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}) AS BIGINT)"
     )

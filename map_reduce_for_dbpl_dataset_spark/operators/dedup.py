@@ -9,10 +9,11 @@ Four escalating strategies over a (id, text) corpus:
 - simhash: 32-bit sign-of-weighted-bits sketch; candidates share one
   of four 8-bit chunks (pigeonhole: hamming <= 3 implies an equal
   chunk), verified by bit_count(xor).
-- ngram_jaccard: exact sparse similarity join — explode shingles,
-  join on shingle, |A∩B| by count, Jaccard from set sizes. Exact but
-  explodes on very common shingles; at 100 TB use minhash/simhash, or
-  add prefix filtering.
+- ngram_jaccard_prefix: exact sparse similarity join with PPJoin
+  prefix, length and positional filters — only rare-shingle prefixes
+  join, so common shingles never fan out, and every candidate is
+  verified against the exact shingle sets. Its candidate cost still
+  grows super-linearly with the corpus; at 100 TB use minhash/simhash.
 
 Scale design: everything is groupBy/join — no collect, no driver
 loops, no UDFs. Signatures are K aggregate columns computed in ONE
@@ -349,10 +350,11 @@ def _prefix_table(
 def ngram_jaccard_pairs_prefix(
     shingled: DataFrame, id_col: str, shingle_col: str, threshold: float = 0.8
 ) -> DataFrame:
-    """Prefix-filtered EXACT Jaccard join — same output as
-    ngram_jaccard_pairs, sub-quadratically (PPJoin: Xiao, Wang, Lin,
-    Yu, "Efficient Similarity Joins for Near Duplicate Detection",
-    WWW'08 — prefix + length + positional filters, all three).
+    """Prefix-filtered EXACT Jaccard join: every pair (id_a < id_b)
+    whose distinct-shingle Jaccard is >= threshold, with that Jaccard,
+    sub-quadratically (PPJoin: Xiao, Wang, Lin, Yu, "Efficient
+    Similarity Joins for Near Duplicate Detection", WWW'08 — prefix +
+    length + positional filters, all three).
 
     - PREFIX filter: order each doc's shingles by ascending global
       document frequency (ties by key); two sets with Jaccard >= t
@@ -383,7 +385,7 @@ def ngram_jaccard_pairs_prefix(
 
     Scale: the candidate join's cost is sum of squared PREFIX-bucket
     sizes (rare shingles -> tiny buckets), vs squared full-posting
-    sizes for the naive join. The df-ranking pass is a window count
+    sizes for a shingle self-join. The df-ranking pass is a window count
     plus a per-doc rank window — two exchanges of the exploded table,
     amortized at 100 TB by materializing the ranked shingle table
     once per corpus snapshot. Verification does NOT broadcast the
@@ -429,7 +431,8 @@ def ngram_jaccard_pairs_prefix(
     tier 1 at threshold t can only ADMIT spurious pairs (killed by
     tier 2), never drop a true one.
 
-    Degenerate inputs match the exact join (tests/test_curation_inputs.py):
+    Degenerate inputs match the oracle's shingle self-join
+    (tests/test_curation_inputs.py):
     an empty table gives no pairs, and a document whose shingle array
     is empty (a NULL or sub-3-word text shingles to ``[]``) explodes to
     no rows, so it joins no pair.
@@ -520,32 +523,3 @@ def ngram_jaccard_pairs_prefix(
         tier1, shingled, id_col, shingle_col, broadcast_pairs=False
     ).filter(f"jaccard >= {t}")
 
-
-def ngram_jaccard_pairs(
-    shingled: DataFrame, id_col: str, shingle_col: str, threshold: float = 0.8
-) -> DataFrame:
-    """Exact sparse similarity join: |A∩B| via shingle-explode
-    self-join + count; Jaccard from set sizes. No candidate loss."""
-    ex = shingled.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.array_distinct(F.col(shingle_col))).alias("shingle"),
-    )
-    sizes = ex.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
-    common = (
-        ex.select(F.col("_id").alias("id_a"), "shingle")
-        .join(ex.select(F.col("_id").alias("id_b"), "shingle"), "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        common.join(sizes.withColumnRenamed("_id", "id_a").withColumnRenamed("_sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("_id", "id_b").withColumnRenamed("_sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )

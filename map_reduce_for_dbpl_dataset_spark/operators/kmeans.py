@@ -40,9 +40,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exprs import sql_hof
 from ..functions.vectors import quantize
 
 # Lloyd iterations per training run, shared with the unrolled-CTE
@@ -50,26 +51,28 @@ from ..functions.vectors import quantize
 KMEANS_ITERS = 2
 
 
-def dist2_q(a, b):
-    """Exact integer squared L2 distance of two quantized vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+def dist2_q(a: Column | str, b: Column | str) -> Column:
+    """Exact integer squared L2 distance of two quantized vectors (a
+    str is SQL text, as in sql_hof)."""
+    return sql_hof(
+        "aggregate",
+        sql_hof("zip_with", a, b, "(x, y) -> (x - y) * (x - y)"),
+        "CAST(0 AS BIGINT)",
+        "(acc, x) -> acc + x",
     )
 
 
 def _quantized(corpus: DataFrame, id_col: str, vec_col: str, key: str | None = None) -> DataFrame:
     """(vid, q[, key]): the corpus with each vector integer-quantized."""
     keys = [key] if key else []
-    return corpus.select(F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("q"), *keys)
+    return corpus.select(F.expr(f"{id_col} AS vid"), quantize(vec_col).alias("q"), *keys)
 
 
 def _seed_centroids(q: DataFrame, init_ids: Sequence[int], key: str | None = None) -> DataFrame:
     """([key, ]cluster, c): one initial centroid per seed id (and key)."""
     keys = [key] if key else []
-    return q.filter(F.col("vid").isin(list(init_ids))).select(
-        *keys, F.col("vid").alias("cluster"), F.col("q").alias("c")
+    return q.filter(F.col("vid").isin(list(init_ids))).selectExpr(
+        *keys, "vid AS cluster", "q AS c"
     )
 
 
@@ -84,14 +87,14 @@ def _assign(q: DataFrame, cents: DataFrame, key: str | None = None) -> DataFrame
     through any_value."""
     keys = [key] if key else []
     carried = [c for c in q.columns if c not in ("vid", *keys)]
-    scored = q.join(F.broadcast(cents), key).withColumn("d2", dist2_q(F.col("q"), F.col("c")))
+    scored = q.join(F.broadcast(cents), key).withColumn("d2", dist2_q("q", "c"))
     return (
         scored.groupBy("vid", *keys)
         .agg(
-            F.min(F.struct("d2", "cluster")).alias("_b"),
-            *[F.any_value(c).alias(c) for c in carried],
+            F.expr("min(struct(d2, cluster)) AS _b"),
+            *[F.expr(f"any_value({c}) AS {c}") for c in carried],
         )
-        .select("vid", *keys, *carried, F.col("_b.cluster").alias("cluster"), F.col("_b.d2").alias("d2"))
+        .selectExpr("vid", *keys, *carried, "_b.cluster AS cluster", "_b.d2 AS d2")
     )
 
 
@@ -139,17 +142,16 @@ def _update_centroids(assigned: DataFrame, key: str | None = None) -> DataFrame:
     """One Lloyd centroid update: posexplode to ([key, ]cluster, dim,
     val), ONE partial-agg groupBy over K*dim cells, K-row rebuild."""
     keys = [key] if key else []
-    ex = assigned.select(*keys, "cluster", F.posexplode("q").alias("dim", "val"))
+    ex = assigned.selectExpr(*keys, "cluster", "posexplode(q) AS (dim, val)")
     per_dim = ex.groupBy(*keys, "cluster", "dim").agg(
-        F.sum("val").alias("s"), F.count(F.lit(1)).alias("n")
+        F.expr("sum(val) AS s"), F.expr("count(1) AS n")
     )
     return (
         per_dim.withColumn("cv", F.expr("s div n"))
         .groupBy(*keys, "cluster")
         .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "cv"))),
-                lambda st: st.cv,
+            sql_hof(
+                "transform", "array_sort(collect_list(struct(dim, cv)))", "st -> st.cv"
             ).alias("c")
         )
     )
@@ -167,7 +169,7 @@ def kmeans_assign(
     (id_col, cluster) — the consumer-facing assignment surface used
     by compositions like llm_cluster_top_terms."""
     q = _quantized(corpus, id_col, vec_col)
-    return _assign(q, centroids).select(F.col("vid").alias(id_col), "cluster")
+    return _assign(q, centroids).selectExpr(f"vid AS {id_col}", "cluster")
 
 
 def kmeans_fixed(
@@ -182,7 +184,7 @@ def kmeans_fixed(
     cents = kmeans_train(corpus, id_col, vec_col, init_ids)
     final = _assign(_quantized(corpus, id_col, vec_col), cents)
     return final.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.sum("d2").alias("sse"),
-        F.min("vid").alias("min_member"),
+        F.expr("count(1) AS n_members"),
+        F.expr("sum(d2) AS sse"),
+        F.expr("min(vid) AS min_member"),
     )

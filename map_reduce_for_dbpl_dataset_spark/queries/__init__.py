@@ -73,6 +73,7 @@ _CHANGED: list[str] = [
     "llm_hard_negatives",
     "llm_kmeans",
     "llm_leakage_free_split",
+    "llm_ngram_jaccard",
     "llm_semdedup",
     "llm_semdedup_scaled",
     "llm_semdedup_trained",

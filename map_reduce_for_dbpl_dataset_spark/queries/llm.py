@@ -46,7 +46,6 @@ from ..operators.dedup import (
     SIMHASH_CHUNKS,
     exact_dedup,
     minhash_lsh_pairs,
-    ngram_jaccard_pairs,
     ngram_jaccard_pairs_prefix,
     simhash_near_pairs,
 )
@@ -229,40 +228,15 @@ FROM verified WHERE j >= 0.8 ORDER BY id_a, id_b
 
 
 # --- exact n-gram Jaccard similarity join ------------------------------------
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _docs_shingled(spark, sf_dir)
-    out = ngram_jaccard_pairs(sh, "doc_id", "shingles", threshold=0.8)
-    return out.select(
-        "id_a", "id_b", F.floor(F.col("jaccard") * 1e6).cast("long").alias("jaccard_micro")
-    ).orderBy("id_a", "id_b")
-
-
-SQL_NGRAM_JACCARD = f"""
-WITH {_SH_CTE},
-ex AS (SELECT doc_id, unnest(ss) AS shingle FROM sh),
-sizes AS (SELECT doc_id, count(*) AS sz FROM ex GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-j AS (
-  SELECT id_a, id_b,
-         n_common::DOUBLE / (sa.sz + sb.sz - n_common)::DOUBLE AS j
-  FROM common JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-)
-SELECT id_a, id_b, CAST(floor(j * 1e6) AS BIGINT) AS jaccard_micro
-FROM j WHERE j >= 0.8 ORDER BY id_a, id_b
-"""
-
-
 def q_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-filtered exact Jaccard join. The ORACLE IS THE SAME SQL
-    as llm_ngram_jaccard: the prefix filter is an exact optimization,
-    so hash-equality against the naive formulation proves the filter
-    loses no pairs.  Candidate cost is the sum of squared prefix-bucket
-    sizes, so it grows super-linearly with the corpus: past a few
-    hundred thousand documents per snapshot the operating point is
+    """Exact n-gram Jaccard join: every document pair whose distinct
+    3-word shingle sets have Jaccard >= 0.8, through the PPJoin
+    prefix-filtered join (operators/dedup.py).  Its oracle is the
+    DuckDB shingle self-join with no filter at all, so hash equality
+    proves the prefix, length and positional filters lose no pair.
+    Candidate cost is the sum of squared prefix-bucket sizes, so it
+    grows super-linearly with the corpus: past a few hundred thousand
+    documents per snapshot the operating point is
     llm_dedup_minhash_lsh, with this join kept for exact passes."""
     sh = _docs_shingled(spark, sf_dir)
     out = ngram_jaccard_pairs_prefix(sh, "doc_id", "shingles", threshold=0.8)
@@ -271,34 +245,9 @@ def q_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fuzzy-dedup endgame: near-dup PAIRS (exact n-gram Jaccard
-    >= 0.8) are only edges — deduplication needs transitive CLUSTERS
-    (a~b, b~c => {a,b,c} even if a!~c) and a canonical survivor per
-    cluster. Components come from operators/graph.py
-    connected_components_star (large-star/small-star, O(log n)
-    rounds); both edge endpoints are doc_ids of the same shingle table
-    as the vertices. Canonical = min doc_id. The oracle rebuilds the
-    same clusters with a recursive CTE over identically-computed pairs.
-    Keep-set = rows with is_canonical — what a 100 TB pipeline would
-    write out."""
-    from ..operators.graph import connected_components_star
-
-    sh = _docs_shingled(spark, sf_dir)
-    edges = ngram_jaccard_pairs(sh, "doc_id", "shingles", threshold=0.8).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    vertices = sh.select(F.col("doc_id").alias("node"))
-    labels = connected_components_star(edges, vertices)
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("component").alias("cluster_id"),
-        (F.col("node") == F.col("component")).alias("is_canonical"),
-    )
-
-
-SQL_DEDUP_CLUSTERS = f"""
-WITH RECURSIVE {_SH_CTE},
+# The oracles' exact pair set: pairs(id_a, id_b, j) over a shingle
+# self-join, j >= 0.8 (follows _SH_CTE).
+_JACCARD_PAIRS_CTE = """
 ex AS (SELECT doc_id, unnest(ss) AS shingle FROM sh),
 sizes AS (SELECT doc_id, count(*) AS sz FROM ex GROUP BY doc_id),
 common AS (
@@ -307,18 +256,63 @@ common AS (
   GROUP BY 1, 2
 ),
 pairs AS (
-  SELECT id_a, id_b
+  SELECT id_a, id_b, n_common::DOUBLE / (sa.sz + sb.sz - n_common)::DOUBLE AS j
   FROM common JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-  WHERE n_common::DOUBLE / (sa.sz + sb.sz - n_common)::DOUBLE >= 0.8
-),
+  WHERE j >= 0.8
+)"""
+
+# The oracles' near-dup clusters: labels(doc_id, cluster_id), the min
+# doc_id reachable over pairs (follows _JACCARD_PAIRS_CTE, in a WITH
+# RECURSIVE).
+_CLUSTER_CTE = """
 bi AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
 reach(src, dst) AS (
   SELECT doc_id, doc_id FROM sh
   UNION
   SELECT r.src, bi.d FROM reach r JOIN bi ON r.dst = bi.s
-)
-SELECT src AS doc_id, min(dst) AS cluster_id, src = min(dst) AS is_canonical
-FROM reach GROUP BY src
+),
+labels AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src)"""
+
+SQL_NGRAM_JACCARD = f"""
+WITH {_SH_CTE},{_JACCARD_PAIRS_CTE}
+SELECT id_a, id_b, CAST(floor(j * 1e6) AS BIGINT) AS jaccard_micro
+FROM pairs ORDER BY id_a, id_b
+"""
+
+
+def _near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, cluster_id): every document labeled with the min doc_id
+    of its near-duplicate component — the exact Jaccard >= 0.8 pairs
+    (ngram_jaccard_pairs_prefix) are the edges, every document of the
+    shingle table a vertex, and operators/graph.py
+    connected_components_star (large-star/small-star, O(log n)
+    rounds) the components."""
+    from ..operators.graph import connected_components_star
+
+    sh = _docs_shingled(spark, sf_dir)
+    edges = ngram_jaccard_pairs_prefix(
+        sh, "doc_id", "shingles", threshold=0.8
+    ).selectExpr("id_a AS src", "id_b AS dst")
+    return connected_components_star(
+        edges, sh.selectExpr("doc_id AS node")
+    ).selectExpr("node AS doc_id", "component AS cluster_id")
+
+
+def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fuzzy-dedup endgame: near-dup PAIRS are only edges —
+    deduplication needs transitive CLUSTERS (a~b, b~c => {a,b,c} even
+    if a!~c) and a canonical survivor per cluster (_near_dup_clusters).
+    Canonical = min doc_id. The oracle rebuilds the same clusters with
+    a recursive CTE over the shingle self-join's pairs.  Keep-set =
+    rows with is_canonical — what a 100 TB pipeline would write out."""
+    return _near_dup_clusters(spark, sf_dir).selectExpr(
+        "doc_id", "cluster_id", "doc_id = cluster_id AS is_canonical"
+    )
+
+
+SQL_DEDUP_CLUSTERS = f"""
+WITH RECURSIVE {_SH_CTE},{_JACCARD_PAIRS_CTE},{_CLUSTER_CTE}
+SELECT doc_id, cluster_id, doc_id = cluster_id AS is_canonical FROM labels
 """
 
 
@@ -812,7 +806,7 @@ FROM documents
 QUERIES = {
     "llm_dedup_exact": q_dedup_exact,
     "llm_dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "llm_ngram_jaccard": q_ngram_jaccard,
+    "llm_ngram_jaccard": q_ngram_jaccard_prefix,
     "llm_ngram_jaccard_prefix": q_ngram_jaccard_prefix,
     "llm_dedup_clusters": q_dedup_clusters,
     "llm_dedup_simhash": q_dedup_simhash,

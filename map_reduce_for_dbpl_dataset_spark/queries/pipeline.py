@@ -30,6 +30,8 @@ from ..operators.topk import top_k_per_group
 from ..sources.parquet import load_table
 from .llm import (
     _AUGMENTED_CTE,
+    _CLUSTER_CTE,
+    _JACCARD_PAIRS_CTE,
     _NORM_SQL,
     _SH_CTE,
     _TOKENS_SQL,
@@ -39,6 +41,7 @@ from .llm import (
     _cos,
     _docs_shingled,
     _n2,
+    _near_dup_clusters,
     _norm_sql,
     _prepared_cte,
     _quant,
@@ -2026,28 +2029,14 @@ SPLIT_VAL_LT = 90  # [80,90) -> validation, [90,100) -> test
 
 def q_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-level split assignment: components of the near-dup
-    graph (exact Jaccard >= 0.8 here; at 100 TB the edge set comes
-    from minhash_lsh_pairs instead — same downstream plan) are hashed
-    by their canonical id into 100 buckets, 80/10/10.  Assignment is
-    a narrow hash expression on the component label — no extra
-    shuffle beyond the O(log n) large-star/small-star component rounds
-    (operators/graph.py connected_components_star), and deterministic
-    across reruns/engines (md5-based hash60, no rand()).  Edges come
-    from the prefix-filtered PPJoin plan — pair-identical to the
-    naive exact join (tests/test_properties.py) but with the filter
-    funnel that survives the scale point (~3 min -> seconds on the
-    10x fixtures)."""
-    from ..operators.dedup import ngram_jaccard_pairs_prefix
-    from ..operators.graph import connected_components_star
-    from .llm import _docs_shingled
-
-    sh = _docs_shingled(spark, sf_dir)
-    edges = ngram_jaccard_pairs_prefix(
-        sh, "doc_id", "shingles", threshold=0.8
-    ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = connected_components_star(
-        edges, sh.select(F.col("doc_id").alias("node"))
-    ).select(F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
+    graph (exact Jaccard >= 0.8 here, llm.py _near_dup_clusters; at
+    100 TB the edge set comes from minhash_lsh_pairs instead — same
+    downstream plan) are hashed by their canonical id into 100
+    buckets, 80/10/10.  Assignment is a narrow hash expression on the
+    component label — no extra shuffle beyond the O(log n)
+    large-star/small-star component rounds — and deterministic across
+    reruns/engines (md5-based hash60, no rand())."""
+    labels = _near_dup_clusters(spark, sf_dir)
     bucket = F.pmod(
         hash60(F.col("cluster_id").cast("string")), F.lit(SPLIT_BUCKETS)
     )
@@ -2066,26 +2055,7 @@ def q_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_LEAKAGE_FREE_SPLIT = f"""
-WITH RECURSIVE {_SH_CTE},
-ex AS (SELECT doc_id, unnest(ss) AS shingle FROM sh),
-sizes AS (SELECT doc_id, count(*) AS sz FROM ex GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT id_a, id_b
-  FROM common JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
-  WHERE n_common::DOUBLE / (sa.sz + sb.sz - n_common)::DOUBLE >= 0.8
-),
-bi AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM sh
-  UNION
-  SELECT r.src, bi.d FROM reach r JOIN bi ON r.dst = bi.s
-),
-labels AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src),
+WITH RECURSIVE {_SH_CTE},{_JACCARD_PAIRS_CTE},{_CLUSTER_CTE},
 bk AS (
   SELECT doc_id, cluster_id,
          CAST(('0x' || substr(md5(CAST(cluster_id AS VARCHAR)), 1, 15)) AS BIGINT)

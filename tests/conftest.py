@@ -49,3 +49,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def set_jaccard_pairs():
+    """The reference every exact Jaccard join test compares against: a
+    brute-force join over (id, shingles) rows, giving {(id_a, id_b): J}
+    for every pair id_a < id_b whose distinct-shingle sets have
+    J >= threshold."""
+
+    def pairs(rows, threshold: float) -> dict[tuple, float]:
+        sets = sorted(((i, set(sh or ())) for i, sh in rows), key=lambda r: r[0])
+        out = {}
+        for n, (a, sa) in enumerate(sets):
+            for b, sb in sets[n + 1:]:
+                j = len(sa & sb) / (len(sa | sb) or 1)
+                if j >= threshold:
+                    out[(a, b)] = j
+        return out
+
+    return pairs

@@ -5,8 +5,8 @@ Building a query costs Py4J round trips between Python and the JVM:
 every Column operator and every ``F.col`` is one or more calls, where
 a SQL-text expression is parsed in one.  The three operators the llm_curation
 benchmark times are built mostly from SQL text; the counts below pin
-that, and the build cost of the other nearest-neighbour operators,
-with ~25% headroom.  Only the building thread's calls count:
+that, and the build cost of the other nearest-neighbour operators and
+of k-means training, with ~25% headroom.  Only the building thread's calls count:
 job-progress traffic from other threads varies run to run.
 
 The prefix-filtered Jaccard join also reads the session's persisted
@@ -17,7 +17,9 @@ the table from the cache and re-derive shingles from text.
 The connected-components queries launch Spark jobs while they are
 built: each large-star/small-star round runs one checksum action
 (operators/graph.py connected_components_star), and the inputs of the
-rounds run theirs.  k-means training (operators/kmeans.py
+rounds run theirs; the near-dup clusters' input is the prefix-filtered
+Jaccard join, whose pinned prefix table (operators/pairs.py
+spread_for_pair_join) plans its upstream shuffle stages at build.  k-means training (operators/kmeans.py
 kmeans_train) checkpoints its centroid table once per Lloyd
 iteration; product quantization trains all of its subspaces in those
 same iterations, so ``llm_ann_pq_trained`` costs what ``llm_kmeans``
@@ -40,7 +42,8 @@ from map_reduce_for_dbpl_dataset_spark.queries.llm import _docs_shingled
 # Py4J round trips of one warm build at the suite's sf dir, plus ~25%:
 # measured 256, 263 and 313 for the three llm_curation operators; 347,
 # 339 and 1087 for the other callers of the quantized-cosine scorer
-# (operators/similarity.py _cos_top_k).
+# (operators/similarity.py _cos_top_k); 554 and 1071 for two k-means
+# trainings (operators/kmeans.py, two Lloyd iterations each).
 ROUND_TRIP_BUDGET = {
     "llm_text_stats": 320,
     "llm_ngram_jaccard_prefix": 330,
@@ -48,6 +51,8 @@ ROUND_TRIP_BUDGET = {
     "llm_hard_negatives": 435,
     "llm_ann_lsh_topk": 425,
     "llm_ann_ivf": 1360,
+    "llm_kmeans": 695,
+    "llm_ann_pq_trained": 1340,
 }
 
 # Spark jobs of one warm build at the suite's sf dir (the same at
@@ -56,7 +61,7 @@ BUILD_JOBS = {
     "dblp_coauthor_components": 48,
     "dblp_coauthor_components_star": 48,
     "llm_ann_pq_trained": 13,
-    "llm_dedup_clusters": 25,
+    "llm_dedup_clusters": 28,
     "llm_kmeans": 13,
     "llm_leakage_free_split": 28,
 }

@@ -291,7 +291,7 @@ def test_leakage_free_split_clusters_never_straddle(spark, sf_dir):
     """The operator's contract: no near-dup pair may straddle a split
     boundary (that pair would let eval measure memorization), and the
     bucket hash must actually produce all three splits."""
-    from map_reduce_for_dbpl_dataset_spark.queries.llm import q_ngram_jaccard
+    from map_reduce_for_dbpl_dataset_spark.queries.llm import q_ngram_jaccard_prefix
     from map_reduce_for_dbpl_dataset_spark.queries.pipeline import (
         q_leakage_free_split,
     )
@@ -302,7 +302,7 @@ def test_leakage_free_split_clusters_never_straddle(spark, sf_dir):
     for r in rows:
         by_cluster.setdefault(r.cluster_id, set()).add(r.split)
     assert all(len(s) == 1 for s in by_cluster.values())
-    pairs = q_ngram_jaccard(spark, sf_dir).collect()
+    pairs = q_ngram_jaccard_prefix(spark, sf_dir).collect()
     assert pairs  # the fixture embeds near-duplicates
     assert all(split_of[p.id_a] == split_of[p.id_b] for p in pairs)
     assert {r.split for r in rows} == {"train", "validation", "test"}

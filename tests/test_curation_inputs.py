@@ -1,7 +1,9 @@
 """The llm_curation operators and the nearest-neighbour operators on
 inputs the fixtures never produce.
 
-``llm_text_stats``, ``llm_ngram_jaccard_prefix``, every caller of
+``llm_text_stats``, the exact Jaccard join and the queries built on it
+(``llm_ngram_jaccard``, ``llm_ngram_jaccard_prefix``,
+``llm_dedup_clusters``, ``llm_leakage_free_split``), every caller of
 operators/similarity.py's one quantized-cosine scorer
 (``llm_ann_brute_topk``, ``llm_hard_negatives``, ``llm_ann_lsh_topk``,
 ``llm_ann_ivf``) and the users of operators/kmeans.py's assignment and
@@ -35,7 +37,10 @@ from check import canon_pandas, digest_pandas  # noqa: E402
 
 OPS = (
     "llm_text_stats",
+    "llm_ngram_jaccard",
     "llm_ngram_jaccard_prefix",
+    "llm_dedup_clusters",
+    "llm_leakage_free_split",
     "llm_ann_brute_topk",
     "llm_hard_negatives",
     "llm_ann_lsh_topk",

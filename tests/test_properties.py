@@ -72,15 +72,14 @@ def test_q1_counts_match_direct_recount(spark, sf_dir):
     assert bad == 0
 
 
-def test_ppjoin_filters_lossless_vs_naive(spark):
+def test_ppjoin_filters_lossless_vs_naive(spark, set_jaccard_pairs):
     """The PPJoin prefix/length/positional filters are exact-theory
     prunes — on a seeded random corpus engineered to put many pairs
     near the threshold, the filtered join must return EXACTLY the
-    naive all-pairs join's result (ids and jaccard values)."""
+    brute-force all-pairs result (ids and jaccard values)."""
     import random
 
     from map_reduce_for_dbpl_dataset_spark.operators.dedup import (
-        ngram_jaccard_pairs,
         ngram_jaccard_pairs_prefix,
     )
 
@@ -111,20 +110,21 @@ def test_ppjoin_filters_lossless_vs_naive(spark):
             (r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in out.collect()
         )
 
-    naive = norm(ngram_jaccard_pairs(df, "doc_id", "shingles", threshold=0.8))
+    naive = sorted(
+        (a, b, round(j, 9)) for (a, b), j in set_jaccard_pairs(rows, 0.8).items()
+    )
     pp = norm(ngram_jaccard_pairs_prefix(df, "doc_id", "shingles", threshold=0.8))
     assert len(naive) > 0  # the perturbation must actually create pairs
     assert pp == naive
 
 
-def test_ppjoin_exact_threshold_boundary(spark):
+def test_ppjoin_exact_threshold_boundary(spark, set_jaccard_pairs):
     """Deterministic boundary cases for the PPJoin exactness contract:
     pairs at EXACTLY J = t must survive every filter. The (4,5)-size
     pair doubles as a regression test for the FP-ceil fix — t*|B| =
     4.0 exactly, and a ceil that rounds the double product up would
     over-tighten the length filter and drop the pair."""
     from map_reduce_for_dbpl_dataset_spark.operators.dedup import (
-        ngram_jaccard_pairs,
         ngram_jaccard_pairs_prefix,
     )
 
@@ -147,7 +147,9 @@ def test_ppjoin_exact_threshold_boundary(spark):
         )
 
     expected = [(1, 2, 0.8), (3, 4, 0.8)]
-    assert norm(ngram_jaccard_pairs(df, "doc_id", "shingles", 0.8)) == expected
+    assert sorted(
+        (a, b, round(j, 9)) for (a, b), j in set_jaccard_pairs(rows, 0.8).items()
+    ) == expected
     assert norm(ngram_jaccard_pairs_prefix(df, "doc_id", "shingles", 0.8)) == expected
 
 

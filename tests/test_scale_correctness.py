@@ -65,7 +65,7 @@ SCALE_DIR = os.path.join(
 CLUSTER_REPLAY_DIR = "/root/testdata/sf0.1"
 
 # heavy + representative: scan/agg/join, window, LSH dedup (two-regime
-# path), PPJoin exact twin proof, sampling, curation, and the two
+# path), PPJoin exactness proof, sampling, curation, and the two
 # iterative/graph plans (components fixpoint, oriented triangles)
 SCALE_QUERIES = [
     "tpch_pricing_summary",
@@ -450,15 +450,13 @@ def test_levenshtein_contract_at_scale(request):
 def test_dedup_clusters_match_union_find_at_scale(request):
     """llm_dedup_clusters' DuckDB oracle is a recursive CTE over the
     full shingle self-join (~160 s at sf1 — measured and excluded from
-    the hash net above; the naive exact pair stage alone costs ~90 s
-    Spark-side there, twice, so even a Spark-only replay is too heavy
-    at sf1), so the replay runs at the always-available sf0.1 point —
-    still 10x the driver gate, with real multi-partition superstep
-    merge order: collect the near-dup edge list the query itself is
-    built on (ngram_jaccard_pairs — separately proven by the PPJoin
-    lossless property tests and the sf0.01 driver oracle), run a
-    textbook union-find over it, and require the distributed
-    large-star/small-star partition (operators/graph.py
+    the hash net above), so the replay runs at the always-available
+    sf0.1 point — still 10x the sf0.01 oracle gate, with real
+    multi-partition superstep merge order: take the exact near-dup
+    edge list from DuckDB running llm_ngram_jaccard's oracle (the
+    shingle self-join, independent of the Spark prefix join the query
+    is built on), run a textbook union-find over it, and require the
+    distributed large-star/small-star partition (operators/graph.py
     connected_components_star) to match EXACTLY — same clusters, same
     min-id canonical labels, every doc labeled once.  The CC operator
     itself is additionally hash-proven at sf1 via
@@ -466,20 +464,14 @@ def test_dedup_clusters_match_union_find_at_scale(request):
     _skip_if_cached_green(request, "dedup_clusters_union_find_replay")
     spark = request.getfixturevalue("spark")
     import __spark_entry__ as entrymod
-    from map_reduce_for_dbpl_dataset_spark.queries.llm import (
-        _docs_shingled,
-        ngram_jaccard_pairs,
-    )
+    from map_reduce_for_dbpl_dataset_spark.queries.llm import SQL_NGRAM_JACCARD
 
-    edges = [
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(
-            _docs_shingled(spark, CLUSTER_REPLAY_DIR), "doc_id", "shingles", threshold=0.8
-        ).collect()
-    ]
-    n_docs = spark.read.parquet(
-        os.path.join(CLUSTER_REPLAY_DIR, "documents.parquet")
-    ).count()
+    docs = os.path.join(CLUSTER_REPLAY_DIR, "documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}')")
+    edges = [(a, b) for a, b, _ in con.sql(SQL_NGRAM_JACCARD).fetchall()]
+    n_docs = con.sql("SELECT count(*) FROM documents").fetchone()[0]
+    con.close()
 
     parent: dict[int, int] = {}
 

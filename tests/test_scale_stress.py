@@ -22,7 +22,7 @@ from map_reduce_for_dbpl_dataset_spark.operators.dedup import (
     N_PERM,
     lsh_candidate_pairs,
     minhash_signatures,
-    ngram_jaccard_pairs,
+    ngram_jaccard_pairs_prefix,
 )
 
 N_TOTAL = 200_000
@@ -246,7 +246,9 @@ def test_lsh_candidate_recall_floor(spark):
     oracles prove the implemented banding is computed exactly, not that
     the band/row parameters still FIND near-duplicates. Measure
     candidate recall of the LSH pair generator against the exact
-    Jaccard >= 0.8 pair set (llm_ngram_jaccard's operator) on the
+    Jaccard >= 0.8 pair set (the prefix-filtered join behind
+    llm_ngram_jaccard, proven exact against brute force and the
+    DuckDB shingle self-join) on the
     sf0.01 documents corpus and assert a >= 0.9 floor. Deterministic:
     fixed PERMS, fixed corpus — a banding regression (fewer bands,
     broken key concat, dropped rows) shows up as lost recall."""
@@ -254,7 +256,7 @@ def test_lsh_candidate_recall_floor(spark):
 
     sh = _docs_shingled(spark, "/root/testdata/sf0.01")
 
-    exact = ngram_jaccard_pairs(sh, "doc_id", "shingles", threshold=0.8).select(
+    exact = ngram_jaccard_pairs_prefix(sh, "doc_id", "shingles", threshold=0.8).select(
         "id_a", "id_b"
     )
     sigs = minhash_signatures(sh, "doc_id", "shingles")

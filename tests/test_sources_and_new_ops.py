@@ -137,9 +137,8 @@ def test_minhash_lsh_catches_exact_duplicates(spark):
     assert out == {(1, 2): 1.0}
 
 
-def test_prefix_jaccard_equals_naive(spark):
+def test_prefix_jaccard_equals_naive(spark, set_jaccard_pairs):
     from map_reduce_for_dbpl_dataset_spark.operators.dedup import (
-        ngram_jaccard_pairs,
         ngram_jaccard_pairs_prefix,
     )
 
@@ -151,8 +150,7 @@ def test_prefix_jaccard_equals_naive(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "shingles"])
     for t in (0.5, 0.8):
-        naive = {(r["id_a"], r["id_b"]): round(r["jaccard"], 9) for r in
-                 ngram_jaccard_pairs(df, "doc_id", "shingles", t).collect()}
+        naive = {k: round(j, 9) for k, j in set_jaccard_pairs(rows, t).items()}
         pref = {(r["id_a"], r["id_b"]): round(r["jaccard"], 9) for r in
                 ngram_jaccard_pairs_prefix(df, "doc_id", "shingles", t).collect()}
         assert naive == pref

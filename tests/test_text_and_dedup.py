@@ -18,7 +18,7 @@ from map_reduce_for_dbpl_dataset_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     minhash_signatures,
-    ngram_jaccard_pairs,
+    ngram_jaccard_pairs_prefix,
     simhash_values,
 )
 from map_reduce_for_dbpl_dataset_spark.queries.llm import WINNOW_W, _winnow_fps
@@ -131,10 +131,11 @@ def test_lsh_mixed_hot_and_small_buckets(spark):
     assert got == expected
 
 
-def test_ngram_jaccard_exact_values(spark):
+def test_ngram_jaccard_exact_values(spark, set_jaccard_pairs):
     sh = _shingled(spark, [(1, "a b c d"), (2, "a b c d"), (3, "x y z w")])
-    out = ngram_jaccard_pairs(sh, "doc_id", "shingles", threshold=0.5).collect()
+    out = ngram_jaccard_pairs_prefix(sh, "doc_id", "shingles", threshold=0.5).collect()
     assert len(out) == 1 and out[0].id_a == 1 and out[0].id_b == 2 and out[0].jaccard == 1.0
+    assert {(r.id_a, r.id_b): r.jaccard for r in out} == set_jaccard_pairs(sh.collect(), 0.5)
 
 
 def test_simhash_identical_equal_disjoint_differs(spark):

@@ -151,6 +151,16 @@ _STAR_LABELING_ROWS = [
     ("star rounds feed from checkpoints", "Scan ExistingRDD"),
 ]
 
+# The plan shape of the exact Jaccard join (operators/dedup.py
+# ngram_jaccard_pairs_prefix, PPJoin internals): every exchange/sort
+# keys on the 8-byte shingle hash, never the shingle string; candidates
+# stay an equi-join; tier-1 verification intersects long arrays.
+_JACCARD_PREFIX_ROWS = [
+    ("shuffles key on 64-bit shingle hash", "xxhash64"),
+    ("no cartesian", "!CartesianProduct"),
+    ("hashed tier-1 verify (long-array intersect)", "array_intersect"),
+]
+
 # (query, [(property, needle), ...]): a needle is a substring that must
 # appear, '!' + a substring that must not, or a predicate over the plan.
 CHECKS: dict[str, list[tuple[str, object]]] = {
@@ -655,14 +665,7 @@ CHECKS: dict[str, list[tuple[str, object]]] = {
         # per-shard ordering only: the window is keyed by shard id
         ("no single-partition window", no_single_partition),
     ],
-    "llm_ngram_jaccard_prefix": [
-        # PPJoin internals: every exchange/sort keys on the 8-byte
-        # shingle hash, never the shingle string; candidates stay an
-        # equi-join; tier-1 verification intersects long arrays
-        ("shuffles key on 64-bit shingle hash", "xxhash64"),
-        ("no cartesian", "!CartesianProduct"),
-        ("hashed tier-1 verify (long-array intersect)", "array_intersect"),
-    ],
+    "llm_ngram_jaccard_prefix": _JACCARD_PREFIX_ROWS,
     "llm_quality_select_approx": [
         # sketch-threshold stratified selection: bounded-state
         # mergeable percentile sketch, thresholds broadcast back
@@ -910,12 +913,8 @@ CHECKS: dict[str, list[tuple[str, object]]] = {
         ("null-safe equality stays a hash join", "!BroadcastNestedLoopJoin"),
         ("tallies partial-aggregated", "partial_count"),
     ],
-    "llm_ngram_jaccard": [
-        # the deliberately-quadratic exact twin (oracle proof for the
-        # PPJoin variant): even it must stay a shingle equi-join
-        ("exact twin stays a shingle equi-join", "!CartesianProduct"),
-        ("pair intersections partial-aggregated", "partial_count"),
-    ],
+    # the same query as llm_ngram_jaccard_prefix under its older name
+    "llm_ngram_jaccard": _JACCARD_PREFIX_ROWS,
     "src_python_datasource": [
         # the Python DataSource V2 surface: reads arrive via BatchScan
         # (the pruned variant's pushdown is audited separately)
