@@ -77,7 +77,12 @@ def sql_hof(name: str, *args: Column | str) -> Column:
 
     The same Catalyst tree as F.transform/F.aggregate/... with a Python
     lambda, which builds its lambda from Column objects: ~50 Py4J round
-    trips for a one-line body, against one ``F.expr`` parse here."""
+    trips for a one-line body, against one ``F.expr`` parse here.  When
+    every argument is SQL text the whole call is one parse; a Column
+    argument costs ``F.call_function`` plus a parse per text argument,
+    ~10 round trips."""
+    if all(isinstance(a, str) for a in args):
+        return F.expr(f"{name}({', '.join(args)})")
     return F.call_function(
         name, *[F.expr(a) if isinstance(a, str) else a for a in args]
     )

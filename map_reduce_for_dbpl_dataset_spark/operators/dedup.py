@@ -27,11 +27,13 @@ signatures could not be checked.
 from __future__ import annotations
 
 import random
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, hash60
+from .pairs import spread_for_pair_join
 
 # MinHash universe: permutation hashes h_k(x) = (a_k * (x mod P) + b_k) mod P
 # over the 60-bit token hash. P prime; constants fixed (seeded) so Spark
@@ -386,9 +388,15 @@ def ngram_jaccard_pairs_prefix(
     Scale: the candidate join's cost is sum of squared PREFIX-bucket
     sizes (rare shingles -> tiny buckets), vs squared full-posting
     sizes for a shingle self-join. The df-ranking pass is a window count
-    plus a per-doc rank window — two exchanges of the exploded table,
-    amortized at 100 TB by materializing the ranked shingle table
-    once per corpus snapshot. Verification does NOT broadcast the
+    plus a per-doc rank window — two exchanges of the exploded table —
+    and it depends only on the shingle table and the threshold, so it
+    is a step of its own (jaccard_prefix_index) and the candidate join
+    and verification another (jaccard_prefix_join); this operator
+    chains the two.  A caller that joins one shingle table repeatedly
+    builds the index once and joins it many times: queries/llm.py keeps
+    it beside the persisted shingle table, one per documents snapshot
+    (at 100 TB, the ranked prefix table written once per corpus
+    snapshot). Verification does NOT broadcast the
     candidate set (unlike post-LSH verify): prefix candidates scale
     with the corpus, so they flow through a shuffled join against the
     shingle-set table.
@@ -422,10 +430,10 @@ def ngram_jaccard_pairs_prefix(
     arrays (8-byte elements, ~3x less shuffle than the string sets
     and a cheaper comparator); tier 2 re-verifies the tiny survivor
     set over exact string sets. Exactness is a theorem, not a
-    probability: per doc the shingles are string-distinct, and two
-    equal hashes within a doc would sort ADJACENT under the rank
-    window's (_df, _sh) order, so a lag() guard riding that existing
-    sort raises on any intra-doc collision. Absent intra-doc
+    probability: per doc the shingles are string-distinct, so each
+    doc's hash array has as many distinct hashes as distinct strings
+    unless two of them collide, and the tier-1 hash sets compare the
+    two counts and raise on any intra-doc collision. Absent intra-doc
     collisions the string->hash map is injective per doc, so
     |Ah n Bh| >= |A n B| and hashed Jaccard >= string Jaccard —
     tier 1 at threshold t can only ADMIT spurious pairs (killed by
@@ -441,22 +449,54 @@ def ngram_jaccard_pairs_prefix(
     expression, where composing them from Column operators costs Py4J
     round trips per node on every build (tests/test_build_budget.py).
     """
-    from .pairs import spread_for_pair_join
+    index = jaccard_prefix_index(shingled, id_col, shingle_col, threshold)
+    return jaccard_prefix_join(index, shingled, id_col, shingle_col)
 
-    t = _sql_double(threshold)
-    alpha = _ceil_sql(f"{_sql_double(threshold / (1 + threshold))} * (_sza + _szb)")
-    # The prefix table feeds BOTH sides of the candidate self-join;
-    # the sides differ in projection aliases, so exchange reuse does
-    # not fire and the whole df/rank window pipeline would execute
-    # once per side (measured ~2.5 s of a ~8 s query re-run at the
-    # sf1 point).  spread_for_pair_join pins it once and spreads the
-    # quadratic prefix-bucket fan-out over AQE-exempt key-hashed
-    # partitions (operators/pairs.py rationale).
+
+class JaccardPrefixIndex(NamedTuple):
+    """The pinned, spread PPJoin prefix table of one shingle table and
+    the threshold its prefixes were cut for (jaccard_prefix_index)."""
+
+    prefix: DataFrame
+    threshold: float
+
+
+def jaccard_prefix_index(
+    shingled: DataFrame, id_col: str, shingle_col: str, threshold: float = 0.8
+) -> JaccardPrefixIndex:
+    """Step one of ngram_jaccard_pairs_prefix: the df-ranked prefix
+    table (_prefix_table), pinned and spread for the candidate
+    self-join.
+
+    The prefix table feeds BOTH sides of the candidate self-join;
+    the sides differ in projection aliases, so exchange reuse does
+    not fire and the whole df/rank window pipeline would execute
+    once per side (measured ~2.5 s of a ~8 s query re-run at the
+    sf1 point).  spread_for_pair_join pins it once and spreads the
+    quadratic prefix-bucket fan-out over AQE-exempt key-hashed
+    partitions (operators/pairs.py rationale).  Building the index
+    plans the pin's upstream shuffle stages, which runs them; every
+    join over the index afterwards reads the pinned blocks
+    (release_pair_join_pin frees them)."""
     prefix = spread_for_pair_join(
         _prefix_table(shingled, id_col, shingle_col, threshold), "_sh"
     )
-    a = prefix.selectExpr("_id AS id_a", "_sz AS _sza", "_rk AS _rka", "_sh")
-    b = prefix.selectExpr("_id AS id_b", "_sz AS _szb", "_rk AS _rkb", "_sh")
+    return JaccardPrefixIndex(prefix, threshold)
+
+
+def jaccard_prefix_join(
+    index: JaccardPrefixIndex, shingled: DataFrame, id_col: str, shingle_col: str
+) -> DataFrame:
+    """Step two of ngram_jaccard_pairs_prefix: the candidate join with
+    its length, pair-prefix and positional filters over ``index``, then
+    the two-tier verification against ``shingled``, the shingle table
+    the index was built from.  (id_a, id_b, jaccard) for every pair
+    with Jaccard >= the index's threshold."""
+    threshold = index.threshold
+    t = _sql_double(threshold)
+    alpha = _ceil_sql(f"{_sql_double(threshold / (1 + threshold))} * (_sza + _szb)")
+    a = index.prefix.selectExpr("_id AS id_a", "_sz AS _sza", "_rk AS _rka", "_sh")
+    b = index.prefix.selectExpr("_id AS id_b", "_sz AS _szb", "_rk AS _rkb", "_sh")
     cands = (
         a.join(b, "_sh")
         # length filter (symmetric size band), then the pair-prefix

@@ -51,12 +51,12 @@ from ..functions.vectors import quantize
 KMEANS_ITERS = 2
 
 
-def dist2_q(a: Column | str, b: Column | str) -> Column:
-    """Exact integer squared L2 distance of two quantized vectors (a
-    str is SQL text, as in sql_hof)."""
+def dist2_q(a: str, b: str) -> Column:
+    """Exact integer squared L2 distance of two quantized vectors, given
+    as SQL text (one sql_hof parse)."""
     return sql_hof(
         "aggregate",
-        sql_hof("zip_with", a, b, "(x, y) -> (x - y) * (x - y)"),
+        f"zip_with({a}, {b}, (x, y) -> (x - y) * (x - y))",
         "CAST(0 AS BIGINT)",
         "(acc, x) -> acc + x",
     )
@@ -69,9 +69,11 @@ def _quantized(corpus: DataFrame, id_col: str, vec_col: str, key: str | None = N
 
 
 def _seed_centroids(q: DataFrame, init_ids: Sequence[int], key: str | None = None) -> DataFrame:
-    """([key, ]cluster, c): one initial centroid per seed id (and key)."""
+    """([key, ]cluster, c): one initial centroid per seed id (and key);
+    no rows for no seed ids (``vid IN ()`` does not parse)."""
     keys = [key] if key else []
-    return q.filter(F.col("vid").isin(list(init_ids))).selectExpr(
+    ids = ", ".join(str(int(i)) for i in init_ids)
+    return q.filter(f"vid IN ({ids})" if ids else "false").selectExpr(
         *keys, "vid AS cluster", "q AS c"
     )
 

@@ -77,6 +77,19 @@ def spread_for_pair_join(df: DataFrame, *keys: str) -> DataFrame:
     )
 
 
+def release_pair_join_pin(spread: DataFrame) -> None:
+    """Free the blocks of the checkpoint a ``spread_for_pair_join``
+    frame reads.  A pin that every build makes afresh is freed when
+    the JVM collects its RDD; a pin kept across queries is released
+    with this when its owner lets it go, so executor memory does not
+    wait on a JVM garbage collection."""
+    leaves = spread._jdf.queryExecution().logical().collectLeaves()  # noqa: SLF001
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
+
+
 def _salted_pair_join(lo: DataFrame, hi: DataFrame, key: str, hi_id: str) -> DataFrame:
     """Equi-join the lo and hi sides of a within-key pair enumeration
     on ``(key, _salt)``: every lo row is replicated over the

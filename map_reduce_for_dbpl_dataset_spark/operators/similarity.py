@@ -549,7 +549,7 @@ def pq_adc_topk(
             F.col("vid").alias("query_id"),
             "m",
             F.col("cluster").alias("code"),
-            dist2_q(F.col("q"), F.col("c")).alias("d2"),
+            dist2_q("q", "c").alias("d2"),
         )
     )
     scored = (

@@ -17,14 +17,17 @@ the table from the cache and re-derive shingles from text.
 The connected-components queries launch Spark jobs while they are
 built: each large-star/small-star round runs one checksum action
 (operators/graph.py connected_components_star), and the inputs of the
-rounds run theirs; the near-dup clusters' input is the prefix-filtered
-Jaccard join, whose pinned prefix table (operators/pairs.py
-spread_for_pair_join) plans its upstream shuffle stages at build.  k-means training (operators/kmeans.py
-kmeans_train) checkpoints its centroid table once per Lloyd
-iteration; product quantization trains all of its subspaces in those
-same iterations, so ``llm_ann_pq_trained`` costs what ``llm_kmeans``
-does.  Job counts are deterministic for fixed data, so the counts
-below are the measured values, not budgets with headroom.
+rounds run theirs.  The near-dup clusters' input is the prefix-filtered
+Jaccard join, whose pinned prefix index (operators/dedup.py
+jaccard_prefix_index) plans its upstream shuffle stages when it is
+built; the session keeps that index beside the shingle table, so its
+stages run once per documents snapshot, not once per build, and a warm
+build of the Jaccard join itself launches no job.  k-means training
+(operators/kmeans.py kmeans_train) checkpoints its centroid table once
+per Lloyd iteration; product quantization trains all of its subspaces
+in those same iterations, so ``llm_ann_pq_trained`` costs what
+``llm_kmeans`` does.  Job counts are deterministic for fixed data, so
+the counts below are the measured values, not budgets with headroom.
 """
 
 from __future__ import annotations
@@ -40,19 +43,19 @@ from map_reduce_for_dbpl_dataset_spark import queries as registry
 from map_reduce_for_dbpl_dataset_spark.queries.llm import _docs_shingled
 
 # Py4J round trips of one warm build at the suite's sf dir, plus ~25%:
-# measured 256, 263 and 313 for the three llm_curation operators; 347,
-# 339 and 1087 for the other callers of the quantized-cosine scorer
-# (operators/similarity.py _cos_top_k); 554 and 1071 for two k-means
+# measured 256, 203 and 307 for the three llm_curation operators; 341,
+# 339 and 930 for the other callers of the quantized-cosine scorer
+# (operators/similarity.py _cos_top_k); 366 and 819 for two k-means
 # trainings (operators/kmeans.py, two Lloyd iterations each).
 ROUND_TRIP_BUDGET = {
     "llm_text_stats": 320,
-    "llm_ngram_jaccard_prefix": 330,
+    "llm_ngram_jaccard_prefix": 255,
     "llm_ann_brute_topk": 395,
     "llm_hard_negatives": 435,
     "llm_ann_lsh_topk": 425,
     "llm_ann_ivf": 1360,
-    "llm_kmeans": 695,
-    "llm_ann_pq_trained": 1340,
+    "llm_kmeans": 460,
+    "llm_ann_pq_trained": 1025,
 }
 
 # Spark jobs of one warm build at the suite's sf dir (the same at
@@ -61,9 +64,11 @@ BUILD_JOBS = {
     "dblp_coauthor_components": 48,
     "dblp_coauthor_components_star": 48,
     "llm_ann_pq_trained": 13,
-    "llm_dedup_clusters": 28,
+    "llm_dedup_clusters": 26,
     "llm_kmeans": 13,
-    "llm_leakage_free_split": 28,
+    "llm_leakage_free_split": 26,
+    "llm_ngram_jaccard": 0,
+    "llm_ngram_jaccard_prefix": 0,
 }
 
 

@@ -14,9 +14,13 @@ oracles on
 - the suite's tables plus one row whose ``text`` and ``embedding`` are
   NULL;
 - a ``documents.parquet`` rewritten in place between two runs of one
-  session (the persisted shingle table must follow the new file).
+  session (the persisted shingle table and the prefix index over it
+  must follow the new file).
 Each case matches its oracle in row count, columns and
-``tools/check.py``'s order-insensitive digest.
+``tools/check.py``'s order-insensitive digest.  The empty pair also
+runs ``llm_semdedup_scaled``, which reads its k-means seeds from the
+data and so gets an empty seed list.  One session sweeping two sf dirs
+keeps one documents snapshot at a time.
 """
 
 from __future__ import annotations
@@ -29,8 +33,10 @@ import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark import StorageLevel
 
 from map_reduce_for_dbpl_dataset_spark import queries as reg
+from map_reduce_for_dbpl_dataset_spark.queries.llm import _docs_shingled
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 from check import canon_pandas, digest_pandas  # noqa: E402
@@ -76,7 +82,7 @@ def _assert_matches_oracle(spark, sf: str, name: str) -> None:
     assert digest_pandas(canon_pandas(got)) == digest_pandas(canon_pandas(want)), name
 
 
-@pytest.mark.parametrize("name", OPS)
+@pytest.mark.parametrize("name", (*OPS, "llm_semdedup_scaled"))
 def test_empty_tables_match_oracle(spark, sf_dir, tmp_path, name):
     empty = {t: table.slice(0, 0) for t, table in _suite_tables(sf_dir).items()}
     _assert_matches_oracle(spark, _write_tables(tmp_path / "empty", empty), name)
@@ -106,9 +112,11 @@ def test_null_text_and_embedding_row_matches_oracle(spark, sf_dir, tmp_path, nam
 
 
 def test_rewritten_documents_are_reshingled(spark, sf_dir, tmp_path):
-    """The persisted shingle table is keyed by the documents file's
-    name, mtime and size: rewriting the file between two runs of one
-    session re-derives the shingles instead of serving the old ones."""
+    """The persisted shingle table and its prefix index are keyed by
+    the documents file's name, mtime and size: rewriting the file
+    between two runs of one session re-derives both instead of serving
+    the old ones, for the Jaccard join and for the clusters built on
+    it."""
     docs = _suite_tables(sf_dir)["documents"]
     sf = _write_tables(tmp_path / "rewrite", _suite_tables(sf_dir))
     _assert_matches_oracle(spark, sf, "llm_ngram_jaccard_prefix")
@@ -119,3 +127,24 @@ def test_rewritten_documents_are_reshingled(spark, sf_dir, tmp_path):
     copies = docs.set_column(docs.column_names.index("text"), "text", pa.array(texts))
     pq.write_table(copies, os.path.join(sf, "documents.parquet"))
     _assert_matches_oracle(spark, sf, "llm_ngram_jaccard_prefix")
+    _assert_matches_oracle(spark, sf, "llm_dedup_clusters")
+
+
+def test_one_documents_snapshot_per_session(spark, sf_dir, tmp_path):
+    """Alternating two sf dirs in one session: each switch evicts the
+    other dir's snapshot, releasing its shingle table and its prefix
+    index, so the persisted RDDs do not grow from one round to the
+    next."""
+    jsc = spark.sparkContext._jsc
+    join = reg.all_queries()["llm_ngram_jaccard_prefix"]
+    sfs = [_write_tables(tmp_path / "copy", _suite_tables(sf_dir)), sf_dir]
+    persisted, previous = [], None
+    for _ in range(2):
+        for sf in sfs:
+            join(spark, sf).write.format("noop").mode("overwrite").save()
+            if previous is not None:
+                assert previous.storageLevel == StorageLevel.NONE
+            previous = _docs_shingled(spark, sf)
+            assert previous.storageLevel != StorageLevel.NONE
+        persisted.append(jsc.getPersistentRDDs().size())
+    assert persisted[1] <= persisted[0], persisted
